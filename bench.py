@@ -199,7 +199,7 @@ def _bench_pipeline(spark, n_lines: int, checkpoint: bool) -> float:
     )
     result.vectors.write.format("noop").mode("overwrite").save()
     elapsed = round(time.perf_counter() - t0, 3)
-    result.counts.pair_counts.unpersist()
+    result.unpersist()
     if ckpt:
         shutil.rmtree(ckpt, ignore_errors=True)
     return elapsed

@@ -10,6 +10,7 @@ for resumability (the reference's per-step resume path, App.java:133).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -19,6 +20,7 @@ from semantic_similarity_system_using_aws_mapreduce_spark.operators.counts impor
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.pair_vectors import pair_vectors
 from semantic_similarity_system_using_aws_mapreduce_spark.sources.biarcs import read_biarcs, token_emissions
 from semantic_similarity_system_using_aws_mapreduce_spark.sources.gold import read_gold_standard
+from semantic_similarity_system_using_aws_mapreduce_spark.threads import submit
 
 
 @dataclass
@@ -27,6 +29,15 @@ class PipelineResult:
     counts: CorpusCounts
     assoc: DataFrame
     vectors: DataFrame
+    #: the stemmed gold relation; cached on the checkpointed path
+    gold: DataFrame
+
+    def unpersist(self) -> None:
+        """Release what the pipeline cached: ``counts.pair_counts`` and
+        the gold relation.  The caller owns both and calls this after its
+        last action on the result."""
+        self.counts.pair_counts.unpersist()
+        self.gold.unpersist()
 
 
 def _stage_complete(spark: SparkSession, path: str) -> bool:
@@ -58,6 +69,10 @@ def semantic_similarity_pipeline(
     App.java:133) without five separate clusters.  The caller owns
     cache invalidation: resume assumes the inputs that produced the
     checkpoints have not changed.
+
+    The result holds cached relations (``counts.pair_counts``, and the
+    stemmed gold list on the checkpointed path); the caller releases
+    them with ``PipelineResult.unpersist``.
     """
     # Text file-split heuristics yield few, skewed input partitions
     # (a 1M-line corpus arrived as 19 splits with most data in a
@@ -72,6 +87,37 @@ def semantic_similarity_pipeline(
     corpus = read_biarcs(
         spark, corpus_path, spread_to=spark.sparkContext.defaultParallelism
     )
+    gold = read_gold_standard(spark, gold_path)
+    if checkpoint_dir is None:
+        counts, assoc = _counts_and_assoc(spark, corpus, mode, None, resume)
+    else:
+        # Stemming the gold list is one small Python task that nothing
+        # before the pair vectors needs: run it, and cache its result
+        # for the pair-vector plan, on a thread while the emission and
+        # assoc writes use the other cores.
+        gold = gold.cache()
+        try:
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                stemmed = submit(pool, spark, gold.count)
+                counts, assoc = _counts_and_assoc(spark, corpus, mode, checkpoint_dir, resume)
+                stemmed.result()
+        except BaseException:
+            gold.unpersist()
+            raise
+    vectors = pair_vectors(assoc, gold, mode=mode)
+    return PipelineResult(corpus, counts, assoc, vectors, gold)
+
+
+def _counts_and_assoc(
+    spark: SparkSession,
+    corpus: DataFrame,
+    mode: str,
+    checkpoint_dir: str | None,
+    resume: bool,
+) -> tuple[CorpusCounts, DataFrame]:
+    """Steps 1-3: emissions, counts with ``pair_counts`` persisted, and
+    the association measures, each checkpointed under ``checkpoint_dir``
+    when one is given."""
     if checkpoint_dir:
         path = f"{checkpoint_dir}/emissions.parquet"
         if not (resume and _stage_complete(spark, path)):
@@ -108,6 +154,4 @@ def semantic_similarity_pipeline(
         if not (resume and _stage_complete(spark, path)):
             assoc.write.mode("overwrite").parquet(path)
         assoc = spark.read.parquet(path)
-    gold = read_gold_standard(spark, gold_path)
-    vectors = pair_vectors(assoc, gold, mode=mode)
-    return PipelineResult(corpus, counts, assoc, vectors)
+    return counts, assoc

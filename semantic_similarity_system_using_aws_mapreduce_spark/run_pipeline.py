@@ -11,6 +11,17 @@ report (report.txt), optionally the reference's text encodings and an
 ARFF file.  Each stage persists before the next plans against it, so
 any prefix is resumable — the reference's per-step resume path
 (App.java:133) without five separate clusters.
+
+Actions that no later step reads run on driver threads, overlapping the
+ones that do: the gold list is stemmed and cached while the emission
+and assoc writes run (plans/pipeline.py), the pair/lexeme/feature count
+tables are written while the pair vectors are written and classified,
+and the cross-validation fits its folds concurrently (ml/classify.py).
+This is safe because each overlapped action only reads relations that
+are already written or cached, and writes its own output directory;
+Spark schedules jobs from several threads at once.  Worker threads
+inherit the caller's job group and description (threads.submit), and
+an error on one re-raises from ``run``.
 """
 
 from __future__ import annotations
@@ -18,6 +29,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 
@@ -30,6 +42,7 @@ from semantic_similarity_system_using_aws_mapreduce_spark.sources.sinks import (
     write_counts_text,
     write_pair_vectors_text,
 )
+from semantic_similarity_system_using_aws_mapreduce_spark.threads import submit
 
 
 def run(
@@ -47,19 +60,29 @@ def run(
     result = semantic_similarity_pipeline(
         spark, corpus, gold, mode=mode, checkpoint_dir=outdir, resume=resume
     )
-    result.counts.pair_counts.write.mode("overwrite").parquet(f"{outdir}/pair_counts.parquet")
-    result.counts.lexeme_counts.write.mode("overwrite").parquet(f"{outdir}/lexeme_counts.parquet")
-    result.counts.feature_counts.write.mode("overwrite").parquet(f"{outdir}/feature_counts.parquet")
-    result.vectors.write.mode("overwrite").parquet(f"{outdir}/pair_vectors.parquet")
-    vectors = spark.read.parquet(f"{outdir}/pair_vectors.parquet")
-
-    if text_dumps:
-        write_counts_text(result.counts, f"{outdir}/counts_text")
-        write_assoc_text(result.assoc, f"{outdir}/assoc_text")
-        write_pair_vectors_text(vectors, f"{outdir}/pair_vectors_text")
-        write_arff(vectors, f"{outdir}/pair_vectors.arff")
-
-    metrics = classify(spark, f"{outdir}/pair_vectors.parquet", outdir, folds, trees)
+    counts = result.counts
+    try:
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            side_writes = [
+                submit(pool, spark, df.write.mode("overwrite").parquet, f"{outdir}/{name}.parquet")
+                for name, df in [
+                    ("pair_counts", counts.pair_counts),
+                    ("lexeme_counts", counts.lexeme_counts),
+                    ("feature_counts", counts.feature_counts),
+                ]
+            ]
+            result.vectors.write.mode("overwrite").parquet(f"{outdir}/pair_vectors.parquet")
+            if text_dumps:
+                vectors = spark.read.parquet(f"{outdir}/pair_vectors.parquet")
+                write_counts_text(counts, f"{outdir}/counts_text")
+                write_assoc_text(result.assoc, f"{outdir}/assoc_text")
+                write_pair_vectors_text(vectors, f"{outdir}/pair_vectors_text")
+                write_arff(vectors, f"{outdir}/pair_vectors.arff")
+            metrics = classify(spark, f"{outdir}/pair_vectors.parquet", outdir, folds, trees)
+            for write in side_writes:
+                write.result()
+    finally:
+        result.unpersist()
     return metrics
 
 
@@ -70,6 +93,7 @@ def classify(
     relation (the WekaModel re-run path)."""
     vectors = spark.read.parquet(vectors_path)
     cv = cross_validate_random_forest(vectors, n_folds=folds, num_trees=trees)
+    cv.predictions.unpersist()  # the report needs only the metrics
     m = cv.metrics
     report = [
         "=== RandomForest ===",

@@ -2,9 +2,13 @@
 
 import glob
 import json
+import math
 import os
+import random
 import subprocess
 import sys
+
+import pytest
 
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.counts import corpus_counts
 from semantic_similarity_system_using_aws_mapreduce_spark.plans.pipeline import semantic_similarity_pipeline
@@ -17,7 +21,8 @@ from semantic_similarity_system_using_aws_mapreduce_spark.sources.sinks import (
     write_pair_vectors_text,
 )
 
-from reference_oracle import step1_counts
+from reference_oracle import assoc_measures, load_gold, pair_vectors, step1_counts
+from test_cache_contract import _cache_empty
 
 SMALL_SAMPLE = "/root/reference/small-sample.txt"
 GOLD_SMALL = "/root/reference/test_gold_standard.txt"
@@ -107,6 +112,100 @@ def test_runner_cli(tmp_path):
         assert (out / artifact).exists(), artifact
 
 
+def _tiny_inputs(tmp_path):
+    """A seeded corpus and gold list in the line shapes of
+    test_pair_vector_properties: every pair of its six words, so the run
+    yields 15 vectors of both classes."""
+    rng = random.Random(3)
+    words = ["aa", "bb", "cc", "dd", "ee", "ff"]
+    lines = []
+    for _ in range(40):
+        n = rng.randint(1, 3)
+        toks = [
+            f"{rng.choice(words)}/NN/{rng.choice(['d1', 'd2'])}/{rng.randint(0, n)}"
+            for _ in range(n)
+        ]
+        count = rng.randint(1, 4)
+        lines.append(f"h\t{' '.join(toks)}\t{count}\t2000,{count}")
+    pairs = [(a, b) for i, a in enumerate(words) for b in words[i + 1 :]]
+    corpus, gold = tmp_path / "corpus.txt", tmp_path / "gold.txt"
+    corpus.write_text("\n".join(lines) + "\n")
+    gold.write_text("".join(f"{a}\t{b}\t{k % 3 == 0}\n" for k, (a, b) in enumerate(pairs)))
+    return lines, corpus, gold
+
+
+def test_runner_end_to_end(spark, tmp_path):
+    """run() on a tiny corpus: vectors equal the oracle's, the report
+    counts them, every stage's output is complete, every job the run
+    starts (worker threads included) is in the caller's job group, and
+    nothing stays cached."""
+    from semantic_similarity_system_using_aws_mapreduce_spark.run_pipeline import run
+    from semantic_similarity_system_using_aws_mapreduce_spark.schemas import VECTOR_COLUMNS
+
+    lines, corpus, gold = _tiny_inputs(tmp_path)
+    out = tmp_path / "run"
+    sc = spark.sparkContext
+    jvm_sc = sc._jsc.sc()
+
+    def job_ids():
+        jvm_sc.listenerBus().waitUntilEmpty(30_000)
+        jobs = jvm_sc.statusStore().jobsList(None)  # a Scala Seq
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    spark.catalog.clearCache()
+    before = job_ids()
+    sc.setJobGroup("g", "runner end-to-end")
+    try:
+        metrics = run(spark, str(corpus), str(gold), str(out), mode="parity", folds=3, trees=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    started = job_ids() - before
+    assert started and started <= set(sc.statusTracker().getJobIdsForGroup("g"))
+    assert _cache_empty(spark)
+
+    counts, total = step1_counts(lines)
+    expected = pair_vectors(
+        assoc_measures(counts, total, mode="parity"), load_gold(gold), mode="parity",
+        js_reset_quirk=False,
+    )
+    rows = spark.read.parquet(str(out / "pair_vectors.parquet")).collect()
+    got = {(r.word1, r.word2, r.is_related): [r[c] for c in VECTOR_COLUMNS] for r in rows}
+    assert len(rows) == len(got) == len(expected) == 15
+    assert {r.is_related for r in rows} == {True, False}
+    for key, exp in expected.items():
+        assert all(
+            math.isclose(g, e, rel_tol=1e-9, abs_tol=1e-12) for g, e in zip(got[key], exp)
+        ), key
+    assert metrics["n"] == len(rows)
+    assert f"Total Number of Instances         {len(rows)}" in (out / "report.txt").read_text()
+    for stage in ["emissions", "assoc", "pair_counts", "lexeme_counts", "feature_counts",
+                  "pair_vectors"]:
+        assert (out / f"{stage}.parquet" / "_SUCCESS").exists(), stage
+
+
+def test_runner_fails_when_a_side_write_fails(spark, tmp_path, monkeypatch):
+    """A count-table write runs on a worker thread; its error fails the
+    run, and the run still releases what it cached."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from semantic_similarity_system_using_aws_mapreduce_spark.run_pipeline import run
+
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if path.endswith("lexeme_counts.parquet"):
+            raise OSError("no space left on device")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    _, corpus, gold = _tiny_inputs(tmp_path)
+    spark.catalog.clearCache()
+    with pytest.raises(OSError, match="no space left"):
+        run(spark, str(corpus), str(gold), str(tmp_path / "run"), mode="parity", folds=3, trees=5)
+    assert _cache_empty(spark)
+
+
 def test_pipeline_resume_skips_completed_stages(spark, tmp_path):
     """resume=True must reuse existing stage checkpoints — proven by
     poisoning the corpus after the first run: the resumed run still
@@ -125,7 +224,7 @@ def test_pipeline_resume_skips_completed_stages(spark, tmp_path):
         spark, str(corpus), gold, mode="parity", checkpoint_dir=ck
     )
     assert first.vectors.count() == 331
-    first.counts.pair_counts.unpersist()
+    first.unpersist()
 
     # poison the corpus: keep only the first 10 lines
     lines = corpus.read_text().splitlines()[:10]
@@ -135,13 +234,13 @@ def test_pipeline_resume_skips_completed_stages(spark, tmp_path):
         spark, str(corpus), gold, mode="parity", checkpoint_dir=ck, resume=True
     )
     assert resumed.vectors.count() == 331  # checkpoints, not the poisoned file
-    resumed.counts.pair_counts.unpersist()
+    resumed.unpersist()
 
     fresh = semantic_similarity_pipeline(
         spark, str(corpus), gold, mode="parity", checkpoint_dir=ck
     )
     assert fresh.vectors.count() < 331  # non-resume recomputes
-    fresh.counts.pair_counts.unpersist()
+    fresh.unpersist()
 
 
 def test_bench_dry_run(tmp_path):
