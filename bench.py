@@ -407,11 +407,11 @@ _MEDIA_ROWS_CACHE: list = []
 
 
 def _bench_media_decode(spark, sf_dir: str) -> None:
-    """Multimodal decode throughput: 384 genuine payloads (BMP/PNG/
-    JPEG images, PCM/ADPCM/FLAC/Ogg-Vorbis audio, y4m/MP4 video)
-    through the real stdlib decoders in the mapInPandas plan.  The
-    driver-side payload encoding runs ONCE (module cache) so runs
-    2..N time the distributed decode, and min-of-N reads that."""
+    """Multimodal decode throughput: 384 genuine payloads (BMP images,
+    PCM16 WAV audio, y4m/MP4 video) through the stdlib decoders in the
+    mapInPandas plan.  The driver-side payload encoding runs ONCE
+    (module cache) so runs 2..N time the distributed decode, and
+    min-of-N reads that."""
     from semantic_similarity_system_using_aws_mapreduce_spark.multimodal import (
         MEDIA_SCHEMA,
         decode_media,

@@ -1,14 +1,13 @@
-"""Audio codecs + the Ogg page layer, stdlib + numpy: PCM and
-IMA-ADPCM WAV, native FLAC (rice decode, fixed + LPC prediction,
-stereo decorrelation) both directions, the RFC 3533 Ogg page
-walk/write (CRC, lacing, cross-page continuation), Ogg-FLAC, and the
-y4m raw-video twins.  The Ogg dispatch imports the Vorbis decoder
-lazily so the import graph stays one-directional (codecs_vorbis
-imports this module's page layer at top level)."""
+"""PCM16 WAV audio and YUV4MPEG2 (y4m) raw video, stdlib + numpy: the
+WAV samples come from the stdlib ``wave`` reader as one numpy view, and
+a y4m stream is a header parse plus a walk of its fixed-size frames.
+Both encoders build the payloads tests and ``synthesize_real_media``
+use."""
 
 from __future__ import annotations
 
 import numpy as np
+
 
 def make_wav(samples, rate: int = 8000, channels: int = 1) -> bytes:
     """A genuine PCM16 WAV via the stdlib ``wave`` writer."""
@@ -37,153 +36,21 @@ def make_y4m(width: int, height: int, n_frames: int, fill_fn) -> bytes:
     return head + b"".join(frames)
 
 
-_IMA_INDEX = [-1, -1, -1, -1, 2, 4, 6, 8, -1, -1, -1, -1, 2, 4, 6, 8]
-_IMA_STEPS = [
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-]
-
-
-def _ima_step(predictor: int, index: int, nibble: int) -> tuple[int, int]:
-    """One IMA-ADPCM state transition (shared by encode and decode, so
-    the encoder's predictor tracks the decoder's exactly)."""
-    step = _IMA_STEPS[index]
-    diff = step >> 3
-    if nibble & 4:
-        diff += step
-    if nibble & 2:
-        diff += step >> 1
-    if nibble & 1:
-        diff += step >> 2
-    predictor = predictor - diff if nibble & 8 else predictor + diff
-    predictor = max(-32768, min(32767, predictor))
-    index = max(0, min(88, index + _IMA_INDEX[nibble]))
-    return predictor, index
-
-
-def make_adpcm_wav(samples, rate: int = 8000) -> bytes:
-    """A GENUINE mono IMA-ADPCM WAV (format tag 0x0011, one data
-    block): 4 bits per sample vs PCM16's 16 — real compressed audio
-    with no codec library.  Block layout per the IMA spec: a 4-byte
-    header (first sample verbatim + step index) then nibble pairs for
-    the remaining samples."""
-    import struct
-
-    s = [int(x) for x in samples]
-    if not s:
-        raise ValueError("need at least one sample")
-    predictor, index = s[0], 0
-    nibbles = []
-    for x in s[1:]:
-        step = _IMA_STEPS[index]
-        delta = x - predictor
-        n = 8 if delta < 0 else 0
-        delta = abs(delta)
-        if delta >= step:
-            n |= 4
-            delta -= step
-        if delta >= step >> 1:
-            n |= 2
-            delta -= step >> 1
-        if delta >= step >> 2:
-            n |= 1
-        predictor, index = _ima_step(predictor, index, n)
-        nibbles.append(n)
-    payload = bytearray(struct.pack("<hBB", s[0], 0, 0))
-    for i in range(0, len(nibbles), 2):
-        lo = nibbles[i]
-        hi = nibbles[i + 1] if i + 1 < len(nibbles) else 0
-        payload.append(lo | (hi << 4))
-    block_align = len(payload)
-    fmt = struct.pack(
-        "<HHIIHHHH",
-        0x0011,  # WAVE_FORMAT_IMA_ADPCM
-        1,  # mono
-        rate,
-        rate * block_align // max(len(s), 1),
-        block_align,
-        4,  # bits per sample
-        2,  # cbSize
-        len(s),  # samples per block
-    )
-    data = bytes(payload)
-    riff = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<II", 4, len(s))
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
-
-
-def _decode_adpcm_wav(data: bytes) -> tuple[int, int]:
-    """(sum of |samples|, sample count) of a mono IMA-ADPCM WAV — a
-    REAL compressed-audio decode with stdlib struct only: RIFF chunk
-    walk, per-block header, 4-bit nibble expansion through the shared
-    IMA state machine."""
-    import struct
-
-    data = bytes(data)
-    pos, end = 12, len(data)
-    fmt = None
-    frames = None
-    blocks = b""
-    while pos + 8 <= end:
-        cid, ln = struct.unpack_from("<4sI", data, pos)
-        body = data[pos + 8 : pos + 8 + ln]
-        pos += 8 + ln + (ln & 1)
-        if cid == b"fmt ":
-            fmt = struct.unpack_from("<HHIIHH", body, 0)
-            if len(body) >= 20:
-                frames = struct.unpack_from("<H", body, 18)[0]
-        elif cid == b"data":
-            blocks = body
-    if fmt is None:
-        raise ValueError("WAV without fmt chunk")
-    tag, channels, _rate, _bps, block_align, bits = fmt
-    if tag != 0x0011 or channels != 1 or bits != 4:
-        raise NotImplementedError(
-            f"only mono 4-bit IMA-ADPCM (tag=0x{tag:04x}, ch={channels})"
-        )
-    out = []
-    for b0 in range(0, len(blocks), block_align):
-        block = blocks[b0 : b0 + block_align]
-        if len(block) < 4:
-            break
-        predictor, index = struct.unpack_from("<hB", block, 0)[0], block[2]
-        index = max(0, min(88, index))
-        vals = [predictor]
-        for byte in block[4:]:
-            for nib in (byte & 15, byte >> 4):
-                predictor, index = _ima_step(predictor, index, nib)
-                vals.append(predictor)
-        if frames:
-            vals = vals[:frames]
-        out.extend(vals)
-    s = np.asarray(out, dtype=np.int64)
-    return int(np.abs(s).sum()), int(s.size)
-
-
 def _decode_wav(data: bytes) -> tuple[int, int]:
-    """(sum of |samples|, sample count) of a WAV: PCM16 via the stdlib
-    ``wave`` reader; IMA-ADPCM (format tag 0x0011, which ``wave``
-    rejects) via the engine's own block decoder."""
+    """(sum of |samples|, sample count) of a PCM16 WAV via the stdlib
+    ``wave`` reader.  Any other encoding (IMA-ADPCM, float, 8/24-bit
+    PCM) raises NotImplementedError, so it takes the library gate."""
     import io
     import struct
     import wave
 
     raw_bytes = bytes(data)
-    # sniff the fmt tag — wave.open throws an opaque error on non-PCM
+    # sniff the fmt tag: wave.open throws an opaque wave.Error on non-PCM
     if raw_bytes[:4] == b"RIFF" and b"fmt " in raw_bytes[:64]:
         at = raw_bytes.index(b"fmt ") + 8
         tag = struct.unpack_from("<H", raw_bytes, at)[0]
-        if tag == 0x0011:
-            return _decode_adpcm_wav(raw_bytes)
+        if tag != 0x0001:  # WAVE_FORMAT_PCM, the one tag ``wave`` reads
+            raise NotImplementedError(f"WAV format tag 0x{tag:04x}; only PCM16")
     with wave.open(io.BytesIO(raw_bytes)) as w:
         if w.getsampwidth() != 2:
             raise NotImplementedError("only PCM16 WAV")
@@ -216,613 +83,3 @@ def _decode_y4m(data: bytes) -> tuple[int, int]:
         pos = data.index(b"\n", pos) + 1 + fsize
         frames += 1
     return frames, frames
-
-
-# ---------------------------------------------------------------------------
-# FLAC (RFC 9639): a REAL lossless-audio codec with nothing but stdlib
-# + numpy — the remaining compressed-audio format a crawl actually
-# ships (IMA-ADPCM covered the lossy-legacy corner; FLAC is THE
-# lossless one).  Encoder emits fixed-predictor rice-coded subframes
-# (mid-side for stereo) so the decoder's prediction, rice, and channel
-# decorrelation paths are honestly exercised; the decoder additionally
-# handles CONSTANT/VERBATIM/LPC subframes, rice2, escaped partitions,
-# wasted bits, and left/right-side stereo.  Ogg-encapsulated FLAC
-# decodes through a real RFC 3533 depacketizer (below), Ogg Vorbis
-# through the r9 stdlib Vorbis decoder; Ogg Opus and >2-channel
-# streams raise NotImplementedError into the library gate.
-# ---------------------------------------------------------------------------
-
-
-class _FlacBitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, value: int, bits: int) -> None:
-        if bits == 0:
-            return
-        self.acc = (self.acc << bits) | (value & ((1 << bits) - 1))
-        self.n += bits
-        while self.n >= 8:
-            self.n -= 8
-            self.buf.append((self.acc >> self.n) & 0xFF)
-        self.acc &= (1 << self.n) - 1
-
-    def write_unary(self, q: int) -> None:
-        """RFC 9639 unary: q zero bits, then a one bit."""
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)
-
-    def align(self) -> None:
-        if self.n:
-            self.write(0, 8 - self.n)
-
-
-def _crc8(data: bytes) -> int:
-    crc = 0
-    for b in data:
-        crc ^= b
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x07) & 0xFF if crc & 0x80 else (crc << 1) & 0xFF
-    return crc
-
-
-def _crc16(data: bytes) -> int:
-    crc = 0
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x8005) & 0xFFFF if crc & 0x8000 else (crc << 1) & 0xFFFF
-    return crc
-
-
-def _utf8_coded(n: int) -> bytes:
-    """FLAC's UTF-8-style frame-number coding (extended to 36 bits)."""
-    if n < 0x80:
-        return bytes([n])
-    out, bits = [], []
-    while True:
-        bits.append(n & 0x3F)
-        n >>= 6
-        lead_len = len(bits) + 1
-        if n < (1 << (7 - lead_len)):
-            break
-    lead = (0xFF << (8 - lead_len) & 0xFF) | n
-    out.append(lead)
-    out += [0x80 | b for b in reversed(bits)]
-    return bytes(out)
-
-
-def _fixed_residual(x: "np.ndarray", order: int) -> "np.ndarray":
-    e = x.astype(np.int64)
-    for _ in range(order):
-        e = np.diff(e)
-    return e
-
-
-def _encode_flac_subframe(w: _FlacBitWriter, x: "np.ndarray", bps: int) -> None:
-    """CONSTANT if flat, else fixed-order-2 (order 0 for tiny blocks)
-    rice-coded with a single partition."""
-    if np.all(x == x[0]):
-        w.write(0, 1)
-        w.write(0, 6)  # CONSTANT
-        w.write(0, 1)  # no wasted bits
-        w.write(int(x[0]), bps)
-        return
-    order = 2 if len(x) > 4 else 0
-    w.write(0, 1)
-    w.write(0b001000 | order, 6)  # FIXED, order
-    w.write(0, 1)
-    for v in x[:order]:
-        w.write(int(v), bps)
-    e = _fixed_residual(x, order)
-    u = np.where(e >= 0, e << 1, ((-e) << 1) - 1).astype(np.int64)
-    mean = int(u.mean()) if len(u) else 0
-    p = min(14, max(0, mean.bit_length() - 1))
-    w.write(0, 2)  # rice (4-bit params)
-    w.write(0, 4)  # partition order 0
-    w.write(p, 4)
-    for v in u:
-        v = int(v)
-        w.write_unary(v >> p)
-        w.write(v, p)
-
-
-def make_flac(
-    samples, rate: int = 8000, channels: int = 1, blocksize: int = 1024
-) -> bytes:
-    """A GENUINE FLAC stream via stdlib + numpy: STREAMINFO metadata,
-    framed fixed-predictor rice-coded subframes, mid-side stereo
-    decorrelation, header CRC-8 and frame CRC-16.  ``samples`` are
-    interleaved int16 when ``channels=2``."""
-    head, frames = _flac_stream_parts(samples, rate, channels, blocksize)
-    return head + b"".join(frames)
-
-
-def _flac_stream_parts(
-    samples, rate: int = 8000, channels: int = 1, blocksize: int = 1024
-) -> tuple[bytes, list[bytes]]:
-    """(header, [frame bytes]) of the native FLAC encoding — the
-    per-frame split :func:`make_ogg_flac` needs, since the FLAC-to-Ogg
-    mapping packs exactly one audio frame per Ogg packet."""
-    import hashlib
-    import struct
-
-    s = np.asarray(list(samples), np.int64)
-    if channels == 2:
-        s = s.reshape(-1, 2)
-    n_total = len(s)
-    bps = 16
-
-    frames: list[bytes] = []
-    frame_no = 0
-    for start in range(0, n_total, blocksize):
-        blk = s[start : start + blocksize]
-        nb = len(blk)
-        w = _FlacBitWriter()
-        w.write(0b11111111111110, 14)
-        w.write(0, 1)  # reserved
-        w.write(0, 1)  # fixed blocking
-        w.write(0b0111, 4)  # blocksize: 16-bit value-1 follows header
-        w.write(0b0000, 4)  # sample rate: from STREAMINFO
-        ch_assign = 0b0000 if channels == 1 else 0b1010  # mono | mid-side
-        w.write(ch_assign, 4)
-        w.write(0b100, 3)  # 16 bps
-        w.write(0, 1)  # reserved
-        for b in _utf8_coded(frame_no):
-            w.write(b, 8)
-        w.write(nb - 1, 16)
-        w.align()
-        hdr = bytes(w.buf)
-        w.write(_crc8(hdr), 8)
-        if channels == 1:
-            _encode_flac_subframe(w, blk, bps)
-        else:
-            left, right = blk[:, 0], blk[:, 1]
-            mid = (left + right) >> 1
-            side = left - right
-            _encode_flac_subframe(w, mid, bps)
-            _encode_flac_subframe(w, side, bps + 1)
-        w.align()
-        frame = bytes(w.buf)
-        frames.append(frame + struct.pack(">H", _crc16(frame)))
-        frame_no += 1
-
-    info = _FlacBitWriter()
-    info.write(blocksize, 16)
-    info.write(blocksize, 16)
-    info.write(0, 24)
-    info.write(0, 24)
-    info.write(rate, 20)
-    info.write(channels - 1, 3)
-    info.write(bps - 1, 5)
-    info.write(n_total, 36)
-    raw = s.reshape(-1).astype("<i2").tobytes()
-    md5 = hashlib.md5(raw).digest()
-    streaminfo = bytes(info.buf) + md5
-    head = b"fLaC" + bytes([0x80]) + len(streaminfo).to_bytes(3, "big") + streaminfo
-    return head, frames
-
-
-# ---------------------------------------------------------------------------
-# Ogg encapsulation (RFC 3533) + the FLAC-to-Ogg mapping: page walk
-# with lacing-value packet reassembly, page-CRC verification, and
-# cross-page packet continuation — so Ogg-FLAC (the streaming/web
-# shipping form of FLAC) decodes with the SAME native frame decoder.
-# Ogg Opus payloads still gate (Vorbis decodes — see the r9 section).
-# ---------------------------------------------------------------------------
-
-_OGG_CRC_TABLE: list[int] | None = None
-
-
-def _ogg_crc(data: bytes) -> int:
-    """Ogg's CRC-32: poly 0x04C11DB7, no reflection, init 0, no final
-    xor (RFC 3533 §6) — NOT zlib's CRC-32."""
-    global _OGG_CRC_TABLE
-    if _OGG_CRC_TABLE is None:
-        table = []
-        for i in range(256):
-            r = i << 24
-            for _ in range(8):
-                r = ((r << 1) ^ 0x04C11DB7) & 0xFFFFFFFF if r & 0x80000000 else (
-                    (r << 1) & 0xFFFFFFFF
-                )
-            table.append(r)
-        _OGG_CRC_TABLE = table
-    crc = 0
-    for b in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _OGG_CRC_TABLE[((crc >> 24) & 0xFF) ^ b]
-    return crc
-
-
-def _ogg_packets(data: bytes) -> list[tuple[int, bytes]]:
-    """(serial, packet) list off an Ogg stream: page-sync + CRC
-    verification, lacing-value reassembly (255 = continues), packet
-    continuation across pages.  Raises ValueError on torn pages or a
-    CRC mismatch — never returns silently-wrong packets."""
-    import struct
-
-    raw = bytes(data)
-    pos = 0
-    partial: dict[int, bytes] = {}
-    packets: list[tuple[int, bytes]] = []
-    while pos < len(raw):
-        if raw[pos : pos + 4] != b"OggS":
-            raise ValueError("lost Ogg page sync")
-        if pos + 27 > len(raw):
-            raise ValueError("truncated Ogg page header")
-        if raw[pos + 4] != 0:
-            raise ValueError("unknown Ogg version")
-        htype = raw[pos + 5]
-        serial = struct.unpack_from("<I", raw, pos + 14)[0]
-        nseg = raw[pos + 26]
-        lacing = raw[pos + 27 : pos + 27 + nseg]
-        if len(lacing) < nseg:
-            raise ValueError("truncated Ogg segment table")
-        body = pos + 27 + nseg
-        page_end = body + sum(lacing)
-        if page_end > len(raw):
-            raise ValueError("truncated Ogg page body")
-        page = bytearray(raw[pos:page_end])
-        want = struct.unpack_from("<I", raw, pos + 22)[0]
-        page[22:26] = b"\x00\x00\x00\x00"
-        if _ogg_crc(bytes(page)) != want:
-            raise ValueError("Ogg page CRC mismatch")
-        cur = partial.pop(serial, b"")
-        if cur and not (htype & 0x01):
-            raise ValueError("Ogg packet torn at a page boundary")
-        off = body
-        for lv in lacing:
-            cur += raw[off : off + lv]
-            off += lv
-            if lv < 255:
-                packets.append((serial, cur))
-                cur = b""
-        if cur:
-            partial[serial] = cur
-        pos = page_end
-    if partial:
-        raise ValueError("Ogg stream ends mid-packet")
-    return packets
-
-
-def _decode_ogg(data: bytes) -> tuple[int, int]:
-    """Decode an Ogg stream's first FLAC-mapped logical stream with
-    the native FLAC decoder: the BOS packet is 0x7F 'FLAC' maj min +
-    header count + the native 'fLaC' signature and STREAMINFO, and
-    every later packet is a metadata block or ONE audio frame — so the
-    packet concatenation IS the native stream.  Vorbis/Opus payloads
-    raise NotImplementedError into the soundfile gate."""
-    packets = _ogg_packets(data)
-    streams: dict[int, list[bytes]] = {}
-    order: list[int] = []
-    for serial, pkt in packets:
-        if serial not in streams:
-            streams[serial] = []
-            order.append(serial)
-        streams[serial].append(pkt)
-    for serial in order:
-        first = streams[serial][0]
-        if first[:5] == b"\x7fFLAC":
-            native = first[9:] + b"".join(streams[serial][1:])
-            return _decode_flac(native)
-        if first[:7] == b"\x01vorbis":
-            from semantic_similarity_system_using_aws_mapreduce_spark.multimodal.codecs_vorbis import _decode_vorbis
-
-            return _decode_vorbis(
-                streams[serial], _ogg_last_granule(data, serial)
-            )
-        if first[:8] == b"OpusHead":
-            raise NotImplementedError("Ogg Opus — needs soundfile")
-    raise ValueError("Ogg stream without a FLAC/Vorbis/Opus BOS packet")
-
-
-def make_ogg_flac(
-    samples,
-    rate: int = 8000,
-    channels: int = 1,
-    blocksize: int = 1024,
-    max_segs_per_page: int = 255,
-) -> bytes:
-    """A GENUINE Ogg-FLAC encapsulation of :func:`make_flac`'s native
-    stream per the FLAC-to-Ogg mapping: BOS page with the 0x7F 'FLAC'
-    mapping packet (signature + STREAMINFO), then exactly one audio
-    frame per packet, real lacing values, real page CRCs, EOS flag on
-    the final page.  ``max_segs_per_page`` < 255 forces packets to
-    continue across pages (continuation flag + 255-lacing tails), so
-    the depacketizer's cross-page path is honestly testable."""
-    import struct
-
-    head, frames = _flac_stream_parts(samples, rate, channels, blocksize)
-    serial = 0x5347  # arbitrary stream serial
-    seq = 0
-    out = bytearray()
-
-    def _emit(packet: bytes, htype: int, granule: int) -> None:
-        nonlocal seq, out
-        # lacing for the whole packet, then paginate
-        lacing = [255] * (len(packet) // 255) + [len(packet) % 255]
-        off = 0
-        first_page = True
-        while lacing:
-            take = lacing[:max_segs_per_page]
-            lacing = lacing[max_segs_per_page:]
-            nbytes = sum(take)
-            flags = htype if first_page else 0x01  # continuation
-            if not lacing:
-                flags |= htype & 0x04  # EOS only on the last page
-            else:
-                flags &= ~0x04
-            page = bytearray(b"OggS\x00")
-            page.append(flags)
-            page += struct.pack("<q", granule if not lacing else -1)
-            page += struct.pack("<I", serial)
-            page += struct.pack("<I", seq)
-            seq += 1
-            page += b"\x00\x00\x00\x00"  # CRC placeholder
-            page.append(len(take))
-            page += bytes(take)
-            page += packet[off : off + nbytes]
-            off += nbytes
-            struct.pack_into("<I", page, 22, _ogg_crc(bytes(page)))
-            out += page
-            first_page = False
-
-    bos = b"\x7fFLAC\x01\x00" + struct.pack(">H", 0) + head
-    _emit(bos, 0x02, 0)
-    done = 0
-    for i, frame in enumerate(frames):
-        done += blocksize
-        _emit(frame, 0x04 if i == len(frames) - 1 else 0x00, done)
-    return bytes(out)
-
-
-class _FlacBitReader:
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.d = data
-        self.p = pos
-        self.n = 0  # bits consumed of current byte
-
-    def bit(self) -> int:
-        if self.p >= len(self.d):
-            raise ValueError("truncated FLAC stream")
-        b = (self.d[self.p] >> (7 - self.n)) & 1
-        self.n += 1
-        if self.n == 8:
-            self.n = 0
-            self.p += 1
-        return b
-
-    def bits(self, k: int) -> int:
-        v = 0
-        for _ in range(k):
-            v = (v << 1) | self.bit()
-        return v
-
-    def signed(self, k: int) -> int:
-        v = self.bits(k)
-        return v - (1 << k) if v >= (1 << (k - 1)) else v
-
-    def unary(self) -> int:
-        q = 0
-        while self.bit() == 0:
-            q += 1
-            if q > 1 << 24:
-                raise ValueError("runaway FLAC unary code")
-        return q
-
-    def align(self) -> None:
-        if self.n:
-            self.n = 0
-            self.p += 1
-
-
-_FLAC_BLOCKSIZES = {
-    1: 192, 2: 576, 3: 1152, 4: 2304, 5: 4608,
-    8: 256, 9: 512, 10: 1024, 11: 2048, 12: 4096,
-    13: 8192, 14: 16384, 15: 32768,
-}
-
-
-def _read_flac_residual(r: _FlacBitReader, nb: int, order: int) -> list[int]:
-    method = r.bits(2)
-    if method > 1:
-        raise ValueError("reserved FLAC residual coding method")
-    pbits = 4 if method == 0 else 5
-    escape = (1 << pbits) - 1
-    part_order = r.bits(4)
-    n_parts = 1 << part_order
-    out: list[int] = []
-    for pi in range(n_parts):
-        count = (nb >> part_order) - (order if pi == 0 else 0)
-        p = r.bits(pbits)
-        if p == escape:
-            raw = r.bits(5)
-            for _ in range(count):
-                out.append(r.signed(raw) if raw else 0)
-        else:
-            for _ in range(count):
-                q = r.unary()
-                u = (q << p) | r.bits(p)
-                out.append((u >> 1) ^ -(u & 1))
-    return out
-
-
-def _read_flac_subframe(r: _FlacBitReader, nb: int, bps: int) -> "np.ndarray":
-    if r.bit() != 0:
-        raise ValueError("bad FLAC subframe padding bit")
-    sftype = r.bits(6)
-    wasted = 0
-    if r.bit() == 1:
-        wasted = 1 + r.unary()
-    eff = bps - wasted
-    if sftype == 0:  # CONSTANT
-        x = np.full(nb, r.signed(eff), np.int64)
-    elif sftype == 1:  # VERBATIM
-        x = np.asarray([r.signed(eff) for _ in range(nb)], np.int64)
-    elif 8 <= sftype <= 12:  # FIXED order 0-4
-        order = sftype - 8
-        warm = [r.signed(eff) for _ in range(order)]
-        res = _read_flac_residual(r, nb, order)
-        x = np.empty(nb, np.int64)
-        x[:order] = warm
-        coefs = {
-            0: [], 1: [1], 2: [2, -1], 3: [3, -3, 1], 4: [4, -6, 4, -1],
-        }[order]
-        for i in range(order, nb):
-            x[i] = res[i - order] + sum(
-                c * x[i - 1 - j] for j, c in enumerate(coefs)
-            )
-    elif sftype >= 32:  # LPC, order = sftype - 31
-        order = sftype - 31
-        warm = [r.signed(eff) for _ in range(order)]
-        prec = r.bits(4) + 1
-        if prec == 16:
-            raise ValueError("invalid FLAC LPC precision escape")
-        shift = r.signed(5)
-        coefs = [r.signed(prec) for _ in range(order)]
-        res = _read_flac_residual(r, nb, order)
-        x = np.empty(nb, np.int64)
-        x[:order] = warm
-        for i in range(order, nb):
-            acc = sum(c * int(x[i - 1 - j]) for j, c in enumerate(coefs))
-            x[i] = res[i - order] + (acc >> shift)
-    else:
-        raise ValueError(f"reserved FLAC subframe type {sftype}")
-    return x << wasted
-
-
-def _decode_flac(data: bytes) -> tuple[int, int]:
-    """(sum of |samples|, per-channel sample count) of a native FLAC
-    stream — real metadata walk, frame/subframe parse, fixed+LPC
-    prediction, rice decode, all four channel assignments, CRC-8
-    header verification.  Ogg-encapsulated streams are depacketized
-    first (:func:`_decode_ogg` — page CRCs, lacing, cross-page
-    continuation) and decode with this same frame decoder; only
-    Ogg Vorbis decodes through the r9 stdlib Vorbis decoder; Ogg
-    Opus payloads and >2 channels raise
-    NotImplementedError (the soundfile gate)."""
-    raw = bytes(data)
-    if raw[:4] == b"OggS":
-        return _decode_ogg(raw)
-    if raw[:4] != b"fLaC":
-        raise ValueError("not a native FLAC stream")
-    pos = 4
-    channels = bps = None
-    n_total = 0
-    while True:  # metadata blocks
-        if pos + 4 > len(raw):
-            raise ValueError("truncated FLAC metadata")
-        last = raw[pos] & 0x80
-        btype = raw[pos] & 0x7F
-        blen = int.from_bytes(raw[pos + 1 : pos + 4], "big")
-        body = raw[pos + 4 : pos + 4 + blen]
-        if btype == 0:  # STREAMINFO
-            br = _FlacBitReader(body, 0)
-            br.bits(16), br.bits(16), br.bits(24), br.bits(24)
-            _rate = br.bits(20)
-            channels = br.bits(3) + 1
-            bps = br.bits(5) + 1
-            n_total = br.bits(36)
-        pos += 4 + blen
-        if last:
-            break
-    if channels is None:
-        raise ValueError("FLAC stream without STREAMINFO")
-    if channels > 2:
-        raise NotImplementedError("FLAC with >2 channels — needs soundfile")
-
-    total = 0
-    n_samples = 0
-    while pos < len(raw) and (n_total == 0 or n_samples < n_total):
-        r = _FlacBitReader(raw, pos)
-        if r.bits(14) != 0b11111111111110:
-            raise ValueError("lost FLAC frame sync")
-        r.bit()  # reserved
-        r.bit()  # blocking strategy
-        bs_code = r.bits(4)
-        sr_code = r.bits(4)
-        ch_assign = r.bits(4)
-        ss_code = r.bits(3)
-        r.bit()  # reserved
-        # UTF-8 coded frame/sample number: continuation count = number
-        # of 1-bits after the leading 1 (110x -> 1, 1110 -> 2, ...)
-        lead = r.bits(8)
-        extra, mask = 0, 0x40
-        if lead >= 0x80:
-            while lead & mask:
-                extra += 1
-                mask >>= 1
-        for _ in range(extra):
-            r.bits(8)
-        if bs_code == 0:
-            raise ValueError("reserved FLAC blocksize code")
-        elif bs_code == 6:
-            nb = r.bits(8) + 1
-        elif bs_code == 7:
-            nb = r.bits(16) + 1
-        else:
-            nb = _FLAC_BLOCKSIZES[bs_code]
-        if sr_code == 12:
-            r.bits(8)
-        elif sr_code in (13, 14):
-            r.bits(16)
-        elif sr_code == 15:
-            raise ValueError("invalid FLAC sample-rate code")
-        hdr_end = r.p  # header CRC covers [pos, hdr_end) — crc byte aligned
-        r.align()
-        hdr_end = r.p
-        if _crc8(raw[pos:hdr_end]) != r.bits(8):
-            raise ValueError("FLAC frame header CRC mismatch")
-        sbps = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 0: bps}.get(ss_code)
-        if sbps is None:
-            raise ValueError("reserved FLAC sample-size code")
-        if ch_assign <= 7:
-            n_ch = ch_assign + 1
-            chans = [
-                _read_flac_subframe(r, nb, sbps) for _ in range(n_ch)
-            ]
-        elif ch_assign == 8:  # left + side
-            left = _read_flac_subframe(r, nb, sbps)
-            side = _read_flac_subframe(r, nb, sbps + 1)
-            chans = [left, left - side]
-        elif ch_assign == 9:  # right + side
-            side = _read_flac_subframe(r, nb, sbps + 1)
-            right = _read_flac_subframe(r, nb, sbps)
-            chans = [right + side, right]
-        elif ch_assign == 10:  # mid + side
-            mid = _read_flac_subframe(r, nb, sbps)
-            side = _read_flac_subframe(r, nb, sbps + 1)
-            m2 = (mid << 1) | (side & 1)
-            chans = [(m2 + side) >> 1, (m2 - side) >> 1]
-        else:
-            raise ValueError("reserved FLAC channel assignment")
-        r.align()
-        r.bits(16)  # frame CRC-16 (trailing; header CRC already checked)
-        for c in chans:
-            total += int(np.abs(c).sum())
-        n_samples += nb
-        pos = r.p
-    return total, n_samples
-
-
-def _ogg_last_granule(data: bytes, serial: int) -> int | None:
-    """Final granule position of a logical stream (its last page with
-    a real granule) — Vorbis's sample-exact stream length."""
-    import struct
-
-    raw = bytes(data)
-    pos = 0
-    last = None
-    while pos + 27 <= len(raw) and raw[pos : pos + 4] == b"OggS":
-        nseg = raw[pos + 26]
-        lacing = raw[pos + 27 : pos + 27 + nseg]
-        if struct.unpack_from("<I", raw, pos + 14)[0] == serial:
-            g = struct.unpack_from("<q", raw, pos + 6)[0]
-            if g >= 0:
-                last = g
-        pos = pos + 27 + nseg + sum(lacing)
-    return last

@@ -1,21 +1,11 @@
 """MP4 / ISO-BMFF (ISO 14496-12) container metadata: box walk, video
-track discovery, frame counts from stsz/stz2 and fragmented trun
-boxes.  Pixel decoding stays library-gated (H.264-class machinery —
-see the package __init__)."""
+track discovery via hdlr, and the frame count off the stsz/stz2 sample
+table plus, for fragmented (DASH/CMAF) streams, the moof fragments'
+trun boxes.  That is the answer the av library branch gives
+(checksum == count == n_frames, the y4m convention) without an H.264
+decode; pixel decoding is library-gated."""
 
 from __future__ import annotations
-
-# ---------------------------------------------------------------------------
-# MP4 / ISO-BMFF (ISO 14496-12): a REAL container parser — box walk,
-# video-track discovery via hdlr, frame count off the stsz/stz2 sample
-# table.  This is the SAME information the av library branch extracts
-# (it counts frames; checksum == count == n_frames, the y4m
-# convention): a crawl pipeline needs duration/frame metadata without
-# paying an H.264 decode.  Pixel decoding stays library-gated.
-# Fragmented MP4 (the DASH/CMAF shipping form) is parsed too: sample
-# counts live in the moof fragments' trun boxes, summed per video
-# track.
-# ---------------------------------------------------------------------------
 
 
 def _mp4_box(typ: bytes, body: bytes) -> bytes:

@@ -1,14 +1,12 @@
 """Spark-side multimodal surface: schemas, synthetic corpora, and the
-mapInPandas decode/feature plans.  The per-format codecs live in the
-sibling modules (codecs_image / codecs_webp / codecs_jpeg /
-codecs_jpeg_arith / audio / codecs_vorbis / codecs_mp4); this module
-owns everything the QUERY layer touches — decode_media,
-extract_features, sample_frames, codec_support, and the two
-synthesizers.  See the package __init__ for the format inventory and
-the permanent-gate rationale."""
+mapInPandas decode/feature plans.  The stdlib decoders live in the
+sibling modules (codecs_image / audio / codecs_mp4); this module owns
+everything the query layer touches: decode_media, extract_features,
+sample_frames, codec_support, and the two synthesizers."""
 
 from __future__ import annotations
 
+import io
 from collections.abc import Iterator
 
 import numpy as np
@@ -18,40 +16,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from semantic_similarity_system_using_aws_mapreduce_spark.multimodal.audio import (
-    _decode_flac,
     _decode_wav,
     _decode_y4m,
-    make_adpcm_wav,
-    make_flac,
     make_wav,
     make_y4m,
 )
 from semantic_similarity_system_using_aws_mapreduce_spark.multimodal.codecs_image import (
     _decode_bmp,
-    _decode_gif,
-    _decode_ico,
-    _decode_png,
-    _decode_tiff,
     make_bmp,
-    make_gif,
-    make_ico,
-    make_png,
-    make_tiff,
-)
-from semantic_similarity_system_using_aws_mapreduce_spark.multimodal.codecs_jpeg import (
-    _decode_jpeg,
-    make_jpeg,
 )
 from semantic_similarity_system_using_aws_mapreduce_spark.multimodal.codecs_mp4 import (
     _parse_mp4,
     make_mp4,
-)
-from semantic_similarity_system_using_aws_mapreduce_spark.multimodal.codecs_vorbis import (
-    make_ogg_vorbis,
-)
-from semantic_similarity_system_using_aws_mapreduce_spark.multimodal.codecs_webp import (
-    _decode_webp,
-    make_webp,
 )
 
 MEDIA_SCHEMA = T.StructType(
@@ -92,11 +68,8 @@ def synthesize_media(spark: SparkSession, n: int = 64, seed: int = 7) -> DataFra
                 i,
                 kind,
                 data,
-                # avif/mp4 are library-gated (fake bytes must route to
-                # the loud NotImplementedError, not a stdlib decoder —
-                # the fake image label has moved bmp -> jpeg -> webp ->
-                # avif as each gained a real stdlib decode; AV1 images
-                # will always need a library)
+                # avif has no stdlib decoder: fake image bytes must
+                # reach the library gate, never a stdlib decode
                 {"image": "avif", "audio": "wav", "video": "mp4"}[kind],
                 64 if kind != "audio" else None,
                 48 if kind != "audio" else None,
@@ -106,139 +79,26 @@ def synthesize_media(spark: SparkSession, n: int = 64, seed: int = 7) -> DataFra
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-# Formats the real decoder parses with stdlib + numpy alone — no
-# external codec library involved.  "jpeg" means every DCT-based
-# T.81 process: baseline/extended sequential AND progressive, Huffman
-# AND arithmetic entropy coding (grayscale / 4:4:4 / 4:2:0, restart
-# markers, spectral selection + successive approximation); only the
-# lossless/differential processes still fall through to the PIL gate.
-STDLIB_FORMATS = {
-    "bmp", "png", "gif", "jpeg", "webp", "ico", "tiff",
-    "wav", "flac", "y4m", "mp4",
-}
-
-
 def synthesize_real_media(spark: SparkSession, n: int = 24) -> DataFrame:
-    """Media table whose payloads are GENUINE encodings of the stdlib
-    formats (24-bit BMP, PCM16 WAV, y4m) — deterministic content, so
+    """Media table of genuine stdlib-format payloads (24-bit BMP images,
+    PCM16 WAV audio, y4m and MP4 video), deterministic content, so
     decode checksums are stable across runs and engines."""
     rows = []
     for i in range(n):
         kind = ["image", "audio", "video"][i % 3]
         if kind == "image":
             fn = lambda x, y, i=i: (x * 7 + i, y * 11, (x + y) * 3)  # noqa: E731
-            # rotate the uncompressed format, both interlace modes of
-            # the two lossless compressed formats, both JPEG entropy
-            # coders, lossless WebP, an ICO favicon, and a PackBits
-            # TIFF so one table exercises every real image decoder
-            # path (a 16x10 pattern stays under GIF's 256 palette
-            # entries)
-            which = (i // 3) % 9
-            if which == 8:
-                rows.append(
-                    (
-                        i,
-                        kind,
-                        make_tiff(16, 10, fn, compression="packbits"),
-                        "tiff",
-                        16,
-                        10,
-                        None,
-                    )
-                )
-                continue
-            if which == 6:
-                rows.append(
-                    (i, kind, make_webp(16, 10, fn), "webp", 16, 10, None)
-                )
-                continue
-            if which == 7:
-                rows.append(
-                    (
-                        i,
-                        kind,
-                        make_ico(16, 10, fn, ("dib24", "png")),
-                        "ico",
-                        16,
-                        10,
-                        None,
-                    )
-                )
-                continue
-            if which == 0:
-                rows.append((i, kind, make_bmp(16, 10, fn), "bmp", 16, 10, None))
-            elif which == 1:
-                rows.append((i, kind, make_png(16, 10, fn), "png", 16, 10, None))
-            elif which == 2:
-                # palette + Adam7 in one row: the two r9 PNG paths
-                rows.append(
-                    (
-                        i,
-                        kind,
-                        make_png(
-                            16, 10, fn, interlace=True, color_type=3, depth=8
-                        ),
-                        "png",
-                        16,
-                        10,
-                        None,
-                    )
-                )
-            elif which == 3:
-                rows.append(
-                    (
-                        i,
-                        kind,
-                        make_gif(16, 10, fn, interlace=i % 2 == 0),
-                        "gif",
-                        16,
-                        10,
-                        None,
-                    )
-                )
-            elif which == 4:
-                rows.append(
-                    (i, kind, make_jpeg(16, 10, fn), "jpeg", 16, 10, None)
-                )
-            else:
-                rows.append(
-                    (
-                        i,
-                        kind,
-                        make_jpeg(16, 10, fn, arithmetic=True),
-                        "jpeg",
-                        16,
-                        10,
-                        None,
-                    )
-                )
+            rows.append((i, kind, make_bmp(16, 10, fn), "bmp", 16, 10, None))
         elif kind == "audio":
             samples = [((j * 37 + i * 101) % 2048) - 1024 for j in range(400)]
-            # rotate PCM16, IMA-ADPCM (both labeled "wav"; the decoder
-            # sniffs the fmt tag), FLAC and Ogg Vorbis so one table
-            # exercises the uncompressed, lossy-legacy, lossless AND
-            # perceptual-codec audio paths ("flac" is the Ogg entry
-            # point — the decoder dispatches on the OggS magic)
-            which = (i // 3) % 4
-            if which == 2:
-                rows.append(
-                    (i, kind, make_flac(samples), "flac", None, None, 50)
-                )
-            elif which == 3:
-                rows.append(
-                    (i, kind, make_ogg_vorbis(samples), "flac", None, None, 50)
-                )
-            else:
-                enc = make_wav if which == 0 else make_adpcm_wav
-                rows.append((i, kind, enc(samples), "wav", None, None, 50))
-        else:
+            rows.append((i, kind, make_wav(samples), "wav", None, None, 50))
+        elif (i // 3) % 2 == 0:
             # alternate the raw-frame stream and the MP4 container so
-            # one table exercises both real video parsers
-            if (i // 3) % 2 == 0:
-                data = make_y4m(8, 6, 3 + i % 4, lambda f, j, i=i: f * 31 + j + i)
-                rows.append((i, kind, data, "y4m", 8, 6, 1000))
-            else:
-                rows.append((i, kind, make_mp4(3 + i % 4), "mp4", 8, 6, 1000))
+            # one table exercises both video parsers
+            data = make_y4m(8, 6, 3 + i % 4, lambda f, j, i=i: f * 31 + j + i)
+            rows.append((i, kind, data, "y4m", 8, 6, 1000))
+        else:
+            rows.append((i, kind, make_mp4(3 + i % 4), "mp4", 8, 6, 1000))
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
@@ -260,123 +120,63 @@ def codec_support() -> dict[str, bool]:
     return support
 
 
+# The formats decoded without a codec library, each with no per-pixel
+# or per-sample Python loop.  Every other format is library-gated.
+_STDLIB_DECODERS = {
+    "bmp": _decode_bmp,
+    "wav": _decode_wav,
+    "y4m": _decode_y4m,
+    "mp4": _parse_mp4,
+}
+STDLIB_FORMATS = frozenset(_STDLIB_DECODERS)
+
+
+def _pil_decode(data) -> tuple[int, int]:
+    from PIL import Image
+
+    arr = np.asarray(Image.open(io.BytesIO(bytes(data))).convert("L"), dtype=np.int64)
+    return int(arr.sum()), int(arr.size)
+
+
+def _soundfile_decode(data) -> tuple[int, int]:
+    import soundfile as sf
+
+    samples, _rate = sf.read(io.BytesIO(bytes(data)))
+    return int(np.abs(samples).sum()), int(np.asarray(samples).size)
+
+
+def _av_decode(data) -> tuple[int, int]:
+    import av
+
+    with av.open(io.BytesIO(bytes(data))) as container:
+        frames = sum(1 for _ in container.decode(video=0))
+    return frames, frames
+
+
+# One library branch per kind; codec_support() probes the same libraries.
+_LIBRARY_DECODERS = {"image": _pil_decode, "audio": _soundfile_decode, "video": _av_decode}
+
+
 def _decode_one(kind, fmt, data, support: dict[str, bool]) -> tuple[int, int]:
-    """Decode ONE payload to (checksum, pixels_or_samples) — the
-    stdlib dispatch with library-gate fallbacks, shared by the
-    raise-through and quarantine paths."""
-    import io
-
+    """Decode ONE payload to (checksum, pixels_or_samples), shared by
+    the raise-through and quarantine paths.  A stdlib format decodes
+    here; any other format, or a stdlib decoder's NotImplementedError
+    (an unsupported variant), goes to the kind's library, and raises
+    NotImplementedError naming format and kind when that is absent."""
     fmt = (fmt or "").lower()
-    if fmt == "bmp":
-        checksum, count = _decode_bmp(data)
-    elif fmt == "png":
-        checksum, count = _decode_png(data)
-    elif fmt == "gif":
-        checksum, count = _decode_gif(data)
-    elif fmt in ("jpeg", "jpg"):
+    reason = ""
+    stdlib = _STDLIB_DECODERS.get(fmt)
+    if stdlib is not None:
         try:
-            checksum, count = _decode_jpeg(data)
-        except NotImplementedError:
-            # lossless/differential variants fall through to the
-            # library gate below (PIL decodes them when present)
-            if not (kind == "image" and support.get("image")):
-                raise
-            from PIL import Image
-
-            arr = np.asarray(
-                Image.open(io.BytesIO(bytes(data))).convert("L"), dtype=np.int64
-            )
-            checksum, count = int(arr.sum()), int(arr.size)
-    elif fmt == "ico":
-        try:
-            checksum, count = _decode_ico(data)
-        except NotImplementedError:
-            # exotic DIB compressions fall to the PIL gate
-            if not (kind == "image" and support.get("image")):
-                raise
-            from PIL import Image
-
-            arr = np.asarray(
-                Image.open(io.BytesIO(bytes(data))).convert("L"), dtype=np.int64
-            )
-            checksum, count = int(arr.sum()), int(arr.size)
-    elif fmt in ("tiff", "tif"):
-        try:
-            checksum, count = _decode_tiff(data)
-        except NotImplementedError:
-            # tiled / planar-2 / CCITT-fax variants fall to the PIL gate
-            if not (kind == "image" and support.get("image")):
-                raise
-            from PIL import Image
-
-            arr = np.asarray(
-                Image.open(io.BytesIO(bytes(data))).convert("L"), dtype=np.int64
-            )
-            checksum, count = int(arr.sum()), int(arr.size)
-    elif fmt == "webp":
-        try:
-            checksum, count = _decode_webp(data)
-        except NotImplementedError:
-            # lossy VP8 / extended VP8X fall to the PIL gate
-            if not (kind == "image" and support.get("image")):
-                raise
-            from PIL import Image
-
-            arr = np.asarray(
-                Image.open(io.BytesIO(bytes(data))).convert("L"), dtype=np.int64
-            )
-            checksum, count = int(arr.sum()), int(arr.size)
-    elif fmt == "wav":
-        checksum, count = _decode_wav(data)
-    elif fmt == "flac":
-        try:
-            checksum, count = _decode_flac(data)
-        except NotImplementedError:
-            # Ogg Opus / >2-channel / floor-0 fall to the soundfile gate
-            if not (kind == "audio" and support.get("audio")):
-                raise
-            import soundfile as sf
-
-            samples, _rate = sf.read(io.BytesIO(bytes(data)))
-            checksum = int(np.abs(samples).sum())
-            count = int(np.asarray(samples).size)
-    elif fmt == "y4m":
-        checksum, count = _decode_y4m(data)
-    elif fmt == "mp4":
-        try:
-            checksum, count = _parse_mp4(data)
-        except NotImplementedError:
-            # fragmented streams fall to the av gate
-            if not (kind == "video" and support.get("video")):
-                raise
-            import av
-
-            with av.open(io.BytesIO(bytes(data))) as container:
-                checksum = count = sum(1 for _ in container.decode(video=0))
-    elif kind == "image" and support.get("image"):
-        from PIL import Image
-
-        arr = np.asarray(
-            Image.open(io.BytesIO(bytes(data))).convert("L"), dtype=np.int64
-        )
-        checksum, count = int(arr.sum()), int(arr.size)
-    elif kind == "audio" and support.get("audio"):
-        import soundfile as sf
-
-        samples, _rate = sf.read(io.BytesIO(bytes(data)))
-        checksum = int(np.abs(samples).sum())
-        count = int(np.asarray(samples).size)
-    elif kind == "video" and support.get("video"):
-        import av
-
-        with av.open(io.BytesIO(bytes(data))) as container:
-            checksum = count = sum(1 for _ in container.decode(video=0))
-    else:
-        raise NotImplementedError(
-            f"no codec available for format={fmt!r} kind={kind!r} "
-            f"(stdlib formats: {sorted(STDLIB_FORMATS)}; probe: {support})"
-        )
-    return checksum, count
+            return stdlib(data)
+        except NotImplementedError as ex:
+            reason = f" ({ex})"
+    if support.get(kind):
+        return _LIBRARY_DECODERS[kind](data)
+    raise NotImplementedError(
+        f"no codec available for format={fmt!r} kind={kind!r}{reason}; "
+        f"stdlib formats: {sorted(STDLIB_FORMATS)}; probe: {support}"
+    )
 
 
 def _real_decode(pdf: pd.DataFrame, support: dict[str, bool],
@@ -440,13 +240,12 @@ def decode_media(media: DataFrame, decoder: str = "fake",
                  on_error: str = "raise") -> DataFrame:
     """Decode binary payloads to per-item metadata via mapInPandas.
 
-    ``decoder="real"`` GENUINELY decodes the stdlib formats (24-bit
-    BMP, PNG, GIF, Huffman AND arithmetic DCT JPEG, lossless WebP,
-    PCM16/IMA-ADPCM WAV, native FLAC, y4m — :data:`STDLIB_FORMATS`)
-    with no external library, and dispatches the rest (lossless JPEG,
-    lossy WebP, Ogg Opus, MP4 pixels) to whatever codec libraries the
-    environment offers (PIL / soundfile / av, per
-    :func:`codec_support`).
+    ``decoder="real"`` decodes the stdlib formats (24-bit BMP, PCM16
+    WAV, y4m, MP4 frame counts: :data:`STDLIB_FORMATS`) with no
+    external library, and dispatches every other format to the codec
+    library for its kind (PIL / soundfile / av, per
+    :func:`codec_support`); with no library the row raises
+    NotImplementedError.
 
     ``on_error`` picks the failure semantics for a payload nothing can
     decode (or that is corrupt): ``"raise"`` fails the task loudly —

@@ -53,13 +53,6 @@ def lang_hits(toks: Column) -> dict[str, Column]:
     }
 
 
-def lang_scores(toks: Column) -> dict[str, Column]:
-    """Per-language stopword hit ratio over a token-array column (see
-    :func:`lang_hits` for the materialization caveat)."""
-    denom = F.greatest(F.size(toks), F.lit(1))
-    return {lang: h / denom for lang, h in lang_hits(toks).items()}
-
-
 #: declared-language override margin: the statistical heuristic beats
 #: a declared <html lang=...> prior only when its best profile has at
 #: least PRIOR_MARGIN_MULT x the prior language's hits plus

@@ -7,8 +7,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from semantic_similarity_system_using_aws_mapreduce_spark.schemas import FIXTURE_TABLES
-
 DEFAULT_SF_DIR = "/root/testdata/sf0.01"
 
 
@@ -56,7 +54,3 @@ def spread_small_scan(df: DataFrame, min_factor: int = 2) -> DataFrame:
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    return {name: load_table(spark, name, sf_dir) for name in FIXTURE_TABLES}
