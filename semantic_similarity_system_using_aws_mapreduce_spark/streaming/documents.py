@@ -44,6 +44,10 @@ Design for scale:
 
 from __future__ import annotations
 
+import os
+import shutil
+from dataclasses import dataclass, field
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,20 +63,56 @@ from semantic_similarity_system_using_aws_mapreduce_spark.sources.atomic import 
     read_parquet_recovering,
     resolve_table_dir,
 )
+from semantic_similarity_system_using_aws_mapreduce_spark.sources.bucketing import (
+    BUCKETMETA_SUFFIX,
+    bucket_probe,
+    drop_bucket_versions,
+    live_bucket_version,
+    rebuild_bucket_table,
+    warehouse_dir,
+)
+from semantic_similarity_system_using_aws_mapreduce_spark.streaming.paragraphs import (
+    CLEAN_SUFFIX,
+    SEG_BUCKET_DDL,
+    SEG_BUCKET_KEYS,
+    SEG_TABLE_SUFFIX,
+    SEGINDEX_SUFFIX,
+    build_bucketed_seg_index,
+    paragraph_delta,
+)
+from semantic_similarity_system_using_aws_mapreduce_spark.streaming.retrieval import (
+    DOCLENS_SUFFIX,
+    POSTINGS_SUFFIX,
+    compact_retrieval,
+    postings_delta,
+)
 
 SIG_SCHEMA = "doc_id long, " + ", ".join(f"h{k} long" for k in range(8))
+
+#: LSH banding of the signature index (bands x rows per band = its 8
+#: minhash components): the bucket table's build, its parquet tail and
+#: the near-dup probe all read these, so their bucket keys always agree
+N_BANDS, ROWS_PER_BAND = 4, 2
+SIG_BUCKET_KEYS = ["band"] + [f"k{r}" for r in range(ROWS_PER_BAND)]
+#: the signature bucket table's columns, for its re-registration in a
+#: fresh session
+SIG_BUCKET_DDL = "doc_id BIGINT, band INT, " + ", ".join(
+    f"{k} BIGINT" for k in SIG_BUCKET_KEYS[1:]
+)
+
+#: target rows per file of a compacted base partition (:func:`compact_index`)
+ROWS_PER_COMPACTED_FILE = 2_000_000
 
 #: content-digest index table suffix (keep-newest ingest): one row per
 #: ADMITTED document — (digest, doc_id, <ts_col>, supersedes) in
 #: per-batch partitions, the table a later micro-batch probes to
 #: decide whether an arriving digest is fresh, a stale re-delivery, or
-#: a re-crawl that supersedes the corpus copy.  ``supersedes`` (r12)
-#: mirrors the corpus row's marker, making this narrow table the
-#: SYSTEM OF RECORD for supersession: visible-view readers
-#: (read_corpus_asof's current view, bm25_search_postings) derive the
-#: superseded-id set from a column-pruned filter of these 4 columns
-#: instead of scanning the corpus, and RTBF chain expansion walks
-#: these edges.
+#: a re-crawl that supersedes the corpus copy.  ``supersedes`` mirrors
+#: the corpus row's marker, making this narrow table the SYSTEM OF
+#: RECORD for supersession: visible-view readers (read_corpus_asof's
+#: current view, bm25_search_postings) derive the superseded-id set
+#: from a column-pruned filter of these 4 columns instead of scanning
+#: the corpus, and RTBF chain expansion walks these edges.
 DIGESTS_SUFFIX = "_digests"
 
 #: sentinel ``ingest_batch`` value for compacted history — Structured
@@ -261,8 +301,8 @@ def read_corpus_asof(
     (only the signature index is), precisely so this axis stays
     truthful.  Returns None before anything was ingested.
 
-    Keep-newest corpora (r11): a superseded row is HIDDEN, not
-    deleted — each superseding row carries its predecessor's id in
+    Keep-newest corpora: a superseded row is HIDDEN, not deleted —
+    each superseding row carries its predecessor's id in
     ``supersedes``, so the filter is an anti-join of the windowed
     corpus against the superseded-id markers.  Because the markers are
     windowed too, the axis stays truthful: at a watermark BEFORE the
@@ -272,34 +312,30 @@ def read_corpus_asof(
     predecessor).  Keep-first corpora have no ``supersedes`` column
     and skip the join.
 
-    Marker source (r12, VERDICT r11 #3): the CURRENT view reads the
-    markers from the narrow ``<corpus>_digests`` table (4 columns,
-    compacted on the index cadence — the supersession system of
-    record) instead of the corpus, so the anti-join's build side no
-    longer rides a scan whose file count and row width grow with the
-    corpus.  HISTORICAL watermarks fall back to the corpus's own
-    ``supersedes`` column: digests compaction folds the per-batch
-    window axis away, while the corpus is deliberately never
-    compacted — it is the only table that can answer "as of batch N"
-    truthfully."""
+    Marker source: the CURRENT view reads the markers from the narrow
+    ``<corpus>_digests`` table (4 columns, compacted on the index
+    cadence — the supersession system of record) instead of the
+    corpus, so the anti-join's build side does not ride a scan whose
+    file count and row width grow with the corpus.  HISTORICAL
+    watermarks read the corpus's own ``supersedes`` column: digests
+    compaction folds the per-batch window axis away, while the corpus
+    is never compacted — it is the only table that can answer "as of
+    batch N" truthfully."""
     corpus = read_parquet_recovering(spark, corpus_path)
     if corpus is None:
         return None
     if batch is not None:
         corpus = corpus.filter(F.col("ingest_batch") <= batch)
     if "supersedes" in corpus.columns:
-        markers = None
+        dig = None
         if batch is None:
             dig = read_parquet_recovering(spark, corpus_path + DIGESTS_SUFFIX)
-            if dig is not None and "supersedes" in dig.columns:
-                markers = dig.filter(F.col("supersedes").isNotNull()).select(
-                    F.col("supersedes").alias("doc_id")
-                )
-        if markers is None:
-            markers = corpus.filter(F.col("supersedes").isNotNull()).select(
-                F.col("supersedes").alias("doc_id")
-            )
-        corpus = corpus.join(markers, "doc_id", "left_anti")
+        markers = (corpus if dig is None else dig).filter(
+            F.col("supersedes").isNotNull()
+        )
+        corpus = corpus.join(
+            markers.select(F.col("supersedes").alias("doc_id")), "doc_id", "left_anti"
+        )
     return corpus
 
 
@@ -309,8 +345,6 @@ def corpus_versions(spark: SparkSession, corpus_path: str) -> list[int]:
     micro-batch).  Answered from the partition DIRECTORY NAMES alone —
     the values are the version axis, so listing metadata beats a
     distinct scan job over every corpus file."""
-    import os
-
     table_dir = resolve_table_dir(corpus_path, initialize=False)
     if not os.path.isdir(table_dir):
         return []
@@ -329,7 +363,6 @@ def compact_index(
     spark: SparkSession,
     index_path: str,
     keep_batch: int,
-    rows_per_file: int = 2_000_000,
     dedup_keys: tuple[str, ...] = ("doc_id",),
 ) -> None:
     """Fold every index partition EXCEPT ``keep_batch``'s into a
@@ -341,7 +374,7 @@ def compact_index(
     the probe.
 
     The fold's width follows the measured base size (one cheap count
-    over 8-long rows): ~``rows_per_file`` signature rows per output
+    over 8-long rows): ~``ROWS_PER_COMPACTED_FILE`` rows per output
     file, capped at the cluster's parallelism — never a single-task
     rewrite of the whole accumulated index (the base grows with the
     corpus, unlike the CMS sketch's bounded cells)."""
@@ -358,9 +391,8 @@ def compact_index(
     # dropDuplicates' arbitrary row: if residue ever carries two doc
     # attributions for one seg_hash, a nondeterministic winner would
     # make a later RTBF on the true owner leave the content-derived
-    # hash attributed to another doc (ADVICE r6).  min(struct(...))
-    # is still partial-aggregated map-side, same shuffle as the
-    # dropDuplicates it replaces.
+    # hash attributed to another doc.  min(struct(...)) is still
+    # partial-aggregated map-side, same shuffle as dropDuplicates.
     keys = list(dedup_keys)
     rest = [c for c in index.columns if c not in keys]
     folded = (
@@ -378,7 +410,10 @@ def compact_index(
         n = folded.count()
         n_files = max(
             1,
-            min(spark.sparkContext.defaultParallelism, -(-n // rows_per_file)),
+            min(
+                spark.sparkContext.defaultParallelism,
+                -(-n // ROWS_PER_COMPACTED_FILE),
+            ),
         )
         base = folded.withColumn(
             "ingest_batch", F.lit(COMPACTED_BATCH)
@@ -396,200 +431,535 @@ def build_bucketed_sig_index(
     index_path: str,
     table: str,
     n_buckets: int = 32,
-    n_bands: int = 4,
-    rows_per_band: int = 2,
     covered_batch: int | None = None,
 ) -> DataFrame | None:
     """Materialize the signature index's BUCKET relation as a catalog
-    table bucketed by the probe-join key (band, k0..k{r-1}) — the
-    100 TB probe shape the incremental-dedup docstring prescribes: the
+    table bucketed by the probe-join key (band, k0, k1) — the 100 TB
+    probe shape the incremental-dedup docstring prescribes: the
     corpus-sized index side of the banded equi-join is pre-shuffled at
-    build time, so every later :func:`incremental_dedup` probe
-    (``index_buckets=read_bucketed(spark, table)``) reads co-located
-    buckets with NO Exchange on the index side; only the (small)
-    micro-batch side shuffles to meet the bucketing.  Rebuild as part
-    of periodic compaction; between rebuilds, the streaming loop
-    probes the table PLUS the parquet tail's buckets as two candidate
-    joins (a pre-union would discard the table's partitioning).
+    build time, so every later :func:`incremental_dedup` probe reads
+    co-located buckets with NO Exchange on the index side; only the
+    (small) micro-batch side shuffles to meet the bucketing.
 
     ``covered_batch`` (the streaming loop passes the compacting batch
-    id) switches the rebuild to a VERSIONED manifest-pointer protocol,
-    because a catalog ``saveAsTable`` overwrite is the one rewrite
-    here with no atomic rename: the buckets land in a fresh
-    ``<table>__v<batch>`` table, and only after that write commits
-    does the one-row meta at ``<index_path>_bucketmeta`` atomically
-    swap to name it (covered_batch + table_version).  A crash mid
-    table write leaves a torn UNREFERENCED version — the live meta
-    still points at the previous intact version (or at nothing, which
-    falls back to the parquet explode), so a torn table can never
-    silently swallow probe candidates.  Superseded versions are
-    dropped after the swap (a crash there leaves an orphan the next
-    rebuild re-collects).  The probe treats index partitions with
-    ``ingest_batch > covered`` as the tail; a stale-but-intact meta
-    only means the tail overlaps the table, and the candidate
-    ``distinct`` absorbs the duplicates — a hole is impossible.
+    id) makes the rebuild VERSIONED: the table lands as a fresh
+    version and the meta at ``<index_path>_bucketmeta`` swaps to name
+    it (:func:`~..sources.bucketing.rebuild_bucket_table` has the crash
+    reasoning).  The probe treats index partitions with
+    ``ingest_batch > covered_batch`` as the parquet tail
+    (:func:`~..sources.bucketing.bucket_probe`).
 
     Returns None (instead of raising) when the index is missing or
     empty-so-far — a compact_every=1 stream whose first batches were
     all rejected must skip the rebuild, not wedge on an exception."""
     sigs = read_parquet_recovering(spark, index_path)
     if sigs is None:
-        # nothing ingested yet (or everything forgotten): nothing to
-        # index — callers skip; raising here would wedge a stream
-        # whose first batches were all rejected
         return None
-    key_cols = ["band"] + [f"k{r}" for r in range(rows_per_band)]
-    buckets = signature_buckets(sigs, n_bands, rows_per_band)
-    return _versioned_bucket_rebuild(
+    return rebuild_bucket_table(
         spark,
-        index_path + "_bucketmeta",
+        index_path + BUCKETMETA_SUFFIX,
         table,
-        buckets,
-        key_cols,
+        signature_buckets(sigs, N_BANDS, ROWS_PER_BAND),
+        SIG_BUCKET_KEYS,
         n_buckets,
         covered_batch,
-        # n_buckets AND the banding ride the meta so a FRESH SESSION
-        # (empty in-memory catalog) can re-register the surviving
-        # warehouse directory with the right bucket spec and key
-        # columns — see _reregister_bucket_table (ADVICE r5: a
-        # hardcoded 4x2 DDL would silently mis-register a deployment
-        # built with a different rows_per_band)
-        meta_extra=(("n_bands", n_bands), ("rows_per_band", rows_per_band)),
     )
 
 
-def _versioned_bucket_rebuild(
-    spark: SparkSession,
-    meta_path: str,
-    table: str,
-    rows: DataFrame,
-    key_cols: list[str],
-    n_buckets: int,
-    covered_batch: int | None,
-    meta_extra: tuple = (),
-) -> DataFrame:
-    """The shared manifest-pointer rebuild protocol behind every
-    bucketed probe table (signature buckets, segment index): write the
-    rows as a FRESH versioned bucketed table, atomically swap the
-    one-row meta at ``meta_path`` to name it, GC superseded versions.
-    ``meta_extra`` appends (name, int) columns to the meta row for
-    table-specific re-registration parameters (the sig table's
-    banding).  ``covered_batch=None`` is the plain unversioned write
-    (test/one-shot mode)."""
-    import os
-    import shutil
+@dataclass(frozen=True)
+class _Curation:
+    """One :func:`run_streaming_curation` run's session and options,
+    fixed for every micro-batch."""
 
-    from semantic_similarity_system_using_aws_mapreduce_spark.sources.bucketing import write_bucketed
-
-    # Spark stores catalog/warehouse names lowercased — fold here so
-    # attempt enumeration and GC below can never miss a mixed-case
-    # caller's own tables
-    table = table.lower()
-    if covered_batch is None:
-        write_bucketed(rows, table, key_cols, n_buckets=n_buckets)
-        return spark.table(table)
-    # The version name is unique PER REBUILD ATTEMPT, not just per
-    # batch: a crash-replay of the compacting batch re-enters here
-    # with the same covered_batch, and overwriting the version the
-    # live meta already names would be exactly the non-atomic rewrite
-    # this protocol exists to avoid — a fresh attempt table leaves the
-    # referenced one untouched until the pointer swaps.  Attempts are
-    # enumerated from the WAREHOUSE DIRECTORIES, not the catalog: the
-    # default catalog is in-memory (non-durable), so after a driver
-    # crash the replayed batch would see an empty catalog, pick the
-    # same attempt name, and saveAsTable would collide with the
-    # surviving non-empty directory (or worse, overwrite the live
-    # version in place).  The directory listing also sees attempts
-    # whose write crashed before ever reaching the catalog.
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    prefix = f"{table}__v{covered_batch}_a"
-
-    def _attempt_dirs():
-        if not os.path.isdir(warehouse):
-            return []
-        return [d for d in os.listdir(warehouse) if d.startswith(prefix)]
-
-    prior = [
-        int(d[len(prefix):]) for d in _attempt_dirs() if d[len(prefix):].isdigit()
-    ]
-    version = f"{prefix}{max(prior) + 1 if prior else 0}"
-    write_bucketed(rows, version, key_cols, n_buckets=n_buckets)
-    names = "covered_batch long, table_version string, n_buckets long" + "".join(
-        f", {n} long" for n, _ in meta_extra
-    )
-    atomic_replace(
-        spark.createDataFrame(
-            [(covered_batch, version, n_buckets, *[v for _, v in meta_extra])],
-            names,
-        ),
-        meta_path,
-    )
-    # GC superseded versions: catalog entries AND their (durable)
-    # warehouse directories — including orphans from attempts that
-    # crashed before reaching the catalog
-    for t in spark.catalog.listTables():
-        if t.name.startswith(f"{table}__v") and t.name != version:
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-    if os.path.isdir(warehouse):
-        for d in os.listdir(warehouse):
-            if d.startswith(f"{table}__v") and d != version:
-                shutil.rmtree(os.path.join(warehouse, d), ignore_errors=True)
-    return spark.table(version)
+    spark: SparkSession
+    corpus_path: str
+    index_path: str
+    min_tokens: int
+    min_ttr: float
+    min_agree: int
+    compact_every: int
+    bucket_index_table: str | None
+    n_index_buckets: int
+    stats: bool
+    postings: bool
+    paragraphs: bool
+    keep_newest: bool
+    ts_col: str
 
 
-def _reregister_bucket_table(
-    spark: SparkSession,
-    version: str,
-    n_buckets: int,
-    rows_per_band: int = 2,
-) -> bool:
-    """Make a bucketed probe-table version usable in THIS session:
-    the default catalog is in-memory, so a fresh process (each CLI
-    invocation, any restart) knows nothing of the table even though
-    its warehouse directory — bucket-suffixed files included —
-    survived.  Re-register it as an external bucketed table over that
-    directory; without this the probe silently falls back to the full
-    parquet explode every batch until the next compaction, the exact
-    shuffle the table exists to avoid.  True iff the version is now
-    queryable.
+@dataclass
+class _Decision:
+    """One micro-batch's dedup decision, held driver-side.  Every field
+    is bounded by the MICRO-BATCH (one entry per batch document or per
+    verified partner), so the decision is collected once and only id
+    sets and id->id maps re-enter the plans, as broadcast local
+    relations.  Keeping these as lazy DataFrames instead re-planned the
+    whole probe lineage once per consumer action (hundreds of Spark
+    jobs for a 4-row batch).  Keep-first leaves every supersession
+    field empty."""
 
-    The DDL derives from the banding the bucketmeta recorded (ADVICE
-    r5: a hardcoded 4x2 schema would silently mis-register a
-    deployment built with a different rows_per_band — the meta now
-    carries n_bands/rows_per_band, and this derives the key columns
-    from it)."""
-    key_ddl = ", ".join(f"k{r} BIGINT" for r in range(rows_per_band))
-    return _reregister_external_bucket_table(
-        spark,
-        version,
-        n_buckets,
-        f"doc_id BIGINT, band INT, {key_ddl}",
-        ["band"] + [f"k{r}" for r in range(rows_per_band)],
+    #: fresh signature-bearing survivors
+    kept: set = field(default_factory=set)
+    #: exact-digest superseders, (doc_id, superseded doc_id)
+    sup_pairs: list = field(default_factory=list)
+    #: near-dup superseders, (doc_id, superseded doc_id)
+    nsup_pairs: list = field(default_factory=list)
+    #: near-dups whose every colliding partner is already hidden
+    revived: list = field(default_factory=list)
+    #: keep-newest: the batch's fresh-digest winners (None = every
+    #: gated document is fresh, the keep-first case)
+    fresh: list | None = None
+    #: keep-newest: the cached per-digest batch winners
+    #: (doc_id, digest, _kn_ts)
+    winners: DataFrame | None = None
+    #: keep-newest: batch winners' timestamps in unix microseconds
+    ts: dict = field(default_factory=dict)
+    #: keep-newest: the digests index less this batch's own rows
+    dindex: DataFrame | None = None
+
+    def admit_ids(self) -> set:
+        return (
+            self.kept
+            | {d for d, _ in self.sup_pairs + self.nsup_pairs}
+            | set(self.revived)
+        )
+
+
+def _id_frame(spark: SparkSession, ids, col: str = "doc_id") -> DataFrame:
+    """A batch-bounded id set as a broadcast local relation."""
+    return F.broadcast(
+        spark.createDataFrame([(i,) for i in sorted(set(ids))], f"{col} long")
     )
 
 
-def _reregister_external_bucket_table(
-    spark: SparkSession,
-    version: str,
-    n_buckets: int,
-    cols_ddl: str,
-    key_cols: list[str],
-) -> bool:
-    import os
+def _micros(col: str):
+    """``col`` as unix MICROSECONDS: every newer-than comparison is then
+    exact int64 arithmetic, with None for null."""
+    return F.unix_micros(F.col(col).cast("timestamp")).alias("_us")
 
-    if spark.catalog.tableExists(version):
-        return True
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    loc = os.path.join(warehouse, version)
-    if not os.path.isdir(loc):
+
+def _newer(arr_us: int | None, ix_us: int | None) -> bool:
+    """Strictly newer with null timestamps ordering LOWEST: a null
+    arrival never supersedes, a dated arrival beats an undated indexed
+    copy, and null-vs-null drops."""
+    if arr_us is None:
         return False
-    spark.sql(
-        f"CREATE TABLE {version} "
-        f"({cols_ddl}) "
-        f"USING parquet CLUSTERED BY ({', '.join(key_cols)}) INTO {n_buckets} BUCKETS "
-        f"LOCATION '{loc}'"
+    return ix_us is None or arr_us > ix_us
+
+
+def _newest_visible(cands, hidden: set) -> dict:
+    """``group -> (doc_id, us)`` of the newest candidate per group that
+    is not ``hidden``, from ``(group, doc_id, us)`` triples: the
+    max(struct(t, id)) with null t lowest of the within-batch rule."""
+    best: dict = {}
+    for group, doc, us in cands:
+        if doc in hidden:
+            continue
+        key = (us is not None, us or 0, doc)
+        if group not in best or key > best[group][0]:
+            best[group] = (key, doc, us)
+    return {g: (doc, us) for g, (_, doc, us) in best.items()}
+
+
+def _hidden(spark: SparkSession, dindex: DataFrame, ids: set) -> set:
+    """The ``ids`` some digests row supersedes, i.e. the HIDDEN ones.
+    The marker relation is corpus-lifetime-sized, so it is semi-joined
+    down to the batch-bounded ids, map-side; one scan of the digests
+    table."""
+    if not ids:
+        return set()
+    return {
+        r["supersedes"]
+        for r in dindex.join(_id_frame(spark, ids, "supersedes"), "supersedes", "semi")
+        .select("supersedes")
+        .collect()
+    }
+
+
+def _gate(
+    c: _Curation, batch: DataFrame, batch_id: int, caches: list
+) -> tuple[DataFrame, DataFrame]:
+    """``(batch, gated)``: crawl rejects land in ``<corpus>_rejects``
+    and the rest passes the quality gate.  The gated relation is cached
+    (signatures and the corpus write both read it).  A crawl batch is
+    cached RAW first: upstream of here is the archive's whole parse and
+    HTML extraction, which the rejects write, the docs arm and the
+    stats count would otherwise each re-run; with ``stats`` the batch
+    is cached for its arrived-count."""
+    if "_crawl_reject" in batch.columns:
+        raw = batch.cache()
+        caches.append(raw)
+        _write_batch_partition(
+            raw.filter(F.col("_crawl_reject")).drop("_crawl_reject"),
+            c.corpus_path + "_rejects",
+            batch_id,
+        )
+        batch = raw.filter(~F.col("_crawl_reject")).drop("_crawl_reject")
+    elif c.stats:
+        batch = batch.cache()
+        caches.append(batch)
+    gated = quality_gate(batch, c.min_tokens, c.min_ttr).cache()
+    caches.append(gated)
+    return batch, gated
+
+
+def _exact_decision(
+    c: _Curation, gated: DataFrame, own_ids: DataFrame, batch_id: int, caches: list
+) -> _Decision:
+    """Keep-newest exact-digest decision against the ``<corpus>_digests``
+    table.  Invariants:
+
+    * Within a batch the newest copy per content digest wins, ties by
+      greatest id (the batch funnel's rule, run_curation.py).
+    * Across batches an arrival STRICTLY newer (:func:`_newer`) than
+      the newest VISIBLE indexed copy of its digest supersedes that
+      copy; not newer, it drops like a keep-first duplicate.
+    * HIDDEN copies leave the exact-match pool: a chain head superseded
+      by a near-dup edit has a different digest than its superseder,
+      so a page reverted to its pre-edit bytes must not match its own
+      hidden ancestor.  It routes through the near-dup probe instead
+      and supersedes the VISIBLE head.
+    * doc_ids are globally unique across batches (a re-crawl mints a
+      new id).  An arriving id an EARLIER batch admitted fails the
+      batch: the replay exclusion would strip its digest row, bypass
+      both probes and land a second visible row under that id.  A
+      replay is told apart because its residue sits in this batch's
+      own partition, which compaction always spares.
+
+    Scans of the digests table: the id-reuse check, the digest probe
+    and the hidden-marker probe, each with the batch side broadcast.
+    At 10^9 documents the 4-column table is ~50 GB, and a column-pruned
+    exchange-free scan per batch is two orders below the batch's own
+    parse+shingle cost; bucketing it would save no shuffle (the plan
+    has none) and digest randomness defeats min/max pruning."""
+    winners = (
+        gated.groupBy(F.md5("text").alias("digest"))
+        .agg(
+            F.max(
+                F.struct(F.col(c.ts_col).alias("t"), F.col("doc_id").alias("d"))
+            ).alias("_s")
+        )
+        .select(
+            F.col("_s.d").alias("doc_id"), "digest", F.col("_s.t").alias("_kn_ts")
+        )
+        .cache()
     )
-    return True
+    caches.append(winners)
+    # one row per batch digest; the raw timestamps stay in-plan for the
+    # digests write, only integer micros round-trip through Python
+    rows = winners.select("doc_id", "digest", _micros("_kn_ts")).collect()
+    d = _Decision(winners=winners, ts={r["doc_id"]: r["_us"] for r in rows})
+    dindex = read_parquet_recovering(c.spark, c.corpus_path + DIGESTS_SUFFIX)
+    if dindex is None:
+        d.fresh = [r["doc_id"] for r in rows]
+        return d
+    reused = (
+        dindex.filter(F.col("ingest_batch") != batch_id)
+        .join(own_ids, "doc_id", "semi")
+        .select("doc_id")
+        .take(3)
+    )
+    if reused:
+        ids_s = ", ".join(str(r.doc_id) for r in reused)
+        raise ValueError(
+            "keep-newest ingest requires globally unique "
+            f"doc_ids across batches: arriving ids [{ids_s}"
+            "...] were already admitted by an earlier "
+            "micro-batch.  Re-crawls must mint a NEW "
+            "doc_id (the crawl readers derive it from the "
+            "WARC record id); supersession links the new "
+            "id to the old one."
+        )
+    d.dindex = dindex = dindex.join(own_ids, "doc_id", "left_anti")
+    digests = c.spark.createDataFrame([(r["digest"],) for r in rows], "digest string")
+    probe = (
+        dindex.join(F.broadcast(digests), "digest")
+        .select("digest", "doc_id", _micros(c.ts_col))
+        .collect()
+    )
+    hits = _newest_visible(
+        ((r["digest"], r["doc_id"], r["_us"]) for r in probe),
+        _hidden(c.spark, dindex, {r["doc_id"] for r in probe}),
+    )
+    d.fresh = []
+    for r in rows:
+        hit = hits.get(r["digest"])
+        if hit is None:
+            d.fresh.append(r["doc_id"])
+        elif _newer(r["_us"], hit[1]):
+            d.sup_pairs.append((r["doc_id"], hit[0]))
+    return d
+
+
+def _signatures(
+    c: _Curation, gated: DataFrame, d: _Decision, caches: list
+) -> tuple[DataFrame, DataFrame]:
+    """``(sigs_all, sigs)``: the cached minhash signatures of every doc
+    that may be admitted, and those of the docs that face the near-dup
+    probe.  Keep-newest shingles only the fresh winners and the exact
+    superseders, and only the FRESH face the probe: a superseder is
+    digest-identical to an admitted document, so the probe would
+    uselessly report it as a dup of the copy it replaces.  Signature
+    rows join the index under the new doc_id; the predecessor's stay,
+    and near-dup drops against them remain correct because a surviving
+    copy carries the same or near-identical content."""
+    pool = gated
+    if d.fresh is not None:
+        pool = gated.join(
+            _id_frame(c.spark, d.fresh + [x for x, _ in d.sup_pairs]), "doc_id"
+        )
+    # distinct=False: min-signatures are duplicate-blind
+    sigs_all = minhash_signatures(shingle_hashes(pool, distinct=False)).cache()
+    caches.append(sigs_all)
+    if d.fresh is None:
+        return sigs_all, sigs_all
+    return sigs_all, sigs_all.join(_id_frame(c.spark, d.fresh), "doc_id")
+
+
+def _sig_probe(
+    c: _Curation, own_ids: DataFrame
+) -> tuple[DataFrame, list[DataFrame] | None]:
+    """``(index, index_buckets)`` for the near-dup probe: the signature
+    index less this batch's own rows, and with a bucket table, its live
+    version plus the parquet tail's buckets."""
+    index = read_parquet_recovering(c.spark, c.index_path)
+    if index is None:
+        return c.spark.createDataFrame([], SIG_SCHEMA), None
+    index = index.join(own_ids, "doc_id", "left_anti")
+    probe = c.bucket_index_table and bucket_probe(
+        c.spark, c.index_path + BUCKETMETA_SUFFIX, index, own_ids,
+        SIG_BUCKET_DDL, SIG_BUCKET_KEYS,
+    )
+    if not probe:
+        return index, None
+    return index, [probe[0], signature_buckets(probe[1], N_BANDS, ROWS_PER_BAND)]
+
+
+def _near_dup_decision(
+    c: _Curation,
+    d: _Decision,
+    sigs: DataFrame,
+    index: DataFrame,
+    index_buckets: list[DataFrame] | None,
+) -> None:
+    """Probe ``sigs`` against the signature index and decide, both
+    modes: a signature-bearing doc with no verified partner is kept (a
+    gated doc too short to shingle has no signature and is not).
+
+    Keep-newest near-dup rule, for docs whose every partner is INDEXED
+    (docs with an in-batch partner keep the keep-first in-batch rule;
+    the surviving smaller id carries any supersession): the newest
+    VISIBLE partner decides, judged on the full verified-collision
+    relation because the minimum partner id is often a long-superseded
+    ancestor.  Strictly newer => the arrival supersedes that partner;
+    not newer => it drops; every partner hidden => it is admitted as
+    fresh (dedup protects the visible view, not the graveyard).
+
+    Scans of the digests table: the partners' timestamps and their
+    hidden markers, which with :func:`_exact_decision`'s three make
+    the five per keep-newest batch."""
+    sig_ids = {r["doc_id"] for r in sigs.select("doc_id").collect()}
+    scored = incremental_dedup_scored(
+        sigs,
+        index,
+        n_bands=N_BANDS,
+        rows_per_band=ROWS_PER_BAND,
+        min_agree=c.min_agree,
+        index_buckets=index_buckets,
+    ).collect()
+    d.kept = sig_ids - {r["doc_id"] for r in scored}
+    if d.dindex is None:
+        return
+    inb = {r["doc_id"] for r in scored if r["in_batch"]}
+    pairs = {
+        (r["doc_id"], r["partner"])
+        for r in scored
+        if not r["in_batch"] and r["doc_id"] not in inb
+    }
+    if not pairs:
+        return
+    partners = {p for _, p in pairs}
+    p_ts = {
+        r["doc_id"]: r["_us"]
+        for r in d.dindex.join(_id_frame(c.spark, partners), "doc_id", "semi")
+        .select("doc_id", _micros(c.ts_col))
+        .collect()
+    }
+    best = _newest_visible(
+        ((doc, p, p_ts.get(p)) for doc, p in pairs),
+        _hidden(c.spark, d.dindex, partners),
+    )
+    for doc in {x for x, _ in pairs}:
+        if doc not in best:
+            d.revived.append(doc)
+        elif _newer(d.ts.get(doc), best[doc][1]):
+            d.nsup_pairs.append((doc, best[doc][0]))
+
+
+def _with_supersedes(c: _Curation, df: DataFrame, pairs: list) -> DataFrame:
+    """``df`` plus its rows' ``supersedes`` marker (null for fresh
+    rows — the column exists from batch 0, so partition reads never
+    depend on footer merge)."""
+    if not pairs:
+        return df.withColumn("supersedes", F.lit(None).cast("long"))
+    marks = c.spark.createDataFrame(sorted(pairs), "doc_id long, supersedes long")
+    return df.join(F.broadcast(marks), "doc_id", "left")
+
+
+def _write_admitted(
+    c: _Curation, batch_id: int, gated: DataFrame, sigs_all: DataFrame, d: _Decision
+) -> tuple[DataFrame, DataFrame]:
+    """Append the admit set to the corpus and its signatures to the
+    index, and with keep-newest its rows to ``<corpus>_digests``;
+    returns ``(admitted, admit_ids)``.
+
+    A superseder's corpus row carries its predecessor's id in
+    ``supersedes``: the corpus stays append-only and the stale row is
+    HIDDEN by :func:`read_corpus_asof`, so the as-of axis stays
+    truthful and replays stay partition-local.  The digests row mirrors
+    the marker, which makes that narrow table the supersession system
+    of record (visible-view readers and RTBF chain expansion never read
+    the corpus for markers).  Keep-first corpora have no ``supersedes``
+    column and no digests table."""
+    admit = _id_frame(c.spark, d.admit_ids())
+    admitted = gated.join(admit, "doc_id")
+    if c.keep_newest:
+        marks = d.sup_pairs + d.nsup_pairs
+        admitted = _with_supersedes(c, admitted, marks)
+    _write_batch_partition(admitted, c.corpus_path, batch_id)
+    _write_batch_partition(sigs_all.join(admit, "doc_id"), c.index_path, batch_id)
+    if c.keep_newest:
+        digests = _with_supersedes(c, d.winners.join(admit, "doc_id"), marks)
+        _write_batch_partition(
+            digests.select(
+                "doc_id", "digest", F.col("_kn_ts").alias(c.ts_col), "supersedes"
+            ),
+            c.corpus_path + DIGESTS_SUFFIX,
+            batch_id,
+        )
+    return admitted, admit
+
+
+def _paragraphs(
+    c: _Curation,
+    batch_id: int,
+    admitted: DataFrame,
+    admit: DataFrame,
+    d: _Decision,
+    caches: list,
+) -> None:
+    """Cut the admitted documents' segments against ``<corpus>_segindex``
+    into ``<corpus>_clean`` and the index delta.  Invariants:
+
+    * The probe excludes the admit set's own attributions (a replayed
+      batch must not shadow itself into all-dup); with a bucket table
+      it reads the live version plus the parquet tail.
+    * An EXACT superseder INHERITS its predecessor's clean face under
+      the new id: re-cutting its digest-identical content would scrub
+      every segment as a cross-batch dup and emit an empty face while
+      the good one is hidden.  Segment attribution stays with the
+      chain's origin, so chain RTBF erases face, segments and corpus
+      rows together.  A superseder whose predecessor has no face
+      (paragraphs enabled mid-stream) is cut normally.
+    * A NEAR-DUP superseder's face is RE-CUT (its content differs),
+      with the hidden predecessors' attributions retired from this
+      batch's probe VIEW so the edit's unchanged paragraphs survive
+      under the new id.  The table itself is untouched, so past
+      decisions stay truthful; a hash may then be attributed to two
+      chain members, and chain RTBF erases both."""
+    seg_path = c.corpus_path + SEGINDEX_SUFFIX
+    seg_index = read_parquet_recovering(c.spark, seg_path)
+    if seg_index is not None:
+        seg_index = [seg_index.join(admit, "doc_id", "left_anti")]
+        if c.bucket_index_table:
+            seg_index = bucket_probe(
+                c.spark, seg_path + BUCKETMETA_SUFFIX, seg_index[0], admit,
+                SEG_BUCKET_DDL, SEG_BUCKET_KEYS,
+            ) or seg_index
+        if d.nsup_pairs:
+            retired = _id_frame(c.spark, [s for _, s in d.nsup_pairs])
+            seg_index = [r.join(retired, "doc_id", "left_anti") for r in seg_index]
+    cut, inherit = admitted, None
+    prev_clean = (
+        read_parquet_recovering(c.spark, c.corpus_path + CLEAN_SUFFIX)
+        if d.sup_pairs
+        else None
+    )
+    if prev_clean is not None:
+        heirs = c.spark.createDataFrame(
+            [(s, x) for x, s in sorted(d.sup_pairs)], "doc_id long, _new_id long"
+        )
+        inherit = (
+            prev_clean.join(F.broadcast(heirs), "doc_id")
+            .select(
+                F.col("_new_id").alias("doc_id"),
+                "n_segments", "n_kept", "n_dup", "kept_text",
+            )
+            .cache()
+        )
+        caches.append(inherit)
+        # only the clean table knows which predecessors have a face
+        inherited = [r["doc_id"] for r in inherit.select("doc_id").collect()]
+        if inherited:
+            cut = admitted.join(_id_frame(c.spark, inherited), "doc_id", "left_anti")
+        else:
+            inherit = None
+    clean, seg_delta, segs = paragraph_delta(cut, seg_index)
+    caches.append(segs)
+    if inherit is not None:
+        clean = clean.unionByName(inherit)
+    _write_batch_partition(clean, c.corpus_path + CLEAN_SUFFIX, batch_id)
+    _write_batch_partition(seg_delta, seg_path, batch_id)
+
+
+def _write_stats(
+    c: _Curation, batch_id: int, batch: DataFrame, gated: DataFrame, n_kept: int
+) -> None:
+    """One funnel row (n_arrived, n_gated, n_kept) per batch in
+    ``<corpus>_stats``; the admit count is already driver-side."""
+    _write_batch_partition(
+        c.spark.createDataFrame(
+            [(batch.count(), gated.count(), n_kept)],
+            "n_arrived long, n_gated long, n_kept long",
+        ),
+        c.corpus_path + "_stats",
+        batch_id,
+    )
+
+
+def _compact(c: _Curation, batch_id: int) -> None:
+    """Fold every per-batch table but this batch's partition.  Each
+    bucket table is rebuilt BEFORE its index folds, so a crash between
+    the two leaves the meta stale-but-safe (the tail then overlaps the
+    table; see :func:`~..sources.bucketing.bucket_probe`).  The digests
+    table keys on (digest, doc_id): a digest maps to every copy in its
+    supersession history, so only replay residue dedups away.  The
+    ``_clean`` table is corpus-like and never compacted, so its batch
+    axis stays truthful for as-of reads."""
+    if c.bucket_index_table:
+        build_bucketed_sig_index(
+            c.spark, c.index_path, c.bucket_index_table,
+            n_buckets=c.n_index_buckets, covered_batch=batch_id,
+        )
+    compact_index(c.spark, c.index_path, keep_batch=batch_id)
+    if c.keep_newest:
+        compact_index(
+            c.spark, c.corpus_path + DIGESTS_SUFFIX, keep_batch=batch_id,
+            dedup_keys=("digest", "doc_id"),
+        )
+    if c.postings:
+        compact_retrieval(c.spark, c.corpus_path, keep_batch=batch_id)
+    if c.paragraphs:
+        if c.bucket_index_table:
+            build_bucketed_seg_index(
+                c.spark, c.corpus_path + SEGINDEX_SUFFIX,
+                c.bucket_index_table + SEG_TABLE_SUFFIX,
+                n_buckets=c.n_index_buckets, covered_batch=batch_id,
+            )
+        compact_index(
+            c.spark, c.corpus_path + SEGINDEX_SUFFIX, keep_batch=batch_id,
+            dedup_keys=("seg_hash",),
+        )
 
 
 def run_streaming_curation(
@@ -614,8 +984,9 @@ def run_streaming_curation(
     funnel: quality gate -> minhash signatures -> incremental dedup
     against the persisted index -> write survivors to the corpus
     table and their signatures to the index, each into the batch's own
-    ``ingest_batch`` partition (idempotent under replay — see the
-    module docstring's exactly-once analysis).
+    ``ingest_batch`` partition.  Each micro-batch runs the stages
+    below in order; each stage's docstring states the invariants it
+    keeps.
 
     ``compact_every=N`` folds the index's accumulated per-batch
     partitions into a single base partition every N micro-batches
@@ -624,132 +995,57 @@ def run_streaming_curation(
 
     ``bucket_index_table`` (requires ``compact_every``) additionally
     maintains the bucketed probe table: rebuilt at every compaction
-    (BEFORE the fold, so a crash between the two can only leave the
-    meta stale-but-safe — see :func:`build_bucketed_sig_index`), and
-    probed together with the since-rebuild parquet tail as two
-    candidate joins.  At 100 TB this is the difference between
-    shuffling the whole index's bucket relation every micro-batch and
-    shuffling only the micro-batch.
+    (:func:`build_bucketed_sig_index`) and probed together with the
+    since-rebuild parquet tail as two candidate joins.  At 100 TB this
+    is the difference between shuffling the whole index's bucket
+    relation every micro-batch and shuffling only the micro-batch.
+    ``n_index_buckets`` sizes it.
 
     ``stats=True`` additionally writes a one-row-per-batch ingest
-    funnel (n_arrived / n_gated / n_kept) to ``<corpus_path>_stats``,
-    partitioned and replay-idempotent like every other table here —
-    the operational answer to "what did batch N reject, and why is
+    funnel (n_arrived / n_gated / n_kept) to ``<corpus_path>_stats``
+    — the operational answer to "what did batch N reject, and why is
     the corpus growing slower than the crawl".
 
     ``postings=True`` additionally maintains the incremental BM25
     retrieval tables ``<corpus_path>_postings`` / ``_doclens``
     (streaming/retrieval.py): each batch's admitted documents are
-    tokenized ONCE into per-batch partitions, idempotent under replay
-    like the corpus itself, and ``bm25_search_postings`` answers
-    ranked queries without ever re-tokenizing the corpus.
+    tokenized ONCE, and ``bm25_search_postings`` answers ranked
+    queries without ever re-tokenizing the corpus.  A superseded
+    copy's rows stay on disk; search ranks only the visible view.
 
     ``paragraphs=True`` additionally maintains incremental
-    paragraph-level dedup (streaming/paragraphs.py): each admitted
-    document's segments are cut against the persisted
-    ``<corpus_path>_segindex`` keep-first (cross-batch quotes and
-    boilerplate drop the moment they recur) and the scrubbed face
-    lands in ``<corpus_path>_clean`` — the raw corpus row is
-    untouched.  Both tables follow the same replay/compaction/RTBF
-    discipline as the signature index.
+    paragraph-level dedup (streaming/paragraphs.py, :func:`_paragraphs`):
+    each admitted document's segments are cut against the persisted
+    ``<corpus_path>_segindex`` keep-first and the scrubbed face lands
+    in ``<corpus_path>_clean`` — the raw corpus row is untouched.
 
-    ``dedup="keep-newest"`` (r11, VERDICT r10 #1/#3's missing piece)
-    gives the stream the batch funnel's CRAWL semantics: when a
-    micro-batch carries a content digest that is already in the
-    corpus with an OLDER ``ts_col``, the arrival SUPERSEDES the stale
-    copy instead of dropping as a duplicate.  Mechanics — all
-    replay-idempotent, all partition-pruned:
+    ``dedup``: ``"keep-first"`` drops every arrival that collides with
+    an indexed or smaller-id in-batch document.  ``"keep-newest"``
+    gives the stream the batch funnel's CRAWL semantics: an arrival
+    whose content (exact digest, :func:`_exact_decision`) or near-dup
+    signature (:func:`_near_dup_decision`) matches an OLDER visible
+    corpus copy by ``ts_col`` SUPERSEDES it instead of dropping
+    (:func:`_write_admitted`).  It keeps a ``<corpus_path>_digests``
+    table, and needs ``ts_col`` on the stream and globally unique
+    doc_ids.  RTBF (:func:`forget_documents`) expands the given ids to
+    their whole supersession chains.
 
-    * a ``<corpus_path>_digests`` table (per-batch partitions, like
-      the signature index) maps each admitted document's content
-      digest to its (doc_id, ts, supersedes); the batch probes it
-      with a broadcast equi-join on its own digests — never a corpus
-      rescan.  Probe-scan adjudication (VERDICT r11 missing #2): the
-      per-batch probe IS a full map-side scan of the compacted
-      digests table — deliberately.  The row is 4 narrow columns
-      (~50 bytes compressed), so at 10^9 corpus docs the table is
-      ~50 GB and a column-pruned, no-shuffle, no-exchange scan per
-      micro-batch is minutes of aggregate scan across a cluster —
-      two orders below the batch's own parse+shingle cost — while a
-      digest-bucketed variant would save no shuffle (the batch side
-      already broadcasts; bucketing removes Exchanges, and this plan
-      has none) and digest randomness defeats min/max pruning.  The
-      keep-newest path performs a bounded number (<= 5) of such
-      scans per batch (probe, marker semi-probes, partner-ts probe,
-      id-reuse check), each broadcast-batch-sized on the build side.
-    * within a batch, the newest copy per digest survives (ties by
-      greatest id — the batch funnel's rule, run_curation.py); older
-      in-batch copies and arrivals not newer than the newest VISIBLE
-      indexed copy drop exactly like keep-first duplicates.  Null
-      timestamps order LOWEST everywhere (within-batch struct-max
-      and both cross-batch strictly-newer comparisons — ADVICE r11),
-      so a null-``ts_col`` arrival never supersedes and a dated
-      arrival beats an undated indexed copy.
-    * an EXACT superseding arrival BYPASSES the near-dup index probe
-      (its content is digest-identical to a document the corpus
-      already admitted, so its near-dup relationships are already
-      settled) and lands in the corpus with its predecessor's id in
-      a ``supersedes`` column.  The corpus stays append-only — the
-      stale row is HIDDEN by :func:`read_corpus_asof`'s windowed
-      anti-join, not rewritten — so the as-of axis stays truthful at
-      every watermark and replays stay partition-local.
-    * a NEAR-DUP arrival (r12, VERDICT r11 #2 — the common re-crawl:
-      content changed slightly) no longer always drops keep-first:
-      among its verified colliding partners
-      (:func:`~..operators.dedup.incremental_dedup_scored`), the
-      newest VISIBLE indexed one decides — strictly newer arrival =>
-      the arrival SUPERSEDES that copy (marker on the matched id,
-      same machinery as the exact path); not newer => drops; every
-      partner already hidden => ADMITTED as fresh (dedup protects
-      the visible view, not the graveyard — this is also how a page
-      REVERTED to a pre-edit version supersedes the visible edit:
-      hidden copies leave the exact-digest pool, so the revert
-      routes through the sig probe and lands on the visible head).
-      Docs with any in-batch partner keep the in-batch keep-first
-      rule; the surviving smaller id carries the supersession.
-    * signature rows join the index under the NEW doc_id (the
-      predecessor's stay: near-dup drops against the superseded id
-      remain correct because a surviving copy carries the same or
-      near-identical content).
-    * doc_id contract (ADVICE r11): ids must be globally unique
-      across batches — a re-crawl MINTS A NEW id (the crawl readers
-      derive it from the WARC record id) and supersession links it
-      to the old one.  An arriving id already indexed by an earlier
-      batch fails the batch loudly (replay is distinguishable: its
-      residue sits in the batch's own partition); reusing an id
-      would otherwise bypass both probes via the replay-safety
-      exclusion and land duplicate visible rows under one id.
-    * RTBF: :func:`forget_documents` covers the digests table and by
-      default EXPANDS the given ids to their full supersession
-      chains (same-digest members plus ``supersedes`` edges walked
-      both directions), because forgetting a superseding copy alone
-      resurrects its predecessor (the marker disappears with the
-      row).  Pass ``expand_chains=False`` to erase single rows.
-    * derived tables stay append-only too: a superseded copy's BM25
-      postings and doclens rows remain on disk, but
-      ``bm25_search_postings`` ranks only the visible corpus view
-      (its marker anti-join excludes superseded ids from scoring AND
-      from the collection statistics), so search never returns the
-      stale copy.
-    * with ``paragraphs=True``, an EXACT superseder INHERITS its
-      predecessor's clean face under the new id (its content is
-      digest-identical, and re-cutting it would scrub every segment
-      as a cross-batch dup of the predecessor, emitting an empty face
-      while the good one is hidden); segment attribution stays with
-      the chain's origin, so RTBF of the whole chain erases face,
-      segments, and corpus rows together.  A NEAR-DUP superseder's
-      face is RE-CUT instead (content differs), with the hidden
-      predecessor's segment attributions retired from the probe view
-      so the edit's unchanged paragraphs survive under the new id.
+    ``source_format`` is passed to :func:`read_document_stream`; the
+    gate and ``n_kept`` use ``min_tokens``/``min_ttr``/``min_agree``.
 
+    Exactly-once: ``foreachBatch`` is at-least-once, so every write is
+    IDEMPOTENT under replay — each lands in the batch's own
+    ``ingest_batch`` partition via dynamic partition overwrite, and
+    every probe excludes the batch's own doc_ids, so a batch replayed
+    after a crash between its writes and the checkpoint commit
+    recomputes the same decision instead of colliding with itself.
     Runs with availableNow (drains everything currently in
     ``source_dir``, one file per micro-batch, then stops) — the test
     and backfill mode; a production deployment runs the same query
-    continuously.  Restart-safe by construction: the checkpoint skips
-    committed batches, a replayed uncommitted batch rewrites its own
-    partitions, and re-ingested content that already reached the index
-    drops as a duplicate — an at-least-once source yields an
-    exactly-once corpus."""
+    continuously.  The checkpoint skips committed batches, a replayed
+    uncommitted batch rewrites its own partitions, and re-ingested
+    content that already reached the index drops as a duplicate — an
+    at-least-once source yields an exactly-once corpus."""
     if bucket_index_table and not compact_every:
         raise ValueError("bucket_index_table requires compact_every (its rebuild cadence)")
     if dedup not in ("keep-first", "keep-newest"):
@@ -761,783 +1057,44 @@ def run_streaming_curation(
             "(crawl formats mint fetched_at from WARC-Date; parquet "
             "sources must carry it)"
         )
+    c = _Curation(
+        spark, corpus_path, index_path, min_tokens, min_ttr, min_agree,
+        compact_every, bucket_index_table, n_index_buckets, stats, postings,
+        paragraphs, dedup == "keep-newest", ts_col,
+    )
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        raw = None
-        if "_crawl_reject" in batch.columns:
-            # crawl reader rejects (non-2xx, empty extraction, torn
-            # framing) land in their own replay-idempotent table — a
-            # mis-crawled batch must be distinguishable from an empty
-            # one.  Cache the RAW batch first (r10): for crawl
-            # formats the plan upstream of this point is the whole
-            # archive's mapInPandas parse + HTML extraction, and the
-            # rejects write, the docs arm and the stats count would
-            # otherwise each re-parse the archive from bytes — 3x the
-            # dominant per-batch cost at 1 GB archive scale.
-            raw = batch.cache()
-            _write_batch_partition(
-                raw.filter(F.col("_crawl_reject")).drop("_crawl_reject"),
-                corpus_path + "_rejects",
-                batch_id,
-            )
-            batch = raw.filter(~F.col("_crawl_reject")).drop("_crawl_reject")
-        elif stats:
-            # the arrived-count below and the gate both read the
-            # batch — cache it so stats never re-scan the source file
-            batch = batch.cache()
-        gated = quality_gate(batch, min_tokens, min_ttr)
-        # cache: signatures + corpus write both consume the gate
-        gated = gated.cache()
-        # keep-newest DECISION STATE (r13): plain Python, not cached
-        # DataFrames.  Every decision relation here is bounded by the
-        # MICRO-BATCH (one entry per batch digest / per verified
-        # partner) — the exact bound the previous formulation already
-        # assumed when it wrapped each of them in F.broadcast().  The
-        # r12 form kept them as lazy DataFrames: every consumer action
-        # re-planned and re-ran the deep probe lineage (a measured 589
-        # Spark jobs / ~110 s PER MICRO-BATCH on a 4-row batch — guide
-        # §5: the driver should orchestrate decisions, not launch
-        # hundreds of broadcast jobs to avoid holding 50 ids).  Now
-        # each index probe runs ONCE (the documented <= 5 scans per
-        # batch, unchanged), its batch-bounded result is collected,
-        # the supersede-vs-drop arithmetic happens driver-side in
-        # integer microseconds (unix_micros — no tz-dependent datetime
-        # comparisons), and only ID SETS and id->id maps re-enter the
-        # plans as broadcast local relations (guide §8: decide with
-        # small rows, attach the decision cheaply).
-        sup_pairs: list = []      # exact-digest (doc_id, supersedes)
-        nsup_pairs: list = []     # near-dup (doc_id, supersedes)
-        revived_ids: list = []    # near-dups of hidden-only copies
-        kept_ids_kn: set = set()  # fresh survivors (keep-newest path)
-        digest_keep = None  # keep-newest: per-digest batch winners (cached)
-        sigs_all = None     # keep-newest: cached batch signature pool
-        dindex = None       # keep-newest: digests index (own rows excluded)
+        caches: list[DataFrame] = []
         try:
-            # replay safety: a crash after the table writes but
-            # before the checkpoint commit re-delivers this batch,
-            # whose own rows are already indexed — they must not
-            # shadow the recomputation or the rewritten corpus
-            # partition would come out empty.  Excluding by doc_id
-            # (a broadcast anti-join against the tiny batch id set)
-            # rather than by ingest_batch partition also covers rows
-            # a compaction has already folded into the base
-            # partition.  The gated id set is the superset of
-            # everything this batch can have indexed on a previous
-            # attempt (fresh survivors AND keep-newest superseders),
-            # so one broadcast set serves the sig AND digest indexes.
+            batch, gated = _gate(c, batch, batch_id, caches)
+            # replay safety: every probe excludes the batch's own ids —
+            # the gated set, a superset of everything a previous attempt
+            # of this batch can have written to any index; by id, not by
+            # partition, so it also covers rows a compaction folded
             own_ids = F.broadcast(gated.select("doc_id"))
-            if dedup == "keep-newest":
-                dig = gated.select(
-                    "doc_id",
-                    F.col(ts_col).alias("_kn_ts"),
-                    F.md5("text").alias("digest"),
-                )
-                # within-batch exact resolution: newest copy per
-                # digest survives, ties by greatest id — the batch
-                # funnel's rule (run_curation.py); combiner-friendly
-                # aggregate, no per-key sort.  Cached: consumed by the
-                # winner collect below AND the digests-delta write
-                # (which keeps the raw timestamp values in-plan — only
-                # integer ids/digests ever round-trip through Python).
-                digest_keep = (
-                    dig.groupBy("digest")
-                    .agg(
-                        F.max(
-                            F.struct(
-                                F.col("_kn_ts").alias("t"),
-                                F.col("doc_id").alias("d"),
-                            )
-                        ).alias("_s")
-                    )
-                    .select(
-                        F.col("_s.d").alias("doc_id"),
-                        "digest",
-                        F.col("_s.t").alias("_kn_ts"),
-                    )
-                    .cache()
-                )
-                # batch winners to the driver: one row per batch
-                # digest (micro-batch-bounded by construction — the
-                # same envelope the old broadcast(digest_keep) already
-                # shipped to every executor).  Timestamps travel as
-                # unix MICROSECONDS so every newer-than comparison
-                # below is exact int64 — None == null orders lowest,
-                # exactly the struct-max convention.
-                dk_rows = digest_keep.select(
-                    "doc_id",
-                    "digest",
-                    F.unix_micros(F.col("_kn_ts").cast("timestamp")).alias("_us"),
-                ).collect()
-                dk_ts = {r["doc_id"]: r["_us"] for r in dk_rows}
-
-                def _newer(arr_us, ix_us):
-                    # null-lowest strictly-newer rule (ADVICE r11): a
-                    # null arrival never supersedes; a dated arrival
-                    # beats an undated indexed copy — the Python twin
-                    # of coalesce(arr > ix, arr IS NOT NULL)
-                    if arr_us is None:
-                        return False
-                    if ix_us is None:
-                        return True
-                    return arr_us > ix_us
-
-                dindex = read_parquet_recovering(
-                    spark, corpus_path + DIGESTS_SUFFIX
-                )
-                if dindex is not None:
-                    if "supersedes" not in dindex.columns:
-                        # a digests table written before the marker
-                        # column existed (r11): no edges to read —
-                        # behaves exactly as the table's writer did
-                        dindex = dindex.withColumn(
-                            "supersedes", F.lit(None).cast("long")
-                        )
-                    # cross-batch doc_id-uniqueness contract, fail
-                    # fast (ADVICE r11): an arriving doc_id already
-                    # indexed by an EARLIER batch is id reuse — the
-                    # replay-safety anti-join below would silently
-                    # strip its digest row, bypass both probes, and
-                    # land a second visible corpus row under the same
-                    # id.  Replay is distinguishable because it
-                    # re-delivers the SAME batch: its residue sits in
-                    # this batch's own partition (compaction always
-                    # spares the in-flight batch).  One broadcast
-                    # semi-probe of the narrow digests table per
-                    # micro-batch is the cost of the contract.
-                    reused = (
-                        dindex.filter(F.col("ingest_batch") != batch_id)
-                        .join(own_ids, "doc_id", "semi")
-                        .select("doc_id")
-                        .take(3)
-                    )
-                    if reused:
-                        ids_s = ", ".join(str(r.doc_id) for r in reused)
-                        raise ValueError(
-                            "keep-newest ingest requires globally unique "
-                            f"doc_ids across batches: arriving ids [{ids_s}"
-                            "...] were already admitted by an earlier "
-                            "micro-batch.  Re-crawls must mint a NEW "
-                            "doc_id (the crawl readers derive it from the "
-                            "WARC record id); supersession links the new "
-                            "id to the old one."
-                        )
-                    dindex = dindex.join(own_ids, "doc_id", "left_anti")
-                    # PROBE 1 of <= 5: index rows carrying any of the
-                    # batch's digests — the batch side broadcasts, so
-                    # this is an index probe (bloom-pruned scan under
-                    # AQE), never a rescan of corpus text.  The result
-                    # is bounded by batch digests x supersession-chain
-                    # length (the bound the old cached kn_probe had);
-                    # collected ONCE instead of re-planned per
-                    # consumer.
-                    bd_local = spark.createDataFrame(
-                        [(r["digest"],) for r in dk_rows], "digest string"
-                    )
-                    probe_rows = (
-                        dindex.join(F.broadcast(bd_local), "digest")
-                        .select(
-                            "digest",
-                            "doc_id",
-                            F.unix_micros(
-                                F.col(ts_col).cast("timestamp")
-                            ).alias("_us"),
-                        )
-                        .collect()
-                    )
-                    # PROBE 2: HIDDEN copies leave the exact-match
-                    # pool (r12): a chain head superseded by a
-                    # NEAR-DUP edit has a different digest than its
-                    # superseder, so without this a reverted page
-                    # would match its own hidden ancestor and
-                    # resurface next to the visible edit — routing it
-                    # through the sig probe instead lets it supersede
-                    # the VISIBLE head.  The marker relation is
-                    # corpus-lifetime-sized, so it is semi-joined down
-                    # to the batch-bounded probed ids (map-side).
-                    hidden_ids: set = set()
-                    if probe_rows:
-                        pid_local = spark.createDataFrame(
-                            sorted((r["doc_id"],) for r in probe_rows),
-                            "supersedes long",
-                        )
-                        hidden_ids = {
-                            r["supersedes"]
-                            for r in dindex.join(
-                                F.broadcast(pid_local), "supersedes", "semi"
-                            )
-                            .select("supersedes")
-                            .collect()
-                        }
-                    # newest VISIBLE indexed copy per digest —
-                    # max(struct(t, d)) with null t lowest, in plain
-                    # int64 microseconds
-                    hits: dict = {}
-                    for r in probe_rows:
-                        if r["doc_id"] in hidden_ids:
-                            continue
-                        key = (r["_us"] is not None, r["_us"] or 0, r["doc_id"])
-                        cur = hits.get(r["digest"])
-                        if cur is None or key > cur[0]:
-                            hits[r["digest"]] = (key, r["doc_id"], r["_us"])
-                    # strictly newer than the newest visible indexed
-                    # copy => supersede it; known digest but not
-                    # newer => stale re-delivery, drops like a
-                    # keep-first dup (see _newer for the null rule)
-                    fresh_list: list = []
-                    for r in dk_rows:
-                        hit = hits.get(r["digest"])
-                        if hit is None:
-                            fresh_list.append(r["doc_id"])
-                        elif _newer(r["_us"], hit[2]):
-                            sup_pairs.append((r["doc_id"], hit[1]))
-                else:
-                    fresh_list = [r["doc_id"] for r in dk_rows]
-                fresh_local = spark.createDataFrame(
-                    [(i,) for i in sorted(fresh_list)], "doc_id long"
-                )
-                cand_local = spark.createDataFrame(
-                    [(i,) for i in sorted(fresh_list + [d for d, _ in sup_pairs])],
-                    "doc_id long",
-                )
-                # one shingle scan feeds both the fresh-side dedup
-                # probe and the superseders' index delta
-                sigs_all = minhash_signatures(
-                    shingle_hashes(
-                        gated.join(F.broadcast(cand_local), "doc_id"),
-                        distinct=False,
-                    )
-                ).cache()
-                # only FRESH digests face the near-dup probe: a
-                # superseder is digest-identical to an already-
-                # admitted document, so the probe would (correctly
-                # but uselessly) report it as a dup of the copy it is
-                # replacing
-                sigs = sigs_all.join(F.broadcast(fresh_local), "doc_id")
-            else:
-                # distinct=False: min-signatures are duplicate-blind
-                # (r12) — skips the per-(doc_id, h) dedup exchange.
-                # Cached: the decision collect and the index-delta
-                # write both read it (r13, same shape as keep-newest).
-                sigs_all = minhash_signatures(
-                    shingle_hashes(gated, distinct=False)
-                ).cache()
-                sigs = sigs_all
-            index = read_parquet_recovering(spark, index_path)
-            index_buckets = None
-            if index is None:
-                index = spark.createDataFrame([], SIG_SCHEMA)
-            else:
-                index = index.join(own_ids, "doc_id", "left_anti")
-                if bucket_index_table:
-                    meta = read_parquet_recovering(
-                        spark, index_path + "_bucketmeta"
-                    )
-                    if meta is not None and "table_version" in meta.columns:
-                        # (a meta without table_version predates the
-                        # versioned protocol — fall back to the
-                        # parquet explode until the next rebuild)
-                        row = meta.first()
-                        covered, version = (
-                            row["covered_batch"],
-                            row["table_version"],
-                        )
-                        nb = (
-                            int(row["n_buckets"])
-                            if "n_buckets" in meta.columns
-                            else n_index_buckets
-                        )
-                        # banding from the meta (pre-banding metas
-                        # default to the protocol's 4x2) so the
-                        # re-registered DDL and the tail's bucket
-                        # columns always match the table's layout
-                        bands = (
-                            int(row["n_bands"])
-                            if "n_bands" in meta.columns
-                            else 4
-                        )
-                        rpb = (
-                            int(row["rows_per_band"])
-                            if "rows_per_band" in meta.columns
-                            else 2
-                        )
-                        # the meta is the manifest pointer: only a
-                        # version it names (whose write committed
-                        # before the pointer swapped) is ever probed;
-                        # a fresh session re-registers the surviving
-                        # warehouse directory first
-                        if _reregister_bucket_table(spark, version, nb, rpb):
-                            base = spark.table(version).join(
-                                own_ids, "doc_id", "left_anti"
-                            )
-                            tail = signature_buckets(
-                                index.filter(F.col("ingest_batch") > covered),
-                                bands,
-                                rpb,
-                            )
-                            index_buckets = [base, tail]
-            if dedup == "keep-newest":
-                # NEAR-DUP keep-newest (r12, VERDICT r11 #2): the full
-                # verified-collision relation, not incremental_dedup's
-                # min-partner summary — an edited re-crawl must be
-                # judged against the newest VISIBLE colliding copy,
-                # and the minimum partner id is often a long-
-                # superseded ancestor whose signatures still sit in
-                # the index.  Collected once (pairs are bounded by the
-                # batch's candidate count — the same bound the old
-                # broadcast(inb)/broadcast(ixp) wrappers assumed);
-                # every decision below is driver-side integer
-                # arithmetic, zero further jobs.
-                # fresh SIGNATURE-BEARING ids (faithful to the old
-                # kept = sigs anti-join scored: a gated doc too short
-                # to shingle has no signature row and is not admitted
-                # as a fresh survivor — only relevant when min_tokens
-                # < the shingle width).  The collect also materializes
-                # the sigs_all cache before the probe reads it.
-                sig_ids = {
-                    r["doc_id"] for r in sigs.select("doc_id").collect()
-                }
-                scored_rows = incremental_dedup_scored(
-                    sigs,
-                    index,
-                    min_agree=min_agree,
-                    index_buckets=index_buckets,
-                ).collect()
-                kept_ids_kn = sig_ids - {r["doc_id"] for r in scored_rows}
-                if dindex is not None and scored_rows:
-                    # docs with ANY in-batch partner keep the
-                    # keep-first in-batch rule (they drop toward the
-                    # smaller id; the smaller copy carries the
-                    # supersession decision) — only docs whose every
-                    # partner is INDEXED face the supersede-vs-drop
-                    # choice.
-                    inb = {r["doc_id"] for r in scored_rows if r["in_batch"]}
-                    ixp_pairs = {
-                        (r["doc_id"], r["partner"])
-                        for r in scored_rows
-                        if not r["in_batch"] and r["doc_id"] not in inb
-                    }
-                else:
-                    ixp_pairs = set()
-                if ixp_pairs:
-                    # partner timestamps from the digests index (one
-                    # map-side broadcast probe of the narrow table,
-                    # PROBE 3); then hidden partners leave the pool
-                    # (PROBE 4 — same marker semi shape as probe 2),
-                    # and the newest visible partner per doc decides —
-                    # same struct-max (null ts lowest) and null-safe
-                    # strictly-newer rule as the exact path above.
-                    p_local = spark.createDataFrame(
-                        sorted((p,) for _, p in ixp_pairs), "doc_id long"
-                    )
-                    p_ts = {
-                        r["doc_id"]: r["_us"]
-                        for r in dindex.join(
-                            F.broadcast(p_local), "doc_id", "semi"
-                        )
-                        .select(
-                            "doc_id",
-                            F.unix_micros(
-                                F.col(ts_col).cast("timestamp")
-                            ).alias("_us"),
-                        )
-                        .collect()
-                    }
-                    ps_local = spark.createDataFrame(
-                        sorted((p,) for _, p in ixp_pairs), "supersedes long"
-                    )
-                    hidden_partners = {
-                        r["supersedes"]
-                        for r in dindex.join(
-                            F.broadcast(ps_local), "supersedes", "semi"
-                        )
-                        .select("supersedes")
-                        .collect()
-                    }
-                    best: dict = {}
-                    for doc, p in ixp_pairs:
-                        if p in hidden_partners:
-                            continue
-                        us = p_ts.get(p)
-                        key = (us is not None, us or 0, p)
-                        cur = best.get(doc)
-                        if cur is None or key > cur[0]:
-                            best[doc] = (key, p, us)
-                    for doc in {d for d, _ in ixp_pairs}:
-                        b = best.get(doc)
-                        if b is None:
-                            # every colliding partner already hidden:
-                            # the visible corpus holds nothing like
-                            # this content (its nearest surviving
-                            # relatives drifted past the threshold),
-                            # so it is ADMITTED as fresh — dedup
-                            # protects the visible view, not the
-                            # graveyard.
-                            revived_ids.append(doc)
-                        elif _newer(dk_ts.get(doc), b[2]):
-                            nsup_pairs.append((doc, b[1]))
-                        # else: not newer than the visible partner —
-                        # drops like a keep-first dup
-            else:
-                # keep-first decision, collected like keep-newest
-                # (r13): kept = "has a signature and no verified
-                # partner".  incremental_dedup's min-partner window
-                # summary was computed and thrown away here; the
-                # distinct scored ids ARE the dropped set (the
-                # operator's own kept is defined as the anti-join on
-                # exactly that set).
-                sig_ids = {
-                    r["doc_id"] for r in sigs.select("doc_id").collect()
-                }
-                dropped_ids = {
-                    r["doc_id"]
-                    for r in incremental_dedup_scored(
-                        sigs,
-                        index,
-                        min_agree=min_agree,
-                        index_buckets=index_buckets,
-                    )
-                    .select("doc_id")
-                    .distinct()
-                    .collect()
-                }
-                kept_ids_kn = sig_ids - dropped_ids
-            if dedup == "keep-newest":
-                # admit set = fresh survivors ∪ superseders ∪ revived;
-                # superseders ride the corpus row with their
-                # predecessor's id in `supersedes` (read_corpus_asof
-                # hides it); fresh survivors carry null — uniform
-                # schema from batch 0 so partition reads never depend
-                # on footer merge.  One broadcast local relation per
-                # role; the index delta is ONE join of the cached
-                # signature pool against the admit set (the old
-                # kept ∪ (sigs_all ⨝ extras) union, collapsed).
-                sup_map_pairs = sup_pairs + nsup_pairs
-                admit_set = (
-                    kept_ids_kn
-                    | {d for d, _ in sup_map_pairs}
-                    | set(revived_ids)
-                )
-                admit_local = spark.createDataFrame(
-                    [(i,) for i in sorted(admit_set)], "doc_id long"
-                )
-                admitted = gated.join(F.broadcast(admit_local), "doc_id")
-                if sup_map_pairs:
-                    sup_map_local = spark.createDataFrame(
-                        sorted(sup_map_pairs), "doc_id long, supersedes long"
-                    )
-                    admitted = admitted.join(
-                        F.broadcast(sup_map_local), "doc_id", "left"
-                    )
-                else:
-                    sup_map_local = None
-                    admitted = admitted.withColumn(
-                        "supersedes", F.lit(None).cast("long")
-                    )
-                index_delta = sigs_all.join(F.broadcast(admit_local), "doc_id")
-            else:
-                # survivors already decided driver-side (copy-on-write
-                # discipline holds: the decision collect materialized
-                # the cached sigs BEFORE the index write below rewrites
-                # the files that dedup read)
-                admit_local = spark.createDataFrame(
-                    [(i,) for i in sorted(kept_ids_kn)], "doc_id long"
-                )
-                admitted = gated.join(F.broadcast(admit_local), "doc_id")
-                index_delta = sigs_all.join(F.broadcast(admit_local), "doc_id")
-            _write_batch_partition(admitted, corpus_path, batch_id)
-            _write_batch_partition(index_delta, index_path, batch_id)
-            if dedup == "keep-newest":
-                # the digests row mirrors the corpus row's supersedes
-                # marker (r12): this narrow table is the supersession
-                # system of record — visible-view readers and RTBF
-                # chain expansion never need the corpus for markers.
-                # Built from the CACHED digest_keep relation, not the
-                # collected rows, so the raw timestamp values never
-                # round-trip through Python.
-                digest_delta = digest_keep.join(
-                    F.broadcast(admit_local), "doc_id"
-                )
-                if sup_map_pairs:
-                    digest_delta = digest_delta.join(
-                        F.broadcast(sup_map_local), "doc_id", "left"
-                    )
-                else:
-                    digest_delta = digest_delta.withColumn(
-                        "supersedes", F.lit(None).cast("long")
-                    )
-                digest_delta = digest_delta.select(
-                    "doc_id",
-                    "digest",
-                    F.col("_kn_ts").alias(ts_col),
-                    "supersedes",
-                )
-                _write_batch_partition(
-                    digest_delta, corpus_path + DIGESTS_SUFFIX, batch_id
-                )
-            if postings:
-                from semantic_similarity_system_using_aws_mapreduce_spark.streaming.retrieval import (
-                    DOCLENS_SUFFIX,
-                    POSTINGS_SUFFIX,
-                    postings_delta,
-                )
-
+            d = (
+                _exact_decision(c, gated, own_ids, batch_id, caches)
+                if c.keep_newest
+                else _Decision()
+            )
+            sigs_all, sigs = _signatures(c, gated, d, caches)
+            _near_dup_decision(c, d, sigs, *_sig_probe(c, own_ids))
+            # the decision collects materialized the cached signatures
+            # before the index write below rewrites what the probe read
+            admitted, admit = _write_admitted(c, batch_id, gated, sigs_all, d)
+            if c.postings:
                 post, dlen = postings_delta(admitted)
-                _write_batch_partition(
-                    post, corpus_path + POSTINGS_SUFFIX, batch_id
-                )
-                _write_batch_partition(
-                    dlen, corpus_path + DOCLENS_SUFFIX, batch_id
-                )
-            if paragraphs:
-                from semantic_similarity_system_using_aws_mapreduce_spark.streaming.paragraphs import (
-                    CLEAN_SUFFIX,
-                    SEGINDEX_SUFFIX,
-                    paragraph_delta,
-                )
-
-                seg_index = read_parquet_recovering(
-                    spark, corpus_path + SEGINDEX_SUFFIX
-                )
-                if seg_index is not None:
-                    # replay safety, same shape as the signature
-                    # index: a re-delivered batch's own winners are
-                    # already indexed — exclude by doc attribution so
-                    # the recomputation (and a compaction-folded row)
-                    # cannot shadow itself into all-dup.  The
-                    # broadcast anti-join is map-side, so applying it
-                    # to the bucketed table below preserves the
-                    # bucketing the exchange-free probe rests on.
-                    # the ADMIT set, not just fresh survivors:
-                    # keep-newest superseders reach the seg index too
-                    # and must self-exclude on replay.
-                    own = F.broadcast(admit_local)
-                    seg_index = seg_index.join(own, "doc_id", "left_anti")
-                    if bucket_index_table:
-                        from semantic_similarity_system_using_aws_mapreduce_spark.streaming.paragraphs import (
-                            reregister_seg_bucket_table,
-                        )
-
-                        smeta = read_parquet_recovering(
-                            spark,
-                            corpus_path + SEGINDEX_SUFFIX + "_bucketmeta",
-                        )
-                        if smeta is not None and "table_version" in smeta.columns:
-                            srow = smeta.first()
-                            if reregister_seg_bucket_table(
-                                spark,
-                                srow["table_version"],
-                                int(srow["n_buckets"]),
-                            ):
-                                # bucketed base + since-rebuild parquet
-                                # tail, the sig probe's split: a
-                                # pre-union would discard the table's
-                                # bucketing
-                                base = spark.table(
-                                    srow["table_version"]
-                                ).join(own, "doc_id", "left_anti")
-                                tail = seg_index.filter(
-                                    F.col("ingest_batch")
-                                    > srow["covered_batch"]
-                                )
-                                seg_index = [base, tail]
-                if nsup_pairs and seg_index is not None:
-                    # a NEAR-DUP superseder's face is RE-CUT (content
-                    # differs, so inheritance would be wrong), but the
-                    # hidden predecessor's segment attributions would
-                    # scrub every UNCHANGED paragraph of the edit as a
-                    # cross-batch dup of a row nobody can see — so the
-                    # superseded docs' attributions are RETIRED from
-                    # this batch's probe VIEW (broadcast anti-join,
-                    # map-side, bucketing preserved; the table itself
-                    # is untouched so past decisions stay truthful)
-                    # and the edit re-admits its surviving paragraphs
-                    # under its own id.  The seg index may then carry
-                    # a hash under both ids; both are chain members,
-                    # so chain RTBF still erases every attribution.
-                    retired = F.broadcast(
-                        spark.createDataFrame(
-                            [(s,) for s in sorted({s for _, s in nsup_pairs})],
-                            "doc_id long",
-                        )
-                    )
-                    if isinstance(seg_index, list):
-                        seg_index = [
-                            r.join(retired, "doc_id", "left_anti")
-                            for r in seg_index
-                        ]
-                    else:
-                        seg_index = seg_index.join(
-                            retired, "doc_id", "left_anti"
-                        )
-                para_input = admitted
-                inherit = None
-                if sup_pairs:
-                    # a superseder's content is digest-identical to
-                    # its predecessor, so its clean face IS the
-                    # predecessor's — INHERIT it under the new id
-                    # instead of re-cutting (re-cutting would scrub
-                    # every segment as a cross-batch dup of the
-                    # predecessor and emit an empty face while the
-                    # predecessor's good face is hidden).  Segment
-                    # attribution stays with the chain's origin, so
-                    # superseders contribute no seg delta; RTBF of
-                    # the whole chain erases face, segments, and
-                    # corpus rows together.  A superseder whose
-                    # predecessor has no face (paragraphs enabled
-                    # mid-stream) falls through to the normal cut.
-                    prev_clean = read_parquet_recovering(
-                        spark, corpus_path + CLEAN_SUFFIX
-                    )
-                    if prev_clean is not None:
-                        # predecessor -> new id, as a broadcast local
-                        # map (one pair per exact superseder)
-                        m = spark.createDataFrame(
-                            [(s, d) for d, s in sorted(sup_pairs)],
-                            "doc_id long, _new_id long",
-                        )
-                        # cached: the union below AND the inherited-id
-                        # collect both read it, and which predecessors
-                        # actually HAVE a face is only knowable from
-                        # the clean table's contents
-                        inherit = (
-                            prev_clean.join(F.broadcast(m), "doc_id")
-                            .select(
-                                F.col("_new_id").alias("doc_id"),
-                                "n_segments",
-                                "n_kept",
-                                "n_dup",
-                                "kept_text",
-                            )
-                            .cache()
-                        )
-                        inherited_ids = [
-                            r["doc_id"]
-                            for r in inherit.select("doc_id").collect()
-                        ]
-                        if inherited_ids:
-                            para_input = admitted.join(
-                                F.broadcast(
-                                    spark.createDataFrame(
-                                        [(i,) for i in sorted(inherited_ids)],
-                                        "doc_id long",
-                                    )
-                                ),
-                                "doc_id",
-                                "left_anti",
-                            )
-                        else:
-                            inherit.unpersist()
-                            inherit = None
-                clean, seg_delta, seg_cache = paragraph_delta(
-                    para_input, seg_index
-                )
-                if inherit is not None:
-                    clean = clean.unionByName(inherit)
-                try:
-                    _write_batch_partition(
-                        clean, corpus_path + CLEAN_SUFFIX, batch_id
-                    )
-                    _write_batch_partition(
-                        seg_delta, corpus_path + SEGINDEX_SUFFIX, batch_id
-                    )
-                finally:
-                    seg_cache.unpersist()
-                    if inherit is not None:
-                        inherit.unpersist()
-            if stats:
-                # per-batch ingest funnel (arrived -> gate -> dedup),
-                # the streaming face of the curation CLI's funnel
-                # report: written idempotently into the batch's own
-                # partition so replays rewrite rather than
-                # double-count.  The admit decision is already held
-                # driver-side (both dedup modes) — zero extra jobs.
-                n_kept = (
-                    len(kept_ids_kn)
-                    + len(sup_pairs)
-                    + len(nsup_pairs)
-                    + len(revived_ids)
-                )
-                row = [
-                    (
-                        batch.count(),
-                        gated.count(),
-                        n_kept,
-                    )
-                ]
-                _write_batch_partition(
-                    spark.createDataFrame(
-                        row, "n_arrived long, n_gated long, n_kept long"
-                    ),
-                    corpus_path + "_stats",
-                    batch_id,
-                )
-            if compact_every and (batch_id + 1) % compact_every == 0:
-                if bucket_index_table:
-                    build_bucketed_sig_index(
-                        spark,
-                        index_path,
-                        bucket_index_table,
-                        n_buckets=n_index_buckets,
-                        covered_batch=batch_id,
-                    )
-                compact_index(spark, index_path, keep_batch=batch_id)
-                if dedup == "keep-newest":
-                    # the digests table accretes one file per batch
-                    # exactly like the sig index — fold it on the
-                    # same cadence.  Key = (digest, doc_id): a digest
-                    # legitimately maps to every copy in its
-                    # supersession history, so only replay residue
-                    # (identical rows) dedups away.
-                    compact_index(
-                        spark,
-                        corpus_path + DIGESTS_SUFFIX,
-                        keep_batch=batch_id,
-                        dedup_keys=("digest", "doc_id"),
-                    )
-                if postings:
-                    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.retrieval import (
-                        compact_retrieval,
-                    )
-
-                    compact_retrieval(spark, corpus_path, keep_batch=batch_id)
-                if paragraphs:
-                    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.paragraphs import (
-                        SEG_TABLE_SUFFIX,
-                        SEGINDEX_SUFFIX,
-                        build_bucketed_seg_index,
-                    )
-
-                    if bucket_index_table:
-                        # rebuild BEFORE the fold, same crash
-                        # reasoning as the sig table: a crash between
-                        # the two leaves the meta stale-but-safe
-                        build_bucketed_seg_index(
-                            spark,
-                            corpus_path + SEGINDEX_SUFFIX,
-                            bucket_index_table + SEG_TABLE_SUFFIX,
-                            n_buckets=n_index_buckets,
-                            covered_batch=batch_id,
-                        )
-                    # fold the segment index like the signature index
-                    # (rows unique per seg_hash; the key-dedup is the
-                    # replay-residue guard).  The _clean table is
-                    # corpus-like — never compacted, its batch axis
-                    # stays truthful for as-of reads.
-                    compact_index(
-                        spark,
-                        corpus_path + SEGINDEX_SUFFIX,
-                        keep_batch=batch_id,
-                        dedup_keys=("seg_hash",),
-                    )
+                _write_batch_partition(post, c.corpus_path + POSTINGS_SUFFIX, batch_id)
+                _write_batch_partition(dlen, c.corpus_path + DOCLENS_SUFFIX, batch_id)
+            if c.paragraphs:
+                _paragraphs(c, batch_id, admitted, admit, d, caches)
+            if c.stats:
+                _write_stats(c, batch_id, batch, gated, len(d.admit_ids()))
+            if c.compact_every and (batch_id + 1) % c.compact_every == 0:
+                _compact(c, batch_id)
         finally:
-            for extra_cache in (sigs_all, digest_keep):
-                if extra_cache is not None:
-                    extra_cache.unpersist()
-            gated.unpersist()
-            if raw is not None:
-                raw.unpersist()
-            elif stats:
-                batch.unpersist()
+            for df in caches:
+                df.unpersist()
 
     (
         stream
@@ -1691,19 +1248,14 @@ def forget_documents(
     because forgetting a superseding copy ALONE would resurrect its
     predecessor (the ``supersedes`` marker disappears with the row,
     leaving the same — or near-same — bytes served under the old id),
-    ``expand_chains`` (default ON, ADVICE r11) grows the given ids to
-    their FULL supersession chains before anything is rewritten: a
-    driver fixpoint over the digests table's edges — same-digest
-    members (exact chains) plus ``supersedes`` links walked in both
-    directions (near-dup chains) — each step a broadcast semi-probe of
-    the narrow table, iterations bounded by the chain diameter (short
-    in practice: one per re-crawl generation).  Keep-first corpora
-    have no digests table and skip the expansion; pass
-    ``expand_chains=False`` to erase exactly the named rows.  Bounded
-    structures built
-    from past data (Bloom bitmaps, CMS sketches) cannot forget
-    individual items by construction; rebuild them from the rewritten
-    corpus when bit-level erasure of those is required.
+    ``expand_chains`` (default ON) grows the given ids to their FULL
+    supersession chains before anything is rewritten
+    (:func:`_supersession_chains`).  Keep-first corpora have no digests
+    table and skip the expansion; pass ``expand_chains=False`` to erase
+    exactly the named rows.  Bounded structures built from past data
+    (Bloom bitmaps, CMS sketches) cannot forget individual items by
+    construction; rebuild them from the rewritten corpus when
+    bit-level erasure of those is required.
 
     Scale shape: each rewrite is one anti-join against a broadcast id
     set and an atomic swap — at 100 TB you would partition the corpus
@@ -1712,9 +1264,7 @@ def forget_documents(
     same either way.  The swap (temp write + directory rename,
     sources/atomic.py) means a crash mid-rewrite can never lose the
     table: either the old content or the complete new content is
-    live, and the deletion is simply re-run — the in-place overwrite
-    this replaced was backed only by a non-durable localCheckpoint and
-    could lose the corpus outright (ADVICE r4).
+    live, and the deletion is simply re-run.
 
     ``bucket_index_table``: a derived bucketed probe snapshot still
     names the forgotten docs — DROP it (and its covered-batch meta)
@@ -1724,57 +1274,15 @@ def forget_documents(
     cache of the (now rewritten) index, not a source of truth.  When
     the caller does NOT pass it, the ``<index_path>_bucketmeta`` file
     is consulted: if it names a live table version, the base table
-    name is derived from it and swept anyway (ADVICE r5 — an RTBF run
-    that forgot the flag must not silently leave content-derived
-    signature buckets on disk)."""
+    name is derived from it and swept anyway — an RTBF run that forgot
+    the flag must not leave content-derived signature buckets on
+    disk."""
     if bucket_index_table is None:
-        meta = read_parquet_recovering(spark, index_path + "_bucketmeta")
-        if meta is not None and "table_version" in meta.columns:
-            row = meta.first()
-            if row is not None and row["table_version"]:
-                # versions are named <table>__v<batch>_a<attempt>
-                bucket_index_table = row["table_version"].split("__v")[0]
-    import os as _os_paths
-
+        live = live_bucket_version(spark, index_path + BUCKETMETA_SUFFIX)
+        if live is not None:
+            bucket_index_table = _versioned_table(live)
     if expand_chains:
-        dig = read_parquet_recovering(spark, corpus_path + DIGESTS_SUFFIX)
-        if dig is not None:
-            has_edges = "supersedes" in dig.columns
-            known = set(doc_ids)
-            frontier = set(doc_ids)
-            while frontier:
-                fdf = spark.createDataFrame(
-                    [(i,) for i in sorted(frontier)], "doc_id long"
-                )
-                # exact chains: every doc sharing a frontier doc's digest
-                digs = (
-                    dig.join(F.broadcast(fdf), "doc_id", "semi")
-                    .select("digest")
-                    .distinct()
-                )
-                members = dig.join(
-                    F.broadcast(digs), "digest", "semi"
-                ).select("doc_id")
-                found = members
-                if has_edges:
-                    # near-dup chains: supersedes edges, both directions
-                    preds = (
-                        dig.join(F.broadcast(fdf), "doc_id", "semi")
-                        .filter(F.col("supersedes").isNotNull())
-                        .select(F.col("supersedes").alias("doc_id"))
-                    )
-                    succs = dig.join(
-                        F.broadcast(
-                            fdf.withColumnRenamed("doc_id", "supersedes")
-                        ),
-                        "supersedes",
-                        "semi",
-                    ).select("doc_id")
-                    found = found.unionByName(preds).unionByName(succs)
-                nxt = {r.doc_id for r in found.distinct().collect()}
-                frontier = nxt - known
-                known |= frontier
-            doc_ids = sorted(known)
+        doc_ids = _supersession_chains(spark, corpus_path, doc_ids)
 
     ids = spark.createDataFrame([(i,) for i in doc_ids], "doc_id long")
     # the report names the ids actually erased (post-expansion), so an
@@ -1784,9 +1292,12 @@ def forget_documents(
     # docs too — rewrite them whenever they exist
     derived = [
         corpus_path + sfx
-        for sfx in ("_postings", "_doclens", "_segindex", "_clean", DIGESTS_SUFFIX)
-        if _os_paths.path.isdir(corpus_path + sfx)
-        or _os_paths.path.isfile(corpus_path + sfx + ".__manifest__")
+        for sfx in (
+            POSTINGS_SUFFIX, DOCLENS_SUFFIX, SEGINDEX_SUFFIX, CLEAN_SUFFIX,
+            DIGESTS_SUFFIX,
+        )
+        if os.path.isdir(corpus_path + sfx)
+        or os.path.isfile(corpus_path + sfx + ".__manifest__")
     ]
     for path in (corpus_path, index_path, *derived):
         before = read_parquet_recovering(spark, path)
@@ -1806,45 +1317,74 @@ def forget_documents(
             "n_after": 0 if after is None else after.count(),
         }
     if bucket_index_table:
-        _sweep_bucket_table(spark, bucket_index_table, index_path + "_bucketmeta")
+        _sweep_bucket_table(spark, bucket_index_table, index_path + BUCKETMETA_SUFFIX)
     # the derived SEGMENT bucket table (incremental paragraph dedup)
     # attributes content-derived hashes to doc_ids too — same RTBF
     # obligation, swept via its own meta (its name derives from the
     # sig table's, but a meta-named version is authoritative even if
     # the caller's flag disagrees with the deployment that wrote it)
-    seg_meta_path = corpus_path + "_segindex_bucketmeta"
-    seg_meta = read_parquet_recovering(spark, seg_meta_path)
-    if seg_meta is not None and "table_version" in seg_meta.columns:
-        srow = seg_meta.first()
-        if srow is not None and srow["table_version"]:
-            _sweep_bucket_table(
-                spark, srow["table_version"].split("__v")[0], seg_meta_path
-            )
+    seg_meta = corpus_path + SEGINDEX_SUFFIX + BUCKETMETA_SUFFIX
+    seg_live = live_bucket_version(spark, seg_meta)
+    if seg_live is not None:
+        _sweep_bucket_table(spark, _versioned_table(seg_live), seg_meta)
     elif bucket_index_table:
-        _sweep_bucket_table(spark, bucket_index_table + "_seg", seg_meta_path)
+        _sweep_bucket_table(spark, bucket_index_table + SEG_TABLE_SUFFIX, seg_meta)
     return out
+
+
+def _versioned_table(live) -> str:
+    """The base table name of a live bucket-table version
+    (``<table>__v<batch>_a<attempt>``)."""
+    return live["table_version"].split("__v")[0]
+
+
+def _supersession_chains(
+    spark: SparkSession, corpus_path: str, doc_ids: list[int]
+) -> list[int]:
+    """``doc_ids`` grown to their FULL supersession chains: a driver
+    fixpoint over the digests table's edges — same-digest members
+    (exact chains) plus ``supersedes`` links walked in both directions
+    (near-dup chains) — each step a broadcast semi-probe of the narrow
+    table, iterations bounded by the chain diameter.  Unchanged when
+    there is no digests table (keep-first)."""
+    dig = read_parquet_recovering(spark, corpus_path + DIGESTS_SUFFIX)
+    if dig is None:
+        return doc_ids
+    known = set(doc_ids)
+    frontier = set(doc_ids)
+    while frontier:
+        ids = _id_frame(spark, frontier)
+        on_frontier = dig.join(ids, "doc_id", "semi")
+        # exact chains: every doc sharing a frontier doc's digest
+        digests = F.broadcast(on_frontier.select("digest").distinct())
+        found = (
+            dig.join(digests, "digest", "semi")
+            .select("doc_id")
+            # near-dup chains: supersedes edges, both directions
+            .unionByName(
+                on_frontier.filter(F.col("supersedes").isNotNull()).select(
+                    F.col("supersedes").alias("doc_id")
+                )
+            )
+            .unionByName(
+                dig.join(_id_frame(spark, frontier, "supersedes"), "supersedes", "semi")
+                .select("doc_id")
+            )
+        )
+        frontier = {r.doc_id for r in found.distinct().collect()} - known
+        known |= frontier
+    return sorted(known)
 
 
 def _sweep_bucket_table(spark: SparkSession, base: str, meta_path: str) -> None:
     """DROP a derived bucket table — live name, every version, orphan
     warehouse attempt directories — and its manifest meta.  Shared by
     forget_documents for the signature and segment probe tables."""
-    import os as _os
-    import shutil as _shutil
-
     base = base.lower()  # catalog names are lowercased
     spark.sql(f"DROP TABLE IF EXISTS {base}")
-    for t in spark.catalog.listTables():
-        if t.name.startswith(f"{base}__v"):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-    # orphan warehouse dirs from attempts that never reached the
-    # (non-durable) catalog still name the forgotten docs — sweep
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    if _os.path.isdir(warehouse):
-        for d in _os.listdir(warehouse):
-            if d == base or d.startswith(f"{base}__v"):
-                _shutil.rmtree(_os.path.join(warehouse, d), ignore_errors=True)
-    _shutil.rmtree(meta_path, ignore_errors=True)
+    shutil.rmtree(os.path.join(warehouse_dir(spark), base), ignore_errors=True)
+    drop_bucket_versions(spark, base)
+    shutil.rmtree(meta_path, ignore_errors=True)
 
 
 def vacuum_tables(
@@ -1863,61 +1403,32 @@ def vacuum_tables(
     operator who stopped ingesting).  Live versions are never touched:
     a version is collectable only if the meta exists and names a
     DIFFERENT version — with no readable meta nothing is dropped,
-    because the next rebuild's own GC owns that state."""
-    import os
-    import shutil
-
+    because the next rebuild's own GC owns that state.  The meta names
+    the table, so ``bucket_index_table`` is not needed to find it."""
     from semantic_similarity_system_using_aws_mapreduce_spark.sources.atomic import recover
 
-    tables = [
+    sig_meta = index_path + BUCKETMETA_SUFFIX
+    seg_meta = corpus_path + SEGINDEX_SUFFIX + BUCKETMETA_SUFFIX
+    healed = [
         corpus_path,
         index_path,
-        index_path + "_bucketmeta",
+        sig_meta,
         *(
             corpus_path + sfx
             for sfx in (
-                "_postings",
-                "_doclens",
-                "_segindex",
-                "_clean",
+                POSTINGS_SUFFIX, DOCLENS_SUFFIX, SEGINDEX_SUFFIX, CLEAN_SUFFIX,
                 "_stats",
-                "_segindex_bucketmeta",
             )
         ),
+        seg_meta,
     ]
-    healed = []
-    for path in tables:
+    for path in healed:
         recover(path)
-        healed.append(path)
-
     dropped: list[str] = []
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    metas = [
-        (index_path + "_bucketmeta", bucket_index_table),
-        (
-            corpus_path + "_segindex_bucketmeta",
-            (bucket_index_table + "_seg") if bucket_index_table else None,
-        ),
-    ]
-    for meta_path, flag_base in metas:
-        meta = read_parquet_recovering(spark, meta_path)
-        live = None
-        base = flag_base
-        if meta is not None and "table_version" in meta.columns:
-            row = meta.first()
-            if row is not None and row["table_version"]:
-                live = row["table_version"]
-                base = live.split("__v")[0]
-        if not base or live is None:
-            continue  # no named live version -> nothing is provably orphaned
-        base = base.lower()
-        for t in spark.catalog.listTables():
-            if t.name.startswith(f"{base}__v") and t.name != live:
-                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-                dropped.append(t.name)
-        if os.path.isdir(warehouse):
-            for d in os.listdir(warehouse):
-                if d.startswith(f"{base}__v") and d != live:
-                    shutil.rmtree(os.path.join(warehouse, d), ignore_errors=True)
-                    dropped.append(d)
+    for meta_path in (sig_meta, seg_meta):
+        live = live_bucket_version(spark, meta_path)
+        if live is not None:  # no named live version -> nothing is provably orphaned
+            dropped += drop_bucket_versions(
+                spark, _versioned_table(live), keep=live["table_version"]
+            )
     return {"healed": healed, "dropped": sorted(set(dropped))}

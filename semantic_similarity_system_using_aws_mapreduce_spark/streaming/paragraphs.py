@@ -45,10 +45,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import segment_hashes
+from semantic_similarity_system_using_aws_mapreduce_spark.sources.atomic import read_parquet_recovering
+from semantic_similarity_system_using_aws_mapreduce_spark.sources.bucketing import (
+    BUCKETMETA_SUFFIX,
+    rebuild_bucket_table,
+)
 
 SEGINDEX_SUFFIX = "_segindex"
 CLEAN_SUFFIX = "_clean"
 SEG_TABLE_SUFFIX = "_seg"
+#: the segment bucket table's columns and bucket key, for its
+#: re-registration in a fresh session
+SEG_BUCKET_DDL = "seg_hash BIGINT, doc_id BIGINT"
+SEG_BUCKET_KEYS = ["seg_hash"]
 
 
 def build_bucketed_seg_index(
@@ -61,9 +70,9 @@ def build_bucketed_seg_index(
     """Materialize the segment index as a catalog table bucketed by
     ``seg_hash`` — the exchange-free probe shape for incremental
     paragraph dedup, maintained by the streaming loop at compaction
-    exactly like the signature index's bucket table (same versioned
-    manifest-pointer protocol via the shared rebuild helper; meta at
-    ``<segindex_path>_bucketmeta``).  Returns None when the index is
+    exactly like the signature index's bucket table (the versioned
+    protocol of :func:`~..sources.bucketing.rebuild_bucket_table`; meta
+    at ``<segindex_path>_bucketmeta``).  Returns None when the index is
     missing/empty-so-far — callers skip, as with the sig table.
 
     Sizing: the seen-join's other side arrives already
@@ -72,37 +81,17 @@ def build_bucketed_seg_index(
     ``n_buckets`` co-partitions with ``spark.sql.shuffle.partitions``
     — size them together (at 100 TB both are set from the same
     cluster geometry; the plan test pins the elision)."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.documents import (
-        _versioned_bucket_rebuild,
-        read_parquet_recovering,
-    )
-
     seg = read_parquet_recovering(spark, segindex_path)
     if seg is None:
         return None
-    return _versioned_bucket_rebuild(
+    return rebuild_bucket_table(
         spark,
-        segindex_path + "_bucketmeta",
+        segindex_path + BUCKETMETA_SUFFIX,
         table,
         seg.select("seg_hash", "doc_id"),
-        ["seg_hash"],
+        SEG_BUCKET_KEYS,
         n_buckets,
         covered_batch,
-    )
-
-
-def reregister_seg_bucket_table(
-    spark: SparkSession, version: str, n_buckets: int
-) -> bool:
-    """Session-restart re-registration for the seg bucket table (the
-    in-memory catalog forgot it; its warehouse directory survived) —
-    the single-key analog of the sig table's re-registration."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.documents import (
-        _reregister_external_bucket_table,
-    )
-
-    return _reregister_external_bucket_table(
-        spark, version, n_buckets, "seg_hash BIGINT, doc_id BIGINT", ["seg_hash"]
     )
 
 

@@ -92,36 +92,25 @@ def bm25_search_postings(
     doclens = read_parquet_recovering(spark, corpus_path + DOCLENS_SUFFIX)
     if postings is None or doclens is None:
         return None
-    # keep-newest corpora (r11): superseded copies keep their postings
+    # keep-newest corpora: superseded copies keep their postings
     # rows (the tables are append-only like the corpus), but search
     # must rank only the VISIBLE corpus — otherwise a re-crawled page
     # returns twice (stale id + fresh id) and duplicated content
     # double-counts in df / n_docs / sum_dl.  Excluding the marker set
     # from doclens removes them from the tf join, the df window, and
-    # the collection stats in one anti-join.  Marker source (r12,
-    # VERDICT r11 #3 + ADVICE): the narrow ``<corpus>_digests`` table
-    # — the supersession system of record — not a corpus scan, so
-    # keep-first corpora (no digests table) skip even the read, and
-    # keep-newest corpora never pay a scan that grows with corpus
-    # width just to collect markers.  A pre-r12 digests table without
-    # the marker column falls back to the corpus's supersedes column
-    # (read once; the snippet join below reuses it).
+    # the collection stats in one anti-join.  Marker source: the narrow
+    # ``<corpus>_digests`` table — the supersession system of record —
+    # not a corpus scan, so keep-first corpora (no digests table) skip
+    # even the read, and keep-newest corpora never pay a scan that
+    # grows with corpus width just to collect markers.
     from semantic_similarity_system_using_aws_mapreduce_spark.streaming.documents import DIGESTS_SUFFIX
 
-    corpus = None
     markers = None
     dig = read_parquet_recovering(spark, corpus_path + DIGESTS_SUFFIX)
     if dig is not None:
-        if "supersedes" in dig.columns:
-            markers = dig.filter(F.col("supersedes").isNotNull()).select(
-                F.col("supersedes").alias("doc_id")
-            )
-        else:
-            corpus = read_parquet_recovering(spark, corpus_path)
-            if corpus is not None and "supersedes" in corpus.columns:
-                markers = corpus.filter(
-                    F.col("supersedes").isNotNull()
-                ).select(F.col("supersedes").alias("doc_id"))
+        markers = dig.filter(F.col("supersedes").isNotNull()).select(
+            F.col("supersedes").alias("doc_id")
+        )
     if markers is not None:
         doclens = doclens.join(markers, "doc_id", "left_anti")
     terms = [(q, t) for q, s in queries for t in dict.fromkeys(s.split())]
@@ -176,8 +165,7 @@ def bm25_search_postings(
     from pyspark import StorageLevel
 
     ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
-    if corpus is None:  # not already read for the marker fallback
-        corpus = read_parquet_recovering(spark, corpus_path)
+    corpus = read_parquet_recovering(spark, corpus_path)
     if corpus is None:
         return ranked.select(
             "*",
@@ -208,7 +196,6 @@ def compact_retrieval(
     spark: SparkSession,
     corpus_path: str,
     keep_batch: int,
-    rows_per_file: int = 2_000_000,
 ) -> None:
     """Fold the retrieval tables' accumulated per-batch partitions
     into the bounded base partition, like the signature index's
@@ -228,13 +215,11 @@ def compact_retrieval(
         spark,
         corpus_path + POSTINGS_SUFFIX,
         keep_batch=keep_batch,
-        rows_per_file=rows_per_file,
         dedup_keys=("doc_id", "term"),
     )
     compact_index(
         spark,
         corpus_path + DOCLENS_SUFFIX,
         keep_batch=keep_batch,
-        rows_per_file=rows_per_file,
         dedup_keys=("doc_id",),
     )
