@@ -444,9 +444,9 @@ def _bench_lsh_xxhash64(spark, sf_dir: str) -> None:
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sigs = minhash_signatures(
-        shingle_hashes(docs, hash_fn=xxhash64_int, distinct=False), 8
+        shingle_hashes(docs, hash_fn=xxhash64_int, distinct=False)
     )
-    lsh_candidates(sigs, 4, 2).write.format("noop").mode("overwrite").save()
+    lsh_candidates(sigs).write.format("noop").mode("overwrite").save()
 
 
 EXTRA_FNS = {

@@ -7,13 +7,13 @@ Layout:
                    cluster-scale defaults (AQE, partitions, Arrow).
     schemas      - explicit StructTypes for every logical relation R0-R5
                    (SURVEY.md §1.1) plus the driver fixture tables.
-    functions/   - scalar function library (Porter stemmer UDF, text
-                   analysis, vector math on array columns).
+    functions/   - the Porter stemmer (scalar function and UDF).
     sources/     - readers: syntactic-ngram corpus text, gold-standard
                    word pairs, parquet fixture tables.
     operators/   - the relational operator inventory (SURVEY.md §2):
                    counts, association measures, pair-vector similarity,
-                   dedup, similarity search, top-k.
+                   dedup, similarity search (one array dot/cosine
+                   kernel in operators/ann.py), top-k.
     plans/       - end-to-end pipeline compositions (the reference's
                    5-stage job flow as one lazy DataFrame plan).
     streaming/   - Structured Streaming operators over the events table.

@@ -1,18 +1,23 @@
-"""Approximate nearest neighbor search over an embedding column.
+"""Similarity search over an embedding column: one implementation per
+strategy, all sharing one (vec_id, neighbor_id, cosine, rank) contract.
 
-Two paths, same results contract:
+  * exact, broadcast — normalized matrix collected once + per-partition
+    numpy matmul (:func:`cosine_topk_bruteforce`; the tests' oracle).
+  * exact, relational — crossJoin + window (:func:`cosine_topk_exact_join`)
+    or hash-blocked block-pair matmuls (:func:`cosine_pairs_blocked`);
+    both lazy, no driver collect.
+  * SRP-LSH — md5-derived ±1 sign-random-projection buckets over
+    fixed-point vectors (:func:`srp_signatures_portable`, shared with
+    :func:`semantic_dedup`); exact scoring only *within* buckets
+    (:func:`ann_topk_lsh_portable`, optional Hamming-1 multi-probe).
+    At 100 TB the bucket join is the only shuffle; recall tunes with
+    (n_planes, n_tables).
+  * IVF — in-plan hash-sampled centroids, n_probe list equi-join
+    (:func:`ann_topk_ivf_lazy`).
 
-  * brute force — broadcast normalized matrix + per-partition numpy
-    matmul (exact; the correctness oracle; O(N^2) scoring).
-  * SRP-LSH     — sign-random-projection signatures bucket the vectors;
-    exact scoring only *within* buckets (multi-probe over T independent
-    tables).  At 100 TB the bucket join is the only shuffle and each
-    bucket fits an executor; recall tunes with (n_planes, n_tables).
-
-Signatures are computed with a seeded numpy projection inside an
-Arrow-batched pandas UDF; everything after is plain relational ops, so
-Catalyst handles the bucket join like any other equi-join (AQE splits
-skewed buckets).
+Every Catalyst-side score goes through one array kernel — :func:`dot`,
+:func:`sq_norm`, :func:`cosine` — which workload/embeddings shares, so
+Spark and the DuckDB oracles accumulate in the same order.
 """
 
 from __future__ import annotations
@@ -21,7 +26,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -47,12 +52,71 @@ def _srp_sign_matrix(n_tables: int, n_planes: int, dim: int) -> np.ndarray:
     return _SRP_SIGNS[key]
 
 
-def _normalized_matrix(df: DataFrame, id_col: str, vec_col: str):
-    local = df.select(id_col, vec_col).toPandas()
-    ids = local[id_col].to_numpy()
-    mat = np.array(local[vec_col].tolist(), dtype=np.float64)
+def dot(u: Column, v: Column) -> Column:
+    """Double dot product of two array columns.  Elements widen to
+    double BEFORE multiplying (as the DuckDB oracles do), and
+    zip_with/aggregate fold the arrays left to right, so the result is
+    deterministic across partitionings (unlike a shuffled double sum)."""
+    return F.aggregate(
+        F.zip_with(u, v, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def sq_norm(u: Column) -> Column:
+    """Squared L2 norm of an array column; same widening and order as
+    :func:`dot`."""
+    return F.aggregate(
+        u, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
+    )
+
+
+def cosine(u: Column, v: Column) -> Column:
+    """Exact double cosine between two array columns."""
+    return dot(u, v) / (F.sqrt(sq_norm(u)) * F.sqrt(sq_norm(v)))
+
+
+def _round_half_up(x: np.ndarray) -> np.ndarray:
+    """HALF_UP (ties away from zero) — the rounding Spark's round() and
+    DuckDB's round() both use; np.rint would round ties to even and flip
+    buckets near the boundary.  Addition-free tie test: floor(|x|+0.5)
+    misrounds doubles where |x|+0.5 is not representable
+    (0.49999999999999994 + 0.5 == 1.0), which BigDecimal-based HALF_UP
+    does not."""
+    ax = np.abs(x)
+    f = np.floor(ax)
+    f += (ax - f) >= 0.5
+    return np.sign(x) * f
+
+
+def _topk(
+    scored: DataFrame, k: int, rank: str = "rank", cast: str | None = None
+) -> DataFrame:
+    """Each vec_id's k best (vec_id, neighbor_id, cosine) rows, ranked
+    by cosine desc with the neighbor_id tie-break every engine agrees
+    on; ``cast`` retypes the row_number rank column."""
+    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    r = F.row_number().over(w)
+    return (
+        scored.withColumn(rank, r.cast(cast) if cast else r)
+        .filter(F.col(rank) <= k)
+        .select("vec_id", "neighbor_id", "cosine", rank)
+    )
+
+
+def _unit_rows(vecs: pd.Series) -> np.ndarray:
+    """float64 matrix of a pandas column of vectors, rows L2-normalized."""
+    mat = np.array(vecs.tolist(), dtype=np.float64)
     mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    return ids, mat
+    return mat
+
+
+def _normalized_matrix(df: DataFrame, id_col: str, vec_col: str):
+    """(ids, unit-row matrix) collected to the driver — the broadcast
+    index of the exact brute-force paths."""
+    local = df.select(id_col, vec_col).toPandas()
+    return local[id_col].to_numpy(), _unit_rows(local[vec_col])
 
 
 def cosine_topk_bruteforce(
@@ -61,16 +125,13 @@ def cosine_topk_bruteforce(
     """Exact top-k neighbors for EVERY vector (self-join form):
     (vec_id, neighbor_id, cosine, rank)."""
     spark = df.sparkSession
-    ids, mat = _normalized_matrix(df, id_col, vec_col)
-    bc = spark.sparkContext.broadcast((ids, mat))
+    bc = spark.sparkContext.broadcast(_normalized_matrix(df, id_col, vec_col))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         all_ids, all_mat = bc.value
         id_pos = {int(v): i for i, v in enumerate(all_ids)}
         for pdf in batches:
-            q = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            sims = q @ all_mat.T
+            sims = _unit_rows(pdf[vec_col]) @ all_mat.T
             qids = pdf[id_col].to_numpy()
             for row, qid in enumerate(qids):
                 sims[row, id_pos[int(qid)]] = -np.inf  # exclude self
@@ -95,158 +156,6 @@ def cosine_topk_bruteforce(
     )
 
 
-def srp_signatures(
-    df: DataFrame,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, table, bucket): one sign-random-projection bucket per
-    hash table.  Bucket = the n_planes sign bits packed into an int."""
-    first = df.select(vec_col).first()
-    dim = len(first[0])
-    rng = np.random.RandomState(seed)
-    planes = rng.standard_normal((n_tables, n_planes, dim))
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(planes)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pl = bc.value
-        weights = 1 << np.arange(n_planes)
-        for pdf in batches:
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            out_id, out_t, out_b = [], [], []
-            for t in range(n_tables):
-                bits = (v @ pl[t].T) > 0  # (batch, n_planes)
-                buckets = bits @ weights
-                out_id.extend(pdf[id_col].tolist())
-                out_t.extend([t] * len(pdf))
-                out_b.extend(buckets.tolist())
-            yield pd.DataFrame({"vec_id": out_id, "table": out_t, "bucket": out_b})
-
-    return df.mapInPandas(gen, schema="vec_id long, table int, bucket long")
-
-
-def ivf_assign(
-    df: DataFrame,
-    n_lists: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """IVF coarse quantization: k-means centroids (seeded MLlib) and
-    per-vector list assignment.  Returns (assignments DF with a `list`
-    column, centroid matrix as numpy).  At 100 TB, training samples the
-    data and assignment is one map pass."""
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = df.select(
-        F.col(id_col), F.col(vec_col), array_to_vector(F.col(vec_col)).alias("features")
-    )
-    model = KMeans(k=n_lists, seed=seed, featuresCol="features").fit(feats)
-    assigned = model.transform(feats).select(
-        id_col, vec_col, F.col("prediction").alias("list")
-    )
-    centroids = np.array([np.asarray(c) for c in model.clusterCenters()])
-    return assigned, centroids
-
-
-def ann_topk_ivf(
-    df: DataFrame,
-    k: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF approximate top-k: each query probes its ``n_probe`` nearest
-    centroid lists and scores exactly within them.
-
-    Plan: one k-means pass -> per-vector probe lists (numpy vs the
-    broadcast centroid matrix, Arrow-batched) -> equi-join probe lists
-    with inverted lists -> exact cosine -> window top-k.  The join is
-    the only shuffle over candidates; list sizes are N/n_lists on
-    average, so scored pairs ~ N * n_probe * N/n_lists instead of N^2.
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = df.sparkSession
-    assigned, centroids = ivf_assign(df, n_lists, seed, id_col, vec_col)
-    cnorm = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
-    bc = spark.sparkContext.broadcast(cnorm)
-
-    def probes(batches):
-        cn = bc.value
-        for pdf in batches:
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            v /= np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
-            sims = v @ cn.T
-            top = np.argsort(-sims, axis=1)[:, :n_probe]
-            ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(ids, n_probe),
-                    "list": top.ravel(),
-                }
-            )
-
-    probe_lists = df.select(id_col, vec_col).mapInPandas(
-        probes, schema="vec_id long, list int"
-    )
-    inv = assigned.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"), "list"
-    )
-    cand = (
-        probe_lists.join(inv, "list")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select("vec_id", "neighbor_id", "nv")
-        .distinct()
-    )
-    vecs = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("qv"))
-    dot = F.aggregate(
-        F.zip_with("qv", "nv", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-    scored = cand.join(vecs, "vec_id").select(
-        "vec_id",
-        "neighbor_id",
-        (dot / (nrm(F.col("qv")) * nrm(F.col("nv")))).alias("cosine"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _cos(u, v):
-    """Exact double cosine between two array columns, as a Column.
-    zip_with/aggregate iterate the arrays sequentially, so the result is
-    deterministic across partitionings (unlike a shuffled double sum)."""
-    dot = F.aggregate(
-        F.zip_with(u, v, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-    return dot / (nrm(u) * nrm(v))
-
-
 def cosine_topk_exact_join(
     df: DataFrame, k: int = 10, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
@@ -264,14 +173,9 @@ def cosine_topk_exact_join(
     scored = (
         a.crossJoin(b)
         .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select("vec_id", "neighbor_id", _cos(F.col("qv"), F.col("nv")).alias("cosine"))
+        .select("vec_id", "neighbor_id", cosine(F.col("qv"), F.col("nv")).alias("cosine"))
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(scored, k)
 
 
 def cosine_pairs_blocked(
@@ -326,10 +230,9 @@ def cosine_pairs_blocked(
         bi, bj = key
         a = pdf[pdf["_side"] == 0]
         ids_a = a["_id"].to_numpy()
-        mat_a = np.array(a["_vec"].tolist(), dtype=np.float64)
         if len(ids_a) == 0:
             return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
-        mat_a /= np.linalg.norm(mat_a, axis=1, keepdims=True)
+        mat_a = _unit_rows(a["_vec"])
         if bi == bj:
             ids_b, mat_b = ids_a, mat_a
         else:
@@ -337,8 +240,7 @@ def cosine_pairs_blocked(
             ids_b = b["_id"].to_numpy()
             if len(ids_b) == 0:
                 return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
-            mat_b = np.array(b["_vec"].tolist(), dtype=np.float64)
-            mat_b /= np.linalg.norm(mat_b, axis=1, keepdims=True)
+            mat_b = _unit_rows(b["_vec"])
         sims = mat_a @ mat_b.T
         if bi == bj:
             # each unordered within-block pair once: strict upper triangle
@@ -368,9 +270,7 @@ def ann_topk_ivf_lazy(
     """IVF approximate top-k with coarse quantization expressed entirely
     IN the plan — no MLlib fit, no driver collect, no Python kernel, so
     building the DataFrame triggers zero Spark jobs (the laziness
-    contract every workload query promises; ann_topk_ivf's KMeans.fit
-    is unavoidably eager, which is fine for the operator API but not
-    for a declared query).
+    contract every workload query promises).
 
     Centroids are a deterministic hash-sample of the data itself: the
     ``n_lists`` vectors with the smallest ``md5(vec_id)`` (selected
@@ -396,7 +296,7 @@ def ann_topk_ivf_lazy(
         df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("qv"))
         .crossJoin(F.broadcast(cent))
         .select(
-            "vec_id", "qv", "cid", _cos(F.col("qv"), F.col("cv")).alias("csim")
+            "vec_id", "qv", "cid", cosine(F.col("qv"), F.col("cv")).alias("csim")
         )
         .withColumn("crank", F.row_number().over(w))
         .filter(F.col("crank") <= max(n_probe, 1))
@@ -415,14 +315,9 @@ def ann_topk_ivf_lazy(
     )
     vecs = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("qv"))
     scored = cand.join(vecs, "vec_id").select(
-        "vec_id", "neighbor_id", _cos(F.col("qv"), F.col("nv")).alias("cosine")
+        "vec_id", "neighbor_id", cosine(F.col("qv"), F.col("nv")).alias("cosine")
     )
-    wk = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(scored, k)
 
 
 def srp_signatures_portable(
@@ -450,16 +345,7 @@ def srp_signatures_portable(
             if len(pdf) == 0:
                 continue
             x = np.array(pdf[vec_col].tolist(), dtype=np.float64) * quant
-            # HALF_UP (ties away from zero) — the rounding Spark's
-            # round() and DuckDB's round() both use; np.rint would
-            # round ties to even and flip buckets near the boundary.
-            # Addition-free tie test: floor(|x|+0.5) misrounds doubles
-            # where |x|+0.5 is not representable (0.49999999999999994
-            # + 0.5 == 1.0), which BigDecimal-based HALF_UP does not.
-            ax = np.abs(x)
-            f = np.floor(ax)
-            f += (ax - f) >= 0.5
-            xq = (np.sign(x) * f).astype(np.int64)
+            xq = _round_half_up(x).astype(np.int64)
             s = _srp_sign_matrix(n_tables, n_planes, xq.shape[1])
             dots = xq @ s.T  # (batch, n_tables*n_planes), exact int64
             bits = (dots >= 0).astype(np.int64).reshape(
@@ -513,7 +399,7 @@ def semantic_dedup(
     per-dimension left-to-right (rank-1 updates), the exact order of
     the Catalyst aggregate/zip_with fold and of a SQL oracle's
     position-join sum, and rounding uses the addition-free HALF_UP
-    emulation shared with quantize_embeddings.
+    emulation shared with srp_signatures_portable.
 
     Recall tuning: fewer planes per table widens buckets (higher
     recall at a given cosine, more scored pairs); more tables adds
@@ -586,12 +472,7 @@ def semantic_dedup(
             for j in range(d):
                 dots += np.outer(xa[:, j], x_b[:, j])
             cos = dots / np.outer(nrm_a[s0 : s0 + blk], nrm_b)
-            # addition-free HALF_UP at 6 dp (see srp_signatures_portable)
-            ax = np.abs(cos) * 1e6
-            f = np.floor(ax)
-            f += (ax - f) >= 0.5
-            cos6 = np.sign(cos) * f / 1e6
-            keep = cos6 >= tau
+            keep = _round_half_up(cos * 1e6) / 1e6 >= tau  # round(cos, 6)
             ri, ci = np.where(keep)
             if triangle:
                 mask = ci > (ri + s0 + off_a)
@@ -668,12 +549,11 @@ def ann_topk_lsh_portable(
     cross-engine-reproducible hash family — the scale-safe ANN plan the
     correctness gate can hash-verify against a SQL oracle.
 
-    Differences from :func:`ann_topk_lsh` (which draws Gaussian planes
-    from a seeded numpy RNG inside an Arrow UDF):
+    Determinism design:
 
       * hyperplanes are ±1 vectors derived from md5 of "srp:t:j:i" —
-        pure JVM expressions, no Python anywhere, and byte-identical
-        reproducible in any engine with md5;
+        no seeded RNG, byte-identical reproducible in any engine with
+        md5;
       * the plane dot products are computed over fixed-point quantized
         components (``round(x*quant)`` as int64), so bucket assignment
         is exact integer math — immune to FP summation-order drift
@@ -741,22 +621,13 @@ def ann_topk_lsh_portable(
         .select(F.col("a.vec_id").alias("vec_id"), F.col("b.vec_id").alias("neighbor_id"))
         .distinct()
     )
-    nrm = F.sqrt(
-        F.aggregate(
-            F.col(vec_col),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
+    # norms once per vector, before the candidate join
+    nrm = F.sqrt(sq_norm(F.col(vec_col)))
     qa = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("qv"), nrm.alias("na"))
     qb = df.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"), nrm.alias("nb")
     )
-    pair_dot = F.aggregate(
-        F.zip_with("qv", "nv", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    pair_dot = dot(F.col("qv"), F.col("nv"))
     scored = (
         cand.join(qa, "vec_id")
         .join(qb, "neighbor_id")
@@ -766,71 +637,7 @@ def ann_topk_lsh_portable(
             F.round(pair_dot / (F.col("na") * F.col("nb")), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("vec_id", "neighbor_id", "cosine", "rnk")
-    )
-
-
-def ann_topk_lsh(
-    df: DataFrame,
-    k: int = 10,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k per vector: candidates = vectors sharing any
-    (table, bucket); exact cosine on candidates only; window top-k.
-
-    Plan: signatures (Arrow UDF) -> self equi-join on (table, bucket)
-    -> distinct pairs -> exact scoring via JVM array expressions ->
-    row_number window.  No all-pairs stage anywhere.
-    """
-    sigs = srp_signatures(df, n_planes, n_tables, seed, id_col, vec_col)
-    a, b = sigs.alias("a"), sigs.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_id"), F.col("b.vec_id").alias("neighbor_id"))
-        .distinct()
-    )
-    vecs = df.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
-    )
-    dot = F.aggregate(
-        F.zip_with("qv", "nv", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-    scored = (
-        cand.join(vecs.withColumnRenamed("v", "qv"), "vec_id")
-        .join(
-            vecs.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv")),
-            "neighbor_id",
-        )
-        .select(
-            "vec_id",
-            "neighbor_id",
-            (dot / (nrm(F.col("qv")) * nrm(F.col("nv")))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(scored, k, "rnk", "long")
 
 
 def quantize_embeddings(

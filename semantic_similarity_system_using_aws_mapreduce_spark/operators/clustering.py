@@ -1,13 +1,12 @@
 """Distributed k-means over an embedding column — pure-DataFrame
 Lloyd iterations with model-sized driver state only.
 
-Why this exists next to MLlib's KMeans (which operators/ann.ivf_assign
-uses for IVF coarse quantization): MLlib's trainer is seeded but not
-cross-engine replayable, so its assignments can never be
-hash-verified by the DuckDB correctness gate.  This module's
-deterministic variant — seed centroids chosen by portable md5 rank,
-distances int64-free but 6-dp-rounded with rank tie-breaks — IS
-replayable, which gives the clustering family a driver-oracled query
+Why not MLlib's KMeans: its trainer is seeded but not cross-engine
+replayable, so its assignments can never be hash-verified by the
+DuckDB correctness gate.  This module's deterministic variant — seed
+centroids chosen by portable md5 rank, distances int64-free but
+6-dp-rounded with rank tie-breaks — IS replayable, which gives the
+clustering family a driver-oracled query
 (workload/embeddings.q_kmeans_assign) in addition to pytest evidence.
 
 Scale shape (the same contract as MLlib's implementation):
@@ -36,7 +35,7 @@ KMEANS_SALT = "kmeans:"
 def _d2(vec: Column, cent: Column) -> Column:
     """Squared L2 distance, float32 inputs widened to double per
     element (products exact in double; the 6-dp round downstream
-    absorbs sum-order differences, as in workload/embeddings._dot)."""
+    absorbs sum-order differences, as in operators/ann.dot)."""
     return F.aggregate(
         F.zip_with(
             vec,

@@ -32,6 +32,12 @@ P = 2147483647
 A = [1103515245, 1229782938, 1377093957, 1588635695, 1739064211, 1865811235, 1966632999, 2027875231]
 B = [12345, 98765, 55555, 31337, 77777, 13579, 24680, 424242]
 
+#: The minhash signature config every caller shares: one component per
+#: universal hash, banded N_BANDS x ROWS_PER_BAND for the LSH joins
+#: (the lsh_plan optimum for the 0.8 jaccard threshold at 8 hashes).
+N_HASHES = len(A)
+N_BANDS, ROWS_PER_BAND = 4, 2
+
 
 def md5_int(col: Column) -> Column:
     """Portable 60-bit integer hash (bit-identical in DuckDB via
@@ -191,25 +197,23 @@ def exact_dedup_keep_newest(
     )
 
 
-def minhash_signatures(hashes: DataFrame, n_hashes: int = 8) -> DataFrame:
-    """(doc_id, h0..h{k-1}) from a shingle_hashes relation.
+def minhash_signatures(hashes: DataFrame) -> DataFrame:
+    """(doc_id, h0..h{N_HASHES-1}) from a shingle_hashes relation.
 
     Hash-agnostic by construction: the universal family maps any
     64-bit ``h`` (md5_int or xxhash64_int, both non-negative 60-bit)
     through ``(A[k]*(h%P)+B[k])%P`` — so the production-hash flag
     lives entirely in the upstream :func:`shingle_hashes` call and
     this stage, LSH banding, and jaccard verification run unchanged."""
-    if n_hashes > len(A):
-        raise ValueError(f"at most {len(A)} hash functions configured")
     x = F.col("h") % P
     aggs = [
         F.min((F.lit(A[k]) * x + F.lit(B[k])) % P).alias(f"h{k}")
-        for k in range(n_hashes)
+        for k in range(N_HASHES)
     ]
     return hashes.groupBy("doc_id").agg(*aggs)
 
 
-def lsh_candidates(sigs: DataFrame, n_bands: int = 4, rows_per_band: int = 2) -> DataFrame:
+def lsh_candidates(sigs: DataFrame) -> DataFrame:
     """(doc_a, doc_b) pairs agreeing on every row of at least one band."""
     # Persist: both self-join sides read buckets, and exchange reuse
     # does not fire across the aliases — without this the signature
@@ -217,10 +221,8 @@ def lsh_candidates(sigs: DataFrame, n_bands: int = 4, rows_per_band: int = 2) ->
     from pyspark import StorageLevel
 
     # caller-owned cache: operators/__init__ ownership contract
-    buckets = signature_buckets(sigs, n_bands, rows_per_band).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    key_cols = ["band"] + [f"k{r}" for r in range(rows_per_band)]
+    buckets = signature_buckets(sigs).persist(StorageLevel.MEMORY_AND_DISK)
+    key_cols = ["band"] + [f"k{r}" for r in range(ROWS_PER_BAND)]
     a, b = buckets.alias("a"), buckets.alias("b")
     cond = (F.col("a.doc_id") < F.col("b.doc_id"))
     for c in key_cols:
@@ -756,22 +758,20 @@ def paragraph_dedup(
     )
 
 
-def signature_buckets(
-    sigs: DataFrame, n_bands: int = 4, rows_per_band: int = 2
-) -> DataFrame:
-    """(doc_id, band, k0..k{r-1}): the banded LSH bucket relation of a
-    minhash-signature relation — the map-side explode
+def signature_buckets(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band, k0, k1): the N_BANDS x ROWS_PER_BAND banded LSH
+    bucket relation of a minhash-signature relation — the map-side explode
     :func:`lsh_candidates` uses internally, exposed for callers that
     join buckets across two different relations (incremental dedup)."""
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
             *[
-                F.col(f"h{b * rows_per_band + r}").alias(f"k{r}")
-                for r in range(rows_per_band)
+                F.col(f"h{b * ROWS_PER_BAND + r}").alias(f"k{r}")
+                for r in range(ROWS_PER_BAND)
             ],
         )
-        for b in range(n_bands)
+        for b in range(N_BANDS)
     ]
     return sigs.select(
         "doc_id", F.explode(F.array(*band_structs)).alias("bb")
@@ -781,9 +781,6 @@ def signature_buckets(
 def incremental_dedup(
     new_sigs: DataFrame,
     index_sigs: DataFrame,
-    n_hashes: int = 8,
-    n_bands: int = 4,
-    rows_per_band: int = 2,
     min_agree: int = 6,
     index_buckets: DataFrame | list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -805,9 +802,9 @@ def incremental_dedup(
     Both inputs are minhash-signature relations
     (:func:`minhash_signatures`; the index side is typically
     ``spark.read.parquet(index_path)``).  A new document is DROPPED
-    when its signature agrees on >= ``min_agree`` of ``n_hashes``
+    when its signature agrees on >= ``min_agree`` of its ``N_HASHES``
     components (the unbiased minhash estimate of Jaccard similarity,
-    agree/n_hashes) with ANY indexed document (id-agnostic: the index
+    agree/N_HASHES) with ANY indexed document (id-agnostic: the index
     always wins), or with any smaller-id document of its own batch —
     the same min-id-survivor rule as :func:`exact_dedup`, applied
     transitively-conservatively (a doc whose nearest duplicate was
@@ -835,7 +832,7 @@ def incremental_dedup(
 
     ``index_buckets``, when given, is the PRE-MATERIALIZED bucket
     relation of the index side (the :func:`signature_buckets` output,
-    persisted as a catalog table bucketed by (band, k0..k{r-1}) — see
+    persisted as a catalog table bucketed by (band, k0, k1) — see
     ``streaming.documents.build_bucketed_sig_index``) and replaces the
     on-the-fly explode: the probe equi-join then reads co-located
     buckets with NO Exchange on the index side, which is the 100 TB
@@ -855,9 +852,6 @@ def incremental_dedup(
     scored = incremental_dedup_scored(
         new_sigs,
         index_sigs,
-        n_hashes=n_hashes,
-        n_bands=n_bands,
-        rows_per_band=rows_per_band,
         min_agree=min_agree,
         index_buckets=index_buckets,
     )
@@ -869,7 +863,7 @@ def incremental_dedup(
         .filter(F.col("_rn") == 1)
         .select("doc_id", F.col("partner").alias("dup_of"), "n_agree")
     )
-    sig_cols = [f"h{k}" for k in range(n_hashes)]
+    sig_cols = [f"h{k}" for k in range(N_HASHES)]
     batch = new_sigs.select("doc_id", *sig_cols)
     kept = batch.join(dropped.select("doc_id"), "doc_id", "left_anti")
     return kept, dropped
@@ -878,9 +872,6 @@ def incremental_dedup(
 def incremental_dedup_scored(
     new_sigs: DataFrame,
     index_sigs: DataFrame,
-    n_hashes: int = 8,
-    n_bands: int = 4,
-    rows_per_band: int = 2,
     min_agree: int = 6,
     index_buckets: DataFrame | list[DataFrame] | None = None,
 ) -> DataFrame:
@@ -899,13 +890,13 @@ def incremental_dedup_scored(
     plan shape as :func:`incremental_dedup` — banded bucket equi-joins
     with a batch-sized probe side, then per-pair integer agreement —
     and the same ``index_buckets`` exchange-free option."""
-    sig_cols = [f"h{k}" for k in range(n_hashes)]
-    key_cols = ["band"] + [f"k{r}" for r in range(rows_per_band)]
+    sig_cols = [f"h{k}" for k in range(N_HASHES)]
+    key_cols = ["band"] + [f"k{r}" for r in range(ROWS_PER_BAND)]
     batch = new_sigs.select("doc_id", *sig_cols)
     pool = index_sigs.select("doc_id", *sig_cols)
-    nb = signature_buckets(batch, n_bands, rows_per_band)
+    nb = signature_buckets(batch)
     if index_buckets is None:
-        pbs = [signature_buckets(pool, n_bands, rows_per_band)]
+        pbs = [signature_buckets(pool)]
     elif isinstance(index_buckets, DataFrame):
         pbs = [index_buckets]
     else:
@@ -944,10 +935,10 @@ def incremental_dedup_scored(
     pool_all = pool.unionByName(batch)
     partner_sigs = pool_all.select(
         F.col("doc_id").alias("partner"),
-        *[F.col(f"h{k}").alias(f"p{k}") for k in range(n_hashes)],
+        *[F.col(f"h{k}").alias(f"p{k}") for k in range(N_HASHES)],
     )
     agree = sum(
-        (F.col(f"h{k}") == F.col(f"p{k}")).cast("int") for k in range(n_hashes)
+        (F.col(f"h{k}") == F.col(f"p{k}")).cast("int") for k in range(N_HASHES)
     )
     return (
         x.join(partner_sigs, "partner")
@@ -1387,7 +1378,7 @@ def source_overlap_kmv(
 
 
 def lsh_plan(
-    threshold: float, n_hashes: int = 8, resolution: int = 1000
+    threshold: float, n_hashes: int = N_HASHES, resolution: int = 1000
 ) -> dict:
     """Pick (n_bands, rows_per_band) for :func:`lsh_candidates` from a
     target Jaccard threshold — the S-curve calculus every MinHash-LSH

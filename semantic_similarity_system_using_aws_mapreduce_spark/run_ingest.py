@@ -154,7 +154,6 @@ def main(argv: list[str] | None = None) -> int:
         help="heal interrupted swaps and GC orphan bucket-table versions",
     )
     p_vac.add_argument("outdir")
-    p_vac.add_argument("--bucket-table", default=None)
 
     args = ap.parse_args(argv)
     if args.cmd == "ingest" and args.bucket_table and not args.compact_every:
@@ -236,16 +235,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "vacuum":
         from semantic_similarity_system_using_aws_mapreduce_spark.streaming.documents import vacuum_tables
 
-        print(
-            json.dumps(
-                vacuum_tables(
-                    spark,
-                    corpus_path,
-                    index_path,
-                    bucket_index_table=args.bucket_table,
-                )
-            )
-        )
+        print(json.dumps(vacuum_tables(spark, corpus_path, index_path)))
         return 0
     if args.cmd == "asof":
         from pyspark.sql import Observation

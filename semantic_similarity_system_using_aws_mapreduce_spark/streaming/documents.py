@@ -52,6 +52,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import (
+    N_HASHES,
+    ROWS_PER_BAND,
     incremental_dedup_scored,
     minhash_signatures,
     shingle_hashes,
@@ -87,12 +89,11 @@ from semantic_similarity_system_using_aws_mapreduce_spark.streaming.retrieval im
     postings_delta,
 )
 
-SIG_SCHEMA = "doc_id long, " + ", ".join(f"h{k} long" for k in range(8))
+SIG_SCHEMA = "doc_id long, " + ", ".join(f"h{k} long" for k in range(N_HASHES))
 
-#: LSH banding of the signature index (bands x rows per band = its 8
-#: minhash components): the bucket table's build, its parquet tail and
-#: the near-dup probe all read these, so their bucket keys always agree
-N_BANDS, ROWS_PER_BAND = 4, 2
+#: bucket keys of the signature index's LSH banding (operators/dedup's
+#: N_BANDS x ROWS_PER_BAND): the bucket table's build, its parquet tail
+#: and the near-dup probe all read the one banding, so their keys agree
 SIG_BUCKET_KEYS = ["band"] + [f"k{r}" for r in range(ROWS_PER_BAND)]
 #: the signature bucket table's columns, for its re-registration in a
 #: fresh session
@@ -459,7 +460,7 @@ def build_bucketed_sig_index(
         spark,
         index_path + BUCKETMETA_SUFFIX,
         table,
-        signature_buckets(sigs, N_BANDS, ROWS_PER_BAND),
+        signature_buckets(sigs),
         SIG_BUCKET_KEYS,
         n_buckets,
         covered_batch,
@@ -732,7 +733,7 @@ def _sig_probe(
     )
     if not probe:
         return index, None
-    return index, [probe[0], signature_buckets(probe[1], N_BANDS, ROWS_PER_BAND)]
+    return index, [probe[0], signature_buckets(probe[1])]
 
 
 def _near_dup_decision(
@@ -762,8 +763,6 @@ def _near_dup_decision(
     scored = incremental_dedup_scored(
         sigs,
         index,
-        n_bands=N_BANDS,
-        rows_per_band=ROWS_PER_BAND,
         min_agree=c.min_agree,
         index_buckets=index_buckets,
     ).collect()
@@ -1387,12 +1386,7 @@ def _sweep_bucket_table(spark: SparkSession, base: str, meta_path: str) -> None:
     shutil.rmtree(meta_path, ignore_errors=True)
 
 
-def vacuum_tables(
-    spark: SparkSession,
-    corpus_path: str,
-    index_path: str,
-    bucket_index_table: str | None = None,
-) -> dict:
+def vacuum_tables(spark: SparkSession, corpus_path: str, index_path: str) -> dict:
     """Housekeeping for an ingest deployment: heal any interrupted
     atomic swap on every engine-managed table under the prefix
     (sources/atomic.recover — roll forward/back, idempotent) and GC
@@ -1404,7 +1398,7 @@ def vacuum_tables(
     a version is collectable only if the meta exists and names a
     DIFFERENT version — with no readable meta nothing is dropped,
     because the next rebuild's own GC owns that state.  The meta names
-    the table, so ``bucket_index_table`` is not needed to find it."""
+    each bucket table, so no table name is passed in."""
     from semantic_similarity_system_using_aws_mapreduce_spark.sources.atomic import recover
 
     sig_meta = index_path + BUCKETMETA_SUFFIX

@@ -99,20 +99,11 @@ for _m in _MODULES:
 #                      embedding operators); the explode+conditional-
 #                      sum shape holds driver slots via
 #                      q_source_similarity's 24-aggregate pattern
-# ROTATION (round 5): q_exact_jaccard_join and q_cms_heavy_hitters
-# were PROMOTED out of this list into _PRIORITY (VERDICT r4 #7) and
-# gained green r5 rows.  ROTATION (round 6): q_data_card and
-# q_table_stats likewise promote (VERDICT r5 #5) so the
-# release-report and ANALYZE families gain driver-witnessed rows —
-# both are one-pass/one-GROUPING-SETS plans, cheap at sf0.01.
-# ROTATION (round 7): q_domain_quota promotes to _PRIORITY (VERDICT
-# r6 #3) — it was the only round-6 operator without a driver row.
-#   q_bpe_vocab_pieces - (new r7, mirror-only) the encode-side replay
-#                      of the learned merges; strict coverage subset
-#                      of q_bpe_merges' driver slot — its oracle IS
-#                      the same unrolled CTE chain, selecting the
-#                      final round's symbol state instead of the
-#                      argmax rows
+#   q_bpe_vocab_pieces - the encode-side replay of the learned
+#                      merges; strict coverage subset of
+#                      q_bpe_merges' driver slot — its oracle IS the
+#                      same unrolled CTE chain, selecting the final
+#                      round's symbol state instead of the argmax rows
 LOCAL_ONLY = [
     "q_bpe_vocab_pieces",
     "q_hash_embeddings",
@@ -137,26 +128,13 @@ LOCAL_ONLY = [
     "q_doc_fingerprint",
 ]
 
-# Queries the driver has not hash-verified recently go first so an
-# order-sensitive cap can't starve them again.  ROTATION (round 12),
-# executing the round-11 registry's ROUND-12 NOTE and VERDICT r11 #1:
-# the full 44-entry round-11 _LAST tail (every entry fully green in
-# CORRECTNESS_r10, mirror-verified since) rotates back into the
-# 50-row window.  44 rotated + 6 middle = exactly 50 — zero free
-# slots, so any round-12 addition must make window room by an
-# explicit middle demotion (as rounds 7-11 did).  The 44 round-11
-# _PRIORITY entries (all fully green in CORRECTNESS_r11, 50/50) demote
-# to the new _LAST tail, keeping the every-export-green-within-two-
-# rounds invariant: r12-window ∪ r11-green covers all exports.
-# NEW round 12: q_neardup_keep_newest (the batch twin of the round's
-# streaming near-dup supersession capability) enters the window
-# first, never driver-verified; its slot comes from the explicit
-# demotion of the then-green middle q03_shipping_priority (green r11;
-# rationale at the _LAST entry).
+# Rotation invariant: every export is driver-green within two rounds.
+# The 50-row cap drops the _LAST tail, so each round the tail rotates
+# into _PRIORITY (first in the window) and the previous window's
+# entries, all green, demote to _LAST; a new query enters _PRIORITY
+# and takes its slot by demoting a green middle entry to _LAST.
 _PRIORITY = [
-    # new this round, never driver-verified:
     "q_neardup_keep_newest",
-    # the round-11 _LAST tail rotating back in (green r10, skipped r11):
     "q_lm_quality",
     "q_paragraph_dedup",
     "q_main_content",
@@ -203,33 +181,10 @@ _PRIORITY = [
     "q_simhash_near_dups",
 ]
 
-# Exported last: with 95 exported queries and a 50-row driver cap,
-# exactly these 45 fall off this round (the round-11 _PRIORITY block —
-# the round-10 _LAST tail that rotated into the r11 window — plus the
-# demoted middle q03_shipping_priority).  Every
-# one is fully green in CORRECTNESS_r11 (rows, schema, AND hash —
-# 50/50 green), so the rotation keeps every export driver-green
-# within two consecutive rounds, AND each is coverage-subsumed by
-# queries that keep a slot (the same per-entry family rationales
-# recorded in the round-10/round-11 registries apply with the
-# directions swapped — each pair below simply trades places with the
-# r12 window entry it subsumed last round).
-# All remain verified by the local mirror test either way.
-# ROUND-13 NOTE: rotate this tail back into _PRIORITY next round (and
-# demote the then-green round-12 entries here) so the
-# every-export-green-within-two-rounds invariant keeps holding.
-# Every entry below is green in CORRECTNESS_r11, so each tolerates
-# exactly the round-12 skip; all 45 must re-enter the round-13 window
-# (45 + the 5 then-current middles = exactly 50 — zero free slots, so
-# any round-13 addition must demote a then-green middle entry, as
-# rounds 7-12 did).
+# Exported last, so these fall off under the cap; each is
+# coverage-subsumed by a query that keeps a slot, and all stay verified
+# by the local mirror test either way.
 _LAST = [
-    # demoted round-12 middle (green r11) making room for
-    # q_neardup_keep_newest: q03's scan→join→agg→top-k shape stays
-    # in-window via q05_local_supplier (the same multi-join grouped
-    # aggregate) and q_training_order (global ORDER BY over a computed
-    # key); ORDER BY/LIMIT also holds an exported slot at
-    # q03 itself, which re-enters the round-13 window with this tail.
     "q03_shipping_priority",
     "q_lang_prior",
     "q_dedup_keep_newest",

@@ -17,6 +17,7 @@ from semantic_similarity_system_using_aws_mapreduce_spark.operators.sampling imp
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import (
     A,
     B,
+    N_HASHES,
     P,
     exact_dedup,
     lsh_candidates,
@@ -26,8 +27,6 @@ from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import
     simhash,
 )
 
-N_HASHES = 8
-N_BANDS = 4  # rows-per-band = N_HASHES // N_BANDS = 2
 JACCARD_THRESHOLD = 0.8
 BENCH_PERMILLE = 20  # 2% of docs play the benchmark/eval set
 CONTAM_MIN_OVERLAP = 5  # shared distinct 3-grams to flag a doc
@@ -99,8 +98,8 @@ def q_neardup_keep_newest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the raw multiset, so the per-(doc_id, h) dedup exchange would be
     # a corpus-sized shuffle spent on nothing (r12; same rationale at
     # every signatures-only shingle_hashes site)
-    sigs = minhash_signatures(shingle_hashes(docs, distinct=False), N_HASHES)
-    cands = lsh_candidates(sigs, N_BANDS, N_HASHES // N_BANDS)
+    sigs = minhash_signatures(shingle_hashes(docs, distinct=False))
+    cands = lsh_candidates(sigs)
     comp = connected_components(cands).withColumnRenamed("node", "doc_id")
     members = (
         docs.select("doc_id", "fetched_at")
@@ -127,16 +126,12 @@ def q_neardup_keep_newest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct=False: identical signatures (min is duplicate-blind),
     # one fewer corpus-sized exchange (r12)
-    return minhash_signatures(
-        shingle_hashes(_docs(spark, sf_dir), distinct=False), N_HASHES
-    )
+    return minhash_signatures(shingle_hashes(_docs(spark, sf_dir), distinct=False))
 
 
 def q_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = minhash_signatures(
-        shingle_hashes(_docs(spark, sf_dir), distinct=False), N_HASHES
-    )
-    return lsh_candidates(sigs, N_BANDS, N_HASHES // N_BANDS)
+    sigs = minhash_signatures(shingle_hashes(_docs(spark, sf_dir), distinct=False))
+    return lsh_candidates(sigs)
 
 
 def q_ngram_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,7 +145,7 @@ def q_ngram_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sh feeds the signature chain, both verify sides, and the size
     # relation — persist so the shingle explode+hash+distinct runs once.
     sh = shingle_hashes(_docs(spark, sf_dir)).persist(StorageLevel.MEMORY_AND_DISK)
-    cands = lsh_candidates(minhash_signatures(sh, N_HASHES), N_BANDS, N_HASHES // N_BANDS)
+    cands = lsh_candidates(minhash_signatures(sh))
     return ngram_jaccard_pairs(sh, JACCARD_THRESHOLD, candidates=cands)
 
 
@@ -197,9 +192,7 @@ def q_lsh_recall(
     truth = prefix_jaccard_join(
         sh, threshold_permille=int(JACCARD_THRESHOLD * 1000)
     ).select("doc_a", "doc_b").persist(StorageLevel.MEMORY_AND_DISK)
-    cands = lsh_candidates(
-        minhash_signatures(sh, N_HASHES), N_BANDS, N_HASHES // N_BANDS
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    cands = lsh_candidates(minhash_signatures(sh)).persist(StorageLevel.MEMORY_AND_DISK)
     hits = truth.join(cands, ["doc_a", "doc_b"], "left_semi")
     row = (
         truth.agg(F.count("*").alias("n_true"))
@@ -249,9 +242,7 @@ def q_edit_similarity_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     sh = shingle_hashes(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    cands = lsh_candidates(
-        minhash_signatures(sh, N_HASHES), N_BANDS, N_HASHES // N_BANDS
-    )
+    cands = lsh_candidates(minhash_signatures(sh))
     a = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("_ta"))
     b = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("_tb"))
     lev = F.levenshtein("_ta", "_tb")
@@ -444,10 +435,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm, oracled against a recursive-CTE transitive closure."""
     from semantic_similarity_system_using_aws_mapreduce_spark.operators.graph import connected_components
 
-    sigs = minhash_signatures(
-        shingle_hashes(_docs(spark, sf_dir), distinct=False), N_HASHES
-    )
-    cands = lsh_candidates(sigs, N_BANDS, N_HASHES // N_BANDS)
+    sigs = minhash_signatures(shingle_hashes(_docs(spark, sf_dir), distinct=False))
+    cands = lsh_candidates(sigs)
     return connected_components(cands)
 
 
@@ -498,8 +487,8 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from semantic_similarity_system_using_aws_mapreduce_spark.operators.sampling import cluster_split
 
     docs = _docs(spark, sf_dir)
-    sigs = minhash_signatures(shingle_hashes(docs, distinct=False), N_HASHES)
-    cands = lsh_candidates(sigs, N_BANDS, N_HASHES // N_BANDS)
+    sigs = minhash_signatures(shingle_hashes(docs, distinct=False))
+    cands = lsh_candidates(sigs)
     comp = connected_components(cands).withColumnRenamed("node", "doc_id")
     return (
         docs.select("doc_id")

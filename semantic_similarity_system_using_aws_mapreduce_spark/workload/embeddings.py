@@ -1,23 +1,38 @@
 """Similarity search over the embeddings table (array<float> column).
 
-Brute-force exact scoring is the baseline (crossJoin + JVM
-array-expression dot products — no Python in the loop); the LSH-bucketed
-path for 100 TB lives with the dedup operators (random-hyperplane
-signatures are simhash over float arrays).  All arithmetic casts floats
-to double BEFORE multiplying so Spark and the DuckDB oracle round
+Brute-force exact scoring is the baseline (q_knn, q_cosine_pairs);
+the scale-safe forms — SRP-LSH buckets (q_ann_lsh_topk), in-plan IVF
+(q_ann_ivf_recall) and blocked exact pairs (q_blocked_cosine_pairs) —
+are thin adapters over operators/ann.py.  Every array score uses
+operators/ann's dot / sq_norm / cosine kernel, which casts floats to
+double BEFORE multiplying so Spark and the DuckDB oracle round
 identically.
 
-Scale notes: at 100 TB you never crossJoin — q_cosine_pairs documents
-the bucketed strategy: sign-random-projection buckets + within-bucket
-scoring, which is exactly q_minhash_lsh_candidates' plan shape with a
-different hash family.  The brute-force form remains the correctness
-oracle for the bucketed one.
+Scale notes: at 100 TB you never crossJoin — SRP-LSH buckets the
+vectors and scores only within buckets, which is exactly
+q_minhash_lsh_candidates' plan shape with a different hash family.
+The brute-force form remains the correctness oracle for the bucketed
+one.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import (
+    _normalized_matrix,
+    _unit_rows,
+    ann_topk_ivf_lazy,
+    ann_topk_lsh_portable,
+    cosine,
+    cosine_pairs_blocked,
+    cosine_topk_exact_join,
+    dot,
+    quantize_embeddings,
+    semantic_dedup,
+    sq_norm,
+)
 
 COSINE_THRESHOLD = 0.4
 
@@ -47,23 +62,9 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _sq_norm(arr: Column) -> Column:
-    return F.aggregate(
-        arr, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-    )
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def q_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _emb(spark, sf_dir).select(
-        "vec_id", F.round(F.sqrt(_sq_norm(F.col("embedding"))), 6).alias("l2_norm")
+        "vec_id", F.round(F.sqrt(sq_norm(F.col("embedding"))), 6).alias("l2_norm")
     )
 
 
@@ -94,20 +95,14 @@ def q_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     bc = _COSINE_MATRIX_CACHE.get(key)
     if bc is None:
-        local = e.toPandas()
-        ids = local["vec_id"].to_numpy()
-        mat = np.array(local["embedding"].tolist(), dtype=np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        bc = spark.sparkContext.broadcast((ids, mat))
+        bc = spark.sparkContext.broadcast(_normalized_matrix(e, "vec_id", "embedding"))
         _COSINE_MATRIX_CACHE.clear()  # one live matrix per process
         _COSINE_MATRIX_CACHE[key] = bc
 
     def gen(batches):
         all_ids, all_mat = bc.value
         for pdf in batches:
-            q = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            sims = q @ all_mat.T
+            sims = _unit_rows(pdf["embedding"]) @ all_mat.T
             qids = pdf["vec_id"].to_numpy()
             mask = (sims > COSINE_THRESHOLD) & (all_ids[None, :] > qids[:, None])
             ii, jj = np.nonzero(mask)
@@ -123,10 +118,10 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k nearest neighbors of one query vector by cosine."""
     e = _emb(spark, sf_dir)
     q = e.filter(F.col("vec_id") == KNN_QUERY_ID).select(
-        F.col("embedding").alias("qe"), F.sqrt(_sq_norm(F.col("embedding"))).alias("qn")
+        F.col("embedding").alias("qe"), F.sqrt(sq_norm(F.col("embedding"))).alias("qn")
     )
-    cos = _dot(F.col("embedding"), F.col("qe")) / (
-        F.sqrt(_sq_norm(F.col("embedding"))) * F.col("qn")
+    cos = dot(F.col("embedding"), F.col("qe")) / (
+        F.sqrt(sq_norm(F.col("embedding"))) * F.col("qn")
     )
     return (
         e.filter(F.col("vec_id") != KNN_QUERY_ID)
@@ -145,8 +140,6 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures, bucket join, scoring, and window top-k are all
     distributed relational ops.  See operators/ann.py
     ann_topk_lsh_portable for the determinism design."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import ann_topk_lsh_portable
-
     return ann_topk_lsh_portable(
         _emb(spark, sf_dir),
         k=ANN_TOPK,
@@ -188,11 +181,6 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison is a column expression over cross-joined 1-row
     aggregates — building this DataFrame runs no Spark jobs
     (test_ann.py asserts it via the status tracker)."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import (
-        ann_topk_ivf_lazy,
-        cosine_topk_exact_join,
-    )
-
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
     ivf = ann_topk_ivf_lazy(e, k=IVF_K, n_lists=IVF_LISTS, n_probe=IVF_PROBE)
     truth = cosine_topk_exact_join(e, k=IVF_K)
@@ -224,8 +212,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/ann.py semantic_dedup for the 100 TB shape.  Iterative
     like q_dedup_clusters: the component loop is the engine's
     sanctioned driver-control-flow surface."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import semantic_dedup
-
     return semantic_dedup(
         _emb(spark, sf_dir),
         tau=SEM_TAU,
@@ -289,8 +275,6 @@ def q_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(x/scale + 0.5) instead of round() keeps the codes
     bit-identical across engines (/, +0.5, floor are exactly-rounded
     IEEE ops; round() ties differ by dialect)."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import quantize_embeddings
-
     e = _emb(spark, sf_dir)
     q = quantize_embeddings(e, bits=8, keep_vec=True).filter(F.col("scale") > 0)
     deq = F.transform("codes", lambda c: c.cast("double") * F.col("scale"))
@@ -298,9 +282,7 @@ def q_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     err = F.array_max(
         F.zip_with("embedding", "deq", lambda x, w: F.abs(x.cast("double") - w))
     )
-    cos = _dot(F.col("embedding"), F.col("deq")) / (
-        F.sqrt(_sq_norm(F.col("embedding"))) * F.sqrt(_sq_norm(F.col("deq")))
-    )
+    cos = cosine(F.col("embedding"), F.col("deq"))
     return with_deq.select(
         "vec_id",
         F.round("scale", 9).alias("scale"),
@@ -317,8 +299,6 @@ def q_blocked_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors).  Shares q_cosine_pairs' oracle VERBATIM: the two plans
     must produce identical rows, which is exactly the claim the blocked
     path makes — same answer, no executor-memory wall."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import cosine_pairs_blocked
-
     out = cosine_pairs_blocked(
         _emb(spark, sf_dir).select("vec_id", "embedding"),
         COSINE_THRESHOLD,
@@ -362,9 +342,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = e.filter(F.col("vec_id").isin(q_ids)).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
     )
-    cos = _dot(F.col("embedding"), F.col("qe")) / (
-        F.sqrt(_sq_norm(F.col("embedding"))) * F.sqrt(_sq_norm(F.col("qe")))
-    )
+    cos = cosine(F.col("embedding"), F.col("qe"))
     scored = e.crossJoin(F.broadcast(qv)).select(
         "q_id", F.col("vec_id").alias("doc_id"), F.round(cos, 6).alias("cosine")
     )
@@ -402,8 +380,7 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One deterministic Lloyd step: assign every vector to its
     nearest of k md5-rank-seeded centroids (vec_id, cluster, dist2) —
     the cross-engine-replayable face of operators/clustering (whose
-    kmeans_lloyd iterates this shape with model-sized driver state;
-    MLlib's trainer backs IVF but can never be hash-verified).
+    kmeans_lloyd iterates this shape with model-sized driver state).
     Assignment is map-side: the k x d centroid set broadcasts as one
     array row and the argmin folds per vector — no per-vector shuffle,
     no k-fold blowup; seeds come from a distributed top-k over an

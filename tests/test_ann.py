@@ -2,9 +2,16 @@
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
-from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import ann_topk_lsh, cosine_topk_bruteforce
+from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import (
+    ann_topk_ivf_lazy,
+    ann_topk_lsh_portable,
+    cosine_pairs_blocked,
+    cosine_topk_bruteforce,
+    cosine_topk_exact_join,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,35 +45,13 @@ def test_bruteforce_shapes(spark):
     assert per_vec[0] == per_vec[1] == 5
 
 
-def test_ivf_recall(spark):
-    """IVF with n_probe=8 of 16 lists must beat a healthy recall floor
-    and agree exactly on returned cosines."""
-    import math as m
-
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import ann_topk_ivf
-
-    bf = cosine_topk_bruteforce(_emb(spark), k=10)
-    ivf = ann_topk_ivf(_emb(spark), k=10, n_lists=16, n_probe=8)
-    truth = {(r.vec_id, r.neighbor_id): r.cosine for r in bf.collect()}
-    got = {(r.vec_id, r.neighbor_id): r.cosine for r in ivf.collect()}
-    hits = set(got) & set(truth)
-    recall = len(hits) / len(truth)
-    assert recall > 0.4, f"IVF recall too low: {recall:.3f}"
-    for key in list(hits)[:50]:
-        assert m.isclose(got[key], truth[key], rel_tol=1e-9)
-
-
 def test_ivf_lazy_recall_and_exact_join_agrees(spark):
     """The fully-declarative IVF (in-plan hash-sampled centroids) must
-    beat the same recall floor as the trained variant, and the lazy
+    beat a healthy recall floor and agree exactly on returned cosines,
+    and the lazy
     crossJoin exact top-k must agree pair-for-pair with the
     broadcast-matmul brute force."""
     import math as m
-
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import (
-        ann_topk_ivf_lazy,
-        cosine_topk_exact_join,
-    )
 
     bf = cosine_topk_bruteforce(_emb(spark), k=10)
     ej = cosine_topk_exact_join(_emb(spark), k=10)
@@ -93,7 +78,6 @@ def test_cosine_pairs_blocked_matches_broadcast_path(spark):
     large enough that many blocks are near-empty."""
     import math as m
 
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import cosine_pairs_blocked
     from semantic_similarity_system_using_aws_mapreduce_spark.workload.embeddings import (
         COSINE_THRESHOLD,
         q_cosine_pairs,
@@ -116,12 +100,27 @@ def test_cosine_pairs_blocked_matches_broadcast_path(spark):
             assert m.isclose(got[key], c, abs_tol=1e-9)
 
 
-def test_cosine_pairs_blocked_builds_lazily(spark):
-    """Building the blocked plan must run NO jobs (the broadcast-matrix
-    q_cosine_pairs runs a toPandas collect at build time — the exact
-    driver-memory dependence the blocked form exists to remove)."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import cosine_pairs_blocked
-
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda df: cosine_pairs_blocked(df, 0.4, n_blocks=8),
+        lambda df: ann_topk_lsh_portable(df, k=5, probe_radius=1),
+        lambda df: ann_topk_ivf_lazy(df, k=10, n_lists=16, n_probe=8),
+        lambda df: cosine_topk_exact_join(df, k=10),
+    ],
+    ids=[
+        "cosine_pairs_blocked",
+        "ann_topk_lsh_portable",
+        "ann_topk_ivf_lazy",
+        "cosine_topk_exact_join",
+    ],
+)
+def test_cosine_pairs_blocked_builds_lazily(spark, build):
+    """Building any relational search plan must run NO jobs — only the
+    broadcast brute force (cosine_topk_bruteforce, and q_cosine_pairs'
+    toPandas collect) touches data at build time, the exact
+    driver-memory dependence the blocked, LSH and IVF forms exist to
+    remove."""
     tracker = spark.sparkContext.statusTracker()
 
     def jobs_during(fn):
@@ -132,12 +131,9 @@ def test_cosine_pairs_blocked_builds_lazily(spark):
     # the only build-time job either side may run is parquet schema
     # inference inside spark.read — measure it as the lazy baseline
     baseline = jobs_during(lambda: _emb(spark).select("vec_id").schema)
-    built = jobs_during(
-        lambda: cosine_pairs_blocked(_emb(spark), 0.4, n_blocks=8).schema
-    )
+    built = jobs_during(lambda: build(_emb(spark)).schema)
     assert built <= baseline, (
-        f"cosine_pairs_blocked ran {built} jobs at build time "
-        f"(lazy baseline: {baseline})"
+        f"the plan ran {built} jobs at build time (lazy baseline: {baseline})"
     )
 
 
@@ -165,22 +161,6 @@ def test_ivf_recall_query_builds_lazily(spark):
         f"q_ann_ivf_recall ran {built} jobs at build time "
         f"(lazy baseline: {baseline})"
     )
-
-
-def test_lsh_recall(spark):
-    """LSH top-10 must recover a solid fraction of the true top-10.
-    On near-uniform random embeddings (this fixture) recall is the
-    hard case; assert a sane floor and exact-cosine agreement on the
-    pairs it does return."""
-    bf = cosine_topk_bruteforce(_emb(spark), k=10)
-    lsh = ann_topk_lsh(_emb(spark), k=10, n_planes=4, n_tables=8)
-    truth = {(r.vec_id, r.neighbor_id): r.cosine for r in bf.collect()}
-    got = {(r.vec_id, r.neighbor_id): r.cosine for r in lsh.collect()}
-    hits = set(got) & set(truth)
-    recall = len(hits) / len(truth)
-    assert recall > 0.3, f"LSH recall too low: {recall:.3f}"
-    for key in list(hits)[:50]:
-        assert math.isclose(got[key], truth[key], rel_tol=1e-9)
 
 
 def test_quantize_embeddings_bounds_and_zero_guard(spark):
@@ -242,8 +222,6 @@ def test_cosine_pairs_blocked_differential_vs_independent_numpy(spark):
         df = spark.createDataFrame(
             [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
         )
-        from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import cosine_pairs_blocked
-
         got = {
             (r.vec_a, r.vec_b): r.cosine
             for r in cosine_pairs_blocked(df, thr, n_blocks=blocks).collect()
@@ -264,8 +242,6 @@ def test_cosine_pairs_blocked_differential_vs_independent_numpy(spark):
             assert m.isclose(got[(0, n - 1)], 1.0, abs_tol=1e-12)
 
     # empty input: no groups, empty result, correct schema
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import cosine_pairs_blocked
-
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     out = cosine_pairs_blocked(empty, 0.5, n_blocks=4)
     assert out.count() == 0
@@ -278,8 +254,6 @@ def test_multiprobe_lsh_recall_monotone_and_better(spark):
     monotone — and on the near-uniform fixture (LSH's hard case) it
     must strictly beat single-probe recall, since near-boundary
     neighbors land one sign bit apart far more often than chance."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import ann_topk_lsh_portable
-
     emb = _emb(spark)
     bf = cosine_topk_bruteforce(emb, k=10)
     truth = {(r.vec_id, r.neighbor_id) for r in bf.collect()}

@@ -1855,7 +1855,7 @@ def test_vacuum_heals_swaps_and_gcs_orphan_versions(spark, tmp_path):
         spark.range(3).selectExpr("id AS doc_id").write.saveAsTable(orphan)
         os.makedirs(index + ".__tmp__", exist_ok=True)
 
-        rep = vacuum_tables(spark, corpus, index, bucket_index_table="vac_t")
+        rep = vacuum_tables(spark, corpus, index)
         assert orphan in rep["dropped"]
         assert not spark.catalog.tableExists(orphan)
         warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
@@ -1865,7 +1865,7 @@ def test_vacuum_heals_swaps_and_gcs_orphan_versions(spark, tmp_path):
         assert spark.catalog.tableExists(live)
         assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == {1, 2}
         # idempotent
-        rep2 = vacuum_tables(spark, corpus, index, bucket_index_table="vac_t")
+        rep2 = vacuum_tables(spark, corpus, index)
         assert rep2["dropped"] == []
     finally:
         for t in spark.catalog.listTables():
@@ -1909,7 +1909,7 @@ def test_vacuum_covers_the_segment_bucket_table_too(spark, tmp_path):
         spark.range(3).selectExpr("id AS seg_hash").write.saveAsTable(orphan)
         os.makedirs(corpus + SEGINDEX_SUFFIX + ".__tmp__", exist_ok=True)
 
-        rep = vacuum_tables(spark, corpus, index, bucket_index_table="svac_t")
+        rep = vacuum_tables(spark, corpus, index)
         assert orphan in rep["dropped"]
         assert not spark.catalog.tableExists(orphan)
         warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
@@ -1919,7 +1919,7 @@ def test_vacuum_covers_the_segment_bucket_table_too(spark, tmp_path):
         assert spark.catalog.tableExists(live_seg)
         assert spark.read.parquet(seg_meta).first().table_version == live_seg
         assert spark.read.parquet(corpus + SEGINDEX_SUFFIX).count() > 0
-        rep2 = vacuum_tables(spark, corpus, index, bucket_index_table="svac_t")
+        rep2 = vacuum_tables(spark, corpus, index)
         assert rep2["dropped"] == []
     finally:
         for t in spark.catalog.listTables():
