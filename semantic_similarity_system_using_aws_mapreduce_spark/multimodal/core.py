@@ -29,6 +29,7 @@ from semantic_similarity_system_using_aws_mapreduce_spark.multimodal.codecs_mp4 
     _parse_mp4,
     make_mp4,
 )
+from semantic_similarity_system_using_aws_mapreduce_spark.session import local_relation
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -76,7 +77,7 @@ def synthesize_media(spark: SparkSession, n: int = 64, seed: int = 7) -> DataFra
                 1000 if kind != "image" else None,
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_relation(spark, rows, MEDIA_SCHEMA)
 
 
 def synthesize_real_media(spark: SparkSession, n: int = 24) -> DataFrame:
@@ -99,7 +100,7 @@ def synthesize_real_media(spark: SparkSession, n: int = 24) -> DataFrame:
             rows.append((i, kind, data, "y4m", 8, 6, 1000))
         else:
             rows.append((i, kind, make_mp4(3 + i % 4), "mp4", 8, 6, 1000))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_relation(spark, rows, MEDIA_SCHEMA)
 
 
 def codec_support() -> dict[str, bool]:

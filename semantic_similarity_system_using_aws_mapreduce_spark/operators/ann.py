@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from semantic_similarity_system_using_aws_mapreduce_spark.session import local_relation
 
 _SRP_SIGNS: dict[tuple[int, int, int], np.ndarray] = {}
 
@@ -211,7 +212,8 @@ def cosine_pairs_blocked(
         F.col(vec_col).alias("_vec"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("_blk"),
     )
-    pairs = spark.createDataFrame(
+    pairs = local_relation(
+        spark,
         [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
         "bi int, bj int",
     )

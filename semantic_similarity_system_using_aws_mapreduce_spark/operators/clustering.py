@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import md5_int
+from semantic_similarity_system_using_aws_mapreduce_spark.session import local_relation
 
 KMEANS_SALT = "kmeans:"
 
@@ -129,19 +130,24 @@ def kmeans_lloyd(
     inertia = []
     assigned = None
     for it in range(iters):
-        cent_df = spark.createDataFrame(
-            [(r, c) for r, c in sorted(cents.items())], "rank int, cvec array<float>"
+        cent_df = local_relation(
+            spark,
+            [(r, c) for r, c in sorted(cents.items())],
+            "rank int, cvec array<float>",
         )
-        prev = assigned
         # two jobs read each round's assignment (update stats +
         # inertia) — persist so the scan runs once; the final round's
         # cache is returned to the caller (operators/__init__
-        # cache-ownership contract: caller unpersists)
+        # cache-ownership contract: caller unpersists).  The previous
+        # round's cache goes first: once the centroids stop moving the
+        # two rounds' plans are equal (equal local relations), share one
+        # cache entry, and a later unpersist of the old round would drop
+        # the new one's
+        if assigned is not None:
+            assigned.unpersist()
         assigned = assign_clusters(emb, cent_df, id_col, vec_col).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        if prev is not None:
-            prev.unpersist()
         vecs = emb.select(
             F.col(id_col).alias("_vid"), F.col(vec_col).alias("_vvec")
         )
@@ -360,7 +366,8 @@ def pq_adc_topk(
 
     # ONE local cents relation feeds both the code side (via
     # pq_encode) and the query tables
-    cents = emb.sparkSession.createDataFrame(
+    cents = local_relation(
+        emb.sparkSession,
         [(r["rank"], r["cvec"]) for r in cent_rows],
         "rank int, cvec array<float>",
     ).agg(

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from semantic_similarity_system_using_aws_mapreduce_spark.session import local_relation
+
 
 def _local_components(rows: list) -> list:
     """Path-compressed union-find, always attaching the larger root
@@ -111,20 +113,19 @@ def connected_components(
         # interchangeable for non-long ids
         node_t = edges.schema[src].dataType.simpleString()
         schema = f"node {node_t}, cluster_id {node_t}"
-        # Broadcast hint on the result (r12): a createDataFrame
-        # relation scans as ExistingRDD with NO size statistics, so
-        # every consumer that joins the labels back to its corpus
-        # (semantic_dedup, leakage-safe split, keep-newest clusters,
-        # the curation funnel) planned a SortMergeJoin — two exchanges
-        # and two sorts against a relation that is <= 2 x
+        # Broadcast hint on the result: the labels are <= 2 x
         # local_threshold rows BY CONSTRUCTION of this branch (~16 MB
-        # at the 500k default).  The hint turns those joins into
-        # broadcast probes with zero shuffle of the corpus side; the
-        # distributed branch below returns an unhinted relation, as a
-        # billion-edge label set must never broadcast.
-        if not rows:
-            return F.broadcast(spark.createDataFrame([], schema))
-        return F.broadcast(spark.createDataFrame(_local_components(rows), schema))
+        # at the 500k default).  The local relation carries exact size
+        # statistics, but a consumer that joins the labels back to its
+        # corpus (semantic_dedup, leakage-safe split, keep-newest
+        # clusters, the curation funnel) sees only the estimate that
+        # survives its own projections, measured against a session
+        # autoBroadcastJoinThreshold this operator does not set
+        # (Spark's 10 MB default is below that bound).  The hint keeps
+        # those joins broadcast probes with zero shuffle of the corpus
+        # side; the distributed branch below returns an unhinted
+        # relation, as a billion-edge label set must never broadcast.
+        return F.broadcast(local_relation(spark, _local_components(rows), schema))
 
     # Fused init: the first min-label propagation costs nothing extra —
     # the node list needs a groupBy("a") anyway, and folding
@@ -294,12 +295,14 @@ def pagerank(
         nodes.unpersist()
         if stats is not None:
             stats["mode"] = "local"
-        # broadcast hint: same no-statistics ExistingRDD rationale as
-        # the connected_components local finish above — the relation
-        # is bounded by local_threshold, so consumers joining ranks
-        # back to a corpus get a broadcast probe, not a sort-merge
+        # broadcast hint: the connected_components local finish's
+        # rationale above — the relation is bounded by local_threshold
+        # by construction, whatever the session's broadcast threshold,
+        # so consumers joining ranks back to a corpus get a broadcast
+        # probe, not a sort-merge
         return F.broadcast(
-            spark.createDataFrame(
+            local_relation(
+                spark,
                 _local_pagerank(erows, nrows, n_iter, damping_permille),
                 f"node {node_t}, rank_micro long",
             )

@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory, and the one way to make a driver-side relation.
 
 Defaults are chosen for the dual design point:
   * local[N] single-JVM testing (the CI / bench environment), and
@@ -10,8 +10,12 @@ Defaults are chosen for the dual design point:
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def get_spark(
@@ -69,3 +73,29 @@ def get_spark(
     # REPLACE for every other caller.
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_relation(
+    spark: SparkSession, rows: Sequence[Sequence], schema: str | T.StructType
+) -> DataFrame:
+    """A small driver-side relation from ``rows`` (positional tuples)
+    and a DDL string or ``StructType`` ``schema``.
+
+    The rows go to the JVM as one ``pyarrow.Table``, so the plan leaf
+    is a ``LocalRelation``: it carries exact size statistics, scans
+    without a Python worker and broadcasts without a job.  A plain
+    ``createDataFrame(<list>, ddl)`` is a ``LogicalRDD`` over a
+    ``PythonRDD`` instead, and every task that reads it waits on a
+    Python worker to unpickle the rows.  Past
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark keeps
+    the batches in a JVM-side RDD, so a large input stays safe.  This
+    is the package's one ``createDataFrame`` call."""
+    struct = (
+        schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    )
+    arrow = to_arrow_schema(struct)
+    table = pa.table(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)

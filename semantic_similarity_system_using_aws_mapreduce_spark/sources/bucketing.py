@@ -42,6 +42,7 @@ import shutil
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from semantic_similarity_system_using_aws_mapreduce_spark.session import local_relation
 from semantic_similarity_system_using_aws_mapreduce_spark.sources.atomic import (
     atomic_replace,
     read_parquet_recovering,
@@ -135,7 +136,8 @@ def rebuild_bucket_table(
     version = f"{prefix}{max(prior) + 1 if prior else 0}"
     write_bucketed(rows, version, key_cols, n_buckets=n_buckets)
     atomic_replace(
-        spark.createDataFrame(
+        local_relation(
+            spark,
             [(covered_batch, version, n_buckets)],
             "covered_batch long, table_version string, n_buckets long",
         ),

@@ -60,6 +60,7 @@ from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import
     signature_buckets,
     tokens,
 )
+from semantic_similarity_system_using_aws_mapreduce_spark.session import local_relation
 from semantic_similarity_system_using_aws_mapreduce_spark.sources.atomic import (
     atomic_replace,
     read_parquet_recovering,
@@ -493,11 +494,12 @@ class _Decision:
     """One micro-batch's dedup decision, held driver-side.  Every field
     is bounded by the MICRO-BATCH (one entry per batch document or per
     verified partner), so the decision is collected once and only id
-    sets and id->id maps re-enter the plans, as broadcast local
-    relations.  Keeping these as lazy DataFrames instead re-planned the
-    whole probe lineage once per consumer action (hundreds of Spark
-    jobs for a 4-row batch).  Keep-first leaves every supersession
-    field empty."""
+    sets and id->id maps re-enter the plans, as Arrow-built
+    ``LocalRelation`` leaves (:func:`_id_frame`) whose broadcast reads
+    driver-held rows: no job, no Python worker.  Keeping these as lazy
+    DataFrames instead re-planned the whole probe lineage once per
+    consumer action (hundreds of Spark jobs for a 4-row batch).
+    Keep-first leaves every supersession field empty."""
 
     #: fresh signature-bearing survivors
     kept: set = field(default_factory=set)
@@ -527,9 +529,11 @@ class _Decision:
 
 
 def _id_frame(spark: SparkSession, ids, col: str = "doc_id") -> DataFrame:
-    """A batch-bounded id set as a broadcast local relation."""
+    """A batch-bounded id set as a broadcast-hinted ``LocalRelation``:
+    its broadcast build reads driver-held rows, with no job and no
+    Python worker."""
     return F.broadcast(
-        spark.createDataFrame([(i,) for i in sorted(set(ids))], f"{col} long")
+        local_relation(spark, [(i,) for i in sorted(set(ids))], f"{col} long")
     )
 
 
@@ -672,7 +676,7 @@ def _exact_decision(
             "id to the old one."
         )
     d.dindex = dindex = dindex.join(own_ids, "doc_id", "left_anti")
-    digests = c.spark.createDataFrame([(r["digest"],) for r in rows], "digest string")
+    digests = local_relation(c.spark, [(r["digest"],) for r in rows], "digest string")
     probe = (
         dindex.join(F.broadcast(digests), "digest")
         .select("digest", "doc_id", _micros(c.ts_col))
@@ -725,7 +729,7 @@ def _sig_probe(
     version plus the parquet tail's buckets."""
     index = read_parquet_recovering(c.spark, c.index_path)
     if index is None:
-        return c.spark.createDataFrame([], SIG_SCHEMA), None
+        return local_relation(c.spark, [], SIG_SCHEMA), None
     index = index.join(own_ids, "doc_id", "left_anti")
     probe = c.bucket_index_table and bucket_probe(
         c.spark, c.index_path + BUCKETMETA_SUFFIX, index, own_ids,
@@ -801,7 +805,7 @@ def _with_supersedes(c: _Curation, df: DataFrame, pairs: list) -> DataFrame:
     depend on footer merge)."""
     if not pairs:
         return df.withColumn("supersedes", F.lit(None).cast("long"))
-    marks = c.spark.createDataFrame(sorted(pairs), "doc_id long, supersedes long")
+    marks = local_relation(c.spark, sorted(pairs), "doc_id long, supersedes long")
     return df.join(F.broadcast(marks), "doc_id", "left")
 
 
@@ -885,8 +889,10 @@ def _paragraphs(
         else None
     )
     if prev_clean is not None:
-        heirs = c.spark.createDataFrame(
-            [(s, x) for x, s in sorted(d.sup_pairs)], "doc_id long, _new_id long"
+        heirs = local_relation(
+            c.spark,
+            [(s, x) for x, s in sorted(d.sup_pairs)],
+            "doc_id long, _new_id long",
         )
         inherit = (
             prev_clean.join(F.broadcast(heirs), "doc_id")
@@ -917,7 +923,8 @@ def _write_stats(
     """One funnel row (n_arrived, n_gated, n_kept) per batch in
     ``<corpus>_stats``; the admit count is already driver-side."""
     _write_batch_partition(
-        c.spark.createDataFrame(
+        local_relation(
+            c.spark,
             [(batch.count(), gated.count(), n_kept)],
             "n_arrived long, n_gated long, n_kept long",
         ),
@@ -1283,7 +1290,7 @@ def forget_documents(
     if expand_chains:
         doc_ids = _supersession_chains(spark, corpus_path, doc_ids)
 
-    ids = spark.createDataFrame([(i,) for i in doc_ids], "doc_id long")
+    ids = local_relation(spark, [(i,) for i in doc_ids], "doc_id long")
     # the report names the ids actually erased (post-expansion), so an
     # operator can audit what a chain-expanded RTBF touched
     out = {"doc_ids": sorted(doc_ids)}

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import tokens
+from semantic_similarity_system_using_aws_mapreduce_spark.session import local_relation
 from semantic_similarity_system_using_aws_mapreduce_spark.sources.atomic import read_parquet_recovering
 
 POSTINGS_SUFFIX = "_postings"
@@ -114,7 +115,7 @@ def bm25_search_postings(
     if markers is not None:
         doclens = doclens.join(markers, "doc_id", "left_anti")
     terms = [(q, t) for q, s in queries for t in dict.fromkeys(s.split())]
-    qterms = spark.createDataFrame(terms, "q_id long, term string")
+    qterms = local_relation(spark, terms, "q_id long, term string")
     totals = doclens.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
@@ -160,11 +161,13 @@ def bm25_search_postings(
     if not snippets:
         return ranked
     # ranked is consumed twice below (the winner-set broadcast AND the
-    # final join) — without the persist the whole BM25 scoring plan
-    # (postings scan, joins, window rank) would execute twice per query
-    from pyspark import StorageLevel
-
-    ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
+    # final join), and it is at most topk rows per query: one collect
+    # runs the BM25 scoring plan once, and the rows re-enter as a local
+    # relation.  No cache outlives the call — a persisted ranking would
+    # be hit by a later search with the same queries (equal local
+    # relations over the same table paths are the same plan), even
+    # after an RTBF rewrite of those tables
+    ranked = local_relation(spark, ranked.collect(), ranked.schema)
     corpus = read_parquet_recovering(spark, corpus_path)
     if corpus is None:
         return ranked.select(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.assoc import association_measures
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.counts import corpus_counts
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.similarity import similarity_measures
+from semantic_similarity_system_using_aws_mapreduce_spark.session import local_relation
 
 STOPWORDS = ["the", "a", "of", "in", "to", "and", "is", "on", "for", "with"]
 
@@ -350,7 +351,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         mode="distributed",
     )
     rows = [(i + 1, l, r) for i, (l, r) in enumerate(merges)]
-    return spark.createDataFrame(rows, "rank int, left string, right string")
+    return local_relation(spark, rows, "rank int, left string, right string")
 
 
 def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -841,7 +842,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = staged.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
-    qterms = spark.createDataFrame(_BM25_TERMS, "q_id long, term string")
+    qterms = local_relation(spark, _BM25_TERMS, "q_id long, term string")
 
     # df as a WINDOW count over the (tiny, query-terms-only) tf
     # relation instead of a separate dfreq aggregation + broadcast

@@ -82,6 +82,22 @@ def test_kmeans_lloyd_matches_independent_numpy(spark):
     assert all(a >= b - 1e-6 for a, b in zip(inertia, inertia[1:]))
 
 
+def test_kmeans_lloyd_hands_a_cached_assignment_after_convergence(spark):
+    """Once the centroids stop moving, two rounds build equal plans (the
+    centroid relation is a local relation with equal rows) that share
+    one cache entry; releasing the previous round must not release the
+    assignment handed to the caller."""
+    emb = spark.range(40).selectExpr(
+        "id AS vec_id",
+        "array(cast(id % 2 AS float), cast(id % 2 AS float)) AS embedding",
+    )
+    assigned, _, inertia = kmeans_lloyd(emb, 2, iters=5)
+    assert inertia[-1] == inertia[-2]
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.lookupCachedData(assigned._jdf).isDefined()
+    assigned.unpersist()
+
+
 def test_assignment_plan_is_exchange_free(spark):
     """The scale contract: assignment never shuffles the vector table —
     the centroid side arrives as a broadcast, the argmin is map-side."""

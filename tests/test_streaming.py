@@ -2958,14 +2958,13 @@ def test_forget_documents_expand_chains_off_restores_single_row_erase(spark, tmp
     assert vis == {1: X}
 
 
-#: Spark jobs one two-batch run of the budget test below launches, per
-#: dedup mode, measured before the per-batch stages were split out of
-#: the stream's foreachBatch body (4 local cores, 8 shuffle
-#: partitions).  Keep-newest measured 113-115 over 16 runs (AQE's
-#: concurrent stage materialization moves a job or two); the budget is
-#: the largest.  A lazy relation re-planned once per consumer shows up
-#: here as dozens of extra jobs.
-STREAM_JOB_BUDGET = {"keep-newest": 115, "keep-first": 69}
+#: Spark jobs one two-batch run of the budget test below may launch,
+#: per dedup mode: the largest count measured over repeated runs (4
+#: local cores, 8 shuffle partitions).  A budget only goes down.  A lazy
+#: relation re-planned once per consumer shows up here as dozens of
+#: extra jobs; a driver-side id set built as anything but a local
+#: relation shows up as a job per broadcast.
+STREAM_JOB_BUDGET = {"keep-newest": 106, "keep-first": 66}
 
 
 @pytest.mark.parametrize("dedup", ["keep-newest", "keep-first"])
