@@ -654,6 +654,8 @@ def main() -> None:
                 print(f"  {name}: ERROR {errors[name]}", file=sys.stderr)
                 break
             runs.append(round(time.perf_counter() - t0, 3))
+        # the queries' persists are caller-owned (operators/__init__)
+        spark.catalog.clearCache()
         if runs:
             dest[name] = min(runs)
             print(f"  {name}: {dest[name]:.3f}s {runs}", file=sys.stderr)

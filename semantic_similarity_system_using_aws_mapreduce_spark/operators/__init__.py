@@ -2,7 +2,8 @@
 
 CACHE OWNERSHIP CONTRACT: some operators (lsh_candidates,
 duplicate_spans, paragraph_dedup, prefix_jaccard_join,
-simhash_near_dups, ann_topk_lsh_portable, dsir_select) persist an
+simhash_near_dups, ann_topk_lsh_portable, dsir_select), and the
+queries q_tfidf_top_terms and q_bm25_search, persist an
 intermediate relation
 that the RETURNED lazy DataFrame's plan consumes more than once — the
 persist cannot be released before the caller materializes the result,

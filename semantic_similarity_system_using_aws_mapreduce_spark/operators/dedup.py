@@ -23,8 +23,12 @@ oracle queries stay on md5.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from semantic_similarity_system_using_aws_mapreduce_spark.session import local_relation
 
 # Universal hash family over a Mersenne prime: h_k(x) = (A[k]*(x%P)+B[k])%P.
 # Products stay < 2^62 -> identical in any int64 engine (DuckDB oracle).
@@ -761,9 +765,16 @@ def paragraph_dedup(
 def signature_buckets(sigs: DataFrame) -> DataFrame:
     """(doc_id, band, k0, k1): the N_BANDS x ROWS_PER_BAND banded LSH
     bucket relation of a minhash-signature relation — the map-side explode
-    :func:`lsh_candidates` uses internally, exposed for callers that
-    join buckets across two different relations (incremental dedup)."""
-    band_structs = [
+    :func:`lsh_candidates` uses internally, exposed for the bucketed
+    probe table (``streaming.documents.build_bucketed_sig_index``)."""
+    return sigs.select(
+        "doc_id", F.explode(F.array(*_band_structs())).alias("bb")
+    ).select("doc_id", "bb.*")
+
+
+def _band_structs() -> list[Column]:
+    """One ``struct(band, k0, k1)`` per band over the ``h*`` columns."""
+    return [
         F.struct(
             F.lit(b).alias("band"),
             *[
@@ -773,178 +784,138 @@ def signature_buckets(sigs: DataFrame) -> DataFrame:
         )
         for b in range(N_BANDS)
     ]
-    return sigs.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc_id", "bb.*")
 
 
-def incremental_dedup(
-    new_sigs: DataFrame,
-    index_sigs: DataFrame,
+def _band_keys(sig) -> list[tuple]:
+    """The (band, k0, k1) bucket keys of one driver-held signature: the
+    Python twin of :func:`signature_buckets`' explode."""
+    return [
+        (b, *sig[b * ROWS_PER_BAND:(b + 1) * ROWS_PER_BAND]) for b in range(N_BANDS)
+    ]
+
+
+def _n_agree(a, b) -> int:
+    return sum(x == y for x, y in zip(a, b))
+
+
+def near_dup_probe(
+    spark: SparkSession,
+    batch: list,
+    index_sigs: DataFrame | None,
     min_agree: int = 6,
-    index_buckets: DataFrame | list[DataFrame] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Dedup an INCOMING BATCH against an already-indexed corpus — the
-    growing-corpus pattern: ingest runs never re-mine the existing
-    corpus, they probe a persisted signature index and append their
-    survivors to it.
+    bucketed: Sequence[DataFrame] | None = None,
+) -> set[tuple[int, int, int, bool]]:
+    """Dedup probe of an incoming batch against a persisted signature
+    index: every verified collision ``(doc_id, partner, n_agree,
+    in_batch)`` where a batch document's signature agrees on
+    >= ``min_agree`` of its ``N_HASHES`` components with an indexed
+    document (``in_batch`` false) or with a smaller-id document of its
+    own batch (``in_batch`` true; the larger id drops toward the
+    smaller).  A survivor policy reads all of a document's partners:
+    keep-first drops any document that has one, keep-newest
+    (``streaming.documents``) compares timestamps against the newest
+    visible one.
 
-    Survivor rule: keep-FIRST (the index always wins).  Crawl-style
-    keep-NEWEST semantics — a re-crawl superseding the stale corpus
-    copy — are layered ABOVE this operator by
-    ``streaming.documents.run_streaming_curation(dedup="keep-newest")``,
-    which resolves exact-digest re-crawls against a digest index first
-    and routes only genuinely fresh content through the same collision
-    plan via :func:`incremental_dedup_scored` (it needs every verified
-    partner, not this function's min-partner summary, to decide
-    supersede-vs-drop against the newest VISIBLE copy).
+    ``batch`` is the batch's driver-held ``(doc_id, h0..h7)`` rows
+    (:func:`minhash_signatures`), bounded by the micro-batch.  Batch
+    and index ids are disjoint by contract, so index rows under a batch
+    document's own id are the residue of an earlier attempt of the same
+    batch and never collide.
 
-    Both inputs are minhash-signature relations
-    (:func:`minhash_signatures`; the index side is typically
-    ``spark.read.parquet(index_path)``).  A new document is DROPPED
-    when its signature agrees on >= ``min_agree`` of its ``N_HASHES``
-    components (the unbiased minhash estimate of Jaccard similarity,
-    agree/N_HASHES) with ANY indexed document (id-agnostic: the index
-    always wins), or with any smaller-id document of its own batch —
-    the same min-id-survivor rule as :func:`exact_dedup`, applied
-    transitively-conservatively (a doc whose nearest duplicate was
-    itself dropped still drops: at dedup thresholds near-duplicate
-    chains are short, and a conservative cut never re-admits content
-    the index already carries).  The only id contract is that index
-    and batch ids are DISJOINT; no ordering between them is assumed
-    (micro-batches may arrive with interleaved id ranges).
-
-    Returns ``(kept, dropped)``:
-      * ``kept`` — the new-batch signature rows that survived, ready to
-        union/append into the index;
-      * ``dropped`` — (doc_id, dup_of, n_agree) with ``dup_of`` the
-        smallest colliding partner id and ``n_agree`` that partner's
-        component agreement.
-
-    Scale shape: candidates come from the banded bucket equi-join
-    (new-batch buckets x (index ∪ batch) buckets) — the batch side is
-    small, so at 100 TB this is a broadcast probe of the partitioned
-    index bucket table (store :func:`signature_buckets` output
-    bucketed by (band, k0, k1) to make the probe shuffle-free);
-    signature agreement is then a per-pair integer comparison on the
-    already-joined 8-component rows — no shingle relation, no text,
-    and nothing rescans indexed documents.
-
-    ``index_buckets``, when given, is the PRE-MATERIALIZED bucket
-    relation of the index side (the :func:`signature_buckets` output,
-    persisted as a catalog table bucketed by (band, k0, k1) — see
-    ``streaming.documents.build_bucketed_sig_index``) and replaces the
-    on-the-fly explode: the probe equi-join then reads co-located
-    buckets with NO Exchange on the index side, which is the 100 TB
-    shape (only the small batch side shuffles to meet the bucketing).
-    A LIST of bucket relations probes each one separately and unions
-    the CANDIDATES (not the relations — a pre-union would discard the
-    bucketed side's output partitioning and re-shuffle it): the
-    compacted-base-plus-recent-tail layout the streaming curation
-    maintains.  Every doc named by any bucket relation must also
-    appear in ``index_sigs`` (the signature scoring join resolves
-    partners there).  That scoring join's index side is never
-    shuffled either: the candidate set is batch-sized, so AQE
-    broadcasts it and injects a runtime bloom filter on the sigs scan
-    (on by default in this engine's session); if even the pruned
-    linear scan matters, store the sigs table bucketed by doc_id and
-    the lookup becomes bucket-pruned."""
-    scored = incremental_dedup_scored(
-        new_sigs,
-        index_sigs,
-        min_agree=min_agree,
-        index_buckets=index_buckets,
-    )
-    from pyspark.sql import Window as _W
-
-    w = _W.partitionBy("doc_id").orderBy("partner")
-    dropped = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", F.col("partner").alias("dup_of"), "n_agree")
-    )
-    sig_cols = [f"h{k}" for k in range(N_HASHES)]
-    batch = new_sigs.select("doc_id", *sig_cols)
-    kept = batch.join(dropped.select("doc_id"), "doc_id", "left_anti")
-    return kept, dropped
+    Plan shape, the small side in memory and the large one streamed
+    past it: in-batch collisions are banded and verified in Python.
+    Index collisions are one scan of the index's band explode, joined
+    to a broadcast ``LocalRelation`` of the batch's (band, k0, k1,
+    h0..h7) rows and verified in the same projection -- no exchange on
+    either side, no shuffle of the index.  ``bucketed`` = [bucket rows,
+    tail] probes a pre-exploded (doc_id, band, k0, k1) bucket relation
+    the same way, plus ``tail``, the signature rows it does not cover;
+    the bucket candidates' signatures are then read from ``index_sigs``
+    by one broadcast semi-join.  Every collect is bounded by the batch's
+    documents times their partners: verified ones from a signature
+    relation, band-key candidates from a bucket relation."""
+    sigs = {r[0]: tuple(r[1:1 + N_HASHES]) for r in batch}
+    out = set()
+    by_key: dict = {}
+    for doc, sig in sigs.items():
+        for key in _band_keys(sig):
+            by_key.setdefault(key, []).append(doc)
+    for docs in by_key.values():
+        for a in docs:
+            for b in docs:
+                if a > b and (n := _n_agree(sigs[a], sigs[b])) >= min_agree:
+                    out.add((a, b, n, True))
+    if not sigs or index_sigs is None:
+        return out
+    hits = [
+        (r["doc_id"], r["partner"], r["n_agree"])
+        for r in _index_hits(spark, sigs, index_sigs, min_agree, bucketed).collect()
+        if r["partner"] not in sigs
+    ]
+    unverified = {p for _, p, n in hits if n is None}
+    p_sigs = {}
+    if unverified:
+        ids = local_relation(spark, [(p,) for p in sorted(unverified)], "doc_id long")
+        p_sigs = {
+            r[0]: tuple(r[1:])
+            for r in index_sigs.join(F.broadcast(ids), "doc_id", "semi")
+            .select("doc_id", *[f"h{k}" for k in range(N_HASHES)])
+            .collect()
+        }
+    for doc, partner, n in hits:
+        if n is None:  # a bucket candidate, verified here
+            n = _n_agree(sigs[doc], p_sigs.get(partner, ()))
+            if n < min_agree:
+                continue
+        out.add((doc, partner, n, False))
+    return out
 
 
-def incremental_dedup_scored(
-    new_sigs: DataFrame,
+def _index_hits(
+    spark: SparkSession,
+    sigs: dict,
     index_sigs: DataFrame,
-    min_agree: int = 6,
-    index_buckets: DataFrame | list[DataFrame] | None = None,
+    min_agree: int,
+    bucketed: Sequence[DataFrame] | None,
 ) -> DataFrame:
-    """The VERIFIED COLLISION RELATION behind :func:`incremental_dedup`:
-    every (doc_id, partner, n_agree, in_batch) pair where a batch doc's
-    signature agrees on >= ``min_agree`` components with an indexed doc
-    (``in_batch`` false) or with a smaller-id doc of its own batch
-    (``in_batch`` true) — i.e. ALL of a doc's near-dup partners, not
-    just the minimum one ``incremental_dedup``'s ``dropped`` reports.
-
-    Exists for survivor policies that need the full partner set:
-    streaming keep-NEWEST supersession (r12) must find the newest
-    VISIBLE colliding partner and compare timestamps, which the
-    min-partner summary cannot answer (the minimum id is often a long-
-    superseded copy whose signatures still sit in the index).  Same
-    plan shape as :func:`incremental_dedup` — banded bucket equi-joins
-    with a batch-sized probe side, then per-pair integer agreement —
-    and the same ``index_buckets`` exchange-free option."""
+    """:func:`near_dup_probe`'s one index query: (doc_id, partner,
+    n_agree) for every band-key match of the ``sigs`` (doc_id ->
+    signature) against the index, verified where the index side carries
+    signatures and with a null ``n_agree`` for bucket-relation
+    candidates."""
     sig_cols = [f"h{k}" for k in range(N_HASHES)]
     key_cols = ["band"] + [f"k{r}" for r in range(ROWS_PER_BAND)]
-    batch = new_sigs.select("doc_id", *sig_cols)
-    pool = index_sigs.select("doc_id", *sig_cols)
-    nb = signature_buckets(batch)
-    if index_buckets is None:
-        pbs = [signature_buckets(pool)]
-    elif isinstance(index_buckets, DataFrame):
-        pbs = [index_buckets]
-    else:
-        pbs = list(index_buckets)
-
-    # Index collisions: id-agnostic (a batch doc colliding with any
-    # indexed doc drops, whatever the ids look like).
-    cand_ix = None
-    for pb in pbs:
-        a, b = nb.alias("a"), pb.select("doc_id", *key_cols).alias("b")
-        cond_ix = F.lit(True)
-        for c in key_cols:
-            cond_ix = cond_ix & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-        part = a.join(b, cond_ix).select(
-            F.col("a.doc_id").alias("doc_id"), F.col("b.doc_id").alias("partner")
+    probe = F.broadcast(
+        local_relation(
+            spark,
+            [(doc, *key, *sig) for doc, sig in sigs.items() for key in _band_keys(sig)],
+            "doc_id long, band int, "
+            + ", ".join(f"{c} long" for c in key_cols[1:] + sig_cols),
         )
-        cand_ix = part if cand_ix is None else cand_ix.unionByName(part)
-    # Intra-batch: min-id survivorship (larger id drops toward smaller).
-    a2, b2 = nb.alias("a"), nb.alias("b")
-    cond_self = F.col("a.doc_id") > F.col("b.doc_id")
-    for c in key_cols:
-        cond_self = cond_self & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    cand_self = a2.join(b2, cond_self).select(
-        F.col("a.doc_id").alias("doc_id"), F.col("b.doc_id").alias("partner")
-    )
-    # the flag is a function of the pair (batch and index ids are
-    # disjoint by contract), so the distinct stays pair-level
-    cand_ix = (
-        None if cand_ix is None else cand_ix.withColumn("in_batch", F.lit(False))
-    )
-    cand_self = cand_self.withColumn("in_batch", F.lit(True))
-    cand = (
-        cand_ix.unionByName(cand_self) if cand_ix is not None else cand_self
-    ).distinct()
-    x = cand.join(batch, "doc_id")
-    pool_all = pool.unionByName(batch)
-    partner_sigs = pool_all.select(
-        F.col("doc_id").alias("partner"),
-        *[F.col(f"h{k}").alias(f"p{k}") for k in range(N_HASHES)],
     )
     agree = sum(
         (F.col(f"h{k}") == F.col(f"p{k}")).cast("int") for k in range(N_HASHES)
     )
-    return (
-        x.join(partner_sigs, "partner")
-        .select("doc_id", "partner", "in_batch", agree.alias("n_agree"))
+    hits = (
+        (index_sigs if bucketed is None else bucketed[1])
+        .select(
+            F.col("doc_id").alias("partner"),
+            *[F.col(f"h{k}").alias(f"p{k}") for k in range(N_HASHES)],
+            F.explode(F.array(*_band_structs())).alias("bb"),
+        )
+        .select("partner", *[f"p{k}" for k in range(N_HASHES)], "bb.*")
+        .join(probe, key_cols)
+        .select("doc_id", "partner", agree.alias("n_agree"))
         .filter(F.col("n_agree") >= min_agree)
     )
+    if bucketed is not None:
+        hits = hits.unionByName(
+            bucketed[0]
+            .select(F.col("doc_id").alias("partner"), *key_cols)
+            .join(probe, key_cols)
+            .select("doc_id", "partner", F.lit(None).cast("int").alias("n_agree"))
+        )
+    return hits
 
 
 def bloom_build(
@@ -965,7 +936,7 @@ def bloom_build(
     and join-broadcastable.
 
     Use with :func:`bloom_probe` to pre-filter an incoming batch
-    map-side before an exact (or :func:`incremental_dedup` signature)
+    map-side before an exact (or :func:`near_dup_probe` signature)
     probe: at 100 TB the filter is ~m_bits/8 bytes regardless of
     corpus size, so membership against billions of indexed digests
     costs one broadcast + a per-row bit test, no shuffle of the

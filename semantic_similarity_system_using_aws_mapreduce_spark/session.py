@@ -82,8 +82,9 @@ def local_relation(
     and a DDL string or ``StructType`` ``schema``.
 
     The rows go to the JVM as one ``pyarrow.Table``, so the plan leaf
-    is a ``LocalRelation``: it carries exact size statistics, scans
-    without a Python worker and broadcasts without a job.  A plain
+    is a ``LocalRelation``: it carries exact size statistics and scans
+    without a Python worker; a broadcast of it still runs one small job
+    over the driver-held rows.  A plain
     ``createDataFrame(<list>, ddl)`` is a ``LogicalRDD`` over a
     ``PythonRDD`` instead, and every task that reads it waits on a
     Python worker to unpickle the rows.  Past

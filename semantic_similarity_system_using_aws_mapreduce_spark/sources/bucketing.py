@@ -184,13 +184,14 @@ def bucket_probe(
 ) -> list[DataFrame] | None:
     """``[bucketed base, parquet tail]`` for a probe: the live version
     less the ``own_ids`` rows (a replayed batch must not collide with
-    itself), and the rows of ``parquet`` (which carries the caller's
-    own-id exclusion already) written after the version's covered
-    batch.  The two are probed as separate relations, because a union
-    would discard the base's bucketing.  A stale-but-intact meta only
-    makes the tail overlap the base, which the probe's distinct
-    absorbs; a hole is impossible.  None when no live version is
-    usable, so the caller probes ``parquet`` alone."""
+    itself), and the rows of ``parquet`` written after the version's
+    covered batch (excluding the caller's own ids there is the
+    caller's).  The two are probed as separate relations: their rows
+    have different shapes, and a union would discard the base's
+    bucketing.  A stale-but-intact meta only makes the tail overlap
+    the base, which the probe's de-duplication absorbs; a hole is
+    impossible.  None when no live version is usable, so the caller
+    probes ``parquet`` alone."""
     live = live_bucket_version(spark, meta_path)
     if live is None or not reregister_bucket_table(
         spark, live["table_version"], int(live["n_buckets"]), cols_ddl, key_cols

@@ -1,7 +1,7 @@
 """Structured Streaming over the documents table: continuous-ingest
 curation — the streaming face of the batch curation funnel
 (workload/curation.py) composed with the incremental dedup index
-(operators/dedup.incremental_dedup).
+(operators/dedup.near_dup_probe).
 
 The reference is batch-only (SURVEY.md §2.9); this is net-new engine
 surface, extending the streaming story from events analytics to the
@@ -20,13 +20,14 @@ Design for scale:
   dedup — a duplicate document may arrive months after the original.
   The index form keeps state O(corpus docs x 8 ints) with no
   watermark eviction, survives restarts (it is just a table), and the
-  probe cost is the banded bucket join, not a state-store lookup scan.
+  probe cost is one scan of the index joined to the broadcast batch,
+  not a state-store lookup scan.
 * `foreachBatch` is at-least-once, so every table write is IDEMPOTENT
   under replay: corpus and index appends land in an
   ``ingest_batch=<id>`` partition via dynamic partition overwrite (a
   replayed batch rewrites its own partition instead of appending a
-  second copy), and the dedup probe excludes the batch's own doc_ids
-  from the index pool via a broadcast anti-join (after a crash between
+  second copy), and the dedup probe ignores index rows under the
+  batch's own doc_ids (after a crash between
   the index write and the checkpoint commit, the replayed batch would
   otherwise collide with itself and overwrite its corpus partition
   empty — and the id-based exclusion stays correct even after a
@@ -35,17 +36,17 @@ Design for scale:
   micro-batches the probe reads 1e5 footers) is handled by periodic
   COMPACTION (``compact_every``): all partitions except the current
   batch's fold into a single ``ingest_batch=-1`` base partition via an
-  atomic directory swap (sources/atomic.py).  At 100 TB the compacted
-  base is additionally materialized as a catalog table bucketed by
-  (band, k0, k1) — :func:`build_bucketed_sig_index` — so the probe
-  equi-join reads co-located buckets with NO Exchange on the index
-  side (test_streaming asserts the plan).
+  atomic directory swap (sources/atomic.py).  The compacted base can
+  additionally be materialized as a catalog table bucketed by
+  (band, k0, k1) — :func:`build_bucketed_sig_index` — which the probe
+  reads pre-exploded, still with no exchange on either side.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,8 +55,8 @@ from pyspark.sql import functions as F
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import (
     N_HASHES,
     ROWS_PER_BAND,
-    incremental_dedup_scored,
     minhash_signatures,
+    near_dup_probe,
     shingle_hashes,
     signature_buckets,
     tokens,
@@ -89,8 +90,7 @@ from semantic_similarity_system_using_aws_mapreduce_spark.streaming.retrieval im
     compact_retrieval,
     postings_delta,
 )
-
-SIG_SCHEMA = "doc_id long, " + ", ".join(f"h{k} long" for k in range(N_HASHES))
+from semantic_similarity_system_using_aws_mapreduce_spark.threads import submit
 
 #: bucket keys of the signature index's LSH banding (operators/dedup's
 #: N_BANDS x ROWS_PER_BAND): the bucket table's build, its parquet tail
@@ -257,6 +257,11 @@ def quality_gate(stream: DataFrame, min_tokens: int, min_ttr: float) -> DataFram
     ingest path supplies the WARC decode's ``n_repl`` column — the
     same integer cross-multiplied mojibake-density reject as
     run_curation.curate)."""
+    return _gate_flag(stream, min_tokens, min_ttr).filter("_gated").drop("_gated")
+
+
+def _gate_flag(stream: DataFrame, min_tokens: int, min_ttr: float) -> DataFrame:
+    """``stream`` plus :func:`quality_gate`'s verdict as ``_gated``."""
     toks = tokens(F.col("text"))
     flagged = stream.withColumn("_toks", toks).withColumn(
         "_ttr", F.size(F.array_distinct("_toks")) / F.size("_toks")
@@ -270,7 +275,7 @@ def quality_gate(stream: DataFrame, min_tokens: int, min_ttr: float) -> DataFram
             <= F.lit(MOJIBAKE_MAX_PERMILLE)
             * F.greatest(F.coalesce(F.col("n_chars"), F.lit(0)), F.lit(1))
         )
-    return flagged.filter(keep).drop("_toks", "_ttr")
+    return flagged.withColumn("_gated", keep).drop("_toks", "_ttr")
 
 
 def _write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
@@ -435,13 +440,12 @@ def build_bucketed_sig_index(
     n_buckets: int = 32,
     covered_batch: int | None = None,
 ) -> DataFrame | None:
-    """Materialize the signature index's BUCKET relation as a catalog
-    table bucketed by the probe-join key (band, k0, k1) — the 100 TB
-    probe shape the incremental-dedup docstring prescribes: the
-    corpus-sized index side of the banded equi-join is pre-shuffled at
-    build time, so every later :func:`incremental_dedup` probe reads
-    co-located buckets with NO Exchange on the index side; only the
-    (small) micro-batch side shuffles to meet the bucketing.
+    """Materialize the signature index's BUCKET relation (the
+    :func:`~..operators.dedup.signature_buckets` explode) as a catalog
+    table bucketed by the probe-join key (band, k0, k1).  The near-dup
+    probe joins it to the broadcast batch as it joins the plain index,
+    so it saves the per-batch explode, not an exchange, and the
+    candidates' signatures then cost one more semi-join of the index.
 
     ``covered_batch`` (the streaming loop passes the compacting batch
     id) makes the rebuild VERSIONED: the table lands as a fresh
@@ -493,13 +497,12 @@ class _Curation:
 class _Decision:
     """One micro-batch's dedup decision, held driver-side.  Every field
     is bounded by the MICRO-BATCH (one entry per batch document or per
-    verified partner), so the decision is collected once and only id
-    sets and id->id maps re-enter the plans, as Arrow-built
-    ``LocalRelation`` leaves (:func:`_id_frame`) whose broadcast reads
-    driver-held rows: no job, no Python worker.  Keeping these as lazy
-    DataFrames instead re-planned the whole probe lineage once per
-    consumer action (hundreds of Spark jobs for a 4-row batch).
-    Keep-first leaves every supersession field empty."""
+    verified partner), and so is every input it is decided from: the
+    batch's rows and signatures are collected once, and the persisted
+    tables are probed with them as Arrow-built ``LocalRelation`` leaves
+    (:func:`_id_frame`), one query per probe.  Only id sets and id->id
+    maps re-enter the write plans.  Keep-first leaves every
+    supersession field empty."""
 
     #: fresh signature-bearing survivors
     kept: set = field(default_factory=set)
@@ -512,10 +515,8 @@ class _Decision:
     #: keep-newest: the batch's fresh-digest winners (None = every
     #: gated document is fresh, the keep-first case)
     fresh: list | None = None
-    #: keep-newest: the cached per-digest batch winners
-    #: (doc_id, digest, _kn_ts)
-    winners: DataFrame | None = None
-    #: keep-newest: batch winners' timestamps in unix microseconds
+    #: keep-newest: the per-digest batch winners' timestamps in unix
+    #: microseconds
     ts: dict = field(default_factory=dict)
     #: keep-newest: the digests index less this batch's own rows
     dindex: DataFrame | None = None
@@ -530,8 +531,8 @@ class _Decision:
 
 def _id_frame(spark: SparkSession, ids, col: str = "doc_id") -> DataFrame:
     """A batch-bounded id set as a broadcast-hinted ``LocalRelation``:
-    its broadcast build reads driver-held rows, with no job and no
-    Python worker."""
+    its broadcast build reads driver-held rows with no Python worker, in
+    one small job per query that broadcasts it."""
     return F.broadcast(
         local_relation(spark, [(i,) for i in sorted(set(ids))], f"{col} long")
     )
@@ -554,8 +555,9 @@ def _newer(arr_us: int | None, ix_us: int | None) -> bool:
 
 def _newest_visible(cands, hidden: set) -> dict:
     """``group -> (doc_id, us)`` of the newest candidate per group that
-    is not ``hidden``, from ``(group, doc_id, us)`` triples: the
-    max(struct(t, id)) with null t lowest of the within-batch rule."""
+    is not ``hidden``, from ``(group, doc_id, us)`` triples: the newest
+    timestamp wins, null timestamps order lowest, ties go to the
+    greatest id."""
     best: dict = {}
     for group, doc, us in cands:
         if doc in hidden:
@@ -566,31 +568,46 @@ def _newest_visible(cands, hidden: set) -> dict:
     return {g: (doc, us) for g, (_, doc, us) in best.items()}
 
 
-def _hidden(spark: SparkSession, dindex: DataFrame, ids: set) -> set:
-    """The ``ids`` some digests row supersedes, i.e. the HIDDEN ones.
-    The marker relation is corpus-lifetime-sized, so it is semi-joined
-    down to the batch-bounded ids, map-side; one scan of the digests
-    table."""
-    if not ids:
-        return set()
-    return {
-        r["supersedes"]
-        for r in dindex.join(_id_frame(spark, ids, "supersedes"), "supersedes", "semi")
-        .select("supersedes")
-        .collect()
-    }
+def _tagged(kind: str, df: DataFrame) -> DataFrame:
+    """``df`` in the one row shape a digests probe unions, so each probe
+    is one query: (kind, doc_id, digest, _us), absent columns null."""
+    return df.select(
+        F.lit(kind).alias("kind"),
+        "doc_id",
+        *[
+            F.col(name) if name in df.columns else F.lit(None).cast(type_).alias(name)
+            for name, type_ in (("digest", "string"), ("_us", "long"))
+        ],
+    )
+
+
+def _hidden_of(dindex: DataFrame, ids: DataFrame) -> DataFrame:
+    """``hidden`` rows: the ``ids`` some digests row supersedes.  The
+    marker relation is corpus-lifetime-sized, so it is semi-joined down
+    to the batch-bounded ids, map-side."""
+    return _tagged(
+        "hidden",
+        dindex.join(
+            F.broadcast(ids.select(F.col("doc_id").alias("supersedes"))),
+            "supersedes",
+            "semi",
+        ).select(F.col("supersedes").alias("doc_id")),
+    )
 
 
 def _gate(
     c: _Curation, batch: DataFrame, batch_id: int, caches: list
-) -> tuple[DataFrame, DataFrame]:
-    """``(batch, gated)``: crawl rejects land in ``<corpus>_rejects``
-    and the rest passes the quality gate.  The gated relation is cached
-    (signatures and the corpus write both read it).  A crawl batch is
-    cached RAW first: upstream of here is the archive's whole parse and
-    HTML extraction, which the rejects write, the docs arm and the
-    stats count would otherwise each re-run; with ``stats`` the batch
-    is cached for its arrived-count."""
+) -> tuple[list, DataFrame]:
+    """``(rows, gated)``: crawl rejects land in ``<corpus>_rejects``,
+    the rest is flagged by the quality gate and cached, and ``gated``
+    is its passing rows.  ``rows`` is the batch collected once, one row
+    per arrived document (bounded by the micro-batch): ``(doc_id,
+    _gated)``, and with keep-newest the content ``digest`` and the
+    timestamp in unix micros ``_us`` -- every batch-side input of the
+    dedup decision and the stats row.  A crawl batch is cached RAW
+    first: upstream of here is the archive's whole parse and HTML
+    extraction, which the rejects write and the docs arm would
+    otherwise each re-run."""
     if "_crawl_reject" in batch.columns:
         raw = batch.cache()
         caches.append(raw)
@@ -600,16 +617,17 @@ def _gate(
             batch_id,
         )
         batch = raw.filter(~F.col("_crawl_reject")).drop("_crawl_reject")
-    elif c.stats:
-        batch = batch.cache()
-        caches.append(batch)
-    gated = quality_gate(batch, c.min_tokens, c.min_ttr).cache()
-    caches.append(gated)
-    return batch, gated
+    flagged = _gate_flag(batch, c.min_tokens, c.min_ttr).cache()
+    caches.append(flagged)
+    cols = ["doc_id", "_gated"]
+    if c.keep_newest:
+        cols += [F.md5("text").alias("digest"), _micros(c.ts_col)]
+    rows = flagged.select(*cols).collect()
+    return rows, flagged.filter("_gated").drop("_gated")
 
 
 def _exact_decision(
-    c: _Curation, gated: DataFrame, own_ids: DataFrame, batch_id: int, caches: list
+    c: _Curation, rows: list, own_ids: DataFrame, batch_id: int
 ) -> _Decision:
     """Keep-newest exact-digest decision against the ``<corpus>_digests``
     table.  Invariants:
@@ -631,41 +649,38 @@ def _exact_decision(
       replay is told apart because its residue sits in this batch's
       own partition, which compaction always spares.
 
-    Scans of the digests table: the id-reuse check, the digest probe
-    and the hidden-marker probe, each with the batch side broadcast.
-    At 10^9 documents the 4-column table is ~50 GB, and a column-pruned
-    exchange-free scan per batch is two orders below the batch's own
-    parse+shingle cost; bucketing it would save no shuffle (the plan
-    has none) and digest randomness defeats min/max pruning."""
-    winners = (
-        gated.groupBy(F.md5("text").alias("digest"))
-        .agg(
-            F.max(
-                F.struct(F.col(c.ts_col).alias("t"), F.col("doc_id").alias("d"))
-            ).alias("_s")
-        )
-        .select(
-            F.col("_s.d").alias("doc_id"), "digest", F.col("_s.t").alias("_kn_ts")
-        )
-        .cache()
+    The digests table is read by ONE query: the id-reuse check, the
+    digest probe and the hidden markers of the probe's hits, unioned,
+    every batch side a broadcast ``LocalRelation``.  Its rows are
+    bounded by the batch's ids and digests times their copies in the
+    supersession history.  At 10^9 documents the 4-column table is
+    ~50 GB, and a column-pruned exchange-free scan per batch is two
+    orders below the batch's own parse+shingle cost; bucketing it would
+    save no shuffle (the plan has none) and digest randomness defeats
+    min/max pruning."""
+    winners = _newest_visible(
+        ((r["digest"], r["doc_id"], r["_us"]) for r in rows if r["_gated"]), set()
     )
-    caches.append(winners)
-    # one row per batch digest; the raw timestamps stay in-plan for the
-    # digests write, only integer micros round-trip through Python
-    rows = winners.select("doc_id", "digest", _micros("_kn_ts")).collect()
-    d = _Decision(winners=winners, ts={r["doc_id"]: r["_us"] for r in rows})
+    d = _Decision(ts=dict(winners.values()))
     dindex = read_parquet_recovering(c.spark, c.corpus_path + DIGESTS_SUFFIX)
     if dindex is None:
-        d.fresh = [r["doc_id"] for r in rows]
+        d.fresh = sorted(d.ts)
         return d
-    reused = (
-        dindex.filter(F.col("ingest_batch") != batch_id)
-        .join(own_ids, "doc_id", "semi")
-        .select("doc_id")
-        .take(3)
+    d.dindex = dindex.join(own_ids, "doc_id", "left_anti")
+    digests = local_relation(c.spark, [(g,) for g in sorted(winners)], "digest string")
+    probe = d.dindex.join(F.broadcast(digests), "digest").select(
+        "doc_id", "digest", _micros(c.ts_col)
     )
+    earlier = dindex.filter(F.col("ingest_batch") != batch_id)
+    found = (
+        _tagged("reused", earlier.join(own_ids, "doc_id", "semi"))
+        .unionByName(_tagged("hit", probe))
+        .unionByName(_hidden_of(d.dindex, probe))
+        .collect()
+    )
+    reused = sorted(r["doc_id"] for r in found if r["kind"] == "reused")
     if reused:
-        ids_s = ", ".join(str(r.doc_id) for r in reused)
+        ids_s = ", ".join(str(i) for i in reused[:3])
         raise ValueError(
             "keep-newest ingest requires globally unique "
             f"doc_ids across batches: arriving ids [{ids_s}"
@@ -675,35 +690,29 @@ def _exact_decision(
             "WARC record id); supersession links the new "
             "id to the old one."
         )
-    d.dindex = dindex = dindex.join(own_ids, "doc_id", "left_anti")
-    digests = local_relation(c.spark, [(r["digest"],) for r in rows], "digest string")
-    probe = (
-        dindex.join(F.broadcast(digests), "digest")
-        .select("digest", "doc_id", _micros(c.ts_col))
-        .collect()
-    )
     hits = _newest_visible(
-        ((r["digest"], r["doc_id"], r["_us"]) for r in probe),
-        _hidden(c.spark, dindex, {r["doc_id"] for r in probe}),
+        ((r["digest"], r["doc_id"], r["_us"]) for r in found if r["kind"] == "hit"),
+        {r["doc_id"] for r in found if r["kind"] == "hidden"},
     )
     d.fresh = []
-    for r in rows:
-        hit = hits.get(r["digest"])
+    for digest, (doc, us) in sorted(winners.items()):
+        hit = hits.get(digest)
         if hit is None:
-            d.fresh.append(r["doc_id"])
-        elif _newer(r["_us"], hit[1]):
-            d.sup_pairs.append((r["doc_id"], hit[0]))
+            d.fresh.append(doc)
+        elif _newer(us, hit[1]):
+            d.sup_pairs.append((doc, hit[0]))
     return d
 
 
 def _signatures(
     c: _Curation, gated: DataFrame, d: _Decision, caches: list
-) -> tuple[DataFrame, DataFrame]:
-    """``(sigs_all, sigs)``: the cached minhash signatures of every doc
-    that may be admitted, and those of the docs that face the near-dup
-    probe.  Keep-newest shingles only the fresh winners and the exact
-    superseders, and only the FRESH face the probe: a superseder is
-    digest-identical to an admitted document, so the probe would
+) -> tuple[DataFrame, list]:
+    """``(sigs_all, probe_rows)``: the cached minhash signatures of every
+    doc that may be admitted, and the collected ``(doc_id, h0..h7)``
+    rows of those that face the near-dup probe (bounded by the
+    micro-batch).  Keep-newest shingles only the fresh winners and the
+    exact superseders, and only the FRESH face the probe: a superseder
+    is digest-identical to an admitted document, so the probe would
     uselessly report it as a dup of the copy it replaces.  Signature
     rows join the index under the new doc_id; the predecessor's stay,
     and near-dup drops against them remain correct because a surviving
@@ -716,40 +725,42 @@ def _signatures(
     # distinct=False: min-signatures are duplicate-blind
     sigs_all = minhash_signatures(shingle_hashes(pool, distinct=False)).cache()
     caches.append(sigs_all)
-    if d.fresh is None:
-        return sigs_all, sigs_all
-    return sigs_all, sigs_all.join(_id_frame(c.spark, d.fresh), "doc_id")
+    cols = ["doc_id"] + [f"h{k}" for k in range(N_HASHES)]
+    rows = [tuple(r) for r in sigs_all.select(*cols).collect()]
+    if d.fresh is not None:
+        fresh = set(d.fresh)
+        rows = [r for r in rows if r[0] in fresh]
+    return sigs_all, rows
 
 
 def _sig_probe(
     c: _Curation, own_ids: DataFrame
-) -> tuple[DataFrame, list[DataFrame] | None]:
-    """``(index, index_buckets)`` for the near-dup probe: the signature
-    index less this batch's own rows, and with a bucket table, its live
-    version plus the parquet tail's buckets."""
+) -> tuple[DataFrame | None, list[DataFrame] | None]:
+    """``(index, bucketed)`` for the near-dup probe: the signature index
+    (None before the first write), and with a bucket table its live
+    version less this batch's own rows plus the parquet tail the
+    version does not cover."""
     index = read_parquet_recovering(c.spark, c.index_path)
     if index is None:
-        return local_relation(c.spark, [], SIG_SCHEMA), None
-    index = index.join(own_ids, "doc_id", "left_anti")
+        return None, None
     probe = c.bucket_index_table and bucket_probe(
         c.spark, c.index_path + BUCKETMETA_SUFFIX, index, own_ids,
         SIG_BUCKET_DDL, SIG_BUCKET_KEYS,
     )
-    if not probe:
-        return index, None
-    return index, [probe[0], signature_buckets(probe[1])]
+    return index, probe or None
 
 
 def _near_dup_decision(
     c: _Curation,
     d: _Decision,
-    sigs: DataFrame,
-    index: DataFrame,
-    index_buckets: list[DataFrame] | None,
+    probe_rows: list,
+    index: DataFrame | None,
+    bucketed: list[DataFrame] | None,
 ) -> None:
-    """Probe ``sigs`` against the signature index and decide, both
-    modes: a signature-bearing doc with no verified partner is kept (a
-    gated doc too short to shingle has no signature and is not).
+    """Probe ``probe_rows`` against the signature index
+    (:func:`~..operators.dedup.near_dup_probe`) and decide, both modes:
+    a signature-bearing doc with no verified partner is kept (a gated
+    doc too short to shingle has no signature and is not).
 
     Keep-newest near-dup rule, for docs whose every partner is INDEXED
     (docs with an in-batch partner keep the keep-first in-batch rule;
@@ -760,39 +771,28 @@ def _near_dup_decision(
     not newer => it drops; every partner hidden => it is admitted as
     fresh (dedup protects the visible view, not the graveyard).
 
-    Scans of the digests table: the partners' timestamps and their
-    hidden markers, which with :func:`_exact_decision`'s three make
-    the five per keep-newest batch."""
-    sig_ids = {r["doc_id"] for r in sigs.select("doc_id").collect()}
-    scored = incremental_dedup_scored(
-        sigs,
-        index,
-        min_agree=c.min_agree,
-        index_buckets=index_buckets,
-    ).collect()
-    d.kept = sig_ids - {r["doc_id"] for r in scored}
+    The partners' timestamps and hidden markers are ONE query over the
+    digests table, bounded by the verified partners of the batch's
+    documents."""
+    scored = near_dup_probe(c.spark, probe_rows, index, c.min_agree, bucketed)
+    d.kept = {r[0] for r in probe_rows} - {doc for doc, _, _, _ in scored}
     if d.dindex is None:
         return
-    inb = {r["doc_id"] for r in scored if r["in_batch"]}
+    inb = {doc for doc, _, _, in_batch in scored if in_batch}
     pairs = {
-        (r["doc_id"], r["partner"])
-        for r in scored
-        if not r["in_batch"] and r["doc_id"] not in inb
+        (doc, p) for doc, p, _, in_batch in scored if not in_batch and doc not in inb
     }
     if not pairs:
         return
-    partners = {p for _, p in pairs}
-    p_ts = {
-        r["doc_id"]: r["_us"]
-        for r in d.dindex.join(_id_frame(c.spark, partners), "doc_id", "semi")
-        .select("doc_id", _micros(c.ts_col))
-        .collect()
-    }
+    ids = _id_frame(c.spark, {p for _, p in pairs})
+    partners = d.dindex.join(ids, "doc_id", "semi").select("doc_id", _micros(c.ts_col))
+    found = _tagged("ts", partners).unionByName(_hidden_of(d.dindex, ids)).collect()
+    p_ts = {r["doc_id"]: r["_us"] for r in found if r["kind"] == "ts"}
     best = _newest_visible(
         ((doc, p, p_ts.get(p)) for doc, p in pairs),
-        _hidden(c.spark, d.dindex, partners),
+        {r["doc_id"] for r in found if r["kind"] == "hidden"},
     )
-    for doc in {x for x, _ in pairs}:
+    for doc in sorted({x for x, _ in pairs}):
         if doc not in best:
             d.revived.append(doc)
         elif _newer(d.ts.get(doc), best[doc][1]):
@@ -810,11 +810,17 @@ def _with_supersedes(c: _Curation, df: DataFrame, pairs: list) -> DataFrame:
 
 
 def _write_admitted(
-    c: _Curation, batch_id: int, gated: DataFrame, sigs_all: DataFrame, d: _Decision
-) -> tuple[DataFrame, DataFrame]:
+    c: _Curation,
+    pool: ThreadPoolExecutor,
+    batch_id: int,
+    gated: DataFrame,
+    sigs_all: DataFrame,
+    d: _Decision,
+) -> tuple[list[Future], DataFrame, DataFrame]:
     """Append the admit set to the corpus and its signatures to the
-    index, and with keep-newest its rows to ``<corpus>_digests``;
-    returns ``(admitted, admit_ids)``.
+    index, and with keep-newest its rows to ``<corpus>_digests``, each
+    on a ``pool`` thread; returns ``(appends, admitted, admit_ids)``,
+    the appends' futures for the caller to read.
 
     A superseder's corpus row carries its predecessor's id in
     ``supersedes``: the corpus stays append-only and the stale row is
@@ -826,21 +832,22 @@ def _write_admitted(
     column and no digests table."""
     admit = _id_frame(c.spark, d.admit_ids())
     admitted = gated.join(admit, "doc_id")
+    writes = [(sigs_all.join(admit, "doc_id"), c.index_path)]
     if c.keep_newest:
-        marks = d.sup_pairs + d.nsup_pairs
-        admitted = _with_supersedes(c, admitted, marks)
-    _write_batch_partition(admitted, c.corpus_path, batch_id)
-    _write_batch_partition(sigs_all.join(admit, "doc_id"), c.index_path, batch_id)
-    if c.keep_newest:
-        digests = _with_supersedes(c, d.winners.join(admit, "doc_id"), marks)
-        _write_batch_partition(
-            digests.select(
-                "doc_id", "digest", F.col("_kn_ts").alias(c.ts_col), "supersedes"
+        # every admitted doc is its digest's batch winner
+        admitted = _with_supersedes(c, admitted, d.sup_pairs + d.nsup_pairs)
+        writes.append((
+            admitted.select(
+                "doc_id", F.md5("text").alias("digest"), c.ts_col, "supersedes"
             ),
             c.corpus_path + DIGESTS_SUFFIX,
-            batch_id,
-        )
-    return admitted, admit
+        ))
+    writes.append((admitted, c.corpus_path))
+    appends = [
+        submit(pool, c.spark, _write_batch_partition, df, path, batch_id)
+        for df, path in writes
+    ]
+    return appends, admitted, admit
 
 
 def _paragraphs(
@@ -917,15 +924,14 @@ def _paragraphs(
     _write_batch_partition(seg_delta, seg_path, batch_id)
 
 
-def _write_stats(
-    c: _Curation, batch_id: int, batch: DataFrame, gated: DataFrame, n_kept: int
-) -> None:
+def _write_stats(c: _Curation, batch_id: int, rows: list, n_kept: int) -> None:
     """One funnel row (n_arrived, n_gated, n_kept) per batch in
-    ``<corpus>_stats``; the admit count is already driver-side."""
+    ``<corpus>_stats``, counted from the driver-held batch rows and
+    admit set: the row costs only its write."""
     _write_batch_partition(
         local_relation(
             c.spark,
-            [(batch.count(), gated.count(), n_kept)],
+            [(len(rows), sum(bool(r["_gated"]) for r in rows), n_kept)],
             "n_arrived long, n_gated long, n_kept long",
         ),
         c.corpus_path + "_stats",
@@ -1002,9 +1008,11 @@ def run_streaming_curation(
     ``bucket_index_table`` (requires ``compact_every``) additionally
     maintains the bucketed probe table: rebuilt at every compaction
     (:func:`build_bucketed_sig_index`) and probed together with the
-    since-rebuild parquet tail as two candidate joins.  At 100 TB this
-    is the difference between shuffling the whole index's bucket
-    relation every micro-batch and shuffling only the micro-batch.
+    since-rebuild parquet tail in one query.  The probe shuffles
+    neither way, so the table buys only the pre-exploded band rows:
+    the index scan reads 4 (band, k0, k1) rows per document instead of
+    exploding its 8 signature components, and the candidates'
+    signatures then cost one semi-join of the index.
     ``n_index_buckets`` sizes it.
 
     ``stats=True`` additionally writes a one-row-per-batch ingest
@@ -1072,30 +1080,40 @@ def run_streaming_curation(
     def _apply(batch: DataFrame, batch_id: int) -> None:
         caches: list[DataFrame] = []
         try:
-            batch, gated = _gate(c, batch, batch_id, caches)
+            rows, gated = _gate(c, batch, batch_id, caches)
             # replay safety: every probe excludes the batch's own ids —
             # the gated set, a superset of everything a previous attempt
             # of this batch can have written to any index; by id, not by
             # partition, so it also covers rows a compaction folded
-            own_ids = F.broadcast(gated.select("doc_id"))
+            own_ids = _id_frame(spark, [r["doc_id"] for r in rows if r["_gated"]])
             d = (
-                _exact_decision(c, gated, own_ids, batch_id, caches)
+                _exact_decision(c, rows, own_ids, batch_id)
                 if c.keep_newest
                 else _Decision()
             )
-            sigs_all, sigs = _signatures(c, gated, d, caches)
-            _near_dup_decision(c, d, sigs, *_sig_probe(c, own_ids))
+            sigs_all, probe_rows = _signatures(c, gated, d, caches)
+            _near_dup_decision(c, d, probe_rows, *_sig_probe(c, own_ids))
             # the decision collects materialized the cached signatures
-            # before the index write below rewrites what the probe read
-            admitted, admit = _write_admitted(c, batch_id, gated, sigs_all, d)
-            if c.postings:
-                post, dlen = postings_delta(admitted)
-                _write_batch_partition(post, c.corpus_path + POSTINGS_SUFFIX, batch_id)
-                _write_batch_partition(dlen, c.corpus_path + DOCLENS_SUFFIX, batch_id)
-            if c.paragraphs:
-                _paragraphs(c, batch_id, admitted, admit, d, caches)
-            if c.stats:
-                _write_stats(c, batch_id, batch, gated, len(d.admit_ids()))
+            # before the index append below rewrites what the probe read;
+            # the appends write disjoint tables, so they run concurrently,
+            # and every future is read so a failed append fails the batch
+            with ThreadPoolExecutor(max_workers=4) as pool:
+                appends, admitted, admit = _write_admitted(
+                    c, pool, batch_id, gated, sigs_all, d
+                )
+                if c.stats:
+                    appends.append(submit(
+                        pool, spark, _write_stats, c, batch_id, rows,
+                        len(d.admit_ids()),
+                    ))
+                if c.postings:
+                    post, dlen = postings_delta(admitted)
+                    _write_batch_partition(post, c.corpus_path + POSTINGS_SUFFIX, batch_id)
+                    _write_batch_partition(dlen, c.corpus_path + DOCLENS_SUFFIX, batch_id)
+                if c.paragraphs:
+                    _paragraphs(c, batch_id, admitted, admit, d, caches)
+                for f in appends:
+                    f.result()
             if c.compact_every and (batch_id + 1) % c.compact_every == 0:
                 _compact(c, batch_id)
         finally:

@@ -653,7 +653,9 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two consumers' exchanges differ (different agg functions), so
     # Catalyst gets no exchange reuse — without the persist the corpus
     # is tokenized and shuffled twice (visible as two parquet scans in
-    # the physical plan).
+    # the physical plan).  Caller-owned cache: the returned lazy plan
+    # reads it, so the caller releases it once the result is consumed
+    # (operators/__init__ ownership contract).
     tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
     dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
     n_docs = docs.agg(F.count("*").alias("n_docs"))
@@ -824,7 +826,9 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and _qtoks keeps only tokens in the ~10-term literal query set
     # (array_contains against a literal array, map-side), so the cache
     # holds two ints + a near-empty array per doc — not the token
-    # arrays an earlier rejected formulation persisted (r5 note).
+    # arrays.  Caller-owned cache: the returned lazy plan reads it
+    # twice, so the caller releases it once the result is consumed
+    # (operators/__init__ ownership contract).
     qterm_lits = F.array(
         *[F.lit(t) for t in sorted({t for _, t in _BM25_TERMS})]
     )

@@ -20,9 +20,8 @@ CACHING_QUERIES = [
     "q_exact_jaccard_join",       # prefix_jaccard_join
     "q_ann_lsh_topk",             # ann_topk_lsh_portable
     "q_dsir_select",              # dsir_select
-    # q_bm25_search left this list in r6: the window-count df rewrite
-    # made tf single-consumption, so the persist (and its cache
-    # block) no longer exists
+    "q_bm25_search",              # the staged per-doc relation
+    "q_tfidf_top_terms",          # the tf relation
     "q_containment_dups",         # prefix_containment_join
     "q_paragraph_dedup",          # paragraph_dedup (r6)
     # q_domain_rank is deliberately absent: pagerank's adaptive LOCAL

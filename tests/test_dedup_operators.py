@@ -1,6 +1,8 @@
 """Library-level dedup operators: LSH->verify composition and the
 salting utility."""
 
+import re
+
 from pyspark.sql import functions as F
 
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import (
@@ -184,8 +186,9 @@ def test_incremental_dedup_probe_append_idempotent(spark):
     survivors append; re-ingesting the same content against the
     updated index drops everything."""
     from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import (
-        incremental_dedup,
+        N_HASHES,
         minhash_signatures,
+        near_dup_probe,
         shingle_hashes,
     )
 
@@ -204,10 +207,18 @@ def test_incremental_dedup_probe_append_idempotent(spark):
     sigs = lambda rows: minhash_signatures(  # noqa: E731
         shingle_hashes(spark.createDataFrame(rows, "doc_id long, text string"))
     )
-    index, batch = sigs(v1), sigs(v2)
-    kept, dropped = incremental_dedup(batch, index)
-    kept_ids = {r.doc_id for r in kept.collect()}
-    drops = {r.doc_id: (r.dup_of, r.n_agree) for r in dropped.collect()}
+
+    def probe(rows, index):
+        """(kept ids, doc -> (smallest partner, its n_agree))."""
+        cols = ["doc_id"] + [f"h{k}" for k in range(N_HASHES)]
+        batch = [tuple(r) for r in sigs(rows).select(*cols).collect()]
+        drops: dict = {}
+        for doc, partner, n, _ in sorted(near_dup_probe(spark, batch, index)):
+            drops.setdefault(doc, (partner, n))
+        return {r[0] for r in batch} - set(drops), drops
+
+    index = sigs(v1)
+    kept_ids, drops = probe(v2, index)
 
     assert kept_ids == {12}
     assert drops[10] == (1, 8)          # exact dup: all 8 components agree
@@ -215,11 +226,119 @@ def test_incremental_dedup_probe_append_idempotent(spark):
     assert drops[13] == (12, 8)         # intra-batch min-id survivorship
 
     # idempotence: same content re-ingested (fresh ids) vs updated index
-    index2 = index.unionByName(kept)
+    index2 = index.unionByName(sigs(v2).filter("doc_id = 12"))
     v3 = [(20, t) for _, t in v2 if _ in (12,)] + [(21, v2[2][1])]
-    kept3, dropped3 = incremental_dedup(sigs(v3), index2)
-    assert kept3.count() == 0
-    assert {r.doc_id for r in dropped3.collect()} == {20, 21}
+    kept3, drops3 = probe(v3, index2)
+    assert kept3 == set()
+    assert set(drops3) == {20, 21}
+
+
+def _banding_oracle(batch, index, min_agree):
+    """Pure-Python near-dup probe: every (doc, partner, n_agree,
+    in_batch) pair sharing one full LSH band whose signatures agree on
+    >= min_agree components; index rows under a batch id are ignored,
+    in-batch pairs drop the larger id toward the smaller."""
+    from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import (
+        N_BANDS,
+        ROWS_PER_BAND,
+    )
+
+    def bands(sig):
+        return {(b, sig[b * ROWS_PER_BAND:(b + 1) * ROWS_PER_BAND]) for b in range(N_BANDS)}
+
+    def agree(a, b):
+        return sum(x == y for x, y in zip(a, b))
+
+    ids = {r[0] for r in batch}
+    out = set()
+    for doc, *sig in batch:
+        for pool, in_batch in ((batch, True), (index, False)):
+            for other, *osig in pool:
+                if (other >= doc) if in_batch else (other in ids):
+                    continue
+                n = agree(sig, osig)
+                if bands(tuple(sig)) & bands(tuple(osig)) and n >= min_agree:
+                    out.add((doc, other, n, in_batch))
+    return out
+
+
+def test_near_dup_probe_matches_python_banding_oracle(spark, tmp_path):
+    """The broadcast probe equals a pure-Python banding oracle on
+    seeded signatures with engineered collisions at n_agree =
+    min_agree - 1 (not a dup), min_agree and 8, against the plain index
+    and against a bucket table plus its parquet tail; index rows under
+    the batch's own ids (a replayed batch's residue) never collide, and
+    neither query shuffles."""
+    import random
+
+    from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import (
+        N_HASHES,
+        _index_hits,
+        near_dup_probe,
+        signature_buckets,
+    )
+    from semantic_similarity_system_using_aws_mapreduce_spark.sources.bucketing import write_bucketed
+
+    min_agree = 6
+    rng = random.Random(7)
+    fresh = lambda: [rng.randrange(1, 1 << 31) for _ in range(N_HASHES)]  # noqa: E731
+
+    def near(sig, n_agree):
+        """A signature agreeing with ``sig`` on exactly ``n_agree``
+        components, band 0 (h0, h1) among them."""
+        out = list(sig)
+        for k in rng.sample(range(2, N_HASHES), N_HASHES - n_agree):
+            out[k] = sig[k] + 1
+        return out
+
+    batch, index = [], []
+    for i in range(12):
+        sig = fresh()
+        batch.append((100 + i, *sig))
+        n = (min_agree - 1, min_agree, N_HASHES)[i % 3]
+        index.append((i, *near(sig, n)))  # partner in the base
+        index.append((50 + i, *near(sig, (n + 1) % (N_HASHES + 1) or N_HASHES)))  # in the tail
+    # in-batch collisions at the same three levels
+    for j, n in enumerate((min_agree - 1, min_agree, N_HASHES)):
+        batch.append((200 + j, *near(batch[j][1:], n)))
+    # unrelated index rows, and residue under two of the batch's own ids
+    index += [(300 + i, *fresh()) for i in range(30)]
+    index += [batch[0], (batch[1][0], *near(batch[1][1:], N_HASHES))]
+
+    expect = _banding_oracle(batch, index, min_agree)
+    # the engineered levels show: min_agree and 8 collide, in and out of
+    # the batch; min_agree - 1 does not
+    assert {(n, in_batch) for _, _, n, in_batch in expect} >= {
+        (min_agree, False), (N_HASHES, False), (min_agree, True), (N_HASHES, True)
+    }
+    assert min_agree - 1 not in {n for _, _, n, _ in expect}
+
+    cols = "doc_id long, " + ", ".join(f"h{k} long" for k in range(N_HASHES))
+    tail_ids = {r[0] for r in index if 50 <= r[0] < 100} | {batch[1][0]}
+    rows = [(*r, int(r[0] in tail_ids)) for r in index]
+    index_path = str(tmp_path / "probe_index")
+    spark.createDataFrame(rows, cols + ", ingest_batch int").write.partitionBy(
+        "ingest_batch"
+    ).parquet(index_path)
+    index_df = spark.read.parquet(index_path)
+    write_bucketed(
+        signature_buckets(index_df.filter("ingest_batch = 0")),
+        "probe_oracle_buckets",
+        ["band", "k0", "k1"],
+        n_buckets=4,
+    )
+    bucketed = (spark.table("probe_oracle_buckets"), index_df.filter("ingest_batch > 0"))
+    try:
+        assert near_dup_probe(spark, batch, index_df, min_agree) == expect
+        assert near_dup_probe(spark, batch, index_df, min_agree, bucketed) == expect
+        sigs = {r[0]: r[1:] for r in batch}
+        for b in (None, bucketed):
+            plan = _index_hits(spark, sigs, index_df, min_agree, b)._jdf.queryExecution()
+            plan = plan.executedPlan().toString()
+            assert "BroadcastHashJoin" in plan, plan
+            assert not re.search(r"(?<!Broadcast)Exchange ", plan), plan
+    finally:
+        spark.sql("DROP TABLE IF EXISTS probe_oracle_buckets")
 
 
 def test_bloom_filter_no_false_negatives_and_bounded_fpr(spark):

@@ -57,6 +57,9 @@ def spark_results(spark):
         out = {}
         for name, res, exc in pool.map(run, sorted(QUERIES)):
             out[name] = (res, exc)
+    # the queries' persists are caller-owned (operators/__init__): every
+    # result is collected, so release them all
+    spark.catalog.clearCache()
     return out
 
 

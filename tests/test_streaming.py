@@ -352,8 +352,9 @@ def test_streaming_curation_matches_sequential_batch_application(spark, tmp_path
     carry no duplicate content, and index rows must mirror corpus
     rows (restart-safe exactly-once by index probe)."""
     from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import (
-        incremental_dedup,
+        N_HASHES,
         minhash_signatures,
+        near_dup_probe,
         shingle_hashes,
     )
     from semantic_similarity_system_using_aws_mapreduce_spark.streaming.documents import (
@@ -404,14 +405,14 @@ def test_streaming_curation_matches_sequential_batch_application(spark, tmp_path
     for rows in (batch_a, batch_b):
         df = quality_gate(spark.createDataFrame(rows, schema), 24, 0.35)
         sigs = minhash_signatures(shingle_hashes(df))
-        if index is None:
-            kept, _ = incremental_dedup(
-                sigs, spark.createDataFrame([], sigs.schema)
-            )
-        else:
-            kept, _ = incremental_dedup(sigs, index)
+        batch = [
+            tuple(r)
+            for r in sigs.select("doc_id", *[f"h{k}" for k in range(N_HASHES)]).collect()
+        ]
+        dropped = {doc for doc, *_ in near_dup_probe(spark, batch, index)}
+        kept = sigs.filter(~F.col("doc_id").isin(list(dropped)))
         index = kept if index is None else index.unionByName(kept)
-        expect_ids |= {r.doc_id for r in kept.collect()}
+        expect_ids |= {r[0] for r in batch} - dropped
 
     assert got_ids == expect_ids == {1, 2, 102}
     # no duplicate content in the curated corpus
@@ -729,15 +730,18 @@ def test_compact_index_residue_winner_is_deterministic(spark, tmp_path):
 
 
 def test_bucketed_sig_index_probe_has_no_exchange_on_index_side(spark, tmp_path):
-    """The 100 TB probe shape: with the signature index's bucket
-    relation persisted as a catalog table bucketed by the banded join
-    key, incremental_dedup's candidate probe reads co-located buckets
-    — the index side of the equi-join carries NO Exchange (only the
-    small batch side shuffles), and the verdicts are identical to the
-    on-the-fly explode path."""
+    """The signature index's bucket relation persisted as a catalog
+    table bucketed by the banded join key is probed like the plain
+    index: a broadcast join of the batch's band keys, so neither
+    probe's plan carries a shuffle Exchange, and the verdicts are
+    identical to the on-the-fly explode path."""
+    import re
+
     from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import (
-        incremental_dedup,
+        N_HASHES,
+        _index_hits,
         minhash_signatures,
+        near_dup_probe,
         shingle_hashes,
     )
     from semantic_similarity_system_using_aws_mapreduce_spark.sources.bucketing import read_bucketed
@@ -757,30 +761,22 @@ def test_bucketed_sig_index_probe_has_no_exchange_on_index_side(spark, tmp_path)
     batch = spark.createDataFrame(
         [(100, long_text("s3")), (101, long_text("fresh"))], schema
     )
-    batch_sigs = minhash_signatures(shingle_hashes(batch))
+    cols = ["doc_id"] + [f"h{k}" for k in range(N_HASHES)]
+    batch_sigs = [tuple(r) for r in minhash_signatures(shingle_hashes(batch)).select(*cols).collect()]
     index_sigs = spark.read.parquet(index_path)
+    # the table covers the whole index: its parquet tail is empty
+    bucketed = (read_bucketed(spark, "sig_buckets_b"), index_sigs.filter(F.lit(False)))
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        kept_b, dropped_b = incremental_dedup(
-            batch_sigs,
-            index_sigs,
-            index_buckets=read_bucketed(spark, "sig_buckets_b"),
-        )
-        kept_p, dropped_p = incremental_dedup(batch_sigs, index_sigs)
-        assert sorted(map(tuple, kept_b.collect())) == sorted(
-            map(tuple, kept_p.collect())
-        )
-        assert sorted(map(tuple, dropped_b.collect())) == sorted(
-            map(tuple, dropped_p.collect())
-        )
-        plan_b = dropped_b._jdf.queryExecution().executedPlan().toString()
-        plan_p = dropped_p._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in plan_b, plan_b
-        # the bucketed path elides the index side's probe-join Exchange
-        assert plan_b.count("Exchange hashpartitioning") < plan_p.count(
-            "Exchange hashpartitioning"
-        ), plan_b
+        hits_b = near_dup_probe(spark, batch_sigs, index_sigs, bucketed=bucketed)
+        hits_p = near_dup_probe(spark, batch_sigs, index_sigs)
+        assert hits_b == hits_p == {(100, 3, N_HASHES, False)}
+        probe = {r[0]: r[1:] for r in batch_sigs}
+        for b in (bucketed, None):
+            plan = _index_hits(spark, probe, index_sigs, 6, b)._jdf.queryExecution()
+            plan = plan.executedPlan().toString()
+            assert not re.search(r"(?<!Broadcast)Exchange ", plan), plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
         spark.sql("DROP TABLE IF EXISTS sig_buckets_b")
@@ -2964,7 +2960,7 @@ def test_forget_documents_expand_chains_off_restores_single_row_erase(spark, tmp
 #: relation re-planned once per consumer shows up here as dozens of
 #: extra jobs; a driver-side id set built as anything but a local
 #: relation shows up as a job per broadcast.
-STREAM_JOB_BUDGET = {"keep-newest": 106, "keep-first": 66}
+STREAM_JOB_BUDGET = {"keep-newest": 73, "keep-first": 48}
 
 
 @pytest.mark.parametrize("dedup", ["keep-newest", "keep-first"])
@@ -2974,6 +2970,8 @@ def test_streaming_curation_job_budget_and_cache_ownership(spark, tmp_path, dedu
     of one batch-a document, a near-dup edit of another and one fresh
     document.  Jobs are counted the way the benchmark counts them: the
     run id a StreamingQueryListener records is the stream's job group.
+    That count equals every job the session ran meanwhile, so no job a
+    micro-batch starts (its append threads' included) escapes the group.
     Every cache a micro-batch creates is released by the end of it."""
     import datetime
 
@@ -2985,10 +2983,15 @@ def test_streaming_curation_job_budget_and_cache_ownership(spark, tmp_path, dedu
     )
 
     run_ids: list[str] = []
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    jobs_at_start: list[int] = []
 
     class RunIds(StreamingQueryListener):
         def onQueryStarted(self, event):
+            # called synchronously by start(), before the first batch
             run_ids.append(str(event.runId))
+            jobs_at_start.append(dag.numTotalJobs())
 
         def onQueryProgress(self, event):
             pass
@@ -3019,10 +3022,11 @@ def test_streaming_curation_job_budget_and_cache_ownership(spark, tmp_path, dedu
         )
     finally:
         spark.streams.removeListener(listener)
-    sc = spark.sparkContext
+    jobs_run = dag.numTotalJobs() - jobs_at_start[0]
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
     (run_id,) = run_ids
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(run_id))
+    assert n_jobs == jobs_run, (n_jobs, jobs_run)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     visible = {r.doc_id for r in read_corpus_asof(spark, corpus_path).collect()}
     assert visible == ({101, 102, 3} if dedup == "keep-newest" else {1, 2, 3})
