@@ -20,6 +20,29 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from semantic_similarity_system_using_aws_mapreduce_spark.functions.stemming import porter_stem
 
+#: the reference checkout, whose sample inputs the golden tests name
+REFERENCE_DIR = Path("/root/reference")
+
+#: reference input -> committed stand-in (FIXTURES.md A1/A2)
+_STANDINS = {
+    "small-sample.txt": "biarcs_sample.txt",
+    "test_gold_standard.txt": "gold_small.txt",
+    "word-relatedness.txt": "gold_pairs.txt",
+}
+
+
+def is_reference(path) -> bool:
+    """True when ``path`` names a reference input that exists here."""
+    return Path(path).parent == REFERENCE_DIR and Path(path).exists()
+
+
+def reference_input(path) -> str:
+    """The reference input ``path`` where it exists, else its committed
+    stand-in under ``tests/data/``."""
+    if is_reference(path):
+        return str(path)
+    return str(Path(__file__).resolve().parent / "data" / _STANDINS[Path(path).name])
+
 
 def java_split(s: str, sep: str) -> list[str]:
     """Java String.split: trailing empty strings are removed."""

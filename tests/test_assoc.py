@@ -9,9 +9,9 @@ from semantic_similarity_system_using_aws_mapreduce_spark.operators.counts impor
 from semantic_similarity_system_using_aws_mapreduce_spark.sources.biarcs import read_biarcs, token_emissions
 
 from reference_oracle import assoc_measures as oracle_assoc
-from reference_oracle import step1_counts
+from reference_oracle import reference_input, step1_counts
 
-SMALL_SAMPLE = "/root/reference/small-sample.txt"
+SMALL_SAMPLE = reference_input("/root/reference/small-sample.txt")
 
 REL_TOL = 1e-12
 

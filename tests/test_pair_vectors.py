@@ -1,5 +1,7 @@
 """Pair-vector stage (J3, J4, A5, D1-D6) vs the reference oracle, end
-to end on the reference's own sample corpus and gold standards."""
+to end: the engine's vectors equal the oracle's for one biarcs corpus
+against a four-pair and a hub-shaped gold standard (the reference's
+sample inputs where present, else their committed stand-ins)."""
 
 import math
 
@@ -9,9 +11,9 @@ from semantic_similarity_system_using_aws_mapreduce_spark.plans.pipeline import 
 from semantic_similarity_system_using_aws_mapreduce_spark.schemas import VECTOR_COLUMNS
 
 from reference_oracle import assoc_measures as oracle_assoc
-from reference_oracle import load_gold, pair_vectors as oracle_pair_vectors, step1_counts
+from reference_oracle import load_gold, pair_vectors as oracle_pair_vectors, reference_input, step1_counts
 
-SMALL_SAMPLE = "/root/reference/small-sample.txt"
+SMALL_SAMPLE = reference_input("/root/reference/small-sample.txt")
 GOLD_SMALL = "/root/reference/test_gold_standard.txt"
 GOLD_FULL = "/root/reference/word-relatedness.txt"
 
@@ -27,6 +29,7 @@ def _oracle(gold_path, mode="parity"):
 
 @pytest.mark.parametrize("gold_path", [GOLD_SMALL, GOLD_FULL])
 def test_pipeline_matches_reference_oracle(spark, gold_path):
+    gold_path = reference_input(gold_path)
     expected = _oracle(gold_path)
     result = semantic_similarity_pipeline(
         spark, SMALL_SAMPLE, gold_path, mode="parity"
@@ -45,7 +48,9 @@ def test_pipeline_matches_reference_oracle(spark, gold_path):
 
 
 def test_standard_mode_runs(spark):
-    result = semantic_similarity_pipeline(spark, SMALL_SAMPLE, GOLD_SMALL, mode="standard")
+    result = semantic_similarity_pipeline(
+        spark, SMALL_SAMPLE, reference_input(GOLD_SMALL), mode="standard"
+    )
     rows = result.vectors.collect()
     assert len(rows) == 4
     # standard-mode Euclidean is a real distance: 0 <= d, and for a

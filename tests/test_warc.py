@@ -340,6 +340,7 @@ def test_curation_cli_keep_newest_dedup(tmp_path):
     import json
     import subprocess
     import sys
+    from pathlib import Path
 
     dup_text = " ".join(f"page{j} word{j}" for j in range(30))
     other = " ".join(f"other{j} tok{j}" for j in range(30))
@@ -366,7 +367,8 @@ def test_curation_cli_keep_newest_dedup(tmp_path):
                 str(tmp_path / "recrawl.warc.gz"), outdir,
                 "--format", "wet", "--no-shards", *extra,
             ],
-            capture_output=True, text=True, timeout=600, cwd="/root/repo",
+            capture_output=True, text=True, timeout=600,
+            cwd=Path(__file__).resolve().parents[1],
         )
         assert proc.returncode == 0, proc.stderr[-3000:]
         return json.loads(proc.stdout.strip().splitlines()[-1])
