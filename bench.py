@@ -423,7 +423,7 @@ def _bench_media_decode(spark, sf_dir: str) -> None:
             synthesize_real_media(spark, n=384).collect()
         )
     df = spark.createDataFrame(_MEDIA_ROWS_CACHE, MEDIA_SCHEMA)
-    out = decode_media(df, decoder="real")
+    out = decode_media(df)
     out.write.format("noop").mode("overwrite").save()
 
 

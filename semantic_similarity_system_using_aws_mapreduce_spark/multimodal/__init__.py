@@ -1,8 +1,8 @@
 """Multimodal columns: image/audio/video payloads as binary columns with
-typed metadata, decoded and featurized through Arrow-batched
-``mapInPandas`` plans.
+typed metadata, decoded through an Arrow-batched ``mapInPandas``
+plan.
 
-Invariant: ``decode_media(decoder="real")`` decodes without a codec
+Invariant: ``decode_media`` decodes without a codec
 library only the formats whose inner loop is numpy or stdlib C, with
 no per-pixel or per-sample Python loop: 24-bit BMP (one numpy view of
 the pixel array), PCM16 WAV (the stdlib ``wave`` reader plus numpy),
@@ -17,9 +17,7 @@ Design for 100 TB: binary payloads ride the DataFrame as parquet binary
 columns (or references to object-store keys for >100 MB blobs);
 `mapInPandas` keeps the data in Arrow record batches end to end, one
 Python worker per core, and `maxRecordsPerBatch` bounds peak memory
-(decode blow-up factor x batch size).  Feature extraction emits small
-fixed-width arrays, so the shuffle after extraction is tiny relative to
-the scan.
+(decode blow-up factor x batch size).
 """
 
 from __future__ import annotations
@@ -37,14 +35,10 @@ from semantic_similarity_system_using_aws_mapreduce_spark.multimodal.codecs_mp4 
 from semantic_similarity_system_using_aws_mapreduce_spark.multimodal.core import (
     DECODED_QUARANTINE_SCHEMA,
     DECODED_SCHEMA,
-    FEATURE_DIM,
-    FEATURE_SCHEMA,
     MEDIA_SCHEMA,
     STDLIB_FORMATS,
     codec_support,
     decode_media,
-    extract_features,
-    sample_frames,
     synthesize_media,
     synthesize_real_media,
 )

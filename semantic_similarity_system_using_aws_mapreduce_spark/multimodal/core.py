@@ -1,8 +1,8 @@
 """Spark-side multimodal surface: schemas, synthetic corpora, and the
-mapInPandas decode/feature plans.  The stdlib decoders live in the
-sibling modules (codecs_image / audio / codecs_mp4); this module owns
-everything the query layer touches: decode_media, extract_features,
-sample_frames, codec_support, and the two synthesizers."""
+mapInPandas decode plan.  The stdlib decoders live in the sibling
+modules (codecs_image / audio / codecs_mp4); this module owns
+everything the query layer touches: decode_media, codec_support, and
+the two synthesizers."""
 
 from __future__ import annotations
 
@@ -48,9 +48,6 @@ DECODED_SCHEMA = (
     "pixels_or_samples long"
 )
 DECODED_QUARANTINE_SCHEMA = DECODED_SCHEMA + ", error string"
-
-FEATURE_DIM = 16
-FEATURE_SCHEMA = f"media_id long, feature array<float>"
 
 
 def synthesize_media(spark: SparkSession, n: int = 64, seed: int = 7) -> DataFrame:
@@ -218,35 +215,14 @@ def _real_decode(pdf: pd.DataFrame, support: dict[str, bool],
     )
 
 
-def _fake_decode(pdf: pd.DataFrame) -> pd.DataFrame:
-    checksums = [
-        int(np.frombuffer(d, dtype=np.uint8).astype(np.int64).sum()) for d in pdf["data"]
-    ]
-    pixels = [
-        (w * h if k == "image" else len(d))
-        for k, d, w, h in zip(pdf["kind"], pdf["data"], pdf["width"], pdf["height"])
-    ]
-    return pd.DataFrame(
-        {
-            "media_id": pdf["media_id"],
-            "kind": pdf["kind"],
-            "n_bytes": [len(d) for d in pdf["data"]],
-            "checksum": checksums,
-            "pixels_or_samples": pixels,
-        }
-    )
-
-
-def decode_media(media: DataFrame, decoder: str = "fake",
-                 on_error: str = "raise") -> DataFrame:
+def decode_media(media: DataFrame, on_error: str = "raise") -> DataFrame:
     """Decode binary payloads to per-item metadata via mapInPandas.
 
-    ``decoder="real"`` decodes the stdlib formats (24-bit BMP, PCM16
-    WAV, y4m, MP4 frame counts: :data:`STDLIB_FORMATS`) with no
-    external library, and dispatches every other format to the codec
-    library for its kind (PIL / soundfile / av, per
-    :func:`codec_support`); with no library the row raises
-    NotImplementedError.
+    Decodes the stdlib formats (24-bit BMP, PCM16 WAV, y4m, MP4 frame
+    counts: :data:`STDLIB_FORMATS`) with no external library, and
+    dispatches every other format to the codec library for its kind
+    (PIL / soundfile / av, per :func:`codec_support`); with no library
+    the row raises NotImplementedError.
 
     ``on_error`` picks the failure semantics for a payload nothing can
     decode (or that is corrupt): ``"raise"`` fails the task loudly —
@@ -255,67 +231,15 @@ def decode_media(media: DataFrame, decoder: str = "fake",
     column naming the exception), the same per-record philosophy as
     the WARC reader — at crawl scale one torn image must never kill a
     stage after hours of work.  The Spark plan is identical across
-    decoders and error modes; only the inner pandas function and the
-    declared schema change."""
+    error modes; only the declared schema changes."""
     if on_error not in ("raise", "quarantine"):
         raise ValueError(f"unknown on_error mode {on_error!r}")
-    support = codec_support() if decoder == "real" else {}
+    support = codec_support()
     quarantine = on_error == "quarantine"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decoder == "real":
-                yield _real_decode(pdf, support, quarantine=quarantine)
-            else:
-                out = _fake_decode(pdf)
-                if quarantine:  # fake decode is total; errors all null
-                    out = out.assign(error=None)
-                yield out
+            yield _real_decode(pdf, support, quarantine=quarantine)
 
     schema = DECODED_QUARANTINE_SCHEMA if quarantine else DECODED_SCHEMA
     return media.mapInPandas(run, schema=schema)
-
-
-def extract_features(media: DataFrame) -> DataFrame:
-    """Fixed-width float feature vector per item (deterministic stand-in
-    for an embedding model): byte-histogram folded to FEATURE_DIM and
-    l2-normalized.  Shape/partitioning identical to a real extractor."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for d in pdf["data"]:
-                hist = np.bincount(
-                    np.frombuffer(d, dtype=np.uint8), minlength=256
-                ).astype(np.float64)
-                folded = hist.reshape(FEATURE_DIM, -1).sum(axis=1)
-                norm = np.linalg.norm(folded)
-                feats.append((folded / norm if norm else folded).astype(np.float32))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "feature": [list(f) for f in feats]}
-            )
-
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Frame sampling for video payloads: emit n_frames evenly-spaced
-    byte slices per video (1 row in -> n rows out through the Arrow
-    batch iterator — the UDTF/fan-out shape of a real frame sampler)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_idx, out_frame = [], [], []
-            for mid, kind, data in zip(pdf["media_id"], pdf["kind"], pdf["data"]):
-                if kind != "video":
-                    continue
-                step = max(len(data) // n_frames, 1)
-                for fi in range(n_frames):
-                    out_id.append(mid)
-                    out_idx.append(fi)
-                    out_frame.append(bytes(data[fi * step : fi * step + step]))
-            yield pd.DataFrame(
-                {"media_id": out_id, "frame_idx": out_idx, "frame": out_frame}
-            )
-
-    return media.mapInPandas(run, schema="media_id long, frame_idx int, frame binary")

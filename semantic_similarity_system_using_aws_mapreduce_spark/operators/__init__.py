@@ -20,7 +20,7 @@ persisted blocks behind.
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.ann import quantize_embeddings
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.assoc import association_measures, joined_counts
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.asof import asof_join
-from semantic_similarity_system_using_aws_mapreduce_spark.operators.counts import corpus_counts, observed_emissions
+from semantic_similarity_system_using_aws_mapreduce_spark.operators.counts import corpus_counts
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import (
     exact_dedup,
     lsh_candidates,
@@ -33,7 +33,6 @@ from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.graph import connected_components
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.pair_vectors import pair_feature_matrix, pair_vectors
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.similarity import similarity_measures
-from semantic_similarity_system_using_aws_mapreduce_spark.operators.skew import salted_join, top_keys
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.text_analysis import (
     identify_language,
     rolling_fingerprint,
@@ -51,16 +50,13 @@ __all__ = [
     "lsh_candidates",
     "minhash_signatures",
     "ngram_jaccard_pairs",
-    "observed_emissions",
     "pair_feature_matrix",
     "pair_vectors",
     "quantize_embeddings",
     "rolling_fingerprint",
-    "salted_join",
     "shingle_hashes",
     "simhash",
     "simhash_near_dups",
     "similarity_measures",
     "token_stats",
-    "top_keys",
 ]

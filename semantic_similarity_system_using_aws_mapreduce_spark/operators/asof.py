@@ -1,27 +1,20 @@
-"""As-of (nearest-in-time) join — an operator Spark lacks natively
+"""As-of (latest-at-or-before) join — an operator Spark lacks natively
 (SURVEY.md §2.4 lists it as engine-added capability).
 
 Implemented as a composition of built-in ops (the preferred strategy):
 union the two sides tagged, sort within the partition key by event
-time, and carry right-side rows across with window fills:
-
-  * ``backward`` — latest right row with right_time <= left_time:
-    ``last(..., ignorenulls)`` over UNBOUNDED PRECEDING .. CURRENT ROW.
-  * ``forward`` — earliest right row with right_time >= left_time:
-    ``first(..., ignorenulls)`` over CURRENT ROW .. UNBOUNDED FOLLOWING.
-  * ``nearest`` — whichever of the two is closer in absolute time
-    (ties prefer the backward match, matching pandas ``merge_asof``).
+time, and carry right-side rows forward with a window fill —
+``last(..., ignorenulls)`` over UNBOUNDED PRECEDING .. CURRENT ROW.
 
 One shuffle on the key — same cost as a sort-merge join, no custom
-state (``nearest`` adds a second in-partition sort over the same
-exchange, still one shuffle).  For very large windows an alternative
-is bucketized join + ``pd.merge_asof`` per group (applyInPandas); this
-version stays fully JVM.
+state.  For very large windows an alternative is bucketized join +
+``pd.merge_asof`` per group (applyInPandas); this version stays fully
+JVM.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -32,109 +25,49 @@ def asof_join(
     left_time: str,
     right_time: str,
     value_cols: list[str],
-    direction: str = "backward",
     right_tiebreak: str | None = None,
-    tolerance: float | None = None,
 ) -> DataFrame:
-    """For each left row, attach ``value_cols`` from the as-of right
-    row matching on the equi-key ``on``: the latest right row with
-    right_time <= left_time (``direction='backward'``), the earliest
-    with right_time >= left_time (``'forward'``), or the closer of the
-    two (``'nearest'``, ties backward).  Right columns come back with
-    an ``asof_`` prefix (NULL when no matching right row exists).
+    """For each left row, attach ``value_cols`` from the latest right
+    row with right_time <= left_time matching on the equi-key ``on``.
+    Right columns come back with an ``asof_`` prefix (NULL when no
+    matching right row exists).
 
     ``right_tiebreak`` names a right column that deterministically
-    orders right rows with equal timestamps (the greatest wins, in
-    every direction).  ``tolerance`` (seconds for timestamp time
-    columns, plain units for numeric ones) rejects matches further
-    than that from the left time, like pandas ``merge_asof``.
+    orders right rows with equal timestamps (the greatest wins).
     """
-    if direction not in ("backward", "forward", "nearest"):
-        raise ValueError(f"direction must be backward|forward|nearest, got {direction!r}")
     rtypes = dict(right.dtypes)
     tie_type = rtypes[right_tiebreak] if right_tiebreak else "int"
-    fill_cols = list(value_cols) + ["_rt"]
     lt = left.select(
         F.col(on), F.col(left_time).alias("_t"), F.lit(1).alias("_is_left"),
         F.lit(None).cast(tie_type).alias("_tie"),
         F.struct(*[F.col(c) for c in left.columns]).alias("_l"),
         *[F.lit(None).cast(rtypes[c]).alias(f"asof_{c}") for c in value_cols],
-        F.lit(None).cast(rtypes[right_time]).alias("asof__rt"),
     )
     rt = right.select(
         F.col(on), F.col(right_time).alias("_t"), F.lit(0).alias("_is_left"),
         (F.col(right_tiebreak) if right_tiebreak else F.lit(0)).cast(tie_type).alias("_tie"),
         F.lit(None).cast(lt.schema["_l"].dataType).alias("_l"),
         *[F.col(c).alias(f"asof_{c}") for c in value_cols],
-        F.col(right_time).alias("asof__rt"),
     )
-    merged = lt.unionByName(rt)
-
-    # backward frame: right rows sort before left rows at equal
-    # timestamps so a same-instant right row is visible to the left row
-    # (<= semantics); equal-time right rows order by the tiebreak with
-    # the greatest carried last (last() wins).
-    w_bw = (
+    # right rows sort before left rows at equal timestamps so a
+    # same-instant right row is visible to the left row (<= semantics);
+    # equal-time right rows order by the tiebreak with the greatest
+    # carried last (last() wins).
+    w = (
         Window.partitionBy(on)
         .orderBy("_t", "_is_left", F.col("_tie").asc_nulls_last())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    # forward frame: left rows sort before right rows at equal
-    # timestamps so a same-instant right row is inside the forward
-    # frame (>= semantics); equal-time right rows order by the tiebreak
-    # descending so first() picks the greatest.
-    w_fw = (
-        Window.partitionBy(on)
-        .orderBy("_t", F.col("_is_left").desc(), F.col("_tie").desc_nulls_last())
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-
-    def _fills(w, fn, tag: str) -> list[Column]:
-        return [
-            fn(f"asof_{c}", ignorenulls=True).over(w).alias(f"_{tag}_{c}")
-            for c in fill_cols
-        ]
-
-    ntz_time = dict(left.dtypes)[left_time] == "timestamp_ntz"
-
-    def _dist(matched_time: Column) -> Column:
-        # double cast: timestamps become epoch seconds, numerics pass
-        # through — one distance expression for both time flavors.
-        # TIMESTAMP_NTZ has no numeric cast; reinterpret as TIMESTAMP
-        # first (both operands shift identically, so the difference is
-        # timezone-invariant).
-        t, m = F.col("_t"), matched_time
-        if ntz_time:
-            t, m = t.cast("timestamp"), m.cast("timestamp")
-        return F.abs(t.cast("double") - m.cast("double"))
-
-    if direction == "backward":
-        filled = merged.select("*", *_fills(w_bw, F.last, "m"))
-    elif direction == "forward":
-        filled = merged.select("*", *_fills(w_fw, F.first, "m"))
-    else:  # nearest: fill both directions, pick the closer per row
-        filled = merged.select(
-            "*", *_fills(w_bw, F.last, "bw"), *_fills(w_fw, F.first, "fw")
-        )
-        bw_d, fw_d = _dist(F.col("_bw__rt")), _dist(F.col("_fw__rt"))
-        take_bw = F.col("_fw__rt").isNull() | (
-            F.col("_bw__rt").isNotNull() & (bw_d <= fw_d)
-        )
-        filled = filled.select(
-            "*",
+    return (
+        lt.unionByName(rt)
+        .select(
+            "_is_left",
+            "_l",
             *[
-                F.when(take_bw, F.col(f"_bw_{c}")).otherwise(F.col(f"_fw_{c}")).alias(f"_m_{c}")
-                for c in fill_cols
+                F.last(f"asof_{c}", ignorenulls=True).over(w).alias(f"asof_{c}")
+                for c in value_cols
             ],
         )
-
-    keep: Column = F.lit(True)
-    if tolerance is not None:
-        keep = _dist(F.col("_m__rt")) <= F.lit(float(tolerance))
-    return filled.filter(F.col("_is_left") == 1).select(
-        F.col("_l.*"),
-        *[
-            F.when(keep, F.col(f"_m_{c}")).alias(f"asof_{c}")
-            for c in value_cols
-        ],
+        .filter(F.col("_is_left") == 1)
+        .select(F.col("_l.*"), *[f"asof_{c}" for c in value_cols])
     )

@@ -45,27 +45,7 @@ class CorpusCounts:
     totals: DataFrame
 
 
-def observed_emissions(emissions: DataFrame, name: str = "totals"):
-    """True single-pass totals via the Observation API: the L/F sums
-    accumulate as a side effect of whatever action executes the
-    emissions next — the exact analog of the reference's Hadoop
-    counters accumulating during the map phase (Step1.java:73-74),
-    without a second scan.  Returns (emissions, observation); read
-    ``observation.get`` after an action has run.
-
-    CAVEAT (Spark 4.1): a used Observation leaves a query-execution
-    listener behind that can break LATER cache materialization in the
-    same session ("Task not serializable" at closure clean).  Use from
-    a dedicated ``spark.newSession()`` when the session lives on."""
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    return emissions.observe(obs, F.sum("count").alias("L"), F.sum("count").alias("F")), obs
-
-
-def corpus_counts(
-    emissions: DataFrame, totals: DataFrame | None = None
-) -> CorpusCounts:
+def corpus_counts(emissions: DataFrame) -> CorpusCounts:
     """Aggregate the per-token emission relation (sources.biarcs.
     token_emissions) into lexeme / feature / pair counts and totals.
 
@@ -83,9 +63,6 @@ def corpus_counts(
     pair_counts in non-checkpointed mode so all four branches share
     one materialization even when physical-plan canonicalization
     (per-branch join-key isnotnull pushdown) defeats ReusedExchange.
-
-    Callers that already know L/F (e.g. the checkpointed pipeline's
-    Observation side-channel) pass a literal 1-row ``totals``.
     """
     pair_counts = emissions.groupBy("lexeme", "feature").agg(
         F.sum("count").alias("lf_count")
@@ -96,8 +73,7 @@ def corpus_counts(
     feature_counts = pair_counts.groupBy("feature").agg(
         F.sum("lf_count").alias("f_count")
     )
-    if totals is None:
-        totals = pair_counts.agg(
-            F.sum("lf_count").alias("L"), F.sum("lf_count").alias("F")
-        )
+    totals = pair_counts.agg(
+        F.sum("lf_count").alias("L"), F.sum("lf_count").alias("F")
+    )
     return CorpusCounts(lexeme_counts, feature_counts, pair_counts, totals)

@@ -6,19 +6,17 @@ md5 per shingle, universal-hash minhashes (codegen'd integer math),
 banded LSH joins, and explode+groupBy plans instead of interpreted
 higher-order lambdas.
 
-Hash-function choice: md5 (via :func:`md5_int`) is the CROSS-ENGINE
-VERIFICATION contract — DuckDB reproduces it bit-for-bit, which is what
-lets the correctness gate hash-compare every dedup query.  In a pure
-production deployment where no second engine needs to replay the
-pipeline, the cheaper scan is a FLAG, not a rewrite (r11, VERDICT r10
-#5): pass ``hash_fn=xxhash64_int`` to :func:`shingle_hashes` (and the
-signatures/LSH/jaccard stages downstream are hash-agnostic over any
-64-bit ``h``; measured deltas in xxhash64_int's docstring), or
-``token_hash=blake2b_token_hash`` to :func:`simhash`
-/ :func:`simhash_near_dups`.  Dedup DECISIONS are hash-independent on
-non-adversarial corpora (test_dedup pins identical survivor/candidate
-sets across both modes); only the raw fingerprint bytes differ, so the
-oracle queries stay on md5.
+Hash-function choice: md5 (via :func:`md5_int`, and its Python twin
+:func:`md5_token_hash` in the simhash kernel) is the CROSS-ENGINE
+VERIFICATION contract -- DuckDB reproduces it bit-for-bit, which is
+what lets the correctness gate hash-compare every dedup query.
+:func:`shingle_hashes` also takes ``hash_fn=xxhash64_int``, the
+cheaper production scan (measured deltas in xxhash64_int's
+docstring): the signatures/LSH/jaccard stages downstream are
+hash-agnostic over any 64-bit ``h``, so dedup DECISIONS are
+hash-independent on non-adversarial corpora (test_dedup_operators
+pins identical verified pairs under both hashes); only the raw hash
+values differ, so the oracle queries stay on md5.
 """
 
 from __future__ import annotations
@@ -38,7 +36,9 @@ B = [12345, 98765, 55555, 31337, 77777, 13579, 24680, 424242]
 
 #: The minhash signature config every caller shares: one component per
 #: universal hash, banded N_BANDS x ROWS_PER_BAND for the LSH joins
-#: (the lsh_plan optimum for the 0.8 jaccard threshold at 8 hashes).
+#: (a pair at jaccard s is a candidate with probability
+#: 1 - (1 - s^2)^4: 0.98 at the 0.8 verify threshold, 1/2 near 0.40,
+#: so the banding leans to recall and the jaccard verify drops the rest).
 N_HASHES = len(A)
 N_BANDS, ROWS_PER_BAND = 4, 2
 
@@ -57,18 +57,18 @@ def xxhash64_int(col: Column) -> Column:
     downstream universal-hash / banding / bucketing expression keeps
     its ``products < 2^62`` overflow-freedom guarantee unchanged.
 
-    Measured honestly (r11, sf0.1, warm): the hash swap cuts the
+    Measured at sf0.1, warm: the hash swap cuts the
     shingle-hash SCAN stage ~1.2x (0.72 -> 0.58 s — the tokenize +
     shingle explode dominates that stage, not the hash expression),
     and the end-to-end LSH candidates row is parity (0.46 vs 0.47 s)
     because the band self-join's shuffle dominates end-to-end.  The
-    flag pays off where the 100 TB deployment actually spends:
+    cheaper hash pays off where the 100 TB deployment actually spends:
     scan-bound passes over long documents (hash arithmetic per
     shingle grows with document length while the explode cost is
     fixed per token) and md5's per-row allocation pressure.  NOT
     cross-engine verifiable (xxhash64's seed/variant is
     Spark-specific), which is exactly why the oracle queries stay on
-    md5 and this is the deployment flag."""
+    md5."""
     return F.shiftrightunsigned(F.xxhash64(col), 4)
 
 
@@ -145,7 +145,7 @@ def shingle_hashes(
     # keyed by doc_id ALONE, so every downstream per-doc aggregation —
     # minhash_signatures' groupBy, the jaccard/containment sizes
     # groupBy — reuses the partitioning instead of re-shuffling the
-    # whole corpus-shingle relation a second time (r12; the win
+    # whole corpus-shingle relation a second time (the win
     # survives a persist because InMemoryTableScan reports the cached
     # plan's output partitioning).  Per-group state is one doc's
     # distinct-shingle set — bounded by document length, the same
@@ -412,29 +412,11 @@ def md5_token_hash(token: bytes) -> int:
     return int(hashlib.md5(token).hexdigest()[:15], 16)
 
 
-def blake2b_token_hash(token: bytes) -> int:
-    """Production token hash for the simhash kernel: an 8-byte
-    blake2b digest (C-implemented in hashlib, measurably cheaper than
-    md5 per call and with a shorter int conversion), shifted into the
-    same non-negative 60-bit domain.  The JVM's xxhash64 is not
-    reachable from an Arrow worker without paying an explode+shuffle —
-    exactly what the zero-shuffle kernel exists to avoid — so the
-    cheap-hash flag on THIS operator is the cheapest stable hash the
-    Python stdlib offers.  NOT cross-engine verifiable; oracle
-    queries stay on md5."""
-    import hashlib
-
-    return int.from_bytes(
-        hashlib.blake2b(token, digest_size=8).digest(), "big"
-    ) >> 4
-
-
 def simhash(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n_bits: int = 60,
-    token_hash=md5_token_hash,
 ) -> DataFrame:
     """(doc_id, simhash): tf-weighted sign-sum fingerprint over token
     hashes; near-dup ⇔ small Hamming distance.
@@ -442,23 +424,20 @@ def simhash(
     Simhash is a PER-DOCUMENT computation, so the 100 TB plan is a pure
     map: one Arrow-batched kernel per partition, ZERO shuffles.  The
     kernel tokenizes exactly like :func:`tokens` (split on space, drop
-    empties), hashes each distinct token with ``token_hash``
-    (:func:`md5_token_hash` by default — bit-identical to
-    :func:`md5_int` and to the DuckDB oracle expression;
-    :func:`blake2b_token_hash` is the cheaper production flag — either
-    way memoized per batch because vocabulary is Zipfian, so the hash
-    constant is paid once per distinct token, not once per
+    empties), hashes each distinct token with :func:`md5_token_hash`
+    (bit-identical to :func:`md5_int` and to the DuckDB oracle
+    expression; memoized per batch because vocabulary is Zipfian, so
+    the hash constant is paid once per distinct token, not once per
     occurrence), then computes all ``n_bits`` tf-weighted sign-sums in
     one numpy matrix op per document.  Integer math end to end, so the
-    fingerprint is deterministic and (under md5) hash-verifiable
-    cross-engine.
+    fingerprint is deterministic and hash-verifiable cross-engine.
 
     Formulation history (measured at sf0.1, 32 threads): 60 parallel
     sum(when(...)) aggregate buffers in one shuffle blew the JVM 64 KB
     codegen limit and fell back to interpreted evaluation (~13 s);
     explode to (doc_id, bit, sign) + two-level groupBy stayed inside
-    codegen but fanned every token occurrence out 60x (9.0 s, the r3
-    bench regression); this kernel does the same arithmetic in numpy at
+    codegen but fanned every token occurrence out 60x (9.0 s); this
+    kernel does the same arithmetic in numpy at
     ~3.5 s cold / ~0.7 s warm — and removes both shuffles, which at
     100 TB matters more than the constant."""
     import numpy as np
@@ -477,7 +456,7 @@ def simhash(
                         continue
                     h = cache.get(t)
                     if h is None:
-                        h = token_hash(t.encode("utf-8"))
+                        h = md5_token_hash(t.encode("utf-8"))
                         cache[t] = h
                     tf[h] = tf.get(h, 0) + 1
                 if not tf:
@@ -504,7 +483,6 @@ def simhash_near_dups(
     n_bits: int = 60,
     id_col: str = "doc_id",
     text_col: str = "text",
-    token_hash=md5_token_hash,
 ) -> DataFrame:
     """Near-duplicate pairs by simhash Hamming distance, found WITHOUT
     an all-pairs comparison: split the fingerprint into ``n_bands``
@@ -534,9 +512,9 @@ def simhash_near_dups(
     width = n_bits // n_bands
     mask = (1 << width) - 1
     # caller-owned cache: operators/__init__ ownership contract
-    sh = simhash(
-        df, id_col=id_col, text_col=text_col, n_bits=n_bits, token_hash=token_hash
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = simhash(df, id_col=id_col, text_col=text_col, n_bits=n_bits).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     bands = sh.select(
         "doc_id",
         "simhash",
@@ -990,8 +968,7 @@ def bloom_probe(
     the same shape as q_decontaminate's broadcast shingle probe.  (An
     earlier formulation exploded k probe rows per key and re-grouped
     by key to AND them — a corpus-sized hash shuffle that defeated the
-    point of the filter; VERDICT r4 flagged it and this rewrite
-    removed it.)"""
+    point of the filter.)"""
     bitmap = bloom.groupBy().agg(
         F.map_from_entries(
             F.array_sort(F.collect_list(F.struct("word_idx", "bits")))
@@ -1060,7 +1037,7 @@ def prefix_jaccard_join(
     # and both verify sides — persist so the tokenize+shingle+md5
     # chain runs once (the duplicate_spans / lsh_candidates pattern)
     hashes = hashes.persist(StorageLevel.MEMORY_AND_DISK)  # caller-owned: __init__ contract
-    # n folded into the ranking window (r13, VERDICT r12 #7): the
+    # n folded into the ranking window: the
     # row_number window already shuffles hashes⨝dfreq by doc_id, and
     # count(*) over the SAME partition IS the per-doc shingle count:
     # dfreq covers every h, so the inner join preserves all of a doc's
@@ -1138,9 +1115,9 @@ def prefix_containment_join(
     # the RANKED relation no longer joins it — n rides the ranking
     # window itself, on the SAME (partition, order) spec as row_number
     # with a whole-partition frame so both evaluate in one WindowExec
-    # over one sort (r13, VERDICT r12 #7, same fold as the jaccard
-    # form; dfreq's inner join preserves every row, so the windowed
-    # count equals the aggregate)
+    # over one sort (the same fold as the jaccard form; dfreq's inner
+    # join preserves every row, so the windowed count equals the
+    # aggregate)
     sizes = hashes.groupBy("doc_id").agg(F.count("*").alias("n"))
     dfreq = hashes.groupBy("h").agg(F.count("*").alias("df"))
     w_rank = Window.partitionBy("doc_id").orderBy("df", "h")
@@ -1221,7 +1198,7 @@ def source_overlap(sh: DataFrame, sources: DataFrame | None = None) -> DataFrame
     second form: it deletes the corpus-sized doc_id join outright.
 
     Plan (inverted index, never a doc-level or source-level all-pairs
-    join; reworked r12): ONE corpus-sized shuffle — groupBy h whose
+    join): ONE corpus-sized shuffle — groupBy h whose
     partial collect_set dedups (source, h) occurrences map-side, so
     the old separate (source,h)-distinct exchange bought nothing —
     collecting the <= S-long sorted source set per shingle.  That
@@ -1229,9 +1206,8 @@ def source_overlap(sh: DataFrame, sources: DataFrame | None = None) -> DataFrame
     pair expansion (array expressions -> partial-agg count per pair,
     <= S^2 groups) and the per-source sizes (explode the sets back
     out -> count per source == distinct (source,h) count, since sets
-    are deduped) — previously the sizes branch RE-RAN the whole
-    scan+distinct lineage (plan audit r12: the full shingle subtree
-    appeared twice, no exchange reuse).  Per-shingle work is bounded
+    are deduped), so the shingle subtree appears once in the plan
+    instead of once per branch.  Per-shingle work is bounded
     by S^2 regardless of posting-list length, so a shingle present in
     every source costs S^2, not |postings|^2 — the same hot-key bound
     the banded-LSH plans rely on.  The S-source set also caps
@@ -1285,117 +1261,3 @@ def source_overlap(sh: DataFrame, sources: DataFrame | None = None) -> DataFrame
             ).alias("jaccard"),
         )
     )
-
-
-def source_overlap_kmv(
-    sh: DataFrame, sources: DataFrame, k: int = 256, pregate: bool = True
-) -> DataFrame:
-    """KMV (bottom-k) ESTIMATE of the pairwise source Jaccard matrix —
-    the sketch path that replaces :func:`source_overlap`'s exact
-    inverted index when the per-source distinct-shingle sets are too
-    large to co-shuffle: per-source state collapses to k int64s, and
-    the pairwise estimation runs over an S*k-row relation.
-
-    Estimator: with M = the k smallest of A union B (merge of the two
-    bottom-k sketches), J-hat = |M intersect A intersect B| / |M| —
-    the classic KMV coincidence ratio, std err ~ 1/sqrt(k).
-
-    The bottom-k per source is a window rank.  At scale, sorting every
-    (source, h) row just to keep k is wasteful, so ``pregate`` first
-    estimates each source's distinct count (approx_count_distinct, a
-    fixed-size HLL per source) and discards rows hashing above
-    ~4k/n_distinct of the hash space before the window — the sort then
-    touches ~4k rows per source instead of n.  The 4x margin makes
-    losing a true bottom-k member a <= exp(-k) tail event (Chernoff on
-    Binomial(n, 4k/n) < k), and tests pin gated == ungated on real
-    data.  Output: (src_a, src_b, est_jaccard) for all pairs."""
-    ss = sh.join(sources, "doc_id").select("source", "h").distinct()
-    if pregate:
-        nd = ss.groupBy("source").agg(F.approx_count_distinct("h").alias("_nd"))
-        cut = nd.select(
-            "source",
-            F.when(
-                F.col("_nd") > 4 * k,
-                (F.lit(float(2**60)) * (4.0 * k) / F.col("_nd")).cast("long"),
-            )
-            .otherwise(F.lit(2**62))
-            .alias("_cut"),
-        )
-        ss = ss.join(F.broadcast(cut), "source").filter(F.col("h") <= F.col("_cut"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("source").orderBy("h")
-    sk = (
-        ss.select("source", "h")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .groupBy("source")
-        .agg(F.sort_array(F.collect_list("h")).alias("kmv"))
-    )
-    a = sk.select(F.col("source").alias("src_a"), F.col("kmv").alias("ka"))
-    b = sk.select(F.col("source").alias("src_b"), F.col("kmv").alias("kb"))
-    merged = F.slice(F.array_sort(F.array_union("ka", "kb")), 1, k)
-    both = F.array_intersect("ka", "kb")
-    return (
-        a.join(b, F.col("src_a") < F.col("src_b"))
-        .select(
-            "src_a",
-            "src_b",
-            F.round(
-                F.size(F.array_intersect(merged, both)) / F.size(merged), 6
-            ).alias("est_jaccard"),
-        )
-    )
-
-
-def lsh_plan(
-    threshold: float, n_hashes: int = N_HASHES, resolution: int = 1000
-) -> dict:
-    """Pick (n_bands, rows_per_band) for :func:`lsh_candidates` from a
-    target Jaccard threshold — the S-curve calculus every MinHash-LSH
-    deployment does by hand (Leskovec/Rajaraman/Ullman, MMDS ch. 3).
-
-    A (b bands x r rows) scheme makes a pair with similarity s a
-    candidate with probability  p(s) = 1 - (1 - s^r)^b.  Among the
-    factorizations of ``n_hashes`` this picks the one minimizing the
-    integrated error
-        ∫_0^t p(s) ds  +  ∫_t^1 (1 - p(s)) ds
-    (false-candidate mass below the threshold + missed mass above it),
-    evaluated by midpoint rule at ``resolution`` points — exact enough
-    that the argmin is stable, cheap enough to run at plan time.
-
-    Returns {"n_bands", "rows_per_band", "fp_mass", "fn_mass",
-    "s50"} where s50 is the similarity at which p crosses 1/2
-    (~(1/b)^(1/r), the scheme's effective threshold).  Driver-side
-    pure arithmetic over a handful of factorizations — nothing
-    touches data."""
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    best = None
-    for r in range(1, n_hashes + 1):
-        if n_hashes % r:
-            continue
-        b = n_hashes // r
-        fp = fn = 0.0
-        for i in range(resolution):
-            s = (i + 0.5) / resolution
-            p = 1.0 - (1.0 - s**r) ** b
-            if s < threshold:
-                fp += p
-            else:
-                fn += 1.0 - p
-        fp /= resolution
-        fn /= resolution
-        err = fp + fn
-        if best is None or err < best[0]:
-            best = (err, b, r, fp, fn)
-    _err, b, r, fp, fn = best
-    # p(s50) = 1/2  =>  s50 = (1 - (1/2)^(1/b))^(1/r)
-    s50 = (1.0 - 0.5 ** (1.0 / b)) ** (1.0 / r)
-    return {
-        "n_bands": b,
-        "rows_per_band": r,
-        "fp_mass": round(fp, 6),
-        "fn_mass": round(fn, 6),
-        "s50": round(s50, 6),
-    }

@@ -552,8 +552,7 @@ def gopher_keep_col(toks_ref: str) -> Column:
 
 def gopher_rules(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Gopher-style quality-rule flags per document — the rule-based
-    quality gate (vs. the learned one in ml/quality.py and the
-    statistic signals in q_doc_quality): word-count bounds, mean word
+    quality gate (vs. the statistic signals in q_doc_quality): word-count bounds, mean word
     length in [3, 10], symbol-to-word ratio < 0.1 (`#`/ellipsis),
     >= 80% of words containing an alphabetic character, and >= 2
     distinct stop words present (the "natural English sentence"

@@ -79,11 +79,10 @@ def semantic_similarity_pipeline(
     # handful); the stemmer UDF dominates this stage, so spread the RAW
     # LINES evenly over every core before the parse + stem projections
     # (read_biarcs(spread_to=...)) — the round-robin text shuffle is
-    # trivial next to stemming.  r12 plan audit: the earlier
-    # corpus-level repartition sat ABOVE the stem UDF, so stemming ran
-    # at scan parallelism (19-way) and only the explode was spread;
-    # moving the exchange below the projections runs the whole Python
-    # stage 32-wide.  Applies to BOTH modes.
+    # trivial next to stemming.  A corpus-level repartition ABOVE the
+    # stem UDF would leave stemming at scan parallelism (19-way) and
+    # spread only the explode; the exchange below the projections runs
+    # the whole Python stage 32-wide.  Applies to BOTH modes.
     corpus = read_biarcs(
         spark, corpus_path, spread_to=spark.sparkContext.defaultParallelism
     )
@@ -132,9 +131,7 @@ def _counts_and_assoc(
     # per-row accumulation made the 1M-line write 2.3x slower (7.7s ->
     # 17.7s), far more than the vocabulary-sized aggregation it saved,
     # and it needed a throwaway child session to dodge the Spark 4.1
-    # listener leak.  observed_emissions remains available
-    # (operators/counts.py) for sinks where a re-scan is genuinely
-    # expensive and the totals must ride a write.
+    # listener leak.
     counts = corpus_counts(emissions)
     # All downstream branches (marginals, totals, the assoc join) read
     # pair_counts; persisting it caps the plan at ONE aggregation of the

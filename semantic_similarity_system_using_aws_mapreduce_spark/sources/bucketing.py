@@ -74,12 +74,6 @@ def write_bucketed(
     writer.format("parquet").saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table back with its bucket spec intact (a plain
-    ``spark.read.parquet`` of the files would lose it)."""
-    return spark.table(table)
-
-
 def warehouse_dir(spark: SparkSession) -> str:
     """The local directory managed catalog tables live under."""
     return spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")

@@ -1,14 +1,9 @@
-"""Fixture-table loader for the driver's synthetic parquet tables."""
+"""Scan helpers for the driver's synthetic parquet fixture tables."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.01"
-
 
 def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     """The events fixture's timestamp physical encoding has varied
@@ -33,8 +28,8 @@ def spread_small_scan(df: DataFrame, min_factor: int = 2) -> DataFrame:
     """Round-robin respread of a scan whose split count cannot feed
     the cluster — the parquet fixture ships as ONE sub-row-group file
     that Spark cannot split, so every downstream explode/hash stage
-    would otherwise run on one core while 31 idle (measured r5: the
-    DSIR feature explode alone was 3.3 s single-task at sf0.1).
+    would otherwise run on one core while 31 idle (measured: the DSIR
+    feature explode alone ran 3.3 s single-task at sf0.1).
 
     Use ONLY in front of work that EXPANDS the input (token explodes,
     per-shingle hashing) whose aggregates are order-independent
@@ -49,8 +44,3 @@ def spread_small_scan(df: DataFrame, min_factor: int = 2) -> DataFrame:
     if df.rdd.getNumPartitions() * min_factor >= p:
         return df
     return df.repartition(p)
-
-
-def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
-    sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

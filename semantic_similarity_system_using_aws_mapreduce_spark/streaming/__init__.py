@@ -1,15 +1,3 @@
-from semantic_similarity_system_using_aws_mapreduce_spark.streaming.events import (
-    read_event_stream,
-    run_to_memory,
-    session_aggregates,
-    sliding_value_avg,
-    tumbling_counts,
-)
-
-__all__ = [
-    "read_event_stream",
-    "run_to_memory",
-    "session_aggregates",
-    "sliding_value_avg",
-    "tumbling_counts",
-]
+"""Structured Streaming over the documents table: continuous-ingest
+curation (documents.py), its paragraph-level dedup (paragraphs.py) and
+the BM25 retrieval tables it maintains (retrieval.py)."""

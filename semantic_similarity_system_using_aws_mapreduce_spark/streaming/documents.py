@@ -51,6 +51,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import (
     N_HASHES,
@@ -64,6 +65,7 @@ from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import
 from semantic_similarity_system_using_aws_mapreduce_spark.session import local_relation
 from semantic_similarity_system_using_aws_mapreduce_spark.sources.atomic import (
     atomic_replace,
+    live_table_dir,
     read_parquet_recovering,
     resolve_table_dir,
 )
@@ -102,6 +104,11 @@ SIG_BUCKET_DDL = "doc_id BIGINT, band INT, " + ", ".join(
     f"{k} BIGINT" for k in SIG_BUCKET_KEYS[1:]
 )
 
+#: the signature index's columns (partitioned by ``ingest_batch``):
+#: the writer conforms to them and the per-batch probe reads with them,
+#: so no read infers a schema (a footer-reading Spark job per read)
+SIG_INDEX_DDL = "doc_id BIGINT, " + ", ".join(f"h{k} BIGINT" for k in range(N_HASHES))
+
 #: target rows per file of a compacted base partition (:func:`compact_index`)
 ROWS_PER_COMPACTED_FILE = 2_000_000
 
@@ -116,6 +123,10 @@ ROWS_PER_COMPACTED_FILE = 2_000_000
 #: from a column-pruned filter of these 4 columns instead of scanning
 #: the corpus, and RTBF chain expansion walks these edges.
 DIGESTS_SUFFIX = "_digests"
+#: the digests table's columns, ``{ts}`` the stream's timestamp column
+#: (stored as TIMESTAMP: every reader compares it as unix micros); the
+#: writer conforms to them and the per-batch decision reads with them
+DIGESTS_DDL = "doc_id BIGINT, digest STRING, `{ts}` TIMESTAMP, supersedes BIGINT"
 
 #: sentinel ``ingest_batch`` value for compacted history — Structured
 #: Streaming batch ids start at 0, so -1 can never collide with a live
@@ -217,10 +228,10 @@ def read_document_stream(
         )
         records = warc_records(files)
         if source_format == "wet":
-            # record-level quarantine parity with the WARC branch
-            # (r10, VERDICT r9 #5): corrupt WET framing rows ride the
-            # docs stream behind the same flag so the ingest loop
-            # lands them in <corpus>_rejects — a torn archive must be
+            # record-level quarantine parity with the WARC branch:
+            # corrupt WET framing rows ride the docs stream behind
+            # the same flag so the ingest loop lands them in
+            # <corpus>_rejects — a torn archive must be
             # distinguishable from an empty one on the streaming
             # lifecycle too, not only through the batch CLI
             docs, rejects = wet_documents(records)
@@ -232,7 +243,8 @@ def read_document_stream(
             # instead of silently narrowing the batch readers'
             # (docs, rejects) contract.  Record-level corrupt framing
             # rows (which response_bodies filters out before shaping)
-            # join them through the same projection (r10 parity).
+            # join them through the same projection, as in the WET
+            # branch.
             docs, rejects = warc_text_documents(records)
             shaped = rejects.drop("http_status").unionByName(
                 _shape_record_rejects(records.filter(F.col("corrupt")), docs)
@@ -250,18 +262,13 @@ def read_document_stream(
     )
 
 
-def quality_gate(stream: DataFrame, min_tokens: int, min_ttr: float) -> DataFrame:
-    """Stateless streaming quality gate — the batch curation funnel's
-    flag stage applied as a pure map on the stream (same thresholds,
-    same statistics: token count and type-token ratio, plus — when the
-    ingest path supplies the WARC decode's ``n_repl`` column — the
-    same integer cross-multiplied mojibake-density reject as
-    run_curation.curate)."""
-    return _gate_flag(stream, min_tokens, min_ttr).filter("_gated").drop("_gated")
-
-
 def _gate_flag(stream: DataFrame, min_tokens: int, min_ttr: float) -> DataFrame:
-    """``stream`` plus :func:`quality_gate`'s verdict as ``_gated``."""
+    """``stream`` plus the stateless quality-gate verdict as ``_gated``:
+    the batch curation funnel's flag stage applied as a pure map (same
+    thresholds, same statistics: token count and type-token ratio,
+    plus -- when the ingest path supplies the WARC decode's ``n_repl``
+    column -- the same integer cross-multiplied mojibake-density reject
+    as run_curation.curate)."""
     toks = tokens(F.col("text"))
     flagged = stream.withColumn("_toks", toks).withColumn(
         "_ttr", F.size(F.array_distinct("_toks")) / F.size("_toks")
@@ -538,6 +545,20 @@ def _id_frame(spark: SparkSession, ids, col: str = "doc_id") -> DataFrame:
     )
 
 
+def _conform(df: DataFrame, ddl: str) -> DataFrame:
+    """``df``'s columns named in ``ddl``, in its order and types."""
+    return df.select(
+        *[F.col(f.name).cast(f.dataType) for f in StructType.fromDDL(ddl)]
+    )
+
+
+def _read_fixed(spark: SparkSession, path: str, ddl: str) -> DataFrame | None:
+    """The table at ``path`` read with the schema its writer conformed
+    to (partition columns appended), or None before its first row."""
+    d = live_table_dir(path)
+    return None if d is None else spark.read.schema(ddl).parquet(d)
+
+
 def _micros(col: str):
     """``col`` as unix MICROSECONDS: every newer-than comparison is then
     exact int64 arithmetic, with None for null."""
@@ -662,7 +683,9 @@ def _exact_decision(
         ((r["digest"], r["doc_id"], r["_us"]) for r in rows if r["_gated"]), set()
     )
     d = _Decision(ts=dict(winners.values()))
-    dindex = read_parquet_recovering(c.spark, c.corpus_path + DIGESTS_SUFFIX)
+    dindex = _read_fixed(
+        c.spark, c.corpus_path + DIGESTS_SUFFIX, DIGESTS_DDL.format(ts=c.ts_col)
+    )
     if dindex is None:
         d.fresh = sorted(d.ts)
         return d
@@ -740,7 +763,7 @@ def _sig_probe(
     (None before the first write), and with a bucket table its live
     version less this batch's own rows plus the parquet tail the
     version does not cover."""
-    index = read_parquet_recovering(c.spark, c.index_path)
+    index = _read_fixed(c.spark, c.index_path, SIG_INDEX_DDL)
     if index is None:
         return None, None
     probe = c.bucket_index_table and bucket_probe(
@@ -832,13 +855,14 @@ def _write_admitted(
     column and no digests table."""
     admit = _id_frame(c.spark, d.admit_ids())
     admitted = gated.join(admit, "doc_id")
-    writes = [(sigs_all.join(admit, "doc_id"), c.index_path)]
+    writes = [(_conform(sigs_all.join(admit, "doc_id"), SIG_INDEX_DDL), c.index_path)]
     if c.keep_newest:
         # every admitted doc is its digest's batch winner
         admitted = _with_supersedes(c, admitted, d.sup_pairs + d.nsup_pairs)
         writes.append((
-            admitted.select(
-                "doc_id", F.md5("text").alias("digest"), c.ts_col, "supersedes"
+            _conform(
+                admitted.withColumn("digest", F.md5("text")),
+                DIGESTS_DDL.format(ts=c.ts_col),
             ),
             c.corpus_path + DIGESTS_SUFFIX,
         ))
@@ -1124,127 +1148,6 @@ def run_streaming_curation(
         stream
         .writeStream.foreachBatch(_apply)
         .option("checkpointLocation", corpus_path + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def run_streaming_token_sketch(
-    spark: SparkSession,
-    source_dir: str,
-    sketch_path: str,
-    d: int = 3,
-    w: int = 512,
-) -> None:
-    """Continuous heavy-hitter tracking: each micro-batch's token
-    count-min sketch merges CELL-WISE into a persisted sketch table —
-    the streaming face of workload/text.q_cms_heavy_hitters.
-
-    CMS merge is exact addition, so after draining any prefix of the
-    stream the persisted sketch is BIT-IDENTICAL to the batch sketch
-    over the documents ingested so far (the test asserts it) — unlike
-    windowed streaming aggregations there is no watermark and nothing
-    is ever evicted, because the state is d*w cells however much text
-    flows through.
-
-    Replay safety: unlike a pure-addition merge, each write stamps the
-    applied batch id onto every row, and a micro-batch whose id is
-    already <= the stamp is SKIPPED — foreachBatch is at-least-once (a
-    crash between the table rewrite and the checkpoint commit replays
-    the batch), and without the stamp a replayed delta would
-    double-count every cell it touches.  The rewrite itself goes
-    through :func:`~..sources.atomic.atomic_replace` (temp write +
-    atomic directory swap): the stamp is only ever observed on a
-    COMPLETE snapshot, closing the torn-overwrite window the earlier
-    in-place ``mode("overwrite")`` had, where a crash mid-rewrite
-    could leave a partial sketch already carrying the new batch id (so
-    the replay was skipped and the torn state never repaired) — or
-    lose the table outright.  Reads heal interrupted swaps first
-    (:func:`~..sources.atomic.read_parquet_recovering`)."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.text_analysis import cms_sketch
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        prev = read_parquet_recovering(spark, sketch_path)
-        if prev is not None:
-            applied = prev.agg(F.max("applied_batch_id")).first()[0]
-            if applied is not None and batch_id <= applied:
-                return  # at-least-once replay of an already-merged batch
-        toks = batch.select(F.explode(tokens(F.col("text"))).alias("token"))
-        delta = cms_sketch(toks, d, w)
-        if prev is not None:
-            merged = (
-                delta.unionByName(prev.select("i", "cell", "c"))
-                .groupBy("i", "cell")
-                .agg(F.sum("c").alias("c"))
-            )
-        else:
-            merged = delta
-        atomic_replace(
-            merged.withColumn("applied_batch_id", F.lit(batch_id)), sketch_path
-        )
-
-    (
-        read_document_stream(spark, source_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", sketch_path + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def run_streaming_quantile_sketch(
-    spark: SparkSession,
-    source_dir: str,
-    sketch_path: str,
-    k: int = 256,
-    salt: str = "qsk",
-) -> None:
-    """Continuous distribution tracking: each micro-batch's document
-    token counts fold into a persisted hash-bottom-k sample — the
-    streaming face of q_quantile_sketch, and the second mergeable
-    sketch next to the CMS (run_streaming_token_sketch), with the same
-    replay discipline (applied_batch_id stamp; at-least-once
-    micro-batches whose id is already <= the stamp are SKIPPED) and
-    the same atomic_replace rewrite.
-
-    EXACT convergence, not approximate: bottom-k selection is by the
-    salted md5 of the key, so bottom-k(union) == bottom-k(bottom-k(A)
-    ∪ B) — after draining any prefix of the stream the persisted
-    sample is ROW-IDENTICAL to the batch operator
-    (operators/sampling.bottomk_sample) over the documents ingested so
-    far, and so are the quantile estimates (the test asserts both).
-    State is k rows however much text flows through."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import md5_int, tokens
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        prev = read_parquet_recovering(spark, sketch_path)
-        if prev is not None:
-            applied = prev.agg(F.max("applied_batch_id")).first()[0]
-            if applied is not None and batch_id <= applied:
-                return  # at-least-once replay of an already-merged batch
-        delta = batch.select(
-            "doc_id",
-            F.size(tokens(F.col("text"))).alias("v"),
-            md5_int(
-                F.concat_ws(":", F.lit(salt), F.col("doc_id").cast("string"))
-            ).alias("_h"),
-        )
-        merged = (
-            delta
-            if prev is None
-            else delta.unionByName(prev.select("doc_id", "v", "_h"))
-        )
-        sample = merged.orderBy("_h", "doc_id").limit(k)
-        atomic_replace(
-            sample.withColumn("applied_batch_id", F.lit(batch_id)), sketch_path
-        )
-
-    (
-        read_document_stream(spark, source_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", sketch_path + "_ckpt")
         .trigger(availableNow=True)
         .start()
         .awaitTermination()

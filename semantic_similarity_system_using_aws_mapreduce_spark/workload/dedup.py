@@ -51,8 +51,8 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_keep_newest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup with crawl semantics: survivor per content digest =
     the NEWEST fetch (operators/dedup.exact_dedup_keep_newest — the
-    re-crawl variant keyed on the WARC path's ``fetched_at``; VERDICT
-    r8 #5's time-sliced corpus consumption).  The documents table has
+    re-crawl variant keyed on the WARC path's ``fetched_at``, for
+    time-sliced corpus consumption).  The documents table has
     no timestamp, so a deterministic fetch date derives from doc_id —
     the arithmetic under audit is the max(struct(ts, id)) survivor
     pick, identical on both engines."""
@@ -67,7 +67,7 @@ def q_dedup_keep_newest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_neardup_keep_newest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAR-duplicate dedup with crawl semantics — the batch twin of
-    the r12 streaming near-dup supersession
+    the streaming near-dup supersession
     (streaming/documents.run_streaming_curation(dedup="keep-newest"))
     aggregated to a snapshot: the LSH candidate graph's connected
     components (q_dedup_clusters' machinery) with the survivor per
@@ -96,8 +96,8 @@ def q_neardup_keep_newest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # distinct=False: min() per signature component is identical over
     # the raw multiset, so the per-(doc_id, h) dedup exchange would be
-    # a corpus-sized shuffle spent on nothing (r12; same rationale at
-    # every signatures-only shingle_hashes site)
+    # a corpus-sized shuffle spent on nothing (same rationale at every
+    # signatures-only shingle_hashes site)
     sigs = minhash_signatures(shingle_hashes(docs, distinct=False))
     cands = lsh_candidates(sigs)
     comp = connected_components(cands).withColumnRenamed("node", "doc_id")
@@ -125,7 +125,7 @@ def q_neardup_keep_newest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct=False: identical signatures (min is duplicate-blind),
-    # one fewer corpus-sized exchange (r12)
+    # one fewer corpus-sized exchange
     return minhash_signatures(shingle_hashes(_docs(spark, sf_dir), distinct=False))
 
 
@@ -155,15 +155,15 @@ def q_lsh_recall(
     """Recall AUDIT of the banded-minhash candidate generator against
     the EXACT prefix-filtered jaccard join at the same threshold — the
     text-dedup analog of q_ann_ivf_recall (and the empirical check on
-    the lsh_plan S-curve arithmetic: {N_BANDS} bands x 2 rows at
-    t={JACCARD_THRESHOLD} predicts ~98% pair recall).  One row:
+    the banding's S-curve 1 - (1 - t^2)^{N_BANDS}: {N_BANDS} bands x 2
+    rows at t={JACCARD_THRESHOLD} predicts ~98% pair recall).  One row:
     true-pair / candidate-pair / hit counts plus exact-integer recall
     ppm — the number that tells you whether an LSH configuration is
     safe to dedup 100 TB with BEFORE you run it.  The shingle relation
     is persisted so both arms (truth and candidates) share one
     explode+hash pass.
 
-    ``sample_permille`` (VERDICT r8 #4) runs the audit on a
+    ``sample_permille`` runs the audit on a
     deterministic md5 doc-bucket sample — the engine's own sampling
     idiom (operators/sampling.hash_bucket) applied BEFORE shingling,
     so BOTH arms see the identical sub-corpus.  This is how the audit
@@ -284,14 +284,11 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the number a data card reports before mixing corpora (how much of
     src_a is a re-crawl of src_b?).  Inverted-index plan bounded by
     S^2 per shingle (operators/dedup.source_overlap for the 100 TB
-    shape); the KMV bottom-k sketch estimator replaces it when the
-    per-source sets outgrow the exact co-shuffle
-    (operators/dedup.source_overlap_kmv; estimate-vs-exact pinned by
-    tests/test_dedup_operators.py)."""
+    shape)."""
     docs = _docs(spark, sf_dir)
     from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import source_overlap
 
-    # shingles keyed by source directly (r12): the source column is on
+    # shingles keyed by source directly: the source column is on
     # every corpus row, so deriving (source, h) in the scan deletes the
     # corpus-sized doc_id join AND the per-doc distinct — the operator's
     # h-level set aggregation dedups either way, identical matrix

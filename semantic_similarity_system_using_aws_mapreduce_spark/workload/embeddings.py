@@ -62,12 +62,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def q_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _emb(spark, sf_dir).select(
-        "vec_id", F.round(F.sqrt(sq_norm(F.col("embedding"))), 6).alias("l2_norm")
-    )
-
-
 def q_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All pairs above a cosine threshold (brute force, i < j).
 
@@ -379,8 +373,7 @@ KMEANS_K = 8
 def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One deterministic Lloyd step: assign every vector to its
     nearest of k md5-rank-seeded centroids (vec_id, cluster, dist2) —
-    the cross-engine-replayable face of operators/clustering (whose
-    kmeans_lloyd iterates this shape with model-sized driver state).
+    the cross-engine-replayable face of operators/clustering.
     Assignment is map-side: the k x d centroid set broadcasts as one
     array row and the argmin folds per vector — no per-vector shuffle,
     no k-fold blowup; seeds come from a distributed top-k over an
@@ -406,8 +399,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     representation (codes + a k x d codebook replace the raw matrix
     at 100 TB).  Codebooks are the md5-rank seed vectors sliced per
     subspace, so the full model is cross-engine replayable and the
-    codes hash-verify (operators/clustering.pq_encode; a production
-    index refines codebooks with kmeans_lloyd offline, same encode)."""
+    codes hash-verify (operators/clustering.pq_encode)."""
     from semantic_similarity_system_using_aws_mapreduce_spark.operators.clustering import pq_encode
 
     return pq_encode(_emb(spark, sf_dir), m=PQ_M, k=PQ_K)
@@ -448,7 +440,6 @@ QUERIES = {
     "q_ann_ivf_recall": q_ann_ivf_recall,
     "q_ann_lsh_topk": q_ann_lsh_topk,
     "q_embedding_quantization": q_embedding_quantization,
-    "q_embedding_norms": q_embedding_norms,
     "q_embedding_parity_measures": q_embedding_parity_measures,
     "q_cosine_pairs": q_cosine_pairs,
     "q_knn": q_knn,
@@ -664,11 +655,6 @@ ORACLES = {
                    + sum(CASE WHEN y > 0 AND (x + y) / 2 > 0
                               THEN y * ln(y / ((x + y) / 2)) ELSE 0 END), 6) AS sim_js
         FROM aligned GROUP BY pair_id
-    """,
-    "q_embedding_norms": f"""
-        WITH {_UNNEST}
-        SELECT vec_id, round(sqrt(sum(v * v)), 6) AS l2_norm
-        FROM u GROUP BY vec_id
     """,
     "q_embedding_quantization": f"""
         WITH {_UNNEST},

@@ -34,7 +34,7 @@ def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     """_docs behind sources.tables.spread_small_scan — ONLY for
     queries whose per-row expansion is heavy enough to beat the extra
     round-robin exchange AND whose aggregates are order-independent
-    (micro-quantized sums).  Measured at sf0.1 r5: the char-bigram
+    (micro-quantized sums).  Measured at sf0.1: the char-bigram
     explode (q_lm_quality) gains 2.5x (3.6 -> 1.46 s) and the BM25
     postings build is neutral-to-better; the cheap token-split
     queries REGRESSED under the same treatment (q_token_counts 0.43
@@ -104,8 +104,8 @@ def q_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-source totals as a tiny combiner-friendly aggregate joined
     # back broadcast, NOT a sum() over a partitionBy(source) window:
     # the window re-shuffled the whole (source, token) relation into
-    # |sources| hot partitions and sorted it (r12 plan audit — one
-    # Exchange + Sort removed; the totals exchange moves ~|sources|
+    # |sources| hot partitions and sorted it (this form has one
+    # Exchange + Sort fewer; the totals exchange moves ~|sources|
     # partial rows).  cnt is an integer count, so the grouped sum is
     # bit-identical to the windowed sum regardless of order.
     totals = counts.groupBy("source").agg(F.sum("cnt").alias("_tot"))
@@ -343,7 +343,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mode="distributed": the oracle row keeps verifying the
     # distributed per-round loop; the in-process path (which auto mode
     # picks at this vocab size) is oracle-verified by
-    # q_bpe_vocab_pieces and cross-path-identity-pinned in test_bpe
+    # q_bpe_fertility and cross-path-identity-pinned in test_bpe
     merges = bpe_train(
         _docs(spark, sf_dir),
         n_merges=BPE_MERGE_ROUNDS,
@@ -370,77 +370,6 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_fertility(docs, merges)
 
 
-def q_bpe_vocab_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary segmentation under the learned tokenizer — trains
-    the {BPE_MERGE_ROUNDS}-merge model, then replays the merges over
-    the DISTINCT-word relation (operators/bpe.bpe_encode_words: encode
-    once per vocabulary entry; a full-corpus tokenization joins this
-    kilobyte table back rather than re-encoding per occurrence).
-    Oracle = the final round's symbol state of the same unrolled CTE
-    chain q_bpe_merges verifies."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.bpe import (
-        bpe_encode_words,
-        bpe_train,
-        word_counts,
-    )
-
-    docs = _docs(spark, sf_dir)
-    merges = bpe_train(docs, n_merges=BPE_MERGE_ROUNDS, min_count=2)
-    wc = word_counts(docs)
-    return (
-        bpe_encode_words(wc, merges)
-        .join(wc, "word")
-        .select(
-            "word",
-            F.size("pieces").cast("int").alias("n_pieces"),
-            F.col("n").alias("n_occurrences"),
-        )
-    )
-
-
-def q_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _docs(spark, sf_dir)
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.round(F.avg("n_chars"), 6).alias("avg_chars"),
-            F.round(F.avg(F.size(_tokens_col())), 6).alias("avg_tokens"),
-        )
-    )
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint: min md5-derived 60-bit integer over word
-    3-gram shingles (MinHash with one hash function — the document-level
-    fingerprint a near-dup pipeline keys on).  Pure JVM expressions."""
-    # toks MUST be a materialized column here: the lambda dereferences
-    # it via element_at, and HOF lambdas are interpreted per element —
-    # an inline split-expression would re-tokenize the document for
-    # every element_at call (measured 9x slower).
-    shingles = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - 3),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(F.col("toks"), i + 1),
-            F.element_at(F.col("toks"), i + 2),
-            F.element_at(F.col("toks"), i + 3),
-        ),
-    )
-    fp = F.array_min(
-        F.transform(
-            shingles,
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-        )
-    )
-    return (
-        _docs(spark, sf_dir)
-        .select("doc_id", _tokens_col().alias("toks"))
-        .filter(F.size("toks") >= 3)
-        .select("doc_id", fp.alias("fingerprint"))
-    )
-
-
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-profile language identification (n-gram heuristic):
     predicted language + confidence per doc, with agreement flag
@@ -458,8 +387,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lang_prior(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language identification WITH a declared-language prior — the
-    crawl path's ``<html lang=...>`` consumption (VERDICT r8 #5;
-    sources/warc.py emits the column, run_curation --lang-id feeds it
+    crawl path's ``<html lang=...>`` consumption (sources/warc.py emits the column, run_curation --lang-id feeds it
     through this exact operator): a declared PROFILED language wins
     unless the stopword statistics strongly disagree (integer margin,
     operators/text_analysis.identify_language).  The documents table
@@ -532,20 +460,19 @@ def q_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.expr("substring(s, i, 2)").alias("bg"))
     )
     dtf = bigrams.groupBy("doc_id", "bg").agg(F.count("*").alias("m"))
-    # freq DIRECTLY from the occurrence stream, not via dtf (r12,
-    # guide §2.3 "aggregate before you shuffle"): sum(m) grouped by bg
-    # re-ran the whole explode AND its corpus-wide (doc_id, bg)
-    # exchange just to build the broadcast table, when count(*) by bg
+    # freq DIRECTLY from the occurrence stream, not via dtf
+    # ("aggregate before you shuffle"): sum(m) grouped by bg would
+    # re-run the whole explode AND its corpus-wide (doc_id, bg)
+    # exchange just to build the broadcast table, while count(*) by bg
     # over the same stream partial-aggregates map-side to
     # ~|alphabet|^2 rows — identical counts, kilobytes shuffled.  The
     # normalizer n rides the same tiny relation as a whole-relation
     # window sum instead of a third corpus pass + 1-row crossJoin
-    # (before: 3 explode passes, 2 corpus-wide exchanges; after: 2
-    # passes, 1).
+    # (2 explode passes and 1 corpus-wide exchange, not 3 and 2).
     # the keyless window funnels freq through ONE partition — safe
     # here ONLY because freq is bounded at ~|alphabet|^2 rows (char
     # bigram types, not occurrences); do not copy this pattern to an
-    # unbounded relation (ADVICE r12)
+    # unbounded relation
     freq = (
         bigrams.groupBy("bg")
         .agg(F.count("*").alias("c"))
@@ -579,7 +506,7 @@ def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single most frequent bigram (high values flag boilerplate /
     degenerate text for a training-data quality gate).
 
-    Plan (r12): ZERO shuffles — the signal is per-document, so it
+    Plan: ZERO shuffles — the signal is per-document, so it
     never needs to leave the row.  Sort the row's bigram array and
     fold run lengths in one pass (top_c = longest run, dup_c = sum of
     runs > 1): the explode -> groupBy(doc, bigram) -> groupBy(doc)
@@ -731,45 +658,6 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-HE_DIM = 8  # hashed-embedding dimensions
-
-
-def q_hash_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic document embeddings with no model: the feature-
-    hashing trick (Weinberger et al. 2009) — each token occurrence
-    adds ±1 to the dimension its hash picks, sign from the next hash
-    bit.  The resulting int64 vectors feed the same cosine / SRP-LSH /
-    semantic-dedup operators as model embeddings (the
-    bootstrap-before-you-have-a-model path), and integer accumulation
-    makes them bit-reproducible by any engine with md5.
-
-    Plan: map-side explode -> ONE groupBy(doc_id) with {HE_DIM}
-    conditional integer sums (the Step4 24-aggregate pattern); state
-    is one row per document."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("he:"), F.col("token"))), 1, 15), 16, 10
-    ).cast("long")
-    x = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.explode(_tokens_col()).alias("token"))
-        .select("doc_id", h.alias("hh"))
-        # `div`, not `/`: integer bit extraction must not round
-        .select(
-            "doc_id",
-            F.expr(f"hh % {HE_DIM}").alias("dim"),
-            F.expr(f"1 - 2 * ((hh div {HE_DIM}) % 2)").alias("sign"),
-        )
-    )
-    return x.groupBy("doc_id").agg(
-        *[
-            F.sum(F.when(F.col("dim") == j, F.col("sign")).otherwise(0))
-            .cast("long")
-            .alias(f"e{j}")
-            for j in range(HE_DIM)
-        ]
-    )
-
-
 # BM25 retrieval constants (Robertson/Spärck Jones Okapi BM25 with the
 # non-negative idf variant ln(1 + (N - df + .5)/(df + .5)) every major
 # search engine ships).  Query set fixed so the ranking is a stable
@@ -813,15 +701,14 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     must agree with DuckDB's ln within the micro-unit rounding
     boundary) — op-order-mirrored FP plus quantization, not
     integer-exact arithmetic end to end; the differential tests cover
-    the agreement empirically (ADVICE r5 corrected the stronger
-    claim the docstring used to make)."""
+    the agreement empirically."""
     from pyspark import StorageLevel
 
     docs = _docs_spread(spark, sf_dir)
-    # ONE corpus tokenize pass (r13, VERDICT r12 #5): totals (all-doc
-    # dl statistics) and tf (query-term postings) previously each
-    # re-tokenized the corpus — and q_hybrid_rrf re-runs this whole
-    # query as its lexical arm, so the double pass doubled again.
+    # ONE corpus tokenize pass: totals (all-doc dl statistics) and tf
+    # (query-term postings) would otherwise each re-tokenize the
+    # corpus — and q_hybrid_rrf re-runs this whole query as its
+    # lexical arm, so a double pass would double again.
     # The persisted relation is NARROW by construction: dl is one int
     # and _qtoks keeps only tokens in the ~10-term literal query set
     # (array_contains against a literal array, map-side), so the cache
@@ -899,7 +786,6 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {
     "q_bm25_search": q_bm25_search,
-    "q_hash_embeddings": q_hash_embeddings,
     "q_cms_heavy_hitters": q_cms_heavy_hitters,
     "q_lm_quality": q_lm_quality,
     "q_doc_chunks": q_doc_chunks,
@@ -919,9 +805,6 @@ QUERIES = {
     "q_bpe_fertility": q_bpe_fertility,
     "q_bpe_pair_counts": q_bpe_pair_counts,
     "q_bpe_merges": q_bpe_merges,
-    "q_bpe_vocab_pieces": q_bpe_vocab_pieces,
-    "q_lang_stats": q_lang_stats,
-    "q_doc_fingerprint": q_doc_fingerprint,
 }
 
 _TOKS = "list_filter(string_split(text, ' '), t -> t <> '')"
@@ -967,25 +850,7 @@ _LANG_PICK = "CASE " + " ".join(
 
 _MD5INT = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
-_HE_SUM_COLS = ",\n               ".join(
-    f"sum(CASE WHEN dim = {j} THEN sign ELSE 0 END)::BIGINT AS e{j}"
-    for j in range(HE_DIM)
-)
-
 _BM25_VALUES = ", ".join(f"({q}, '{t}')" for q, t in _BM25_TERMS)
-
-
-def _bpe_vocab_pieces_oracle(rounds: int) -> str:
-    """Vocabulary segmentation AFTER the learned merges — the same
-    unrolled CTE chain as the merges oracle, selecting the final
-    round's symbol state instead of the argmax rows."""
-    final = f"""
-        SELECT word,
-               len(list_filter(string_split(syms, chr(31)),
-                               s -> s <> ''))::INT AS n_pieces,
-               n AS n_occurrences
-        FROM r{rounds}"""
-    return _bpe_unrolled(rounds) + final
 
 
 def _bpe_unrolled(rounds: int) -> str:
@@ -1090,18 +955,6 @@ ORACLES = {
         SELECT q_id, rank::INT AS rank, doc_id,
                round(s_micro / 1000000.0, 6) AS bm25
         FROM ranked WHERE rank <= {BM25_TOPK}
-    """,
-    "q_hash_embeddings": f"""
-        WITH t AS (SELECT doc_id, unnest({_TOKS}) AS token FROM documents),
-        h AS (SELECT doc_id,
-                     {_MD5INT.format(x="'he:' || token")} AS hh
-              FROM t),
-        x AS (SELECT doc_id, hh % {HE_DIM} AS dim,
-                     1 - 2 * ((hh // {HE_DIM}) % 2) AS sign
-              FROM h)
-        SELECT doc_id,
-               {_HE_SUM_COLS}
-        FROM x GROUP BY doc_id
     """,
     "q_cms_heavy_hitters": f"""
         WITH toks AS (SELECT unnest({_TOKS}) AS token FROM documents),
@@ -1318,21 +1171,6 @@ ORACLES = {
                      / len(toks), 6) AS stopword_ratio
         FROM d
     """,
-    "q_lang_stats": f"""
-        SELECT lang, count(*) AS n_docs,
-               round(avg(n_chars), 6) AS avg_chars,
-               round(avg(len({_TOKS})), 6) AS avg_tokens
-        FROM documents GROUP BY lang
-    """,
-    "q_doc_fingerprint": f"""
-        WITH d AS (SELECT doc_id, {_TOKS} AS toks FROM documents)
-        SELECT doc_id,
-               list_aggregate(list_transform(
-                   list_transform(range(1, len(toks) - 1),
-                       i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]),
-                   s -> ('0x' || substr(md5(s), 1, 15))::BIGINT), 'min') AS fingerprint
-        FROM d WHERE len(toks) >= 3
-    """,
     # Gopher rules in INTEGER arithmetic (cross-multiplied ratios) so
     # the flags hash identically — mirrors operators/text_analysis.
     # gopher_rules expression for expression
@@ -1383,5 +1221,4 @@ ORACLES = {
     """,
     "q_bpe_merges": _bpe_merges_oracle(BPE_MERGE_ROUNDS),
     "q_bpe_fertility": _bpe_fertility_oracle(BPE_MERGE_ROUNDS),
-    "q_bpe_vocab_pieces": _bpe_vocab_pieces_oracle(BPE_MERGE_ROUNDS),
 }

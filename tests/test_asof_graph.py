@@ -42,70 +42,6 @@ def test_asof_equal_ts_tiebreak(spark):
     assert out.asof_rid == 9  # greatest tiebreak wins deterministically
 
 
-def test_asof_forward(spark):
-    left = spark.createDataFrame(
-        [(1, 10, _ts(5)), (2, 10, _ts(1)), (3, 20, _ts(9)), (4, 10, _ts(20))],
-        ["id", "k", "t"],
-    )
-    right = spark.createDataFrame(
-        [(100, 10, _ts(2), 1.0), (101, 10, _ts(5), 2.0), (102, 20, _ts(10), 3.0)],
-        ["rid", "k", "t", "v"],
-    )
-    out = asof_join(
-        left, right, on="k", left_time="t", right_time="t",
-        value_cols=["rid", "v"], direction="forward", right_tiebreak="rid",
-    )
-    got = {r.id: (r.asof_rid, r.asof_v) for r in out.collect()}
-    assert got[1] == (101, 2.0)  # same-instant right row is visible
-    assert got[2] == (100, 1.0)  # earliest right at-or-after t=1
-    assert got[3] == (102, 3.0)
-    assert got[4] == (None, None)  # nothing at or after t=20
-
-
-def test_asof_nearest_prefers_closer_and_ties_backward(spark):
-    left = spark.createDataFrame(
-        [(1, 7, _ts(6)), (2, 7, _ts(3)), (3, 7, _ts(30))], ["id", "k", "t"]
-    )
-    right = spark.createDataFrame(
-        [(50, 7, _ts(2), 1.0), (51, 7, _ts(4), 2.0), (52, 7, _ts(10), 3.0)],
-        ["rid", "k", "t", "v"],
-    )
-    out = asof_join(
-        left, right, on="k", left_time="t", right_time="t",
-        value_cols=["rid"], direction="nearest", right_tiebreak="rid",
-    )
-    got = {r.id: r.asof_rid for r in out.collect()}
-    assert got[1] == 51  # t=4 (dist 2 min) beats t=10 (dist 4 min)
-    assert got[2] == 50  # t=2 and t=4 equidistant from t=3: backward wins
-    assert got[3] == 52  # only a backward match exists, however far
-
-
-def test_asof_nearest_tie_is_backward(spark):
-    left = spark.createDataFrame([(1, 7, _ts(3))], ["id", "k", "t"])
-    right = spark.createDataFrame(
-        [(50, 7, _ts(2), 1.0), (51, 7, _ts(4), 2.0)], ["rid", "k", "t", "v"]
-    )
-    out = asof_join(
-        left, right, on="k", left_time="t", right_time="t",
-        value_cols=["rid"], direction="nearest", right_tiebreak="rid",
-    ).collect()[0]
-    assert out.asof_rid == 50  # equal distance: backward wins (pandas semantics)
-
-
-def test_asof_tolerance(spark):
-    left = spark.createDataFrame(
-        [(1, 9, _ts(5)), (2, 9, _ts(59))], ["id", "k", "t"]
-    )
-    right = spark.createDataFrame([(70, 9, _ts(4), 1.0)], ["rid", "k", "t", "v"])
-    out = asof_join(
-        left, right, on="k", left_time="t", right_time="t",
-        value_cols=["rid"], direction="backward", tolerance=120.0,
-    )
-    got = {r.id: r.asof_rid for r in out.collect()}
-    assert got[1] == 70          # 60 s away, inside tolerance
-    assert got[2] is None        # 55 min away, rejected
-
-
 def test_connected_components(spark):
     # two components: {1,2,3,4} (chain) and {10,11}; singleton edges absent
     edges = spark.createDataFrame(

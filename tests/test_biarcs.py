@@ -34,24 +34,16 @@ def test_counts_match_reference_oracle(spark):
     assert totals.L == totals.F == oracle_total
 
 
-def test_observed_totals_single_pass(spark):
-    """Observation-API totals accumulate during another action's pass
-    (the reference's Hadoop-counters-during-map optimization).
+def test_totals_match_reference_oracle(spark):
+    """L and F re-aggregate ``pair_counts`` (no second pass over the
+    emissions) and equal the oracle's corpus totals."""
+    from semantic_similarity_system_using_aws_mapreduce_spark.operators.counts import corpus_counts
 
-    Runs in an isolated session: a used Observation leaves a listener
-    behind that breaks later cache materialization in Spark 4.1
-    ('Task not serializable' at closure clean)."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.counts import corpus_counts, observed_emissions
-
-    session = spark.newSession()
-    corpus = read_biarcs(session, SMALL_SAMPLE)
-    emissions, obs = observed_emissions(token_emissions(corpus))
-    counts = corpus_counts(emissions)
-    n_lex = counts.lexeme_counts.count()  # one action drives the scan
-    assert n_lex > 0
-    assert obs.get["L"] == obs.get["F"] == _oracle_total(SMALL_SAMPLE)
+    corpus = read_biarcs(spark, SMALL_SAMPLE)
+    totals = corpus_counts(token_emissions(corpus)).totals.first()
+    assert totals.L == totals.F == _oracle_total(SMALL_SAMPLE)
     if is_reference(SMALL_SAMPLE):
-        assert obs.get["L"] == 16024
+        assert totals.L == 16024
 
 
 def test_malformed_rows_dropped(spark, tmp_path):

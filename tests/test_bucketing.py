@@ -4,7 +4,7 @@ and produces the same rows as the plain shuffled join."""
 
 from pyspark.sql import functions as F
 
-from semantic_similarity_system_using_aws_mapreduce_spark.sources.bucketing import read_bucketed, write_bucketed
+from semantic_similarity_system_using_aws_mapreduce_spark.sources.bucketing import write_bucketed
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -19,7 +19,7 @@ def test_bucketed_join_has_no_exchange(spark):
     # disable broadcast so the join strategy question is real
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        ob, cb = read_bucketed(spark, "orders_b"), read_bucketed(spark, "customer_b")
+        ob, cb = spark.table("orders_b"), spark.table("customer_b")
         joined = ob.join(cb, ob.o_custkey == cb.c_custkey).select(
             "o_orderkey", "c_custkey", "c_acctbal"
         )

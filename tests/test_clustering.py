@@ -1,14 +1,12 @@
-"""Distributed k-means (operators/clustering): the deterministic
-Lloyd loop against an independent numpy reconstruction, and the
-structural claims the 100 TB story rests on (map-side assignment,
-model-sized driver state)."""
+"""Deterministic centroid assignment and product quantization
+(operators/clustering) against independent numpy reconstructions, and
+the structural claim the 100 TB story rests on (map-side assignment)."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from semantic_similarity_system_using_aws_mapreduce_spark.operators.clustering import (
     assign_clusters,
-    kmeans_lloyd,
     seed_centroids,
 )
 
@@ -27,20 +25,14 @@ def _matrix(spark):
     return ids, X
 
 
-def _numpy_lloyd(ids, X, seed_ids, iters):
-    """Independent reference: same seeds, 6-dp-rounded distances with
-    index tie-break (the engine's portability contract), mean update."""
+def _numpy_assign(ids, X, seed_ids):
+    """Independent reference: 6-dp-rounded squared distances to the
+    seed vectors with index tie-break (the engine's portability
+    contract)."""
     order = {v: i for i, v in enumerate(ids)}
-    C = X[[order[s] for s in seed_ids]].copy()
-    for _ in range(iters):
-        d2 = np.round(((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2), 6)
-        assign = d2.argmin(axis=1)  # argmin takes the lowest index on ties
-        for r in range(len(C)):
-            m = assign == r
-            if m.any():
-                C[r] = X[m].mean(axis=0)
-        last = (assign, d2.min(axis=1))
-    return last[0], last[1], C
+    C = X[[order[s] for s in seed_ids]]
+    d2 = np.round(((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2), 6)
+    return d2.argmin(axis=1), d2.min(axis=1)  # argmin: lowest index on ties
 
 
 def test_seed_centroids_are_the_md5_topk(spark):
@@ -59,7 +51,7 @@ def test_seed_centroids_are_the_md5_topk(spark):
     assert set(want) <= zero  # seeds sit at distance 0 from their centroid
 
 
-def test_kmeans_lloyd_matches_independent_numpy(spark):
+def test_assign_clusters_matches_independent_numpy(spark):
     import hashlib
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -68,34 +60,14 @@ def test_kmeans_lloyd_matches_independent_numpy(spark):
         ids, key=lambda v: int(hashlib.md5(f"kmeans:{v}".encode()).hexdigest()[:15], 16)
     )[:K]
 
-    assigned, cents, inertia = kmeans_lloyd(emb, K, iters=3)
+    assigned = assign_clusters(emb, seed_centroids(emb, K))
     got = {r.vec_id: (r.cluster, r.dist2) for r in assigned.collect()}
-    assigned.unpersist()  # loop hands the final cache to the caller
 
-    ref_assign, ref_d2, ref_C = _numpy_lloyd(ids, X, seed_ids, iters=3)
-    mismatches = sum(1 for i, v in enumerate(ids) if got[v][0] != ref_assign[i])
+    ref_assign, ref_d2 = _numpy_assign(ids, X, seed_ids)
     # fp sum-order near 6-dp boundaries can flip an assignment; on this
     # fixture the two implementations agree exactly
-    assert mismatches == 0
-    np.testing.assert_allclose(np.array(cents), ref_C, rtol=0, atol=1e-9)
-    # Lloyd's guarantee: inertia is non-increasing over iterations
-    assert all(a >= b - 1e-6 for a, b in zip(inertia, inertia[1:]))
-
-
-def test_kmeans_lloyd_hands_a_cached_assignment_after_convergence(spark):
-    """Once the centroids stop moving, two rounds build equal plans (the
-    centroid relation is a local relation with equal rows) that share
-    one cache entry; releasing the previous round must not release the
-    assignment handed to the caller."""
-    emb = spark.range(40).selectExpr(
-        "id AS vec_id",
-        "array(cast(id % 2 AS float), cast(id % 2 AS float)) AS embedding",
-    )
-    assigned, _, inertia = kmeans_lloyd(emb, 2, iters=5)
-    assert inertia[-1] == inertia[-2]
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    assert cm.lookupCachedData(assigned._jdf).isDefined()
-    assigned.unpersist()
+    assert all(got[v][0] == ref_assign[i] for i, v in enumerate(ids))
+    np.testing.assert_allclose([got[v][1] for v in ids], ref_d2, rtol=0, atol=1e-6)
 
 
 def test_assignment_plan_is_exchange_free(spark):
@@ -218,46 +190,3 @@ def test_pq_adc_topk_matches_numpy_model(spark):
     for qi, qv in enumerate(q_ids):
         assert any(g[0] == qi and g[2] == qv for g in got)
 
-
-def test_ivfpq_prunes_and_keeps_recall(spark):
-    """IVF-PQ: probing nprobe of n_lists coarse lists must (a) score
-    strictly fewer vectors than the full ADC scan, (b) return a
-    subset of candidates consistent with the probed lists, and
-    (c) keep recall@topk vs the EXACT full ADC ranking high — the ANN
-    trade-off contract, mirroring the IVF recall query."""
-    import numpy as np
-
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.clustering import (
-        ivfpq_topk,
-        pq_adc_topk,
-    )
-
-    rng = np.random.default_rng(23)
-    n, d, topk = 200, 24, 10
-    # clustered data so coarse lists mean something
-    centers = rng.normal(scale=4.0, size=(8, d))
-    vecs = (centers[rng.integers(0, 8, n)] + rng.normal(size=(n, d))).astype(
-        np.float32
-    )
-    emb = spark.createDataFrame(
-        [(i, [float(v) for v in vecs[i]]) for i in range(n)],
-        "vec_id long, embedding array<float>",
-    )
-    queries = spark.createDataFrame(
-        [(qi, [float(v) for v in vecs[qv]]) for qi, qv in enumerate([3, 57])],
-        "q_id int, qvec array<float>",
-    )
-    full = pq_adc_topk(emb, queries, m=4, k=16, topk=topk)
-    pruned = ivfpq_topk(
-        emb, queries, n_lists=8, nprobe=3, m=4, k=16, topk=topk
-    )
-    f = {(r.q_id, r.vec_id) for r in full.collect()}
-    p = {(r.q_id, r.vec_id) for r in pruned.collect()}
-    # recall@10 vs the full-scan ADC ranking
-    recall = len(f & p) / len(f)
-    assert recall >= 0.7, recall
-    # identical scores where both agree (same arithmetic, same codes)
-    fs = {(r.q_id, r.vec_id): r.adc_d2 for r in full.collect()}
-    ps = {(r.q_id, r.vec_id): r.adc_d2 for r in pruned.collect()}
-    for key in f & p:
-        assert fs[key] == ps[key]

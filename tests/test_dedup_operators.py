@@ -1,5 +1,5 @@
-"""Library-level dedup operators: LSH->verify composition and the
-salting utility."""
+"""Library-level dedup operators: LSH->verify composition, near-dup
+probes, span and paragraph dedup, bloom filters."""
 
 import re
 
@@ -12,7 +12,6 @@ from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import
     ngram_jaccard_pairs,
     shingle_hashes,
 )
-from semantic_similarity_system_using_aws_mapreduce_spark.operators.skew import salted_join, top_keys
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -76,31 +75,6 @@ def test_ngram_jaccard_doc_freq_cutoff(spark):
     }
     assert set(tight) <= set(exact)
     assert all(tight[k] <= exact[k] for k in tight)
-
-
-def test_salted_join_equals_plain_join(spark):
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    customer = spark.read.parquet(f"{SF_DIR}/customer.parquet").withColumnRenamed(
-        "c_custkey", "o_custkey"
-    )
-    plain = (
-        orders.join(customer, ["o_custkey"])
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n"), F.round(F.sum("o_totalprice"), 4).alias("v"))
-    )
-    salted = (
-        salted_join(orders, customer, ["o_custkey"], n_salts=8)
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n"), F.round(F.sum("o_totalprice"), 4).alias("v"))
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_top_keys(spark):
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    rows = top_keys(li, ["l_returnflag"], k=2).collect()
-    assert len(rows) == 2
-    assert rows[0].n_rows >= rows[1].n_rows
 
 
 def test_simhash_near_dups_matches_bruteforce_hamming(spark):
@@ -552,13 +526,9 @@ def test_containment_join_catches_subsumption_jaccard_misses(spark):
 
 def test_source_overlap_exact_matches_pairwise_sets(spark):
     """The inverted-index matrix equals brute-force per-source set
-    algebra, covers every overlapping pair exactly once (src_a <
-    src_b), and the KMV sketch tracks it within its ~1/sqrt(k)
-    error budget with the pre-gate changing nothing."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import (
-        source_overlap,
-        source_overlap_kmv,
-    )
+    algebra and covers every overlapping pair exactly once (src_a <
+    src_b)."""
+    from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import source_overlap
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     sh = shingle_hashes(docs).persist()
@@ -591,21 +561,6 @@ def test_source_overlap_exact_matches_pairwise_sets(spark):
         for b in names[i + 1 :]
         if sets[a] & sets[b]
     )
-
-    k = 256
-    est = {
-        (r.src_a, r.src_b): r.est_jaccard
-        for r in source_overlap_kmv(sh, src, k=k).collect()
-    }
-    est_ungated = {
-        (r.src_a, r.src_b): r.est_jaccard
-        for r in source_overlap_kmv(sh, src, k=k, pregate=False).collect()
-    }
-    assert est == est_ungated  # the 4x approx-count gate is lossless here
-    errs = [abs(est[p] - got[p][1]) for p in got]
-    # std err ~ 1/sqrt(k) = 0.0625; measured MAE 0.007, max 0.038
-    assert max(errs) < 3 / (k**0.5)
-    assert sum(errs) / len(errs) < 1 / (k**0.5)
     sh.unpersist()
 
 
@@ -762,30 +717,6 @@ def test_paragraph_dedup_keep_first_survives_60bit_doc_ids(spark):
     assert shared in got[1].kept_text and shared not in got[1 << 43].kept_text
 
 
-def test_lsh_plan_picks_sane_bandings():
-    """The S-curve tuner: low thresholds pick many-bands/short-rows
-    (recall-leaning), high thresholds pick few-bands/long-rows
-    (precision-leaning); the effective threshold s50 tracks the
-    request; and the chosen scheme always factors n_hashes."""
-    import pytest as _pytest
-
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import lsh_plan
-
-    lo = lsh_plan(0.2, n_hashes=8)
-    hi = lsh_plan(0.9, n_hashes=8)
-    assert lo["n_bands"] * lo["rows_per_band"] == 8
-    assert hi["n_bands"] * hi["rows_per_band"] == 8
-    assert lo["rows_per_band"] < hi["rows_per_band"]  # recall vs precision
-    assert abs(lo["s50"] - 0.2) < 0.25 and abs(hi["s50"] - 0.9) < 0.25
-    # the engine default (4 bands x 2 rows) is what mid thresholds pick
-    mid = lsh_plan(0.45, n_hashes=8)
-    assert (mid["n_bands"], mid["rows_per_band"]) == (4, 2)
-    # deterministic and input-validated
-    assert lsh_plan(0.45, n_hashes=8) == mid
-    with _pytest.raises(ValueError):
-        lsh_plan(1.5)
-
-
 def test_lsh_recall_audit_sampled_tracks_full(spark):
     """The corpus-scale sampling knob on the LSH recall audit (the
     pre-flight check for a 100 TB dedup): a deterministic md5
@@ -876,35 +807,3 @@ def test_production_hash_mode_identical_minhash_decisions(spark):
     assert lo >= 0 and hi < 2**60
 
 
-def test_simhash_production_token_hash_identical_decisions(spark):
-    """The simhash kernel's cheap-hash flag (blake2b_token_hash — the
-    JVM's xxhash64 is unreachable from the Arrow worker without the
-    explode+shuffle the kernel exists to avoid) must reach the same
-    near-dup decisions as the md5 contract wherever decisions are
-    hash-robust: exact duplicates are Hamming-0 under ANY token hash,
-    and disjoint-vocabulary documents sit ~n_bits/2 apart.  (On a
-    borderline corpus — e.g. the ~31-word synthetic vocabulary at
-    threshold-adjacent distances — the raw distances legitimately
-    differ per hash; decisions, not fingerprints, are the contract.)"""
-    import random
-
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import (
-        blake2b_token_hash,
-        md5_token_hash,
-        simhash_near_dups,
-    )
-
-    rng = random.Random(7)
-    rows = []
-    for i in range(30):  # disjoint 40-word vocabularies
-        rows.append((i, " ".join(f"w{i}_{j}x{rng.randint(0, 999)}" for j in range(40))))
-    rows += [(100, rows[0][1]), (101, rows[1][1]), (102, rows[2][1]), (103, rows[0][1])]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    want = {(0, 100), (0, 103), (100, 103), (1, 101), (2, 102)}
-    for token_hash in (md5_token_hash, blake2b_token_hash):
-        got = {
-            (r.doc_a, r.doc_b): r.hamming
-            for r in simhash_near_dups(docs, token_hash=token_hash).collect()
-        }
-        assert set(got) == want
-        assert all(h == 0 for h in got.values())

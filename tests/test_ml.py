@@ -104,47 +104,3 @@ def test_too_few_instances(spark, vectors):
     with pytest.raises(ValueError):
         cross_validate_random_forest(vectors.limit(1))
     assert _cache_empty(spark)  # the prepared input is released on error too
-
-
-# --- learned quality gate (ml/quality.py) -------------------------------
-
-
-def test_quality_classifier_learns_weak_gate(spark):
-    """Train the hashed-ngram linear model against the stopword-share
-    weak gate on a deterministic half of the fixture docs; it must
-    rank the held-out half far better than chance (the concept is
-    linear in L1-normalized term frequencies, so a working pipeline
-    reaches AUC ~1; hash collisions and regularization cost a little).
-    Scoring must stay map-side: no Exchange in the scored plan."""
-    from pyspark.ml.evaluation import BinaryClassificationEvaluator
-    from pyspark.sql import functions as F
-
-    from semantic_similarity_system_using_aws_mapreduce_spark.ml.quality import (
-        score_documents,
-        train_quality_classifier,
-        weak_quality_labels,
-    )
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.text_analysis import LANG_PROFILES
-
-    stops = sorted({w for ws in LANG_PROFILES.values() for w in ws})
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    # 0.06 ~ the fixture's median stopword share (synthetic text is
-    # stopword-sparse next to real prose), giving balanced classes
-    labeled = weak_quality_labels(docs, stops, min_share=0.06)
-    train = labeled.filter(F.col("doc_id") % 2 == 0)
-    test = labeled.filter(F.col("doc_id") % 2 == 1)
-    # both classes must be present for the test to mean anything
-    classes = {r.label for r in test.select("label").distinct().collect()}
-    assert classes == {0.0, 1.0}
-
-    model = train_quality_classifier(train, n_features=1 << 14)
-    scored = score_documents(model, test, n_features=1 << 14)
-    assert "Exchange" not in scored._jdf.queryExecution().executedPlan().toString()
-
-    joined = scored.join(test.select("doc_id", "label"), "doc_id").select(
-        F.col("quality_prob"), F.col("label")
-    )
-    auc = BinaryClassificationEvaluator(
-        rawPredictionCol="quality_prob", labelCol="label"
-    ).evaluate(joined)
-    assert auc > 0.9, f"held-out AUC too low: {auc:.3f}"

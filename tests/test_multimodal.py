@@ -1,6 +1,6 @@
 """Multimodal binary-column plumbing: schemas, Arrow batch shapes,
-fan-out, the stdlib decoders (BMP, PCM16 WAV, y4m, MP4) and the
-library gate every other format takes."""
+the stdlib decoders (BMP, PCM16 WAV, y4m, MP4) and the library gate
+every other format takes."""
 
 import re
 import struct
@@ -9,16 +9,13 @@ import numpy as np
 import pytest
 
 from semantic_similarity_system_using_aws_mapreduce_spark.multimodal import (
-    FEATURE_DIM,
     MEDIA_SCHEMA,
     codec_support,
     decode_media,
-    extract_features,
     make_bmp,
     make_mp4,
     make_wav,
     make_y4m,
-    sample_frames,
     synthesize_media,
     synthesize_real_media,
 )
@@ -54,18 +51,6 @@ def media(spark):
     return synthesize_media(spark, n=30).cache()
 
 
-def test_decode_fake(spark, media):
-    rows = decode_media(media).collect()
-    assert len(rows) == 30
-    byid = {r.media_id: r for r in rows}
-    # image items report pixel counts, others byte counts
-    assert byid[0].kind == "image" and byid[0].pixels_or_samples == 64 * 48
-    assert byid[1].kind == "audio" and byid[1].pixels_or_samples == byid[1].n_bytes
-    # deterministic: running twice gives identical checksums
-    again = {r.media_id: r.checksum for r in decode_media(media).collect()}
-    assert again == {r.media_id: r.checksum for r in rows}
-
-
 @pytest.mark.skipif(
     any(SUPPORT.values()), reason="real codecs available; covered by the decode test"
 )
@@ -76,7 +61,7 @@ def test_decode_real_raises_on_undecodable_format(spark, media):
     avif_only = media.filter("format = 'avif'")
     assert avif_only.count() > 0
     with pytest.raises(Exception, match="no codec available"):
-        decode_media(avif_only, decoder="real").collect()
+        decode_media(avif_only).collect()
 
 
 def test_decode_real_stdlib_formats(spark):
@@ -95,7 +80,7 @@ def test_decode_real_stdlib_formats(spark):
         (3, "video", make_mp4(9), "mp4", 16, 9, 360),
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r.media_id: r for r in decode_media(media, decoder="real").collect()}
+    got = {r.media_id: r for r in decode_media(media).collect()}
     assert got[0].pixels_or_samples == 8 and got[0].checksum == 8 * 18
     assert got[1].pixels_or_samples == 5 and got[1].checksum == 15
     assert got[2].pixels_or_samples == 7 and got[2].checksum == 7
@@ -105,8 +90,8 @@ def test_decode_real_stdlib_formats(spark):
     assert {r.format for r in corpus.select("format").collect()} == {
         "bmp", "wav", "y4m", "mp4"
     }
-    a = sorted(map(tuple, decode_media(corpus, decoder="real").collect()))
-    b = sorted(map(tuple, decode_media(corpus, decoder="real").collect()))
+    a = sorted(map(tuple, decode_media(corpus).collect()))
+    b = sorted(map(tuple, decode_media(corpus).collect()))
     assert a == b and len(a) == 24
     assert all(r[2] > 0 for r in a)  # n_bytes
     # BMP payloads really carry the declared geometry
@@ -174,31 +159,12 @@ def test_decode_real_images(spark):
         )
         rows.append((i, "image", buf.getvalue(), "jpeg", 8, 6, None))
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r.media_id: r for r in decode_media(media, decoder="real").collect()}
+    got = {r.media_id: r for r in decode_media(media).collect()}
     assert len(got) == 4
     for i, r in got.items():
         assert r.pixels_or_samples == 8 * 6
         # JPEG is lossy; a constant image decodes within +-2/pixel
         assert abs(r.checksum - 8 * 6 * i * 40) <= 8 * 6 * 2
-
-
-def test_feature_extraction(spark, media):
-    rows = extract_features(media).collect()
-    assert len(rows) == 30
-    for r in rows:
-        assert len(r.feature) == FEATURE_DIM
-        norm = float(np.linalg.norm(r.feature))
-        assert abs(norm - 1.0) < 1e-5
-
-
-def test_frame_sampling_fanout(spark, media):
-    frames = sample_frames(media, n_frames=4).collect()
-    n_videos = media.filter("kind = 'video'").count()
-    assert len(frames) == n_videos * 4
-    by_media = {}
-    for f in frames:
-        by_media.setdefault(f.media_id, []).append(f.frame_idx)
-    assert all(sorted(v) == [0, 1, 2, 3] for v in by_media.values())
 
 
 def test_mp4_container_parse_counts_frames(spark):
@@ -211,7 +177,7 @@ def test_mp4_container_parse_counts_frames(spark):
     # through the live plan
     rows = [(0, "video", make_mp4(12), "mp4", 8, 6, 480)]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = decode_media(media, decoder="real").collect()[0]
+    got = decode_media(media).collect()[0]
     assert (got.checksum, got.pixels_or_samples) == (12, 12)
     # garbage/truncation -> rejected
     with pytest.raises(ValueError):
@@ -236,7 +202,7 @@ def test_mp4_fragmented_frame_counts(spark):
     # through the live mapInPandas plan
     rows = [(0, "video", data, "mp4", 8, 6, 320)]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = decode_media(media, decoder="real").collect()[0]
+    got = decode_media(media).collect()[0]
     assert (got.checksum, got.pixels_or_samples) == (8, 8)
     # truncation never hangs
     for cut in (10, 40, len(data) // 2):
@@ -284,9 +250,9 @@ def test_removed_formats_are_library_gated(spark, fmt, kind, payload):
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     with pytest.raises(Exception, match=re.escape(f"NotImplementedError: {gate}")):
-        decode_media(media, decoder="real").collect()
+        decode_media(media).collect()
     got = {r.media_id: r for r in
-           decode_media(media, decoder="real", on_error="quarantine").collect()}
+           decode_media(media, on_error="quarantine").collect()}
     assert got[1].checksum is None and got[1].pixels_or_samples is None
     assert got[1].error.startswith(f"NotImplementedError: {gate}")
     assert got[0].error is None and got[0].checksum == _luma(fn, 8, 6)
@@ -333,7 +299,7 @@ def test_decode_media_quarantine_confines_bad_rows(spark):
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     got = {r.media_id: r for r in
-           decode_media(media, decoder="real", on_error="quarantine").collect()}
+           decode_media(media, on_error="quarantine").collect()}
     assert got[0].error is None and got[0].pixels_or_samples == 48
     assert got[0].checksum == _luma(fn, 8, 6)
     assert got[2].error is None and got[2].pixels_or_samples == 3
@@ -342,12 +308,9 @@ def test_decode_media_quarantine_confines_bad_rows(spark):
     assert got[4].checksum is None and "not a BMP" in got[4].error
     # default mode still fails the task loudly
     with pytest.raises(Exception):
-        decode_media(media, decoder="real").collect()
+        decode_media(media).collect()
     with pytest.raises(ValueError, match="on_error"):
-        decode_media(media, decoder="real", on_error="skip")
-    # the fake decoder is total: quarantine mode adds an all-null column
-    fake = decode_media(media, decoder="fake", on_error="quarantine").collect()
-    assert all(r.error is None for r in fake)
+        decode_media(media, on_error="skip")
 
 
 def test_decode_media_quarantine_skewed_payloads(spark):
@@ -375,9 +338,7 @@ def test_decode_media_quarantine_skewed_payloads(spark):
         media = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(2)
         got = {
             r.media_id: r
-            for r in decode_media(
-                media, decoder="real", on_error="quarantine"
-            ).collect()
+            for r in decode_media(media, on_error="quarantine").collect()
         }
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prior)

@@ -79,97 +79,6 @@ def test_filters_and_pruning_reach_the_scan(spark):
         assert pruned_col not in plan, f"{name}: reads pruned column {pruned_col}"
 
 
-def test_zorder_layout_clusters_both_dimensions(spark, tmp_path):
-    """Z-order write contract: every output file covers a compact
-    region of BOTH key domains (so min/max footer pruning works for a
-    predicate on either column), where a single-column sort only
-    shrinks the sorted column's per-file span.  Verified from the
-    actual parquet footers via per-file min/max."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from semantic_similarity_system_using_aws_mapreduce_spark.sources.layout import morton_code, zorder_write
-
-    n = 1 << 14
-    side = 1 << 7  # x, y uniform over [0, 128)
-    df = spark.range(n).select(
-        (F.col("id") % side).alias("x"),
-        ((F.col("id") * 2654435761) % side).alias("y"),
-    )
-
-    def per_file_spans(path):
-        spans = []
-        for f in sorted(glob.glob(f"{path}/part-*.parquet")):
-            row = (
-                spark.read.parquet(f)
-                .agg(
-                    (F.max("x") - F.min("x")).alias("sx"),
-                    (F.max("y") - F.min("y")).alias("sy"),
-                )
-                .first()
-            )
-            spans.append((row.sx, row.sy))
-        return spans
-
-    z_path, x_path = str(tmp_path / "zorder"), str(tmp_path / "xsort")
-    zorder_write(df, z_path, "x", "y", n_files=16, bits=7)
-    (
-        df.repartitionByRange(16, "x")
-        .sortWithinPartitions("x")
-        .write.parquet(x_path)
-    )
-
-    z_spans = [s for s in per_file_spans(z_path) if s[0] is not None]
-    x_spans = [s for s in per_file_spans(x_path) if s[0] is not None]
-    assert len(z_spans) >= 12  # range sampling may leave a few files empty
-    # repartitionByRange SAMPLES its boundaries, so any single file can
-    # straddle a Morton quadrant boundary and span most of a dimension
-    # in an unlucky run — the per-file box is probabilistic.  The
-    # layout contract is the AGGREGATE: under z-order both dimensions'
-    # mean per-file spans stay around half the domain or less, while a
-    # single-column sort leaves the unsorted dimension spanning ~the
-    # whole domain in EVERY file.
-    mean_zx = sum(sx for sx, _ in z_spans) / len(z_spans)
-    mean_zy = sum(sy for _, sy in z_spans) / len(z_spans)
-    assert mean_zx <= 0.55 * side and mean_zy <= 0.55 * side, z_spans
-    # single-column sort: x compact but y spans ~the whole domain
-    assert all(sx <= side / 2 for sx, _ in x_spans)
-    mean_xy = sum(sy for _, sy in x_spans) / len(x_spans)
-    # boundary files that hold only a slice of one x-value cover less
-    # of y, so the mean sits below the ~full-domain typical file
-    assert mean_xy > 0.75 * side
-    # the discriminating factor: >2x tighter on the second dimension
-    assert mean_zy < mean_xy / 2
-
-    # the morton code itself is exact bit interleaving
-    row = (
-        spark.range(1)
-        .select(morton_code(F.lit(0b101), F.lit(0b011), bits=3).alias("z"))
-        .first()
-    )
-    # a=101, b=011 -> z bits (b2 a2 b1 a1 b0 a0) = 0 1 1 0 1 1 = 27
-    assert row.z == 0b011011
-
-
-def test_morton_code_clamps_negative_inputs(spark):
-    """Negative keys clamp to 0 (documented contract) instead of
-    producing a garbage interleave from two's-complement bits."""
-    from pyspark.sql import functions as F
-
-    from semantic_similarity_system_using_aws_mapreduce_spark.sources.layout import morton_code
-
-    row = (
-        spark.range(1)
-        .select(
-            morton_code(F.lit(-5), F.lit(0b11), bits=3).alias("z"),
-            morton_code(F.lit(0), F.lit(0b11), bits=3).alias("z0"),
-        )
-        .first()
-    )
-    assert row.z == row.z0 == 0b1010
-
-
 def test_spread_small_scan_is_a_noop_on_well_split_tables(spark, tmp_path):
     """The guard that makes spread_small_scan safe at scale: a scan
     that already has >= defaultParallelism/2 splits (any real

@@ -1,19 +1,7 @@
-"""Structured Streaming operators: bounded file-source streams must
-converge to the batch answers."""
+"""Streaming curation over the documents table: each micro-batch
+converges to the batch funnel's answer, exactly once under replay."""
 
 from pyspark.sql import functions as F
-
-from semantic_similarity_system_using_aws_mapreduce_spark.streaming.events import (
-    read_event_stream,
-    run_to_memory,
-    session_aggregates,
-    sliding_value_avg,
-    stream_interval_join,
-    tumbling_counts,
-)
-from semantic_similarity_system_using_aws_mapreduce_spark.workload.events import q_hourly_event_stats, q_sessionization
-
-SF_DIR = "/root/testdata/sf0.001"
 
 DOC_SCHEMA = "doc_id long, text string"
 
@@ -36,172 +24,6 @@ def _drop_batch_file(spark, tmp_path, src, name, rows):
     spark.createDataFrame(rows, DOC_SCHEMA).coalesce(1).write.parquet(str(ds))
     part = _glob.glob(str(ds / "part-*.parquet"))[0]
     _shutil.copy(part, str(src / f"{name}.parquet"))
-
-
-def test_tumbling_counts_match_batch(spark):
-    stream = read_event_stream(spark, SF_DIR)
-    result = run_to_memory(tumbling_counts(stream), output_mode="complete")
-    got = {(r.hour, r.event_type): (r.n, r.sum_value) for r in result.collect()}
-    batch = {
-        (r.hour, r.event_type): (r.n, r.sum_value)
-        for r in q_hourly_event_stats(spark, SF_DIR).collect()
-    }
-    assert got == batch
-
-
-def test_watermark_append_mode(spark):
-    """Append mode with a watermark emits only finalized windows — a
-    subset of the complete-mode result with identical values."""
-    stream = read_event_stream(spark, SF_DIR)
-    result = run_to_memory(
-        tumbling_counts(stream, watermark="1 hour"), output_mode="append"
-    )
-    got = {(r.hour, r.event_type): (r.n, r.sum_value) for r in result.collect()}
-    batch = {
-        (r.hour, r.event_type): (r.n, r.sum_value)
-        for r in q_hourly_event_stats(spark, SF_DIR).collect()
-    }
-    assert set(got).issubset(set(batch))
-    for key, val in got.items():
-        assert val == batch[key]
-
-
-def test_sliding_window(spark):
-    stream = read_event_stream(spark, SF_DIR)
-    result = run_to_memory(sliding_value_avg(stream), output_mode="complete")
-    rows = result.collect()
-    assert rows
-    # every event lands in window_size / slide = 4 sliding windows
-    total_n = sum(r.n for r in rows)
-    n_events = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
-    assert total_n == 4 * n_events
-
-
-def test_stateful_user_totals(spark):
-    """applyInPandasWithState running totals must converge to the batch
-    per-user aggregates once the bounded stream drains."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.events import stateful_user_totals
-
-    stream = read_event_stream(spark, SF_DIR)
-    result = run_to_memory(stateful_user_totals(stream), output_mode="update")
-    # update mode may emit a row per micro-batch; the LAST emission per
-    # user is the final total (single-batch file source -> exactly one)
-    got = {r.user_id: (r.n_events, r.total_value) for r in result.collect()}
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    from pyspark.sql import functions as FF
-
-    batch = {
-        r.user_id: (r.n, r.v)
-        for r in ev.groupBy("user_id")
-        .agg(FF.count("*").alias("n"), FF.round(FF.sum("value"), 4).alias("v"))
-        .collect()
-    }
-    assert got == batch
-
-
-def test_stream_interval_join_matches_batch(spark):
-    """Stream-stream attribution join (views within 30 min before a
-    purchase, per user) must emit exactly the batch join's matches."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.workload.events import _events
-
-    stream = read_event_stream(spark, SF_DIR)
-    result = run_to_memory(stream_interval_join(stream), output_mode="append")
-    got = {(r.purchase_id, r.view_id) for r in result.collect()}
-
-    ev = _events(spark, SF_DIR)
-    v = ev.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("ts").alias("v_ts"),
-        F.col("event_id").alias("view_id"),
-    )
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("p_ts"), F.col("event_id").alias("purchase_id")
-    )
-    cond = (
-        (F.col("v_user") == F.col("user_id"))
-        & (F.col("v_ts") <= F.col("p_ts"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES"))
-    )
-    want = {(r.purchase_id, r.view_id) for r in p.join(v, cond).collect()}
-    assert len(want) > 0
-    assert got == want
-
-
-def test_dedup_stream_removes_replayed_duplicates(spark, tmp_path):
-    """A source that replays every event twice (two symlinks to the
-    same parquet — an at-least-once upstream) must come out exactly
-    once per event_id, matching the batch distinct count."""
-    import os
-
-    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.events import dedup_stream
-
-    src = os.path.abspath(f"{SF_DIR}/events.parquet")
-    stream_dir = tmp_path / "replayed"
-    stream_dir.mkdir()
-    os.symlink(src, stream_dir / "a.parquet")
-    os.symlink(src, stream_dir / "b.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(src).schema
-    from semantic_similarity_system_using_aws_mapreduce_spark.sources.tables import normalize_ts
-
-    stream = normalize_ts(spark.readStream.schema(schema).parquet(str(stream_dir)))
-
-    result = run_to_memory(dedup_stream(stream), output_mode="append")
-    n_events = spark.read.parquet(src).count()
-    assert result.count() == n_events
-    assert result.select("event_id").distinct().count() == n_events
-
-
-def test_foreach_batch_upsert_converges_to_latest_per_key(spark, tmp_path):
-    """Streaming CDC sink: upserting purchase events keyed by user_id
-    must leave the parquet target holding exactly each user's latest
-    purchase (the batch window row_number()=1 answer)."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.events import run_foreach_batch_upsert
-    from semantic_similarity_system_using_aws_mapreduce_spark.workload.events import _events
-
-    target = str(tmp_path / "target")
-    stream = read_event_stream(spark, SF_DIR).filter(
-        F.col("event_type") == "purchase"
-    )
-    run_foreach_batch_upsert(stream, target, keys=["user_id"], order_col="ts")
-
-    got = {
-        r.user_id: (r.event_id, r.ts)
-        for r in spark.read.parquet(target).collect()
-    }
-
-    from pyspark.sql import Window
-
-    ev = _events(spark, SF_DIR).filter(F.col("event_type") == "purchase")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), *[F.col(c) for c in ev.columns]
-    )
-    want = {
-        r.user_id: (r.event_id, r.ts)
-        for r in ev.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .collect()
-    }
-    assert len(want) > 0
-    assert got == want
-
-
-def test_session_windows_match_batch_sessionization(spark):
-    """session_window(gap=30m) must produce the same per-user session
-    counts as the batch lag+cumsum formulation."""
-    stream = read_event_stream(spark, SF_DIR)
-    result = run_to_memory(session_aggregates(stream), output_mode="complete")
-    got = (
-        result.groupBy("user_id")
-        .agg(F.count("*").alias("n_sessions"), F.sum("n_events").alias("n_events"))
-        .collect()
-    )
-    got = {r.user_id: (r.n_sessions, r.n_events) for r in got}
-    batch = {
-        r.user_id: (r.n_sessions, r.n_events)
-        for r in q_sessionization(spark, SF_DIR).collect()
-    }
-    assert got == batch
 
 
 def test_normalize_ts_unifies_all_three_parquet_encodings(spark, tmp_path):
@@ -248,103 +70,6 @@ def test_normalize_ts_unifies_all_three_parquet_encodings(spark, tmp_path):
     assert results["ntz_us"] == results["utc_us"] == results["nanos"]
 
 
-def test_enrich_stream_matches_batch_broadcast_join(spark):
-    """Stream-static enrichment must converge to the batch broadcast
-    join: every event row picks up its user's dim attributes."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.events import enrich_stream
-    from semantic_similarity_system_using_aws_mapreduce_spark.workload.events import _events
-
-    ev = _events(spark, SF_DIR)
-    dim = ev.select("user_id").distinct().select(
-        "user_id",
-        (F.col("user_id") % 3).alias("tier"),
-    )
-    stream = read_event_stream(spark, SF_DIR)
-    enriched = enrich_stream(
-        stream.select("event_id", "user_id"), dim, on="user_id"
-    )
-    result = run_to_memory(enriched, output_mode="append")
-    got = {(r.event_id, r.user_id, r.tier) for r in result.collect()}
-    want = {
-        (r.event_id, r.user_id, r.tier)
-        for r in ev.select("event_id", "user_id").join(dim, "user_id")
-        .select("event_id", "user_id", "tier").collect()
-    }
-    assert len(want) > 0
-    assert got == want
-
-
-def test_watermark_drops_late_rows(spark, tmp_path):
-    """True late-data semantics, not just append⊆complete.  Spark
-    evicts window state at batch END, so a late row landing in the
-    same batch where the watermark first passes its window still
-    merges — the drop needs three batches (maxFilesPerTrigger=1,
-    modification-time ordering):
-
-      b0: events 00:10 and 05:00  -> watermark after b0 = 04:00
-      b1: event 06:00             -> 00:00 window evicted+emitted (n=1)
-      b2: LATE event 00:20        -> below watermark, state gone: DROPPED
-
-    The 00:00 window must emit exactly once with n=1 and the batch-2
-    progress must report the drop."""
-    import datetime
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from semantic_similarity_system_using_aws_mapreduce_spark.sources.tables import normalize_ts
-    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.events import tumbling_counts
-
-    t0 = datetime.datetime(2026, 1, 1, 0, 0, 0)
-    d = tmp_path / "late_src"
-    d.mkdir()
-
-    def write(name, specs):
-        ids = list(range(len(specs)))
-        tss = [t0 + datetime.timedelta(minutes=m) for m, _ in specs]
-        ets = [et for _, et in specs]
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array(ids, pa.int64()),
-                    "ts": pa.array(tss, pa.timestamp("us")),
-                    "value": pa.array([1.0] * len(ids)),
-                    "event_type": pa.array(ets),
-                }
-            ),
-            str(d / name),
-        )
-
-    write("f1.parquet", [(10, "a"), (300, "a")])
-    time.sleep(1.2)  # the file source orders batches by mtime
-    write("f2.parquet", [(360, "a")])
-    time.sleep(1.2)
-    write("f3.parquet", [(20, "a")])
-
-    schema = spark.read.parquet(str(d / "f1.parquet")).schema
-    stream = normalize_ts(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(d))
-    )
-    agg = tumbling_counts(stream, watermark="1 hour")
-    import uuid
-
-    qname = f"late_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("append").format("memory").queryName(qname).start()
-    try:
-        q.processAllAvailable()
-        dropped = sum(
-            op.get("numRowsDroppedByWatermark", 0)
-            for p in q.recentProgress
-            for op in p["stateOperators"]
-        )
-    finally:
-        q.stop()
-    got = [(r.hour, r.event_type, r.n) for r in spark.table(qname).collect() if r.hour == t0]
-    assert got == [(t0, "a", 1)]  # emitted once, late row not merged
-    assert dropped == 1
-
-
 def test_streaming_curation_matches_sequential_batch_application(spark, tmp_path):
     """Continuous-ingest curation: two micro-batches through the
     quality gate + incremental-dedup index.  The streamed corpus must
@@ -358,7 +83,7 @@ def test_streaming_curation_matches_sequential_batch_application(spark, tmp_path
         shingle_hashes,
     )
     from semantic_similarity_system_using_aws_mapreduce_spark.streaming.documents import (
-        quality_gate,
+        _gate_flag,
         run_streaming_curation,
     )
 
@@ -403,7 +128,7 @@ def test_streaming_curation_matches_sequential_batch_application(spark, tmp_path
     expect_ids: set[int] = set()
     index = None
     for rows in (batch_a, batch_b):
-        df = quality_gate(spark.createDataFrame(rows, schema), 24, 0.35)
+        df = _gate_flag(spark.createDataFrame(rows, schema), 24, 0.35).filter("_gated")
         sigs = minhash_signatures(shingle_hashes(df))
         batch = [
             tuple(r)
@@ -421,71 +146,6 @@ def test_streaming_curation_matches_sequential_batch_application(spark, tmp_path
     # index mirrors the corpus
     idx_ids = {r.doc_id for r in spark.read.parquet(index_path).collect()}
     assert idx_ids == got_ids
-
-
-def test_streaming_token_sketch_equals_batch_sketch(spark, tmp_path):
-    """Per-micro-batch count-min sketches merged cell-wise into the
-    persisted sketch table must be BIT-IDENTICAL to the batch sketch
-    over all ingested documents (CMS merge is exact addition — no
-    approximation is introduced by streaming), and estimates queried
-    from the streamed sketch must never underestimate true counts."""
-    import glob
-    import shutil
-
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import tokens as _tokens
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.text_analysis import (
-        cms_estimate,
-        cms_sketch,
-    )
-    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.documents import run_streaming_token_sketch
-
-    batches = {
-        "batch_a": [(1, "alpha beta gamma alpha"), (2, "beta beta delta")],
-        "batch_b": [(3, "alpha epsilon"), (4, "zeta beta alpha alpha")],
-        "batch_c": [(5, "eta theta beta"), (6, "alpha")],
-    }
-    src = tmp_path / "sketch_incoming"
-    src.mkdir()
-    schema = "doc_id long, text string"
-    for name, rows in batches.items():
-        ds = tmp_path / f"_{name}_ds"
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(ds))
-        part = glob.glob(str(ds / "part-*.parquet"))[0]
-        shutil.copy(part, str(src / f"{name}.parquet"))
-
-    sketch_path = str(tmp_path / "sketch")
-    run_streaming_token_sketch(spark, str(src), sketch_path, d=3, w=64)
-
-    all_rows = [r for rows in batches.values() for r in rows]
-    docs = spark.createDataFrame(all_rows, schema)
-    toks = docs.select(F.explode(_tokens(F.col("text"))).alias("token"))
-    expected = sorted(map(tuple, cms_sketch(toks, d=3, w=64).collect()))
-
-    def read_sketch():
-        return sorted(
-            map(tuple, spark.read.parquet(sketch_path).select("i", "cell", "c").collect())
-        )
-
-    assert read_sketch() == expected
-    # at-least-once replay safety: wipe the checkpoint so the SAME
-    # files re-deliver as the same batch ids — the applied_batch_id
-    # stamp must make every replayed merge a no-op (without it each
-    # cell would double)
-    import shutil as _sh
-
-    _sh.rmtree(sketch_path + "_ckpt", ignore_errors=True)
-    run_streaming_token_sketch(spark, str(src), sketch_path, d=3, w=64)
-    assert read_sketch() == expected
-    # estimates from the streamed sketch never underestimate
-    exact = toks.groupBy("token").agg(F.count("*").alias("n"))
-    est = cms_estimate(
-        exact.select("token"), spark.read.parquet(sketch_path), d=3, w=64
-    )
-    joined = exact.join(est, "token").collect()
-    assert len(joined) == 8
-    assert all(r.cms_estimate >= r.n for r in joined)
-    # 'alpha' occurs 6 times; its estimate is at least that
-    assert next(r for r in joined if r.token == "alpha").cms_estimate >= 6
 
 
 def test_streaming_curation_restart_processes_only_new_files(spark, tmp_path):
@@ -564,62 +224,6 @@ def test_forget_documents_erases_and_readmits(spark, tmp_path):
     drop_file("batch_b", [(50, long_text("a"))])
     run_streaming_curation(spark, str(src), corpus_path, index_path)
     assert {r.doc_id for r in spark.read.parquet(corpus_path).collect()} == {2, 50}
-
-
-def test_token_sketch_converges_after_simulated_torn_rewrite(spark, tmp_path):
-    """The ADVICE r4 scenario: a crash mid-rewrite of the sketch table
-    must never leave a partial sketch whose stamp silently skips the
-    replayed batch.  With the atomic swap, every interruption point
-    leaves either the complete old or the complete new snapshot; the
-    next read heals it and the replay stamps stay truthful."""
-    import glob
-    import os
-    import shutil
-
-    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.documents import run_streaming_token_sketch
-
-    batches = {
-        "batch_a": [(1, "alpha beta alpha")],
-        "batch_b": [(2, "beta gamma")],
-    }
-    src = tmp_path / "torn_incoming"
-    src.mkdir()
-    schema = "doc_id long, text string"
-    for name, rows in batches.items():
-        ds = tmp_path / f"_{name}_ds"
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(ds))
-        part = glob.glob(str(ds / "part-*.parquet"))[0]
-        shutil.copy(part, str(src / f"{name}.parquet"))
-
-    sketch_path = str(tmp_path / "torn_sketch")
-    run_streaming_token_sketch(spark, str(src), sketch_path, d=3, w=32)
-    expected = sorted(
-        map(tuple, spark.read.parquet(sketch_path).select("i", "cell", "c").collect())
-    )
-
-    # crash window A: between the two renames, temp committed -> the
-    # heal rolls FORWARD to the identical complete snapshot
-    shutil.copytree(sketch_path, sketch_path + ".__tmp__")
-    os.rename(sketch_path, sketch_path + ".__bak__")
-    shutil.rmtree(sketch_path + "_ckpt")
-    run_streaming_token_sketch(spark, str(src), sketch_path, d=3, w=32)
-    got = sorted(
-        map(tuple, spark.read.parquet(sketch_path).select("i", "cell", "c").collect())
-    )
-    assert got == expected
-
-    # crash window B: temp never committed -> the heal rolls BACK to
-    # the old snapshot (stamp included), and re-running the stream
-    # replays forward to the same converged state
-    shutil.copytree(sketch_path, sketch_path + ".__tmp__")
-    os.remove(os.path.join(sketch_path + ".__tmp__", "_SUCCESS"))
-    os.rename(sketch_path, sketch_path + ".__bak__")
-    shutil.rmtree(sketch_path + "_ckpt")
-    run_streaming_token_sketch(spark, str(src), sketch_path, d=3, w=32)
-    got = sorted(
-        map(tuple, spark.read.parquet(sketch_path).select("i", "cell", "c").collect())
-    )
-    assert got == expected
 
 
 import pytest
@@ -744,7 +348,6 @@ def test_bucketed_sig_index_probe_has_no_exchange_on_index_side(spark, tmp_path)
         near_dup_probe,
         shingle_hashes,
     )
-    from semantic_similarity_system_using_aws_mapreduce_spark.sources.bucketing import read_bucketed
     from semantic_similarity_system_using_aws_mapreduce_spark.streaming.documents import build_bucketed_sig_index
 
     long_text = _long_text
@@ -765,7 +368,7 @@ def test_bucketed_sig_index_probe_has_no_exchange_on_index_side(spark, tmp_path)
     batch_sigs = [tuple(r) for r in minhash_signatures(shingle_hashes(batch)).select(*cols).collect()]
     index_sigs = spark.read.parquet(index_path)
     # the table covers the whole index: its parquet tail is empty
-    bucketed = (read_bucketed(spark, "sig_buckets_b"), index_sigs.filter(F.lit(False)))
+    bucketed = (spark.table("sig_buckets_b"), index_sigs.filter(F.lit(False)))
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -1387,51 +990,6 @@ def test_streaming_postings_index_and_bm25_search(spark, tmp_path):
     assert res.count() == 0
 
 
-def test_streaming_token_sketch_manifest_mode(spark, tmp_path, monkeypatch):
-    """The sketch table's every rewrite goes through atomic_replace —
-    under SPARK_GRAFT_ATOMIC_MODE=manifest the whole stream must
-    produce the identical bit-exact sketch with the table living
-    behind the manifest pointer (no bare directory), and the
-    replay-stamp skip must still hold."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import tokens as _tokens
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.text_analysis import cms_sketch
-    from semantic_similarity_system_using_aws_mapreduce_spark.sources.atomic import (
-        read_parquet_recovering,
-    )
-    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.documents import run_streaming_token_sketch
-
-    monkeypatch.setenv("SPARK_GRAFT_ATOMIC_MODE", "manifest")
-    import os
-
-    rows = [(1, "alpha beta alpha"), (2, "beta gamma")]
-    src = tmp_path / "msketch_incoming"
-    src.mkdir()
-    for i, r in enumerate(rows):
-        _drop_batch_file(spark, tmp_path, src, f"b{i}", [r])
-
-    sketch_path = str(tmp_path / "msketch")
-    run_streaming_token_sketch(spark, str(src), sketch_path, d=3, w=64)
-    assert os.path.isfile(sketch_path + ".__manifest__")
-    assert not os.path.isdir(sketch_path)
-
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    toks = docs.select(F.explode(_tokens(F.col("text"))).alias("token"))
-    expected = sorted(map(tuple, cms_sketch(toks, d=3, w=64).collect()))
-    got = read_parquet_recovering(spark, sketch_path, mode="manifest")
-    assert sorted(map(tuple, got.select("i", "cell", "c").collect())) == expected
-
-    # replay: wipe the checkpoint, rerun — the applied_batch_id stamp
-    # skips both batches; the manifest keeps pointing at one version
-    import shutil as _sh
-
-    _sh.rmtree(sketch_path + "_ckpt", ignore_errors=True)
-    run_streaming_token_sketch(spark, str(src), sketch_path, d=3, w=64)
-    got = read_parquet_recovering(spark, sketch_path, mode="manifest")
-    assert sorted(map(tuple, got.select("i", "cell", "c").collect())) == expected
-    vdirs = [d for d in os.listdir(tmp_path) if d.startswith("msketch.__v")]
-    assert len(vdirs) == 1, vdirs
-
-
 def test_streaming_postings_compaction_bounds_files(spark, tmp_path):
     """compact_every with postings=True also folds the retrieval
     tables: after four batches at compact_every=2 the postings table
@@ -1923,76 +1481,14 @@ def test_vacuum_covers_the_segment_bucket_table_too(spark, tmp_path):
                 spark.sql(f"DROP TABLE IF EXISTS {t.name}")
 
 
-def test_streaming_quantile_sketch_converges_to_batch(spark, tmp_path):
-    """Per-micro-batch bottom-k folds into the persisted sample table
-    must be ROW-IDENTICAL to the batch bottomk_sample over all
-    ingested documents (hash selection merges EXACTLY — streaming
-    introduces zero drift), estimates match the batch operator, and an
-    at-least-once replay is a no-op via the applied_batch_id stamp."""
-    import glob
-    import os
-    import shutil
-
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.dedup import md5_int, tokens as _tokens
-    from semantic_similarity_system_using_aws_mapreduce_spark.operators.sampling import bottomk_sample
-    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.documents import run_streaming_quantile_sketch
-
-    batches = {
-        "qb_a": [(i, " ".join(f"a{j}" for j in range(5 + i))) for i in range(1, 8)],
-        "qb_b": [(i, " ".join(f"b{j}" for j in range(3 + 2 * i))) for i in range(10, 20)],
-        "qb_c": [(i, " ".join(f"c{j}" for j in range(40))) for i in range(30, 34)],
-    }
-    src = tmp_path / "qsk_incoming"
-    src.mkdir()
-    schema = "doc_id long, text string"
-    for name, rows in batches.items():
-        ds = tmp_path / f"_{name}_ds"
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(ds))
-        part = glob.glob(str(ds / "part-*.parquet"))[0]
-        shutil.copy(part, str(src / f"{name}.parquet"))
-
-    sketch_path = str(tmp_path / "qsketch")
-    run_streaming_quantile_sketch(spark, str(src), sketch_path, k=10)
-
-    all_rows = [r for rows in batches.values() for r in rows]
-    docs = spark.createDataFrame(all_rows, schema)
-    rel = docs.select(
-        "doc_id",
-        F.size(_tokens(F.col("text"))).alias("v"),
-        md5_int(
-            F.concat_ws(":", F.lit("qsk"), F.col("doc_id").cast("string"))
-        ).alias("_h"),
-    )
-    expected = sorted(
-        (r.doc_id, r.v) for r in bottomk_sample(rel.drop("_h"), "doc_id", k=10).collect()
-    )
-
-    def read_sample():
-        return sorted(
-            (r.doc_id, r.v)
-            for r in spark.read.parquet(sketch_path).select("doc_id", "v").collect()
-        )
-
-    assert read_sample() == expected
-    assert len(expected) == 10  # 21 docs ingested, k rows of state
-
-    # at-least-once replay: drop the final commit so the last batch
-    # re-delivers — the stamp makes the fold a no-op, not a double-merge
-    commits = sorted(os.listdir(os.path.join(sketch_path + "_ckpt", "commits")))
-    last = [c for c in commits if not c.startswith(".")][-1]
-    os.remove(os.path.join(sketch_path + "_ckpt", "commits", last))
-    crc = os.path.join(sketch_path + "_ckpt", "commits", f".{last}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    run_streaming_quantile_sketch(spark, str(src), sketch_path, k=10)
-    assert read_sample() == expected
-
-
 def test_streaming_quality_gate_mojibake(spark):
     """The streaming gate applies the SAME mojibake-density reject as
     the batch funnel when the ingest path supplies n_repl/n_chars —
     and stays a pure token/ttr gate when it doesn't."""
-    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.documents import quality_gate
+    from semantic_similarity_system_using_aws_mapreduce_spark.streaming.documents import _gate_flag
+
+    def admitted(df):
+        return {r.doc_id for r in _gate_flag(df, 24, 0.35).filter("_gated").collect()}
 
     text = " ".join(f"tok{i}a tok{i}b" for i in range(16))
     rows = [
@@ -2001,15 +1497,12 @@ def test_streaming_quality_gate_mojibake(spark):
         (3, text, len(text), None),  # null count passes
     ]
     schema = "doc_id long, text string, n_chars long, n_repl long"
-    got = {r.doc_id for r in quality_gate(
-        spark.createDataFrame(rows, schema), 24, 0.35
-    ).collect()}
-    assert got == {1, 3}
+    assert admitted(spark.createDataFrame(rows, schema)) == {1, 3}
     # without the columns the gate is unchanged
     plain = spark.createDataFrame(
         [(i, t) for i, t, _, _ in rows], "doc_id long, text string"
     )
-    assert {r.doc_id for r in quality_gate(plain, 24, 0.35).collect()} == {1, 2, 3}
+    assert admitted(plain) == {1, 2, 3}
 
 
 def _warc_record(rec_id: str, payload: bytes, uri: str,
@@ -2960,7 +2453,7 @@ def test_forget_documents_expand_chains_off_restores_single_row_erase(spark, tmp
 #: relation re-planned once per consumer shows up here as dozens of
 #: extra jobs; a driver-side id set built as anything but a local
 #: relation shows up as a job per broadcast.
-STREAM_JOB_BUDGET = {"keep-newest": 73, "keep-first": 48}
+STREAM_JOB_BUDGET = {"keep-newest": 71, "keep-first": 47}
 
 
 @pytest.mark.parametrize("dedup", ["keep-newest", "keep-first"])
