@@ -62,6 +62,12 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
+def q_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _emb(spark, sf_dir).select(
+        "vec_id", F.round(F.sqrt(sq_norm(F.col("embedding"))), 6).alias("l2_norm")
+    )
+
+
 def q_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All pairs above a cosine threshold (brute force, i < j).
 
@@ -440,6 +446,7 @@ QUERIES = {
     "q_ann_ivf_recall": q_ann_ivf_recall,
     "q_ann_lsh_topk": q_ann_lsh_topk,
     "q_embedding_quantization": q_embedding_quantization,
+    "q_embedding_norms": q_embedding_norms,
     "q_embedding_parity_measures": q_embedding_parity_measures,
     "q_cosine_pairs": q_cosine_pairs,
     "q_knn": q_knn,
@@ -655,6 +662,11 @@ ORACLES = {
                    + sum(CASE WHEN y > 0 AND (x + y) / 2 > 0
                               THEN y * ln(y / ((x + y) / 2)) ELSE 0 END), 6) AS sim_js
         FROM aligned GROUP BY pair_id
+    """,
+    "q_embedding_norms": f"""
+        WITH {_UNNEST}
+        SELECT vec_id, round(sqrt(sum(v * v)), 6) AS l2_norm
+        FROM u GROUP BY vec_id
     """,
     "q_embedding_quantization": f"""
         WITH {_UNNEST},

@@ -230,6 +230,96 @@ def q_event_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def q_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered-step conversion funnel (view -> click AFTER the first
+    view -> purchase AFTER that click): per-step user counts and
+    conversion rates in one row.  "Ordered" is the point — a user who
+    clicked before ever viewing does not convert step 2, which is what
+    separates a funnel from three independent COUNT DISTINCTs.
+
+    Plan: each step is a per-user min-timestamp aggregation joined to
+    the previous step's frontier; all three aggs and both joins key on
+    user_id, so at 100 TB the chain is co-partitioned after the first
+    exchange (AQE reuses it) and nothing is ever ordered globally —
+    the window-sort formulation would sort every user's full history
+    instead of folding it to one timestamp per step.
+
+    The v and c frontiers are persisted: each is consumed twice (the
+    next step's join AND its own count), and without the persists the
+    earlier steps' scans and aggregations recompute whole per arm."""
+    from pyspark import StorageLevel
+
+    ev = _events(spark, sf_dir)
+    v = (
+        ev.filter(F.col("event_type") == "view")
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t1"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    c = (
+        ev.filter(F.col("event_type") == "click")
+        .join(v, "user_id")
+        .filter(F.col("ts") > F.col("t1"))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t2"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    p = (
+        ev.filter(F.col("event_type") == "purchase")
+        .join(c, "user_id")
+        .filter(F.col("ts") > F.col("t2"))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t3"))
+    )
+    return (
+        v.agg(F.count("*").alias("n_view"))
+        .crossJoin(c.agg(F.count("*").alias("n_view_click")))
+        .crossJoin(p.agg(F.count("*").alias("n_full_funnel")))
+        .select(
+            "n_view",
+            "n_view_click",
+            "n_full_funnel",
+            F.round(F.col("n_view_click") / F.col("n_view"), 6).alias("click_rate"),
+            F.round(F.col("n_full_funnel") / F.col("n_view"), 6).alias(
+                "purchase_rate"
+            ),
+        )
+    )
+
+
+def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cohort retention matrix: users grouped by signup week, counted
+    once per later week they were active — the (cohort_week,
+    week_offset, n_active) triangle every growth dashboard draws.
+
+    Weeks are integer epoch-week indexes (unix seconds div 604800),
+    NOT calendar truncations: date_trunc week conventions and
+    timezone rules differ across engines, while integer division of
+    the UTC-pinned epoch has exactly one answer (the same reasoning
+    as the events readers' micros quantization).
+
+    Plan: per-user signup week is one agg; per-(user, week) activity
+    is one distinct agg; both key user_id, the join is co-partitioned,
+    and the final rollup is keyed by the (cohort, offset) pair — no
+    global sort, nothing per-user beyond its own rows."""
+    ev = _events(spark, sf_dir)
+    # `div`, not `/` + cast: float division near a week boundary could
+    # round across it; integer division has one answer in every engine
+    week = F.expr("unix_timestamp(ts) div 604800")
+    signup = (
+        ev.filter(F.col("event_type") == "signup")
+        .groupBy("user_id")
+        .agg(F.min(week).alias("cohort_week"))
+    )
+    active = ev.select("user_id", week.alias("week")).distinct()
+    return (
+        active.join(signup, "user_id")
+        .filter(F.col("week") >= F.col("cohort_week"))
+        .groupBy("cohort_week", (F.col("week") - F.col("cohort_week")).alias("week_offset"))
+        .agg(F.count("*").alias("n_active"))
+    )
+
+
 ANOMALY_Z = 3.0  # the classic Iglewicz-Hoaglin modified-z cutoff ~3.5
 # is tuned for near-normal data; the fixture's value column is heavy-
 # tailed enough that 3.0 yields a stable non-empty anomaly set
@@ -274,6 +364,8 @@ def q_event_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {
     "q_event_anomalies": q_event_anomalies,
+    "q_cohort_retention": q_cohort_retention,
+    "q_conversion_funnel": q_conversion_funnel,
     "q_asof_view_before_purchase": q_asof_view_before_purchase,
     "q_hourly_event_stats": q_hourly_event_stats,
     "q_interval_join": q_interval_join,
@@ -301,11 +393,36 @@ ORACLES = {
         WHERE m.mad > 0
           AND abs(0.6745 * (d.value - d.med) / m.mad) >= {ANOMALY_Z}
     """,
-    # forward: earliest view at-or-after; equal-timestamp views resolve
-    # to the greatest event_id (the engine's right_tiebreak semantics:
-    # the greatest wins in every direction)
-    # nearest: minimal |Δt|; distance ties prefer the backward side
-    # (v.ts <= p.ts); equal-timestamp ties the greatest event_id
+    "q_cohort_retention": """
+        WITH w AS (SELECT user_id, event_type,
+                          floor(epoch(ts))::BIGINT // 604800 AS week
+                   FROM events),
+        signup AS (SELECT user_id, min(week) AS cohort_week
+                   FROM w WHERE event_type = 'signup' GROUP BY 1),
+        active AS (SELECT DISTINCT user_id, week FROM w)
+        SELECT cohort_week, (week - cohort_week) AS week_offset,
+               count(*)::BIGINT AS n_active
+        FROM active JOIN signup USING (user_id)
+        WHERE week >= cohort_week
+        GROUP BY 1, 2
+    """,
+    "q_conversion_funnel": """
+        WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
+                   WHERE event_type = 'view' GROUP BY 1),
+        c AS (SELECT e.user_id, min(e.ts) AS t2
+              FROM events e JOIN v USING (user_id)
+              WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY 1),
+        p AS (SELECT e.user_id, min(e.ts) AS t3
+              FROM events e JOIN c USING (user_id)
+              WHERE e.event_type = 'purchase' AND e.ts > c.t2 GROUP BY 1)
+        SELECT (SELECT count(*) FROM v)::BIGINT AS n_view,
+               (SELECT count(*) FROM c)::BIGINT AS n_view_click,
+               (SELECT count(*) FROM p)::BIGINT AS n_full_funnel,
+               round((SELECT count(*) FROM c) * 1.0
+                     / (SELECT count(*) FROM v), 6) AS click_rate,
+               round((SELECT count(*) FROM p) * 1.0
+                     / (SELECT count(*) FROM v), 6) AS purchase_rate
+    """,
     "q_asof_view_before_purchase": """
         SELECT p.event_id, p.user_id,
                (SELECT v.event_id FROM events v

@@ -166,6 +166,22 @@ def q_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def q_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Running revenue per customer over order date (window running
+    sum)."""
+    o = _t(spark, sf_dir, "orders")
+    w = (
+        Window.partitionBy("o_custkey")
+        .orderBy("o_orderdate", "o_orderkey")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return o.select(
+        "o_custkey",
+        "o_orderkey",
+        F.round(F.sum("o_totalprice").over(w), 4).alias("running_total"),
+    )
+
+
 def q_tagged_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's R1 tagged union (3 aggregations through one
     logical surface, Step1.java:63-70) as UNION ALL of typed counts."""
@@ -200,6 +216,101 @@ def q_acctbal_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("bal") / F.col("total_bal"), 6).alias("share"),
         )
     )
+
+
+def q_nations_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INTERSECT set op: nations present on both customer and supplier
+    sides."""
+    c = _t(spark, sf_dir, "customer")
+    s = _t(spark, sf_dir, "supplier")
+    n = _t(spark, sf_dir, "nation")
+    cust_nations = c.join(
+        F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey")
+    ).select("n_name")
+    supp_nations = s.join(
+        F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
+    ).select("n_name")
+    return cust_nations.intersect(supp_nations)
+
+
+def q_nations_except(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXCEPT set op: nations with customers but no suppliers."""
+    c = _t(spark, sf_dir, "customer")
+    s = _t(spark, sf_dir, "supplier")
+    n = _t(spark, sf_dir, "nation")
+    cust_nations = c.join(
+        F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey")
+    ).select("n_name")
+    supp_nations = s.join(
+        F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
+    ).select("n_name")
+    return cust_nations.exceptAll(supp_nations).distinct()
+
+
+def q_rollup_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ROLLUP hierarchy totals (grouping-set aggregation)."""
+    l = _t(spark, sf_dir, "lineitem")
+    return (
+        l.rollup("l_returnflag", "l_linestatus")
+        .agg(F.round(F.sum("l_quantity"), 4).alias("sum_qty"), F.count("*").alias("n"))
+        .select(
+            F.coalesce(F.col("l_returnflag"), F.lit("ALL")).alias("returnflag"),
+            F.coalesce(F.col("l_linestatus"), F.lit("ALL")).alias("linestatus"),
+            "sum_qty",
+            "n",
+        )
+    )
+
+
+def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Explicit GROUPING SETS — the general form cube/rollup desugar
+    to: exactly the requested grouping combinations ((flag, status),
+    (flag), ()), no others, one Expand + one aggregation."""
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").createOrReplaceTempView(
+        "lineitem_gs"
+    )
+    return spark.sql(
+        """
+        SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
+               coalesce(l_linestatus, 'ALL') AS linestatus,
+               round(sum(l_quantity), 4) AS sum_qty,
+               count(*) AS n
+        FROM lineitem_gs
+        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
+        """
+    )
+
+
+def q_rank_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """percent_rank / cume_dist — the distribution-valued window ranks
+    (the rest of the rank family lives in q_window_functions)."""
+    o = _t(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
+    return o.select(
+        "o_orderkey",
+        "o_orderstatus",
+        F.round(F.percent_rank().over(w), 6).alias("price_pct_rank"),
+        F.round(F.cume_dist().over(w), 6).alias("price_cume_dist"),
+    )
+
+
+def q_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXCEPT ALL — bag (multiset) difference, keeping multiplicity:
+    per order key, R-flag lineitem occurrences minus A-flag occurrences
+    (the DISTINCT set-ops live in q_nations_except/_intersect)."""
+    l = _t(spark, sf_dir, "lineitem")
+    r = l.filter(F.col("l_returnflag") == "R").select("l_orderkey")
+    a = l.filter(F.col("l_returnflag") == "A").select("l_orderkey")
+    return r.exceptAll(a).groupBy("l_orderkey").agg(F.count("*").alias("n_surplus"))
+
+
+def q_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INTERSECT ALL — bag intersection (min of the two sides'
+    multiplicities per value)."""
+    l = _t(spark, sf_dir, "lineitem")
+    r = l.filter(F.col("l_returnflag") == "R").select("l_orderkey")
+    a = l.filter(F.col("l_returnflag") == "A").select("l_orderkey")
+    return r.intersectAll(a).groupBy("l_orderkey").agg(F.count("*").alias("n_common"))
 
 
 def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -328,6 +439,16 @@ def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("prob", 2).alias("prob"),
         F.round("_est", 6).alias("estimate"),
         (F.abs(F.col("_cdf") - F.col("prob")) <= 0.1).cast("int").alias("ok"),
+    )
+
+
+def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact interpolated percentiles (sort-based aggregate)."""
+    o = _t(spark, sf_dir, "orders")
+    return o.groupBy("o_orderstatus").agg(
+        F.round(F.expr("percentile(o_totalprice, 0.5)"), 6).alias("p50"),
+        F.round(F.expr("percentile(o_totalprice, 0.9)"), 6).alias("p90"),
+        F.round(F.expr("percentile(o_totalprice, 0.99)"), 6).alias("p99"),
     )
 
 
@@ -502,6 +623,7 @@ QUERIES = {
     "q_table_stats": q_table_stats,
     "q01_pricing_summary": q01_pricing_summary,
     "q_window_functions": q_window_functions,
+    "q_percentiles": q_percentiles,
     "q_quantile_sketch": q_quantile_sketch,
     "q_date_buckets": q_date_buckets,
     "q_string_funcs": q_string_funcs,
@@ -516,12 +638,20 @@ QUERIES = {
     "q_anti_join": q_anti_join,
     "q_full_outer_align": q_full_outer_align,
     "q_window_topk": q_window_topk,
+    "q_running_total": q_running_total,
     "q_tagged_union": q_tagged_union,
     "q_acctbal_share": q_acctbal_share,
+    "q_nations_intersect": q_nations_intersect,
+    "q_nations_except": q_nations_except,
+    "q_rollup_qty": q_rollup_qty,
     "q_pivot_status": q_pivot_status,
     "q_having_big_customers": q_having_big_customers,
     "q_distinct_counts": q_distinct_counts,
     "q_sketch_accuracy": q_sketch_accuracy,
+    "q_grouping_sets": q_grouping_sets,
+    "q_rank_distribution": q_rank_distribution,
+    "q_except_all": q_except_all,
+    "q_intersect_all": q_intersect_all,
 }
 
 ORACLES = {
@@ -552,6 +682,13 @@ ORACLES = {
                ntile(4) OVER (PARTITION BY o_custkey
                      ORDER BY o_totalprice DESC, o_orderkey) AS price_quartile
         FROM orders
+    """,
+    "q_percentiles": """
+        SELECT o_orderstatus,
+               round(quantile_cont(o_totalprice, 0.5), 6) AS p50,
+               round(quantile_cont(o_totalprice, 0.9), 6) AS p90,
+               round(quantile_cont(o_totalprice, 0.99), 6) AS p99
+        FROM orders GROUP BY o_orderstatus
     """,
     # deterministic hash-bottom-k sample -> interpolated estimates ->
     # rank-space audit vs the full table; mirrors
@@ -722,6 +859,13 @@ ORACLES = {
         )
         WHERE rn <= 3
     """,
+    "q_running_total": """
+        SELECT o_custkey, o_orderkey,
+               round(sum(o_totalprice) OVER (
+                   PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running_total
+        FROM orders
+    """,
     "q_tagged_union": """
         SELECT 'status' AS kind, o_orderstatus AS key, count(*) AS cnt
         FROM orders GROUP BY o_orderstatus
@@ -738,6 +882,26 @@ ORACLES = {
                round(sum(c_acctbal) / (SELECT sum(c_acctbal) FROM customer), 6) AS share
         FROM customer JOIN nation ON c_nationkey = n_nationkey
         GROUP BY n_name
+    """,
+    "q_nations_intersect": """
+        SELECT n_name FROM customer JOIN nation ON c_nationkey = n_nationkey
+        INTERSECT
+        SELECT n_name FROM supplier JOIN nation ON s_nationkey = n_nationkey
+    """,
+    "q_nations_except": """
+        SELECT DISTINCT n_name FROM (
+            SELECT n_name FROM customer JOIN nation ON c_nationkey = n_nationkey
+            EXCEPT ALL
+            SELECT n_name FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        )
+    """,
+    "q_rollup_qty": """
+        SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
+               coalesce(l_linestatus, 'ALL') AS linestatus,
+               round(sum(l_quantity), 4) AS sum_qty,
+               count(*) AS n
+        FROM lineitem
+        GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
     "q_pivot_status": """
         -- count(*) FILTER keeps the result BIGINT; sum(CASE ...) would be
@@ -759,6 +923,36 @@ ORACLES = {
                count(DISTINCT l_suppkey) AS n_supps,
                count(DISTINCT l_orderkey) AS n_orders
         FROM lineitem GROUP BY l_returnflag
+    """,
+    "q_except_all": """
+        SELECT l_orderkey, count(*) AS n_surplus
+        FROM (SELECT l_orderkey FROM lineitem WHERE l_returnflag = 'R'
+              EXCEPT ALL
+              SELECT l_orderkey FROM lineitem WHERE l_returnflag = 'A')
+        GROUP BY l_orderkey
+    """,
+    "q_intersect_all": """
+        SELECT l_orderkey, count(*) AS n_common
+        FROM (SELECT l_orderkey FROM lineitem WHERE l_returnflag = 'R'
+              INTERSECT ALL
+              SELECT l_orderkey FROM lineitem WHERE l_returnflag = 'A')
+        GROUP BY l_orderkey
+    """,
+    "q_grouping_sets": """
+        SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
+               coalesce(l_linestatus, 'ALL') AS linestatus,
+               round(sum(l_quantity), 4) AS sum_qty,
+               count(*) AS n
+        FROM lineitem
+        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
+    """,
+    "q_rank_distribution": """
+        SELECT o_orderkey, o_orderstatus,
+               round(percent_rank() OVER w, 6) AS price_pct_rank,
+               round(cume_dist() OVER w, 6) AS price_cume_dist
+        FROM orders
+        WINDOW w AS (PARTITION BY o_orderstatus
+                     ORDER BY o_totalprice, o_orderkey)
     """,
     # Exact columns hash-checked; the sketch-accuracy booleans are
     # asserted TRUE (computed Spark-side against the exact values in

@@ -370,6 +370,77 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_fertility(docs, merges)
 
 
+def q_bpe_vocab_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vocabulary segmentation under the learned tokenizer — trains
+    the {BPE_MERGE_ROUNDS}-merge model, then replays the merges over
+    the DISTINCT-word relation (operators/bpe.bpe_encode_words: encode
+    once per vocabulary entry; a full-corpus tokenization joins this
+    kilobyte table back rather than re-encoding per occurrence).
+    Oracle = the final round's symbol state of the same unrolled CTE
+    chain q_bpe_merges verifies."""
+    from semantic_similarity_system_using_aws_mapreduce_spark.operators.bpe import (
+        bpe_encode_words,
+        bpe_train,
+        word_counts,
+    )
+
+    docs = _docs(spark, sf_dir)
+    merges = bpe_train(docs, n_merges=BPE_MERGE_ROUNDS, min_count=2)
+    wc = word_counts(docs)
+    return (
+        bpe_encode_words(wc, merges)
+        .join(wc, "word")
+        .select(
+            "word",
+            F.size("pieces").cast("int").alias("n_pieces"),
+            F.col("n").alias("n_occurrences"),
+        )
+    )
+
+
+def q_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        _docs(spark, sf_dir)
+        .groupBy("lang")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.round(F.avg("n_chars"), 6).alias("avg_chars"),
+            F.round(F.avg(F.size(_tokens_col())), 6).alias("avg_tokens"),
+        )
+    )
+
+
+def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Document fingerprint: min md5-derived 60-bit integer over word
+    3-gram shingles (MinHash with one hash function — the document-level
+    fingerprint a near-dup pipeline keys on).  Pure JVM expressions."""
+    # toks MUST be a materialized column here: the lambda dereferences
+    # it via element_at, and HOF lambdas are interpreted per element —
+    # an inline split-expression would re-tokenize the document for
+    # every element_at call (measured 9x slower).
+    shingles = F.transform(
+        F.sequence(F.lit(0), F.size("toks") - 3),
+        lambda i: F.concat_ws(
+            " ",
+            F.element_at(F.col("toks"), i + 1),
+            F.element_at(F.col("toks"), i + 2),
+            F.element_at(F.col("toks"), i + 3),
+        ),
+    )
+    fp = F.array_min(
+        F.transform(
+            shingles,
+            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
+        )
+    )
+    return (
+        _docs(spark, sf_dir)
+        .select("doc_id", _tokens_col().alias("toks"))
+        .filter(F.size("toks") >= 3)
+        .select("doc_id", fp.alias("fingerprint"))
+    )
+
+
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-profile language identification (n-gram heuristic):
     predicted language + confidence per doc, with agreement flag
@@ -658,6 +729,45 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+HE_DIM = 8  # hashed-embedding dimensions
+
+
+def q_hash_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic document embeddings with no model: the feature-
+    hashing trick (Weinberger et al. 2009) — each token occurrence
+    adds ±1 to the dimension its hash picks, sign from the next hash
+    bit.  The resulting int64 vectors feed the same cosine / SRP-LSH /
+    semantic-dedup operators as model embeddings (the
+    bootstrap-before-you-have-a-model path), and integer accumulation
+    makes them bit-reproducible by any engine with md5.
+
+    Plan: map-side explode -> ONE groupBy(doc_id) with {HE_DIM}
+    conditional integer sums (the Step4 24-aggregate pattern); state
+    is one row per document."""
+    h = F.conv(
+        F.substring(F.md5(F.concat(F.lit("he:"), F.col("token"))), 1, 15), 16, 10
+    ).cast("long")
+    x = (
+        _docs(spark, sf_dir)
+        .select("doc_id", F.explode(_tokens_col()).alias("token"))
+        .select("doc_id", h.alias("hh"))
+        # `div`, not `/`: integer bit extraction must not round
+        .select(
+            "doc_id",
+            F.expr(f"hh % {HE_DIM}").alias("dim"),
+            F.expr(f"1 - 2 * ((hh div {HE_DIM}) % 2)").alias("sign"),
+        )
+    )
+    return x.groupBy("doc_id").agg(
+        *[
+            F.sum(F.when(F.col("dim") == j, F.col("sign")).otherwise(0))
+            .cast("long")
+            .alias(f"e{j}")
+            for j in range(HE_DIM)
+        ]
+    )
+
+
 # BM25 retrieval constants (Robertson/Spärck Jones Okapi BM25 with the
 # non-negative idf variant ln(1 + (N - df + .5)/(df + .5)) every major
 # search engine ships).  Query set fixed so the ranking is a stable
@@ -786,6 +896,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {
     "q_bm25_search": q_bm25_search,
+    "q_hash_embeddings": q_hash_embeddings,
     "q_cms_heavy_hitters": q_cms_heavy_hitters,
     "q_lm_quality": q_lm_quality,
     "q_doc_chunks": q_doc_chunks,
@@ -805,6 +916,9 @@ QUERIES = {
     "q_bpe_fertility": q_bpe_fertility,
     "q_bpe_pair_counts": q_bpe_pair_counts,
     "q_bpe_merges": q_bpe_merges,
+    "q_bpe_vocab_pieces": q_bpe_vocab_pieces,
+    "q_lang_stats": q_lang_stats,
+    "q_doc_fingerprint": q_doc_fingerprint,
 }
 
 _TOKS = "list_filter(string_split(text, ' '), t -> t <> '')"
@@ -850,7 +964,25 @@ _LANG_PICK = "CASE " + " ".join(
 
 _MD5INT = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
+_HE_SUM_COLS = ",\n               ".join(
+    f"sum(CASE WHEN dim = {j} THEN sign ELSE 0 END)::BIGINT AS e{j}"
+    for j in range(HE_DIM)
+)
+
 _BM25_VALUES = ", ".join(f"({q}, '{t}')" for q, t in _BM25_TERMS)
+
+
+def _bpe_vocab_pieces_oracle(rounds: int) -> str:
+    """Vocabulary segmentation AFTER the learned merges — the same
+    unrolled CTE chain as the merges oracle, selecting the final
+    round's symbol state instead of the argmax rows."""
+    final = f"""
+        SELECT word,
+               len(list_filter(string_split(syms, chr(31)),
+                               s -> s <> ''))::INT AS n_pieces,
+               n AS n_occurrences
+        FROM r{rounds}"""
+    return _bpe_unrolled(rounds) + final
 
 
 def _bpe_unrolled(rounds: int) -> str:
@@ -955,6 +1087,18 @@ ORACLES = {
         SELECT q_id, rank::INT AS rank, doc_id,
                round(s_micro / 1000000.0, 6) AS bm25
         FROM ranked WHERE rank <= {BM25_TOPK}
+    """,
+    "q_hash_embeddings": f"""
+        WITH t AS (SELECT doc_id, unnest({_TOKS}) AS token FROM documents),
+        h AS (SELECT doc_id,
+                     {_MD5INT.format(x="'he:' || token")} AS hh
+              FROM t),
+        x AS (SELECT doc_id, hh % {HE_DIM} AS dim,
+                     1 - 2 * ((hh // {HE_DIM}) % 2) AS sign
+              FROM h)
+        SELECT doc_id,
+               {_HE_SUM_COLS}
+        FROM x GROUP BY doc_id
     """,
     "q_cms_heavy_hitters": f"""
         WITH toks AS (SELECT unnest({_TOKS}) AS token FROM documents),
@@ -1171,6 +1315,21 @@ ORACLES = {
                      / len(toks), 6) AS stopword_ratio
         FROM d
     """,
+    "q_lang_stats": f"""
+        SELECT lang, count(*) AS n_docs,
+               round(avg(n_chars), 6) AS avg_chars,
+               round(avg(len({_TOKS})), 6) AS avg_tokens
+        FROM documents GROUP BY lang
+    """,
+    "q_doc_fingerprint": f"""
+        WITH d AS (SELECT doc_id, {_TOKS} AS toks FROM documents)
+        SELECT doc_id,
+               list_aggregate(list_transform(
+                   list_transform(range(1, len(toks) - 1),
+                       i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]),
+                   s -> ('0x' || substr(md5(s), 1, 15))::BIGINT), 'min') AS fingerprint
+        FROM d WHERE len(toks) >= 3
+    """,
     # Gopher rules in INTEGER arithmetic (cross-multiplied ratios) so
     # the flags hash identically — mirrors operators/text_analysis.
     # gopher_rules expression for expression
@@ -1221,4 +1380,5 @@ ORACLES = {
     """,
     "q_bpe_merges": _bpe_merges_oracle(BPE_MERGE_ROUNDS),
     "q_bpe_fertility": _bpe_fertility_oracle(BPE_MERGE_ROUNDS),
+    "q_bpe_vocab_pieces": _bpe_vocab_pieces_oracle(BPE_MERGE_ROUNDS),
 }
